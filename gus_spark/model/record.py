@@ -25,10 +25,16 @@ Rules:
 from __future__ import annotations
 
 import json
-from typing import Any
+from typing import TYPE_CHECKING, Any, Iterable
 
 from gus_spark.errors import RecordValidationError
 from gus_spark.model.types import AttrType, ModelDefinition
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
+
+# types.rs:46-47 — Integer is i64 (LongType)
+I64_MIN, I64_MAX = -(2**63), 2**63 - 1
 
 
 def _check_primitive(value: Any, primitive: str, attr: str) -> Any:
@@ -37,6 +43,10 @@ def _check_primitive(value: Any, primitive: str, attr: str) -> Any:
         if isinstance(value, bool) or not isinstance(value, int):
             raise RecordValidationError(
                 f"attribute {attr!r} must be an Integer"
+            )
+        if not I64_MIN <= value <= I64_MAX:
+            raise RecordValidationError(
+                f"attribute {attr!r} is outside the Integer (i64) range"
             )
         return value
     if primitive == "Float":
@@ -120,6 +130,32 @@ def add_null_values(record: dict, model: ModelDefinition) -> dict:
     """model.rs:291-298 — output rows always carry the full schema, in the
     model's canonical field order."""
     return {name: record.get(name) for name in model.field_order}
+
+
+def records_to_df(
+    spark: "SparkSession", records: Iterable[dict], model: ModelDefinition
+) -> "DataFrame":
+    """Records (attr -> value dicts) as a DataFrame of the model's schema,
+    built from one Arrow table: a ``LocalTableScan`` that needs no
+    Python worker. ``Table.from_pylist`` accepts a None in a
+    non-nullable field silently, so the nullability check that
+    ``createDataFrame``'s row path made is done here: a null in a
+    non-nullable column or array element raises ValueError."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = model.to_struct_type()
+    table = pa.Table.from_pylist(list(records), schema=to_arrow_schema(schema))
+    for field, column in zip(table.schema, table.columns):
+        nulls = 0 if field.nullable else column.null_count
+        if pa.types.is_list(field.type) and not field.type.value_field.nullable:
+            nulls += pc.list_flatten(column).null_count
+        if nulls:
+            raise ValueError(
+                f"{model.model_name}.{field.name}: null in a non-nullable field"
+            )
+    return spark.createDataFrame(table, schema)
 
 
 def parse_uri_id(id_str: str, model: ModelDefinition) -> Any:

@@ -166,13 +166,14 @@ def parquet_point_value(
     ``filters=`` predicate, so only row groups whose ``key_col``
     min/max statistics admit ``key`` materialize — a large embeddings
     file no longer balloons driver memory for a one-row lookup. The
-    fallback except is NARROW (I/O, Arrow, schema errors) so an
+    fallback except is NARROW (I/O, Arrow, schema errors, and a key
+    whose type does not match ``key_col``) so an
     unexpected failure class propagates loudly instead of silently
     degrading to the distributed lookup forever."""
     import os
 
     try:
-        import pyarrow.lib as pl
+        import pyarrow as pa
         import pyarrow.parquet as pq
     except ImportError:
         return None
@@ -188,5 +189,10 @@ def parquet_point_value(
         if t.num_rows != 1:
             return None
         return t[value_col][0].as_py()
-    except (OSError, KeyError, pl.ArrowException):
+    except (
+        OSError, KeyError, pa.ArrowException, TypeError, ValueError,
+        OverflowError,
+    ):
+        # the last three: a key the ``filters=`` predicate cannot convert
+        # to the column's type (e.g. an int beyond int64)
         return None

@@ -25,7 +25,12 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from gus_spark.errors import DuplicateKeyError, NotFoundError, StorageError
-from gus_spark.model.record import add_null_values, parse_record, parse_uri_id
+from gus_spark.model.record import (
+    add_null_values,
+    parse_record,
+    parse_uri_id,
+    records_to_df,
+)
 from gus_spark.model.types import ModelDefinition
 
 DEFAULT_STORAGE_FILE = "./data.json.gus"  # json/mod.rs:31
@@ -131,11 +136,7 @@ class JsonFileStore:
     def read_df(self, model: ModelDefinition) -> DataFrame:
         """Bridge the JSON store into the analytics surface."""
         data = self.read_db(model)[model.model_name]
-        rows = [
-            tuple(add_null_values(rec, model).get(f) for f in model.field_order)
-            for rec in data.values()
-        ]
-        return self.spark.createDataFrame(rows, model.to_struct_type())
+        return records_to_df(self.spark, data.values(), model)
 
 
 def load_storage_config(path: str) -> dict:

@@ -21,6 +21,16 @@ like a miniature table format:
 - ``update_one``/``delete_one`` rewrite only data files whose parquet
   row-group stats may contain the key (pruned via per-file min/max of the
   pk captured in the manifest), so point mutations touch O(one file);
+- each file's manifest entry (row count, pk min/max) is read from the
+  parquet footer the write just produced, not by a Spark aggregate (a
+  ``Float`` pk keeps the aggregate: parquet stats skip NaN);
+- so a point mutation pays one Spark job for its data-file write. A
+  create's duplicate check scans only the files whose [lo, hi] may hold
+  a new key (none for a key above every range, one more job
+  otherwise); update and delete add their one pruned ``read_one`` job,
+  and a delete that empties its file writes nothing. Records become a
+  DataFrame through one Arrow table, a local scan with no Python
+  worker;
 - ``compact()`` folds accumulated delta files back into evenly-sized
   files — the maintenance job a real deployment schedules.
 
@@ -31,6 +41,7 @@ swap, kept dependency-free for this environment.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
@@ -47,7 +58,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gus_spark.errors import DuplicateKeyError, NotFoundError, StorageError
-from gus_spark.model.record import add_null_values, parse_record, parse_uri_id
+from gus_spark.model.record import (
+    add_null_values,
+    parse_record,
+    parse_uri_id,
+    records_to_df,
+)
 from gus_spark.model.types import ModelDefinition
 
 
@@ -125,39 +141,40 @@ class ParquetStore:
 
     # ------------------------------------------------------------------ io
     def _write_data_file(self, df: DataFrame, model: ModelDefinition) -> list[dict]:
-        """Write df as parquet under the table dir; return file entries
-        with per-file pk min/max stats for manifest-level pruning."""
+        """Write df as parquet under the table dir (one Spark job); return
+        file entries with per-file row count and pk min/max for
+        manifest-level pruning, read from each file's parquet footer."""
         table = self._table_dir(model)
         os.makedirs(table, exist_ok=True)
         out = os.path.join(table, f"data-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(out)
         pk = model.primary_key
+        float_pk = model.attributes[pk].primitive == "Float"
         entries = []
         for fname in sorted(os.listdir(out)):
             if not fname.endswith(".parquet"):
                 continue
             path = os.path.join(out, fname)
-            stats = (
-                self.spark.read.parquet(path)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(pk).alias("lo"),
-                    F.max(pk).alias("hi"),
+            # parquet stats skip NaN while Spark's max ranks it highest,
+            # so a Float pk keeps Spark's aggregate
+            stats = None if float_pk else _footer_stats(path, pk)
+            if stats is None:
+                row = (
+                    self.spark.read.parquet(path)
+                    .agg(F.count(F.lit(1)), F.min(pk), F.max(pk))
+                    .first()
                 )
-                .first()
-            )
-            if stats["n"] == 0:
-                # a zero-row file has no stats, so _contains would treat
+                stats = tuple(row)
+            n, lo, hi = stats
+            if n == 0:
+                # a zero-row file has no stats, so pruning would treat
                 # it as must-scan forever; never manifest it
                 continue
-            entries.append(
-                {
-                    "path": path,
-                    "lo": stats["lo"],
-                    "hi": stats["hi"],
-                    "rows": stats["n"],
-                }
-            )
+            if lo != lo or hi != hi:
+                # a NaN bound compares false with every key; leave the
+                # file unbounded (always scanned) instead
+                lo = hi = None
+            entries.append({"path": path, "lo": lo, "hi": hi, "rows": n})
         return entries
 
     def read_df(
@@ -184,7 +201,7 @@ class ParquetStore:
                 manifest = json.load(fh)
         files = [f["path"] for f in manifest["files"]]
         if not files:
-            return self.spark.createDataFrame([], model.to_struct_type())
+            return records_to_df(self.spark, [], model)
         return self.spark.read.schema(model.to_struct_type()).parquet(*files)
 
     def history(self, model: ModelDefinition) -> list[tuple[int, str]]:
@@ -213,12 +230,6 @@ class ParquetStore:
                     os.remove(os.path.join(self._table_dir(model), name))
             self._gc(model)
 
-    def _records_to_df(
-        self, records: Iterable[dict], model: ModelDefinition
-    ) -> DataFrame:
-        rows = [tuple(r.get(f) for f in model.field_order) for r in records]
-        return self.spark.createDataFrame(rows, model.to_struct_type())
-
     # ------------------------------------------------------------------ CRUD
     def create_one(self, model: ModelDefinition, body: str | dict) -> dict:
         """Validate + insert; duplicate pk is an error (json/mod.rs:84-96)."""
@@ -236,18 +247,26 @@ class ParquetStore:
         if len(set(keys)) != len(keys):
             raise DuplicateKeyError("duplicate primary keys within batch")
         with self._write_lock(model):
-            existing = self.read_df(model)
-            # dup check = semi-join against the new keys; at scale this
-            # prunes to files whose [lo,hi] overlaps the inserted keys.
-            clash = existing.filter(F.col(pk).isin(keys)).limit(1).collect()
-            if clash:
-                raise DuplicateKeyError(
-                    f"record with primary key already exists, use PUT to"
-                    f" update (key={clash[0][pk]!r})"
-                )
             manifest = self._current_manifest(model)
+            # dup check = semi-join against the new keys, over only the
+            # files whose [lo, hi] may hold one of them: no job at all
+            # when every key is outside every file's range
+            candidates = _files_holding_any(manifest["files"], keys)
+            if candidates:
+                clash = (
+                    self.spark.read.schema(model.to_struct_type())
+                    .parquet(*[f["path"] for f in candidates])
+                    .filter(F.col(pk).isin(keys))
+                    .limit(1)
+                    .collect()
+                )
+                if clash:
+                    raise DuplicateKeyError(
+                        f"record with primary key already exists, use PUT"
+                        f" to update (key={clash[0][pk]!r})"
+                    )
             new_files = self._write_data_file(
-                self._records_to_df(records, model), model
+                records_to_df(self.spark, records, model), model
             )
             manifest["files"] = manifest["files"] + new_files
             self._commit(model, manifest, op="insert")
@@ -259,9 +278,7 @@ class ParquetStore:
         key = parse_uri_id(id_str, model)
         manifest = self._current_manifest(model)
         candidates = [
-            f["path"]
-            for f in manifest["files"]
-            if f["lo"] is None or _contains(f, key)
+            f["path"] for f in _files_holding_any(manifest["files"], [key])
         ]
         if not candidates:
             raise NotFoundError(
@@ -316,9 +333,8 @@ class ParquetStore:
         """Rewrite only the data files whose pk range may contain ``key``;
         untouched files carry over into the new manifest by reference."""
         manifest = self._current_manifest(model)
-        keep = [f for f in manifest["files"] if not _contains(f, key)]
-        touched = [f for f in manifest["files"] if _contains(f, key)]
-        new_files = list(keep)
+        touched = _files_holding_any(manifest["files"], [key])
+        new_files = [f for f in manifest["files"] if f not in touched]
         if touched:
             df = self.spark.read.schema(model.to_struct_type()).parquet(
                 *[f["path"] for f in touched]
@@ -326,13 +342,16 @@ class ParquetStore:
             remain = df.filter(F.col(model.primary_key) != F.lit(key))
             if replacement is not None:
                 remain = remain.unionByName(
-                    self._records_to_df([replacement], model)
+                    records_to_df(self.spark, [replacement], model)
                 )
-            if remain.limit(1).collect():
+            # rows left, exact: the caller's read_one just proved ``key``
+            # present in these files and the pk is unique
+            rows = sum(f["rows"] for f in touched) - 1
+            if rows or replacement is not None:
                 new_files += self._write_data_file(remain, model)
         elif replacement is not None:
             new_files += self._write_data_file(
-                self._records_to_df([replacement], model), model
+                records_to_df(self.spark, [replacement], model), model
             )
         manifest["files"] = new_files
         self._commit(model, manifest)
@@ -371,13 +390,8 @@ class ParquetStore:
             raise DuplicateKeyError("conflicting keys within change batch")
         with self._write_lock(model):
             manifest = self._current_manifest(model)
-            touched = [
-                f
-                for f in manifest["files"]
-                if any(_contains(f, k) for k in keys)
-            ]
-            keep = [f for f in manifest["files"] if f not in touched]
-            new_files = list(keep)
+            touched = _files_holding_any(manifest["files"], keys)
+            new_files = [f for f in manifest["files"] if f not in touched]
             survivors = None
             if touched:
                 df = self.spark.read.schema(model.to_struct_type()).parquet(
@@ -385,7 +399,7 @@ class ParquetStore:
                 )
                 survivors = df.filter(~F.col(pk).isin(keys))
             if upserts:
-                fresh = self._records_to_df(upserts, model)
+                fresh = records_to_df(self.spark, upserts, model)
                 survivors = (
                     fresh if survivors is None else survivors.unionByName(fresh)
                 )
@@ -544,13 +558,47 @@ class ParquetStore:
         return self.read_df(model).count()
 
 
-def _contains(file_entry: dict, key: Any) -> bool:
-    lo, hi = file_entry.get("lo"), file_entry.get("hi")
-    if lo is None or hi is None:
-        return True  # no stats -> must scan
-    try:
-        return lo <= key <= hi
-    except TypeError:
-        raise StorageError(
-            f"pk {key!r} not comparable with file stats [{lo!r}, {hi!r}]"
-        ) from None
+def _footer_stats(path: str, pk: str) -> tuple[int, Any, Any] | None:
+    """(rows, min pk, max pk) of one parquet file from its footer, with
+    no Spark job; None when a non-empty row group lacks pk min/max."""
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    names = [meta.schema.column(i).path for i in range(meta.num_columns)]
+    col = names.index(pk)
+    lo = hi = None
+    for i in range(meta.num_row_groups):
+        group = meta.row_group(i)
+        if group.num_rows == 0:
+            continue
+        stats = group.column(col).statistics
+        if stats is None or not stats.has_min_max:
+            return None
+        lo = stats.min if lo is None else min(lo, stats.min)
+        hi = stats.max if hi is None else max(hi, stats.max)
+    return meta.num_rows, lo, hi
+
+
+def _files_holding_any(files: list[dict], keys: list) -> list[dict]:
+    """The file entries whose [lo, hi] may hold one of ``keys``: a
+    bisect over the sorted keys per file. Files without stats are
+    always kept. NaN keys are left out of the sort (they do not order);
+    they can only match a NaN row, and files holding one carry no
+    stats."""
+    ordered = sorted(k for k in keys if k == k)
+    out = []
+    for f in files:
+        lo, hi = f.get("lo"), f.get("hi")
+        if lo is None or hi is None:
+            out.append(f)
+            continue
+        try:
+            i = bisect.bisect_left(ordered, lo)
+            if i < len(ordered) and ordered[i] <= hi:
+                out.append(f)
+        except TypeError:
+            raise StorageError(
+                f"pk not comparable with file stats [{lo!r}, {hi!r}]"
+            ) from None
+    return out
+

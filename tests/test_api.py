@@ -805,3 +805,42 @@ def test_composite_cursor_tiles_exactly_under_heavy_duplicates(
             walked.extend((r["year"], r["id"]) for r in page)
             cursor = (page[-1]["year"], page[-1]["id"])
         assert walked == expected, f"page_size={page_size}"
+
+
+def test_integers_outside_i64_are_client_errors(spark, tmp_path):
+    """types.rs:46-47: Integer is i64. An out-of-range value is a
+    validation error (REST 400, GraphQL error), not a JVM or Arrow
+    exception escaping the handler."""
+    registry = ModelRegistry()
+    registry.register(
+        ModelDefinition.from_json(
+            {
+                "model_name": "item",
+                "attributes": {"id": "Integer", "year": "Integer",
+                               "counts": ["Integer"]},
+                "primary_key": "id",
+                "required": ["id"],
+            }
+        )
+    )
+    store = ParquetStore(spark, str(tmp_path / "warehouse"))
+    rest = RestApi(registry, store, graphql_api=GraphQLApi(registry, store))
+    for body in ({"id": 2**63}, {"id": 1, "year": -(2**63) - 1},
+                 {"id": 1, "counts": [0, 2**63]}):
+        status, payload = rest.handle("POST", "/api/rest/item", json.dumps(body))
+        assert status == 400 and "i64" in payload["error"], payload
+    assert rest.handle("GET", f"/api/rest/item/{2**63}")[0] == 400
+    assert rest.handle("POST", "/api/rest/item", json.dumps({"id": 1}))[0] == 201
+    status, payload = rest.handle(
+        "PUT", "/api/rest/item/1", json.dumps({"year": 2**64})
+    )
+    assert status == 400 and "i64" in payload["error"], payload
+    for q in (
+        f"mutation {{ addOneItem(id: {2**63}) {{ id }} }}",
+        f"mutation {{ updateOneItem(id: 1, year: {-(2**63) - 1}) {{ id }} }}",
+    ):
+        status, payload = rest.handle(
+            "POST", "/api/graphql", json.dumps({"query": q})
+        )
+        assert status == 400 and payload["errors"], payload
+    assert rest.handle("GET", "/api/rest/item/1")[1]["data"]["year"] is None

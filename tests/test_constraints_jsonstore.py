@@ -172,3 +172,52 @@ def test_json_store_reads_reference_format(jstore, spark):
     assert jstore.read_one(m, "get") == {"id": "get", "name": None}
     df = jstore.read_df(m)
     assert {r.id for r in df.collect()} == {"get", "put"}
+
+
+def test_json_store_read_df_matches_row_path(spark, jstore):
+    """read_df builds its frame from one Arrow table; schema and rows
+    must equal the list-of-tuples ``createDataFrame`` it replaced, for
+    every primitive and array type and every null mix."""
+    from gus_spark.model.record import add_null_values
+
+    model = ModelDefinition.from_json(
+        {
+            "model_name": "sample",
+            "attributes": {
+                "id": "Integer",
+                "ratio": "Float",
+                "label": "String",
+                "flag": "Boolean",
+                "ints": ["Integer"],
+                "ratios": ["Float"],
+                "labels": ["String"],
+                "flags": ["Boolean"],
+            },
+            "primary_key": "id",
+            "required": ["id", "label"],
+        }
+    )
+
+    def old_path():
+        data = jstore.read_db(model)[model.model_name]
+        rows = [
+            tuple(add_null_values(rec, model).get(f) for f in model.field_order)
+            for rec in data.values()
+        ]
+        return spark.createDataFrame(rows, model.to_struct_type())
+
+    assert jstore.read_df(model).schema == old_path().schema
+    assert jstore.read_df(model).collect() == []
+    bodies = [
+        {"id": 1, "label": "a", "ratio": 0.5, "flag": True, "ints": [1, -2],
+         "ratios": [1.5, -0.25], "labels": ["x", "é"], "flags": [True]},
+        {"id": 2, "label": "", "ints": [], "labels": [], "ratios": []},
+        {"id": -(2**63), "label": "日本", "flag": False, "flags": []},
+        {"id": 2**63 - 1, "label": "z", "ratio": -1e300, "ratios": None},
+        {"id": 5, "label": "n", "ratio": 3, "ints": [2**63 - 1]},
+    ]
+    for body in bodies:
+        jstore.create_one(model, body)
+    new, old = jstore.read_df(model), old_path()
+    assert new.schema == old.schema
+    assert sorted(new.collect()) == sorted(old.collect())

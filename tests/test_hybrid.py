@@ -403,3 +403,19 @@ def test_parquet_point_value_matches_spark_fetch(spark):
     # non-bare / missing paths fall back loudly-by-None
     assert parquet_point_value("/tmp/nope.parquet", "k", 0, "v") is None
     assert parquet_point_value(path, "vec_id", -12345, "embedding") is None
+
+
+def test_parquet_point_value_mismatched_key_falls_back(tmp_path):
+    """A key the ``filters=`` predicate cannot compare with the key
+    column returns None (the caller's distributed lookup), not an
+    exception."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gus_spark.operators.util import parquet_point_value
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    assert parquet_point_value(path, "k", 2, "v") == "b"
+    for key in ("2", b"2", 2**70, object(), [2]):
+        assert parquet_point_value(path, "k", key, "v") is None

@@ -5,6 +5,7 @@ import pytest
 
 from gus_spark.errors import RecordValidationError
 from gus_spark.model.record import add_null_values, parse_record, parse_uri_id
+from gus_spark.model.types import ModelDefinition
 
 VALID = {
     "id": 1,
@@ -54,6 +55,8 @@ def test_missing_non_required_padded(movie_model):  # model.rs:291-298
         {"id": True},               # bool-for-Integer
         {"unknown_attr": 1},        # unknown attribute (model.rs:281-283)
         {"year": "1994"},           # string-for-Integer (optional attr)
+        {"id": 2**63},              # above i64 (types.rs:46-47)
+        {"year": -(2**63) - 1},     # below i64
     ],
 )
 def test_invalid_values_rejected(movie_model, patch):
@@ -92,6 +95,25 @@ def test_parse_uri_id_integer(movie_model):  # model.rs:110-129
         parse_uri_id("abc", movie_model)
     with pytest.raises(RecordValidationError):
         parse_uri_id("1.5", movie_model)
+
+
+def test_integer_i64_bounds():  # types.rs:46-47 — Integer is i64
+    m = ModelDefinition.from_json(
+        {
+            "model_name": "sample",
+            "attributes": {"id": "Integer", "counts": ["Integer"]},
+            "primary_key": "id",
+            "required": ["id"],
+        }
+    )
+    lo, hi = -(2**63), 2**63 - 1
+    assert parse_record({"id": hi, "counts": [lo, hi]}, m)["counts"] == [lo, hi]
+    for counts in ([hi + 1], [0, lo - 1]):
+        with pytest.raises(RecordValidationError, match="i64"):
+            parse_record({"id": 1, "counts": counts}, m)
+    assert parse_uri_id(str(lo), m) == lo
+    with pytest.raises(RecordValidationError):
+        parse_uri_id(str(hi + 1), m)
 
 
 def test_add_null_values_order(movie_model):

@@ -2,6 +2,9 @@
 (src/cli/server/model/storage_handler/json/mod.rs:144-325) plus the HTTP
 integration semantics (src/cli/server.rs:272-464)."""
 
+import math
+import os
+
 import pytest
 
 from gus_spark.errors import DuplicateKeyError, NotFoundError
@@ -341,3 +344,160 @@ def test_maintain_compacts_only_when_degraded(store, movie_model):
     assert report2["compacted"] is False
     assert store._current_manifest(movie_model)["seq"] == seq_before
     assert store.count(movie_model) == 30
+
+
+# --- the one-job write path -------------------------------------------------
+def _jobs(spark, fn):
+    """(fn's result, the Spark jobs it launched), counted via a job group
+    once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _pk_model(pk_type: str) -> ModelDefinition:
+    return ModelDefinition.from_json(
+        {
+            "model_name": "sample",
+            "attributes": {"id": pk_type, "note": "String"},
+            "primary_key": "id",
+            "required": ["id"],
+        }
+    )
+
+
+@pytest.mark.parametrize(
+    "pk_type, keys",
+    [
+        ("Integer", [5, -(2**63), 2**63 - 1, 0, 42]),
+        # non-ASCII: UTF-8 byte order (parquet's and Spark's) is code
+        # point order, which is Python's; "～" < "😀" here but not
+        # in UTF-16 order
+        ("String", ["b", "é", "日本", "～", "😀", "a", ""]),
+        ("Boolean", [True, False]),
+        ("Boolean", [True]),
+    ],
+)
+def test_footer_stats_match_spark_aggregate(spark, tmp_path, pk_type, keys):
+    from pyspark.sql import functions as F
+
+    from gus_spark.model.record import records_to_df
+    from gus_spark.storage.parquet_store import _footer_stats
+
+    model = _pk_model(pk_type)
+    out = str(tmp_path / "data")
+    frame = records_to_df(spark, [{"id": k} for k in keys], model)
+    frame.coalesce(1).write.parquet(out)
+    [path] = [str(p) for p in (tmp_path / "data").glob("*.parquet")]
+    row = spark.read.parquet(path).agg(
+        F.count(F.lit(1)), F.min("id"), F.max("id")
+    ).first()
+    assert _footer_stats(path, "id") == tuple(row)
+
+
+def test_footer_stats_span_row_groups(spark, tmp_path):
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from gus_spark.storage.parquet_store import _footer_stats
+
+    out = str(tmp_path / "data")
+    (
+        spark.range(20000)
+        .select((F.col("id") * 7919 % 20011).alias("id"),
+                F.lit("x").alias("note"))
+        .coalesce(1)
+        .write.option("parquet.block.size", 8192)
+        .parquet(out)
+    )
+    [path] = [str(p) for p in (tmp_path / "data").glob("*.parquet")]
+    assert pq.ParquetFile(path).metadata.num_row_groups > 1
+    row = spark.read.parquet(path).agg(
+        F.count(F.lit(1)), F.min("id"), F.max("id")
+    ).first()
+    assert _footer_stats(path, "id") == tuple(row)
+
+
+def test_float_pk_takes_the_aggregate_path(spark, store):
+    """parquet stats skip NaN while Spark ranks it above every number:
+    a Float pk keeps Spark's aggregate (one more job per file), and a
+    file holding NaN gets no bounds, so it is always scanned."""
+    model = _pk_model("Float")
+    _, n = _jobs(spark, lambda: store.create_many(model, [{"id": 1.5}]))
+    assert n > 1
+    [entry] = store._current_manifest(model)["files"]
+    assert (entry["lo"], entry["hi"], entry["rows"]) == (1.5, 1.5, 1)
+    store.create_many(model, [{"id": 1.0}, {"id": 5.0}, {"id": float("nan")}])
+    assert store.read_one(model, "5.0")["id"] == 5.0
+    assert math.isnan(store.read_one(model, "NaN")["id"])
+    with pytest.raises(DuplicateKeyError):
+        store.create_one(model, {"id": float("nan")})
+
+
+def test_zero_row_file_never_manifested(spark, store, movie_model):
+    empty = spark.createDataFrame([], movie_model.to_struct_type())
+    assert store._write_data_file(empty, movie_model) == []
+    table = store._table_dir(movie_model)
+    assert any(
+        f.endswith(".parquet")
+        for d in os.listdir(table)
+        for f in os.listdir(os.path.join(table, d))
+    )  # the file exists; it is only left out of the manifest
+
+
+def test_dup_check_prunes_by_file_ranges(spark, store, movie_model):
+    store.create_many(movie_model, [dict(RECORD, id=i) for i in (10, 20, 30)])
+    store.compact(movie_model)  # one file, [lo, hi] = [10, 30]
+    # a key inside the file's [lo, hi] but absent: scanned, then created
+    _, n = _jobs(spark, lambda: store.create_one(movie_model, dict(RECORD, id=15)))
+    assert n == 2
+    with pytest.raises(DuplicateKeyError):
+        store.create_one(movie_model, dict(RECORD, id=20))
+    with pytest.raises(DuplicateKeyError):
+        store.create_many(movie_model, [dict(RECORD, id=k) for k in (99, 30)])
+    # a fresh key above every range: the write is the only job
+    _, n = _jobs(spark, lambda: store.create_one(movie_model, dict(RECORD, id=31)))
+    assert n == 1
+    assert sorted(r.id for r in store.read_df(movie_model).collect()) == [
+        10, 15, 20, 30, 31,
+    ]
+
+
+def test_point_mutations_cost_one_write_job(spark, store, movie_model):
+    store.create_many(
+        movie_model, [dict(RECORD, id=i, name=f"m{i}") for i in range(1, 41)]
+    )
+    store.compact(movie_model, target_files=4)
+    _, n = _jobs(spark, lambda: store.create_one(movie_model, dict(RECORD, id=41)))
+    assert n == 1
+    _, n = _jobs(
+        spark, lambda: store.update_one(movie_model, "7", {"name": "patched"})
+    )
+    assert n == 2  # the pruned read_one + the write
+    _, n = _jobs(spark, lambda: store.delete_one(movie_model, "13"))
+    assert n <= 2
+    # a delete that empties its file writes nothing: only the read_one
+    _, n = _jobs(spark, lambda: store.delete_one(movie_model, "41"))
+    assert n == 1
+    assert store.read_one(movie_model, "7")["name"] == "patched"
+    health = store.table_health(movie_model)
+    assert health["n_rows"] == store.count(movie_model) == 39
+
+
+def test_records_to_df_rejects_nulls_in_non_nullable_fields(spark, movie_model):
+    from gus_spark.model.record import records_to_df
+
+    ok = dict(RECORD, year=None, actors=None)
+    assert records_to_df(spark, [ok], movie_model).collect()[0].asDict() == ok
+    with pytest.raises(ValueError, match="movie.name"):
+        records_to_df(spark, [ok, dict(RECORD, name=None)], movie_model)
+    with pytest.raises(ValueError, match="movie.actors"):
+        records_to_df(spark, [dict(RECORD, actors=["a", None])], movie_model)
