@@ -254,14 +254,23 @@ class GraphQLApi:
         return resolve
 
     def _read_many(self, model: ModelDefinition):
-        """The completed scan path: equality filters push into the
-        parquet scan; pk-ordered pagination keeps pages deterministic.
+        """The completed scan path: filters push into the parquet scan;
+        pk-ordered pagination keeps pages deterministic.
 
         Pagination is keyset-first: ``after`` compiles to a ``pk >
         $after`` predicate that reaches the scan, so page N costs the
         same as page 1 at any table size. ``offset`` is kept for API
         compatibility but is O(offset+limit) by nature — clients paging
-        deep should switch to the cursor."""
+        deep should switch to the cursor; the two do not combine.
+
+        A pk keyset page (``after`` without ``orderBy``) is bounded and
+        key-addressed, so it is served by ``ParquetStore.scan_page``:
+        an Arrow read of the files whose pk range may hold the page,
+        with no Spark job. The other shapes stay on Spark
+        (``read_many_df``) because each needs the whole snapshot: an
+        offset page sorts every matching row to skip the first
+        ``offset``, and an ``orderBy``/``afterSort`` page orders by a
+        column the manifest keeps no ranges for."""
 
         def resolve(_obj, _info, **args):
             from gus_spark.model.record import add_null_values
@@ -274,6 +283,12 @@ class GraphQLApi:
             after_sort = args.pop("afterSort", None)
             if limit < 0 or offset < 0:
                 raise gql.GraphQLError("limit/offset must be >= 0")
+            if offset and after is not None:
+                raise gql.GraphQLError(
+                    "offset does not combine with the keyset cursor "
+                    "(after): the cursor already names where the page "
+                    "starts"
+                )
             if limit > MAX_LIMIT:
                 # every page path collects `limit` rows driver-side
                 # (keyset included), so an uncapped limit is the same
@@ -313,6 +328,10 @@ class GraphQLApi:
                 )
 
             def run():
+                if after is not None and order_by is None:
+                    return self.store.scan_page(
+                        model, after, limit, _filter_terms(model, args)
+                    )
                 df = self.read_many_df(
                     model, args, limit, after, order_by, after_sort
                 )
@@ -353,11 +372,15 @@ class GraphQLApi:
         order cost the same as page 1.
 
         When ``after`` is None the caller applies offset slicing itself
-        (legacy path) — the returned frame is unlimited in that case."""
+        (legacy path) — the returned frame is unlimited in that case.
+        The pk keyset branch is the reference that
+        ``ParquetStore.scan_page`` is tested against."""
         from pyspark.sql import functions as F
 
         pk = model.primary_key
-        df = self._apply_filters(self.store.read_df(model), model, args)
+        df = self._apply_filters(
+            self.store.read_df(model), _filter_terms(model, args)
+        )
         if order_by is not None:
             if after_sort is not None:
                 sv = _parse_scalar(model.attributes[order_by], after_sort)
@@ -378,32 +401,22 @@ class GraphQLApi:
         return df
 
     @staticmethod
-    def _apply_filters(df, model: ModelDefinition, args: dict):
-        """Compile readMany/stats filter args to pushed-down predicates:
-        `<attr>` = equality, `<attr>_<op>` = range/LIKE — unless a real
-        attribute literally owns the suffixed name (it keeps equality
-        semantics then)."""
+    def _apply_filters(df, terms: list[tuple[str, str, Any]]):
+        """Compile ``_filter_terms`` to pushed-down Spark predicates."""
         from pyspark.sql import functions as F
 
         ops = {
+            "eq": lambda c, v: c == F.lit(v),
             "gt": lambda c, v: c > v,
             "gte": lambda c, v: c >= v,
             "lt": lambda c, v: c < v,
             "lte": lambda c, v: c <= v,
+            # raw python value: Column.like requires a plain string;
+            # comparisons lift literals themselves
             "like": lambda c, v: c.like(v),
         }
-        for attr, value in args.items():
-            name, _, suffix = attr.rpartition("_")
-            if (
-                suffix in ops
-                and name in model.attributes
-                and attr not in model.attributes
-            ):
-                # raw python value: Column.like requires a plain string;
-                # comparisons lift literals themselves
-                df = df.filter(ops[suffix](F.col(name), value))
-            else:
-                df = df.filter(F.col(attr) == F.lit(value))
+        for attr, op, value in terms:
+            df = df.filter(ops[op](F.col(attr), value))
         return df
 
     def _stats(self, model: ModelDefinition):
@@ -442,7 +455,7 @@ class GraphQLApi:
 
             def run():
                 df = self._apply_filters(
-                    self.store.read_df(model), model, args
+                    self.store.read_df(model), _filter_terms(model, args)
                 )
                 if after is not None or page_size is not None:
                     # aggregate exactly the rows the matching readMany
@@ -595,6 +608,30 @@ class GraphQLApi:
         if result.errors:
             out["errors"] = [e.formatted for e in result.errors]
         return out
+
+
+_FILTER_OPS = ("gt", "gte", "lt", "lte", "like")
+
+
+def _filter_terms(model: ModelDefinition, args: dict) -> list[tuple]:
+    """The readMany/stats filter args as ``(attr, op, value)`` terms,
+    the one parse that the Spark compiler (``_apply_filters``) and the
+    Arrow one (``ParquetStore.scan_page``) both consume: ``<attr>`` is
+    ``eq``, ``<attr>_<op>`` is a range op or ``like`` — unless a real
+    attribute literally owns the suffixed name (it keeps equality
+    semantics then)."""
+    terms = []
+    for attr, value in args.items():
+        name, _, suffix = attr.rpartition("_")
+        if (
+            suffix in _FILTER_OPS
+            and name in model.attributes
+            and attr not in model.attributes
+        ):
+            terms.append((name, suffix, value))
+        else:
+            terms.append((attr, "eq", value))
+    return terms
 
 
 def _parse_scalar(attr: AttrType, value: Any) -> Any:

@@ -97,17 +97,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard is a no-op (no extra shuffle).
 
     r14 (VERDICT r13 #7 pilot, guide §1.2): the aggregation is ONE
-    `spark.sql()` parse over a per-(session, input) temp view of the
-    spread scan, instead of ~10 py4j-built aggregate Columns — the
-    whole tree parses and analyzes in the JVM in one call. Measured
-    build cost 0.145 s -> 0.021 s per build (warm avg-of-10); output
-    bit-identical (toPandas equality of every double) because the SQL
-    text IS the oracle text modulo the view name — the same
-    DECIMAL(18,6) sums, the same division order. The view re-registers
-    every build (name keyed on the input dir), so nothing persists
-    across inputs and concurrent sessions never collide."""
-    import hashlib
-
+    `spark.sql()` parse over the spread scan, instead of ~10
+    py4j-built aggregate Columns — the whole tree parses and analyzes
+    in the JVM in one call. Measured build cost 0.145 s -> 0.021 s per
+    build (warm avg-of-10); output bit-identical (toPandas equality of
+    every double) because the SQL text IS the oracle text modulo the
+    input name — the same DECIMAL(18,6) sums, the same division order.
+    The scan is bound as a ``spark.sql`` DataFrame argument, whose
+    temp view pyspark drops once the query is analyzed, so a build
+    leaves no view in the session catalog."""
     from gus_spark.operators.util import ensure_parallelism
 
     # spread_cols (r13): hash-spread on read columns instead of the
@@ -117,11 +115,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem"),
         spread_cols=["l_extendedprice", "l_shipdate", "l_quantity"],
     )
-    view = (
-        "_q1_lineitem_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    )
-    li.createOrReplaceTempView(view)
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,
@@ -133,10 +126,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                {sql_davg('l_extendedprice')} AS avg_price,
                {sql_davg('l_discount')} AS avg_disc,
                COUNT(*) AS count_order
-        FROM {view}
+        FROM {{li}}
         WHERE l_shipdate <= TIMESTAMP '2000-09-01'
         GROUP BY l_returnflag, l_linestatus
-        """
+        """,
+        li=li,
     )
 
 

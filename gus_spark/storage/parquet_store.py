@@ -24,13 +24,18 @@ like a miniature table format:
 - each file's manifest entry (row count, pk min/max) is read from the
   parquet footer the write just produced, not by a Spark aggregate (a
   ``Float`` pk keeps the aggregate: parquet stats skip NaN);
-- so a point mutation pays one Spark job for its data-file write. A
-  create's duplicate check scans only the files whose [lo, hi] may hold
-  a new key (none for a key above every range, one more job
-  otherwise); update and delete add their one pruned ``read_one`` job,
-  and a delete that empties its file writes nothing. Records become a
-  DataFrame through one Arrow table, a local scan with no Python
-  worker;
+- the serving path reads through one Arrow reader on the driver
+  (``_scan``: a ``pyarrow.dataset`` over the listed manifest files with
+  the model's declared schema). A point read (``read_one``), a keyset
+  page (``scan_page``) and a create's duplicate check scan only the
+  files whose [lo, hi] may hold the keys, with the predicate pushed
+  into the scan, and cost no Spark job;
+- so a point mutation pays one Spark job, its data-file write (a
+  ``Float`` pk adds its per-file aggregate). A delete that empties its
+  file writes nothing and costs none. Records become a DataFrame
+  through one Arrow table, a local scan with no Python worker. Work
+  that needs a whole snapshot — ``read_df``, compaction, migration —
+  stays on Spark;
 - ``compact()`` folds accumulated delta files back into evenly-sized
   files — the maintenance job a real deployment schedules.
 
@@ -43,11 +48,17 @@ from __future__ import annotations
 
 import bisect
 import json
+import operator
 import os
 import shutil
 import uuid
 from contextlib import contextmanager
 from typing import Any, Iterable
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 
 try:  # POSIX-only; on other platforms the store is single-writer by doc
     import fcntl
@@ -57,7 +68,12 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gus_spark.errors import DuplicateKeyError, NotFoundError, StorageError
+from gus_spark.errors import (
+    DuplicateKeyError,
+    NotFoundError,
+    RecordValidationError,
+    StorageError,
+)
 from gus_spark.model.record import (
     add_null_values,
     parse_record,
@@ -249,21 +265,21 @@ class ParquetStore:
         with self._write_lock(model):
             manifest = self._current_manifest(model)
             # dup check = semi-join against the new keys, over only the
-            # files whose [lo, hi] may hold one of them: no job at all
-            # when every key is outside every file's range
+            # files whose [lo, hi] may hold one of them, on the Arrow
+            # reader (is_in matches NaN to NaN, as Spark's IN does)
             candidates = _files_holding_any(manifest["files"], keys)
             if candidates:
-                clash = (
-                    self.spark.read.schema(model.to_struct_type())
-                    .parquet(*[f["path"] for f in candidates])
-                    .filter(F.col(pk).isin(keys))
-                    .limit(1)
-                    .collect()
-                )
-                if clash:
+                pk_type = _arrow_schema(model).field(pk).type
+                clash = self._scan(
+                    model,
+                    candidates,
+                    ds.field(pk).isin(pa.array(keys, type=pk_type)),
+                    columns=[pk],
+                )[pk]
+                if len(clash):
                     raise DuplicateKeyError(
                         f"record with primary key already exists, use PUT"
-                        f" to update (key={clash[0][pk]!r})"
+                        f" to update (key={clash[0].as_py()!r})"
                     )
             new_files = self._write_data_file(
                 records_to_df(self.spark, records, model), model
@@ -274,23 +290,78 @@ class ParquetStore:
 
     def read_one(self, model: ModelDefinition, id_str: str) -> dict:
         """Point lookup by pk (json/mod.rs:97-105): manifest min/max
-        pruning + parquet predicate pushdown, then hash-probe."""
+        pruning, then one Arrow scan of the candidate files with the pk
+        predicate pushed into it — no Spark job."""
         key = parse_uri_id(id_str, model)
+        pk = model.primary_key
         manifest = self._current_manifest(model)
-        candidates = [
-            f["path"] for f in _files_holding_any(manifest["files"], [key])
-        ]
-        if not candidates:
-            raise NotFoundError(
-                f"no {model.model_name} with {model.primary_key}={id_str}"
-            )
-        df = self.spark.read.schema(model.to_struct_type()).parquet(*candidates)
-        row = df.filter(F.col(model.primary_key) == F.lit(key)).first()
-        if row is None:
-            raise NotFoundError(
-                f"no {model.model_name} with {model.primary_key}={id_str}"
-            )
-        return add_null_values(row.asDict(), model)
+        files = _files_holding_any(manifest["files"], [key])
+        predicate = _arrow_predicate(model, [(pk, "eq", key)])
+        rows = self._scan(model, files, predicate).to_pylist()
+        if not rows:
+            raise NotFoundError(f"no {model.model_name} with {pk}={id_str}")
+        return rows[0]
+
+    def scan_page(
+        self,
+        model: ModelDefinition,
+        after: Any,
+        limit: int,
+        terms: Iterable[tuple[str, str, Any]] = (),
+    ) -> list[dict]:
+        """One keyset page with no Spark job: the rows with pk >
+        ``after`` that pass every ``(attr, op, value)`` term, in pk
+        order, at most ``limit`` of them. ``op`` is one of eq, gt, gte,
+        lt, lte, like, with Spark SQL's semantics (``_arrow_predicate``).
+
+        Only files whose ``hi`` may exceed ``after`` are read. Files
+        with no bounds are read first, the rest one at a time in
+        ascending ``lo`` with the predicate pushed into the scan.
+        Reading stops once the page is full and the next file's ``lo``
+        is above its last pk, so the driver holds one file plus one
+        page, and a first page over a compacted table opens one file."""
+        if limit <= 0:
+            return []
+        pk = model.primary_key
+        predicate = _arrow_predicate(model, [(pk, "gt", after), *terms])
+        unbounded, bounded = [], []
+        for f in self._current_manifest(model)["files"]:
+            if f.get("lo") is None or f.get("hi") is None:
+                unbounded.append(f)
+            else:
+                bounded.append(f)
+        bounded = sorted(
+            (f for f in bounded if f["hi"] > after), key=lambda f: f["lo"]
+        )
+        page = self._scan(model, unbounded, predicate)
+        page = page.sort_by(pk).slice(0, limit)
+        for f in bounded:
+            if len(page) == limit and f["lo"] > page[pk][-1].as_py():
+                break
+            rows = self._scan(model, [f], predicate)
+            page = pa.concat_tables([page, rows]).sort_by(pk).slice(0, limit)
+        return page.to_pylist()
+
+    def _scan(
+        self,
+        model: ModelDefinition,
+        files: list[dict],
+        predicate: Any,
+        columns: list[str] | None = None,
+    ):
+        """The rows of the manifest entries ``files`` that pass the
+        Arrow ``predicate``, as one ``pyarrow.Table`` read on the driver
+        (no Spark job). The dataset carries the model's declared schema,
+        as ``read_df`` does: a column a file lacks reads as null and a
+        column the model dropped is not read, which the metadata-only
+        migrations rely on. The predicate prunes row groups by their
+        statistics before it filters rows."""
+        dataset = ds.dataset(
+            [f["path"] for f in files],
+            schema=_arrow_schema(model),
+            format="parquet",
+        )
+        return dataset.to_table(columns=columns, filter=predicate)
 
     def update_one(
         self, model: ModelDefinition, id_str: str, body: str | dict
@@ -561,8 +632,6 @@ class ParquetStore:
 def _footer_stats(path: str, pk: str) -> tuple[int, Any, Any] | None:
     """(rows, min pk, max pk) of one parquet file from its footer, with
     no Spark job; None when a non-empty row group lacks pk min/max."""
-    import pyarrow.parquet as pq
-
     meta = pq.ParquetFile(path).metadata
     names = [meta.schema.column(i).path for i in range(meta.num_columns)]
     col = names.index(pk)
@@ -577,6 +646,77 @@ def _footer_stats(path: str, pk: str) -> tuple[int, Any, Any] | None:
         lo = stats.min if lo is None else min(lo, stats.min)
         hi = stats.max if hi is None else max(hi, stats.max)
     return meta.num_rows, lo, hi
+
+
+def _arrow_schema(model: ModelDefinition):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(model.to_struct_type())
+
+
+_COMPARE = {
+    "eq": operator.eq,
+    "gt": operator.gt,
+    "gte": operator.ge,
+    "lt": operator.lt,
+    "lte": operator.le,
+}
+
+
+def _arrow_predicate(
+    model: ModelDefinition, terms: Iterable[tuple[str, str, Any]]
+):
+    """The conjunction of ``(attr, op, value)`` terms as one Arrow
+    expression that keeps exactly the rows Spark SQL's filter would:
+
+    - a comparison with null keeps nothing;
+    - NaN equals NaN and ranks above every double, so on a ``Float``
+      attribute ``gt``/``gte`` also keep NaN rows and a NaN value
+      turns each op into its NaN test;
+    - ``like`` follows Spark's LIKE: ``_`` and ``%`` also match a
+      newline, and ``\\`` escapes only ``_``, ``%`` or itself."""
+    schema = _arrow_schema(model)
+    out = None
+    for attr, op, value in terms:
+        col = ds.field(attr)
+        arrow_type = schema.field(attr).type
+        if value is None:
+            term = pc.scalar(False)
+        elif op == "like":
+            term = pc.match_like(col, _like_pattern(value))
+        elif pa.types.is_floating(arrow_type) and value != value:
+            nan = pc.is_nan(col)
+            term = {
+                "eq": nan,
+                "gt": pc.scalar(False),
+                "gte": nan,
+                "lt": ~nan,
+                "lte": col.is_valid(),
+            }[op]
+        else:
+            term = _COMPARE[op](col, pa.scalar(value, type=arrow_type))
+            if pa.types.is_floating(arrow_type) and op in ("gt", "gte"):
+                term = term | pc.is_nan(col)
+        out = term if out is None else out & term
+    return out
+
+
+def _like_pattern(pattern: str) -> str:
+    """``pattern`` once it passes Spark's LIKE checks: the escape
+    character ``\\`` may precede only ``_``, ``%`` or itself and may not
+    end the pattern (Arrow's ``match_like`` would accept either)."""
+    chars = iter(pattern)
+    for c in chars:
+        if c != "\\":
+            continue
+        nxt = next(chars, None)
+        if nxt is None or nxt not in "_%\\":
+            where = "end" if nxt is None else f"precede {nxt!r}"
+            raise RecordValidationError(
+                f"invalid LIKE pattern {pattern!r}: the escape character"
+                f" may not {where}"
+            )
+    return pattern
 
 
 def _files_holding_any(files: list[dict], keys: list) -> list[dict]:

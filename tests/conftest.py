@@ -9,6 +9,22 @@ SF_DIR = os.environ.get("GUS_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("GUS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def spark_jobs(spark, fn):
+    """(fn's result, the Spark jobs it launched), counted via a job group
+    once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from gus_spark.session import get_spark

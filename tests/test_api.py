@@ -292,6 +292,25 @@ def test_graphql_offset_is_capped(api):
     assert "keyset" in payload["errors"][0]["message"]
 
 
+def test_graphql_offset_with_cursor_is_an_error(spark, tmp_path):
+    """offset and the keyset cursor do not combine: the offset was
+    dropped silently before (ids 1 and 2 came back here)."""
+    registry = ModelRegistry()
+    model = ModelDefinition.from_json(
+        {"model_name": "item", "attributes": {"id": "Integer"},
+         "primary_key": "id", "required": ["id"]}
+    )
+    registry.register(model)
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    store.create_many(model, [{"id": i} for i in range(10)])
+    gapi = GraphQLApi(registry, store)
+    out = gapi.execute("{ items(limit: 2, after: 0, offset: 5) { id } }")
+    assert out["errors"] and "offset" in out["errors"][0]["message"]
+    assert out["data"]["items"] is None
+    out = gapi.execute("{ items(limit: 2, after: 0, offset: 0) { id } }")
+    assert out["data"]["items"] == [{"id": 1}, {"id": 2}]
+
+
 def test_graphql_keyset_pagination(api):
     """`after` cursor: page 2 = rows with pk > last-seen, pk-ordered,
     and the cursor compiles to a scan-pushed range predicate (the only

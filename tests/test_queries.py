@@ -55,6 +55,24 @@ def test_query_matches_oracle(spark, duck, name):
     assert frame_key(sdf) == frame_key(odf)
 
 
+def test_q1_leaves_no_temp_view(spark):
+    """q1 binds its input as a spark.sql DataFrame argument: no view
+    stays in the session catalog after the build or the collect."""
+
+    def views():
+        return [
+            t.name for t in spark.catalog.listTables()
+            if t.isTemporary and "lineitem" in t.name
+            or t.name.startswith("_pyspark_")
+        ]
+
+    before = views()
+    df = catalog()["q1_pricing_summary"].fn(spark, SF_DIR)
+    assert views() == before
+    assert df.collect()
+    assert views() == before
+
+
 def test_every_oracle_is_valid_duckdb(duck):
     """Every declared oracle parses and runs on DuckDB (cheap guard
     against SQL drift before the driver round runs)."""

@@ -6,6 +6,7 @@ import math
 import os
 
 import pytest
+from conftest import spark_jobs
 
 from gus_spark.errors import DuplicateKeyError, NotFoundError
 from gus_spark.model.types import ModelDefinition
@@ -347,22 +348,6 @@ def test_maintain_compacts_only_when_degraded(store, movie_model):
 
 
 # --- the one-job write path -------------------------------------------------
-def _jobs(spark, fn):
-    """(fn's result, the Spark jobs it launched), counted via a job group
-    once the listener bus has delivered every job-start event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, "job-count pin")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _pk_model(pk_type: str) -> ModelDefinition:
     return ModelDefinition.from_json(
         {
@@ -431,7 +416,7 @@ def test_float_pk_takes_the_aggregate_path(spark, store):
     a Float pk keeps Spark's aggregate (one more job per file), and a
     file holding NaN gets no bounds, so it is always scanned."""
     model = _pk_model("Float")
-    _, n = _jobs(spark, lambda: store.create_many(model, [{"id": 1.5}]))
+    _, n = spark_jobs(spark, lambda: store.create_many(model, [{"id": 1.5}]))
     assert n > 1
     [entry] = store._current_manifest(model)["files"]
     assert (entry["lo"], entry["hi"], entry["rows"]) == (1.5, 1.5, 1)
@@ -453,19 +438,34 @@ def test_zero_row_file_never_manifested(spark, store, movie_model):
     )  # the file exists; it is only left out of the manifest
 
 
-def test_dup_check_prunes_by_file_ranges(spark, store, movie_model):
+def test_dup_check_prunes_by_file_ranges(spark, store, movie_model,
+                                        monkeypatch):
     store.create_many(movie_model, [dict(RECORD, id=i) for i in (10, 20, 30)])
     store.compact(movie_model)  # one file, [lo, hi] = [10, 30]
-    # a key inside the file's [lo, hi] but absent: scanned, then created
-    _, n = _jobs(spark, lambda: store.create_one(movie_model, dict(RECORD, id=15)))
-    assert n == 2
+    scanned = []
+    scan = ParquetStore._scan
+
+    def spy(self, model, files, *args, **kwargs):
+        scanned.append(len(files))
+        return scan(self, model, files, *args, **kwargs)
+
+    monkeypatch.setattr(ParquetStore, "_scan", spy)
+    # a key inside the file's [lo, hi] but absent: scanned on the Arrow
+    # reader, then created; the write is the only job
+    _, n = spark_jobs(
+        spark, lambda: store.create_one(movie_model, dict(RECORD, id=15))
+    )
+    assert (n, scanned) == (1, [1])
     with pytest.raises(DuplicateKeyError):
         store.create_one(movie_model, dict(RECORD, id=20))
     with pytest.raises(DuplicateKeyError):
         store.create_many(movie_model, [dict(RECORD, id=k) for k in (99, 30)])
-    # a fresh key above every range: the write is the only job
-    _, n = _jobs(spark, lambda: store.create_one(movie_model, dict(RECORD, id=31)))
-    assert n == 1
+    # a fresh key above every range: no file scanned at all
+    scanned.clear()
+    _, n = spark_jobs(
+        spark, lambda: store.create_one(movie_model, dict(RECORD, id=31))
+    )
+    assert (n, scanned) == (1, [])
     assert sorted(r.id for r in store.read_df(movie_model).collect()) == [
         10, 15, 20, 30, 31,
     ]
@@ -476,17 +476,19 @@ def test_point_mutations_cost_one_write_job(spark, store, movie_model):
         movie_model, [dict(RECORD, id=i, name=f"m{i}") for i in range(1, 41)]
     )
     store.compact(movie_model, target_files=4)
-    _, n = _jobs(spark, lambda: store.create_one(movie_model, dict(RECORD, id=41)))
+    _, n = spark_jobs(
+        spark, lambda: store.create_one(movie_model, dict(RECORD, id=41))
+    )
     assert n == 1
-    _, n = _jobs(
+    _, n = spark_jobs(
         spark, lambda: store.update_one(movie_model, "7", {"name": "patched"})
     )
-    assert n == 2  # the pruned read_one + the write
-    _, n = _jobs(spark, lambda: store.delete_one(movie_model, "13"))
-    assert n <= 2
-    # a delete that empties its file writes nothing: only the read_one
-    _, n = _jobs(spark, lambda: store.delete_one(movie_model, "41"))
-    assert n == 1
+    assert n == 1  # the write; the pruned read_one runs on Arrow
+    _, n = spark_jobs(spark, lambda: store.delete_one(movie_model, "13"))
+    assert n <= 1
+    # a delete that empties its file writes nothing: no job at all
+    _, n = spark_jobs(spark, lambda: store.delete_one(movie_model, "41"))
+    assert n == 0
     assert store.read_one(movie_model, "7")["name"] == "patched"
     health = store.table_health(movie_model)
     assert health["n_rows"] == store.count(movie_model) == 39
