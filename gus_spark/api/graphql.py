@@ -32,7 +32,7 @@ from gus_spark.errors import GusError
 from gus_spark.inflect import camelize, plural_camel
 from gus_spark.model.registry import ModelRegistry
 from gus_spark.model.types import AttrType, ModelDefinition
-from gus_spark.storage.parquet_store import ParquetStore
+from gus_spark.storage.parquet_store import ParquetStore, _like_pattern
 
 try:
     import graphql as gql
@@ -619,7 +619,10 @@ def _filter_terms(model: ModelDefinition, args: dict) -> list[tuple]:
     Arrow one (``ParquetStore.scan_page``) both consume: ``<attr>`` is
     ``eq``, ``<attr>_<op>`` is a range op or ``like`` — unless a real
     attribute literally owns the suffixed name (it keeps equality
-    semantics then)."""
+    semantics then). A LIKE pattern is checked against Spark's escape
+    rule here, so every page shape — keyset, offset, ``orderBy`` and
+    ``<plural>Stats`` — reports an invalid one as the same client
+    error instead of Spark's raw analysis error at collect."""
     terms = []
     for attr, value in args.items():
         name, _, suffix = attr.rpartition("_")
@@ -628,6 +631,8 @@ def _filter_terms(model: ModelDefinition, args: dict) -> list[tuple]:
             and name in model.attributes
             and attr not in model.attributes
         ):
+            if suffix == "like" and value is not None:
+                _like_pattern(value)
             terms.append((name, suffix, value))
         else:
             terms.append((attr, "eq", value))

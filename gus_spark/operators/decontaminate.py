@@ -120,7 +120,6 @@ def fuzzy_contamination(
     bench_text_col: str = "text",
     threshold: float = 0.7,
     ngram: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(doc_id, bench_id, jaccard): corpus documents that are NEAR
     DUPLICATES of a benchmark example — the contamination that exact
@@ -163,23 +162,21 @@ def fuzzy_contamination(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     docs = ensure_parallelism(docs)
     d_bands = _bands_of(
-        docs, id_col, text_col, ngram, engine
+        docs, id_col, text_col, ngram
     ).withColumnRenamed(id_col, "_did")
     b_bands = _bands_of(
-        bench, bench_id_col, bench_text_col, ngram, engine
+        bench, bench_id_col, bench_text_col, ngram
     ).withColumnRenamed(bench_id_col, "_bid")
     candidates = (
         d_bands.join(b_bands, ["band_id", "band_hash"])
         .select("_did", "_bid")
         .distinct()
     )
-    d_sets = _shingle_sets(
-        docs.filter(F.col(text_col).isNotNull()),
-        id_col, text_col, ngram, engine,
-    ).select(F.col(id_col).alias("_did"), F.col("ts").alias("_dts"))
+    d_sets = _shingle_sets(docs, id_col, text_col, ngram).select(
+        F.col(id_col).alias("_did"), F.col("ts").alias("_dts")
+    )
     b_sets = _shingle_sets(
-        bench.filter(F.col(bench_text_col).isNotNull()),
-        bench_id_col, bench_text_col, ngram, engine,
+        bench, bench_id_col, bench_text_col, ngram
     ).select(F.col(bench_id_col).alias("_bid"), F.col("ts").alias("_bts"))
     inter = F.size(F.array_intersect(F.col("_dts"), F.col("_bts")))
     union = F.size(F.col("_dts")) + F.size(F.col("_bts")) - inter
@@ -205,7 +202,6 @@ def calibrate_fuzzy_ngram(
     max_ngram: int = 3,
     collision_budget: float = 0.01,
     sample: int | None = None,
-    engine: str = "arrow",
     threshold: float = 0.7,
     flag_tolerance: float = 0.1,
     max_sample: int = 2048,
@@ -306,11 +302,11 @@ def calibrate_fuzzy_ngram(
         .localCheckpoint()
     )
     for n in range(1, max_ngram + 1):
-        ds = _shingle_sets(d_s, id_col, text_col, n, engine).select(
+        ds = _shingle_sets(d_s, id_col, text_col, n).select(
             F.col("ts").alias("_dts")
         )
         bs = _shingle_sets(
-            b_s, bench_id_col, bench_text_col, n, engine
+            b_s, bench_id_col, bench_text_col, n
         ).select(F.col("ts").alias("_bts"))
         inter = F.size(F.array_intersect(F.col("_dts"), F.col("_bts")))
         union = F.size("_dts") + F.size("_bts") - inter
@@ -341,7 +337,6 @@ def decontaminate_fuzzy(
     bench_text_col: str = "text",
     threshold: float = 0.7,
     ngram: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
     """``docs`` minus every near-duplicate of a benchmark example — the
     fuzzy companion of `decontaminate` (run BOTH in a real pipeline:
@@ -352,7 +347,7 @@ def decontaminate_fuzzy(
     dirty = (
         fuzzy_contamination(
             docs, bench, id_col, text_col, bench_id_col, bench_text_col,
-            threshold, ngram, engine,
+            threshold, ngram,
         )
         .select(F.col("doc_id").alias("_dirty_id"))
         .distinct()

@@ -3,10 +3,11 @@
 Custom operators the reference lacks entirely, built as DataFrame
 compositions that shuffle only on band-hash / signature keys. The
 per-doc integer math (shingle mixing, permutation mins, verification
-sets) runs by default in vectorized numpy Arrow kernels — Spark's
-higher-order functions evaluate interpreted, ~100 ns per scalar op —
-with bit-identical all-JVM expression twins behind ``engine='jvm'``;
-banding, bucketing and every join/agg stay JVM-side expressions.
+sets) runs in ONE vectorized numpy Arrow kernel (`_minhash_kernel`) —
+Spark's higher-order functions evaluate interpreted, ~100 ns per
+scalar op; the bit-identical all-JVM expression formulation it is
+tested against lives in tests/reference_ops.py. Banding, bucketing
+and every join/agg stay JVM-side expressions.
 
 Scale design (the 100-TB path):
 - MinHash signatures are O(docs × shingles) map-side work with ZERO
@@ -105,7 +106,7 @@ def shingles(text: Column, n: int = 1) -> Column:
     evaluated once per ROW. (The previous sequence+element_at
     formulation re-evaluated the inline split PER ELEMENT ACCESS under
     interpreted HOF eval — O(tokens²) on long documents; same class of
-    bug fixed in the minhash jvm path, see _mix_expr.) Trailing
+    bug fixed in _mix_expr.) Trailing
     zip_with null-padding is sliced off, so the gram list and its
     order are identical to the old formulation. The token array is
     bound ONCE through a single-element transform lambda — the gram
@@ -235,14 +236,20 @@ def _mix_np(t, n: int):
     return acc
 
 
-def _mh_perms_kernel(ngram: int = 1):
-    """Arrow-vectorized signature kernel: pandas_udf mapping a per-doc
-    TOKEN-hash array to the 128-long minhash signature — shingle mixing
-    (`_mix_np`), 32-bit masking and all (a_k*x + b_k) mod p permutation
-    mins happen in uint64 numpy, bit-identical to the JVM expression
-    formulation (asserted by tests), so persisted MinHashIndex tables
-    built by either engine interoperate and the escape-probability math
-    in queries/dedup.py is untouched.
+def _minhash_kernel(ngram: int, fields: tuple[str, ...]):
+    """THE Arrow MinHash kernel: a pandas_udf mapping a per-doc
+    TOKEN-hash array to a struct holding only the ``fields`` its call
+    site reads — ``_mh``, the 128-long minhash signature, and/or
+    ``ts``, the sorted DISTINCT 64-bit shingle-hash set exact-Jaccard
+    verification intersects (np.unique sorts in unsigned order; the
+    set consumers ignore element order). Shingle mixing (`_mix_np`),
+    32-bit masking and every (a_k*x + b_k) mod p permutation min run
+    in uint64 numpy, bit-identical to the all-JVM expression
+    formulation kept in tests/reference_ops.py (asserted by tests), so
+    persisted MinHashIndex tables stay valid and the escape-probability
+    math in queries/dedup.py is untouched. A call asking for both
+    shares the tokenize + xxhash64 + Arrow transfer + shingle mix
+    between them (r14); a ``ts``-only call computes no permutations.
 
     Why it exists: `transform`/`sequence`/`array_min` are higher-order
     functions, which Spark evaluates INTERPRETED (no whole-stage
@@ -252,7 +259,7 @@ def _mh_perms_kernel(ngram: int = 1):
     (the one string→integer boundary, ~0.3 s at sf1). Docs are grouped
     into ≤chunk_shingles flushes, and a single doc larger than a chunk
     is itself processed in chunked permutation passes (elementwise min
-    is associative), so the (128 × shingles) intermediate stays ~128 MB
+    is associative), so the (128 × shingles) intermediate stays bounded
     regardless of Arrow batch size AND of the largest document."""
     import numpy as np
     import pandas as pd
@@ -261,48 +268,41 @@ def _mh_perms_kernel(ngram: int = 1):
         # without this the error would surface as an opaque executor
         # IndexError mid-job
         raise ValueError(f"ngram {ngram} exceeds mix support {_MIX_MAX_N}")
+    names = [f for f in ("_mh", "ts") if f in fields]
     a = np.array(_PERM_A, dtype=np.uint64)
     b = np.array(_PERM_B, dtype=np.uint64)
     p = np.uint64(_MERSENNE_P)
     mask32 = np.uint64(0xFFFFFFFF)
     chunk_shingles = _CHUNK_SHINGLES
 
-    @F.pandas_udf("array<long>")
-    def mh_perms(ths):
-        arrs = [
-            None
-            if t is None
-            else _mix_np(np.asarray(t, dtype=np.uint64), ngram) & mask32
-            for t in ths
-        ]
+    def perms(flat):
+        # (128 × len(flat)) universal-hash values of one flush
+        m = flat[None, :] * a[:, None]
+        m += b[:, None]
+        m %= p
+        return m
+
+    def sig_chunked(arr):
+        # One oversized doc: permutation mins over ≤chunk_shingles
+        # slices, combined by elementwise min (associative) — the
+        # (128 × shingles) intermediate never exceeds one chunk.
+        res = None
+        for s in range(0, len(arr), chunk_shingles):
+            pm = perms(arr[s : s + chunk_shingles]).min(axis=1)
+            res = pm if res is None else np.minimum(res, pm)
+        return res.astype(np.int64)
+
+    def signatures(arrs):
         out = [None] * len(arrs)
         group: list[int] = []
         pending = 0
 
-        def sig_chunked(arr):
-            # One oversized doc: permutation mins over ≤chunk_shingles
-            # slices, combined by elementwise min (associative) — the
-            # (128 × shingles) intermediate never exceeds one chunk.
-            res = None
-            for s in range(0, len(arr), chunk_shingles):
-                m = arr[None, s : s + chunk_shingles] * a[:, None]
-                m += b[:, None]
-                m %= p
-                pm = m.min(axis=1)
-                res = pm if res is None else np.minimum(res, pm)
-            return res.astype(np.int64)
-
         def flush():
             nonlocal pending
-            if not group:
-                return
             idx = [i for i in group if arrs[i] is not None and len(arrs[i])]
             if idx:
                 lens = np.array([len(arrs[i]) for i in idx], dtype=np.int64)
-                flat = np.concatenate([arrs[i] for i in idx])
-                m = flat[None, :] * a[:, None]
-                m += b[:, None]
-                m %= p
+                m = perms(np.concatenate([arrs[i] for i in idx]))
                 offs = np.zeros(len(idx), dtype=np.int64)
                 np.cumsum(lens[:-1], out=offs[1:])
                 res = np.minimum.reduceat(m, offs, axis=1)
@@ -320,166 +320,71 @@ def _mh_perms_kernel(ngram: int = 1):
             if pending >= chunk_shingles:
                 flush()
         flush()
-        return pd.Series(out)
+        return out
 
-    return mh_perms
-
-
-def _mh_both_kernel(ngram: int = 1):
-    """One Arrow pass emitting BOTH per-doc outputs the stateless pair
-    pipeline needs: ``struct<_mh: array<long>, ts: array<long>>`` —
-    the 128-perm minhash signature AND the sorted distinct shingle-
-    hash set (r14, guide §2.4/§8). The signature branch and the
-    verify branch each consumed ``token_hashes`` separately, so the
-    corpus was tokenized, xxhash64-ed, Arrow-shipped and rotate-xor
-    mixed TWICE per run; this kernel shares all of that and differs
-    only in the tails (perm mins vs np.unique). Values are
-    bit-identical to `_mh_perms_kernel` / `_verify_sets_kernel` by
-    construction — the same `_mix_np`, the same mask, the same
-    chunked-flush permutation code — and pinned by a parity test.
-    Consumers share the output through ONE lazy localCheckpoint
-    (O(corpus shingle hashes) executor-local storage — the
-    write-once-vs-hash-twice trade; the incremental MinHashIndex
-    remains the at-scale path and keeps the single-output kernels)."""
-    import numpy as np
-    import pandas as pd
-
-    if ngram > _MIX_MAX_N:  # driver-side, mirroring _mh_perms_kernel
-        raise ValueError(f"ngram {ngram} exceeds mix support {_MIX_MAX_N}")
-    a = np.array(_PERM_A, dtype=np.uint64)
-    b = np.array(_PERM_B, dtype=np.uint64)
-    p = np.uint64(_MERSENNE_P)
-    mask32 = np.uint64(0xFFFFFFFF)
-    chunk_shingles = _CHUNK_SHINGLES
-
-    @F.pandas_udf("struct<_mh: array<long>, ts: array<long>>")
-    def mh_both(ths):
+    @F.pandas_udf(
+        "struct<" + ", ".join(f"{n}: array<long>" for n in names) + ">"
+    )
+    def minhash(ths):
         mixed = [
             None
             if t is None
             else _mix_np(np.asarray(t, dtype=np.uint64), ngram)
             for t in ths
         ]
-        arrs = [None if m is None else (m & mask32) for m in mixed]
-        out = [None] * len(arrs)
-        group: list[int] = []
-        pending = 0
-
-        def sig_chunked(arr):
-            res = None
-            for s in range(0, len(arr), chunk_shingles):
-                m = arr[None, s : s + chunk_shingles] * a[:, None]
-                m += b[:, None]
-                m %= p
-                pm = m.min(axis=1)
-                res = pm if res is None else np.minimum(res, pm)
-            return res.astype(np.int64)
-
-        def flush():
-            nonlocal pending
-            if not group:
-                return
-            idx = [i for i in group if arrs[i] is not None and len(arrs[i])]
-            if idx:
-                lens = np.array([len(arrs[i]) for i in idx], dtype=np.int64)
-                flat = np.concatenate([arrs[i] for i in idx])
-                m = flat[None, :] * a[:, None]
-                m += b[:, None]
-                m %= p
-                offs = np.zeros(len(idx), dtype=np.int64)
-                np.cumsum(lens[:-1], out=offs[1:])
-                res = np.minimum.reduceat(m, offs, axis=1)
-                for j, i in enumerate(idx):
-                    out[i] = res[:, j].astype(np.int64)
-            group.clear()
-            pending = 0
-
-        for i, arr in enumerate(arrs):
-            if arr is not None and len(arr) > chunk_shingles:
-                out[i] = sig_chunked(arr)
-                continue
-            group.append(i)
-            pending += 0 if arr is None else len(arr)
-            if pending >= chunk_shingles:
-                flush()
-        flush()
-        sets = [
-            None if m is None else np.unique(m).astype(np.int64)
-            for m in mixed
-        ]
-        return pd.DataFrame({"_mh": out, "ts": sets})
-
-    return mh_both
-
-
-def _verify_sets_kernel(ngram: int = 1):
-    """Arrow twin of ``array_distinct(shingle_hashes(...))``: token-hash
-    array -> sorted DISTINCT 64-bit shingle-hash array (np.unique sorts
-    in unsigned order;
-    element order is irrelevant to the set-intersection consumers, and
-    both engines produce the same SET — asserted by tests)."""
-    import numpy as np
-    import pandas as pd
-
-    if ngram > _MIX_MAX_N:  # driver-side, mirroring _mh_perms_kernel
-        raise ValueError(f"ngram {ngram} exceeds mix support {_MIX_MAX_N}")
-
-    @F.pandas_udf("array<long>")
-    def verify_sets(ths):
-        return pd.Series(
-            [
-                None
-                if t is None
-                else np.unique(
-                    _mix_np(np.asarray(t, dtype=np.uint64), ngram)
-                ).astype(np.int64)
-                for t in ths
+        cols = {}
+        if "ts" in names:
+            cols["ts"] = [
+                None if m is None else np.unique(m).astype(np.int64)
+                for m in mixed
             ]
-        )
+        if "_mh" in names:
+            cols["_mh"] = signatures(
+                [None if m is None else m & mask32 for m in mixed]
+            )
+        return pd.DataFrame({n: cols[n] for n in names})
 
-    return verify_sets
+    return minhash
+
+
+def _minhash_frame(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    ngram: int,
+    fields: tuple[str, ...],
+) -> DataFrame:
+    """(id, *fields) straight from raw documents through ONE
+    `_minhash_kernel` call. Null text is dropped BEFORE the kernel: a
+    null signature row would land every null-text doc in one
+    (band_id, NULL) bucket downstream. The guard tests the RAW text
+    column — filtering on the hashes instead would push the predicate
+    through the projection and duplicate the whole token-hashing
+    expression into the filter (measured 6.5x slower).
+
+    The signature stays ONE array column (r13, guide §1.2 driver-side
+    cost): every DataFrame op re-analyzes its whole subtree, and the
+    analyzer's cost rides schema WIDTH, so compositions band/join on
+    `_mh[k]` getItems (`_band_rows_arr`) instead of unpacking 128 mh_k
+    columns only to re-fold them; only the public `minhash_signature`
+    unpacks."""
+    kernel = _minhash_kernel(ngram, fields)
+    return (
+        df.filter(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col),
+            kernel(token_hashes(F.col(text_col))).alias("_st"),
+        )
+        .select(id_col, *[F.col(f"_st.{f}").alias(f) for f in fields])
+    )
 
 
 def _shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, ngram: int, engine: str
-) -> DataFrame:
-    """(id, ts): distinct 64-bit shingle-hash sets for exact-Jaccard
-    verification, via the numpy kernel ('arrow') or the expression
-    formulation ('jvm') — same sets either way."""
-    if engine == "arrow":
-        vs = _verify_sets_kernel(ngram)
-        return df.select(F.col(id_col), vs(token_hashes(F.col(text_col))).alias("ts"))
-    th_df = df.select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("th")
-    )
-    return th_df.select(
-        F.col(id_col),
-        F.array_distinct(_mix_expr(F.col("th"), ngram)).alias("ts"),
-    )
-
-
-def _signature_array(
     df: DataFrame, id_col: str, text_col: str, ngram: int
 ) -> DataFrame:
-    """(id, _mh): the arrow kernel's 128-perm signature as ONE array
-    column — the width-2 schema internal compositions band/join on.
-
-    r13 (guide §1.2 driver-side cost): every DataFrame op re-analyzes
-    its whole subtree, and the analyzer's cost rides schema WIDTH —
-    compositions that unpacked the signature to 128 mh_k columns only
-    to immediately re-fold them (banding's xxhash64 over 4 at a time)
-    paid the wide-schema analysis on every downstream op of every
-    build. Band hashes computed from `_mh[k]` getItems are the same
-    xxhash64 over the same longs, so `_band_rows_arr(_signature_array
-    (..))` emits bit-identical band rows to
-    `_band_rows(minhash_signature(..))` (asserted in
-    tests/test_approx_ops.py). Callers that PERSIST signatures
-    (MinHashIndex) keep the unpacked public form."""
-    mh = _mh_perms_kernel(ngram)
-    th_df = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("th")
-    )
-    return th_df.select(F.col(id_col), mh("th").alias("_mh"))
+    """(id, ts): distinct 64-bit shingle-hash sets of the non-null-text
+    documents, for exact-Jaccard verification."""
+    return _minhash_frame(df, id_col, text_col, ngram, ("ts",))
 
 
 def minhash_signature(
@@ -487,84 +392,32 @@ def minhash_signature(
     id_col: str,
     text_col: str,
     ngram: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, minhash_0..k-1): min over shingles of the k-th universal
-    hash of the shingle's 32-bit basis (low bits of its v3 mix hash).
+    hash of the shingle's 32-bit basis (low bits of its v3 mix hash),
+    for every non-null-text document.
 
-    ZERO shuffles in either engine: tokens are xxhash64'd once per doc
-    (`token_hashes`), n-gram shingle hashes are the integer `_MIX_C`
-    rotate-xor combine over that array (`shingle_hashes` — no shingle STRINGS
-    are ever built; string construction was ~80% of this stage at sf1),
-    and signatures never explode. Duplicate shingles are NOT removed:
-    min over a multiset equals min over its set, so the array_distinct
-    the verification sets need would be pure cost here. ``engine``
-    picks how the 128 permutation mins are computed — the VALUES are
-    bit-identical:
-
-    - ``'arrow'`` (default): one vectorized numpy pandas_udf
-      (`_mh_perms_kernel`) fed the token-hash array, returning the
-      signature array, unpacked to mh_k columns by codegen'd
-      `element_at`s. Several times faster than the expression path on
-      the signature stage (HOF passes are interpreted per element; the
-      vectorized kernel pays only the Arrow exchange).
-    - ``'jvm'``: expression `shingle_hashes` + 128 ×
-      `array_min(transform(...))` — no Python worker in the plan, for
-      contexts where an all-JVM pipeline matters more than the kernel
-      speedup.
-
-    (An explode + groupBy(id) + 128-min-agg formulation was measured
-    ~35% slower than the jvm path and shuffles; both current engines
-    shuffle nothing.) The hash arrays are materialized as columns FIRST
-    — referencing the hash expression inside the permutation lambdas
-    would re-inline and recompute the token hashing 128 times per doc.
+    ZERO shuffles: tokens are xxhash64'd once per doc (`token_hashes`),
+    n-gram shingle hashes are the integer rotate-xor combine over that
+    array (`_mix_np` — no shingle STRINGS are ever built; string
+    construction was ~80% of this stage at sf1), and signatures never
+    explode. Duplicate shingles are NOT removed: min over a multiset
+    equals min over its set, so the np.unique the verification sets
+    need would be pure cost here. The 128 permutation mins run in the
+    vectorized `_minhash_kernel`, returning the signature array,
+    unpacked to mh_k columns by ONE selectExpr (the per-column py4j
+    round trips of 128 element_at Column builds were ~0.8 s of every
+    build, r13 cProfile; `_mh[k]` is the same value as
+    element_at(_mh, k+1) on these fixed-length non-null arrays).
 
     ``ngram`` is bounded by the integer-combine rotation table
     (``ngram <= _MIX_MAX_N``, currently 8; ValueError beyond) — extend
     ``_MIX_ROT`` with any distinct rotations to lift it.
     """
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"unknown engine {engine!r}")
-    df = ensure_parallelism(df)
-    # null-text guard on the RAW column, before the hash column exists
-    # (the explode formulation dropped those docs implicitly).
-    # Filtering on isNotNull(hashes) instead would push the predicate
-    # through the projection and duplicate the whole token-hashing
-    # expression into the filter — measured 6.5x slower.
-    live = df.filter(F.col(text_col).isNotNull())
-    if engine == "arrow":
-        # one selectExpr call instead of 128 element_at Column builds:
-        # the per-column py4j round trips were ~0.8 s of every build of
-        # this plan (r13 cProfile); `_mh[k]` (0-based getItem) is the
-        # same value as element_at(_mh, k+1) on these fixed-length
-        # non-null arrays, so signatures stay bit-identical.
-        return _signature_array(live, id_col, text_col, ngram).selectExpr(
-            f"`{id_col}`",
-            *[f"_mh[{k}] AS mh_{k}" for k in range(NUM_PERMS)],
-        )
-    xs_df = live.select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("th")
-    ).select(
-        F.col(id_col),
-        F.transform(
-            _mix_expr(F.col("th"), ngram),
-            # 32-bit basis: bitwise AND keeps it non-negative and bounds
-            # the universal-hash intermediates in signed 64-bit (ANSI)
-            lambda m: m.bitwiseAND(F.lit(0xFFFFFFFF)),
-        ).alias("xs"),
-    )
-    return xs_df.select(
-        F.col(id_col),
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("xs"),
-                    lambda x: (x * F.lit(_PERM_A[k]) + F.lit(_PERM_B[k]))
-                    % F.lit(_MERSENNE_P),
-                )
-            ).alias(f"mh_{k}")
-            for k in range(NUM_PERMS)
-        ],
+    return _minhash_frame(
+        ensure_parallelism(df), id_col, text_col, ngram, ("_mh",)
+    ).selectExpr(
+        f"`{id_col}`", *[f"_mh[{k}] AS mh_{k}" for k in range(NUM_PERMS)]
     )
 
 
@@ -574,7 +427,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     threshold: float = 0.8,
     ngram: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs (id_a, id_b, jaccard) with exact-Jaccard
     verification of LSH candidates.
@@ -588,38 +440,19 @@ def minhash_lsh_pairs(
     ``_MIX_ROT`` with any distinct rotations to lift it.
     """
     df = ensure_parallelism(df)  # both branches (signature + verify) share it
-    both = None
-    if engine == "arrow":
-        # r14: ONE Arrow pass computes signature AND verify set (the
-        # two branches shared tokenize + xxhash64 + Arrow transfer +
-        # shingle mix and differed only in their tails — see
-        # _mh_both_kernel); the lazy localCheckpoint is what lets both
-        # consumers read the single pass. Warm A/B at sf0.1:
-        # 1.23-1.30 s vs 1.42-1.56 s for the two-kernel form,
-        # bit-identical pairs. Array-form signature throughout — no
-        # 128-column unpack in this plan (r13, _signature_array).
-        kb = _mh_both_kernel(ngram)
-        both = (
-            # null text dropped BEFORE the kernel (the _signature_array
-            # contract): a null signature row would land every null-
-            # text doc in one (band_id, NULL) bucket downstream
-            df.filter(F.col(text_col).isNotNull())
-            .select(
-                F.col(id_col),
-                kb(token_hashes(F.col(text_col))).alias("_st"),
-            )
-            .select(
-                id_col,
-                F.col("_st._mh").alias("_mh"),
-                F.col("_st.ts").alias("ts"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        bands = _band_rows_arr(both.select(id_col, "_mh"), id_col)
-    else:
-        sig = minhash_signature(df, id_col, text_col, ngram, engine=engine)
-        bands = _band_rows(sig, id_col)
-    candidates = _bucket_pairs(bands, id_col)
+    # r14: ONE Arrow pass computes signature AND verify set (the two
+    # branches shared tokenize + xxhash64 + Arrow transfer + shingle
+    # mix and differed only in their tails); the lazy localCheckpoint
+    # is what lets both consumers read the single pass. Warm A/B at
+    # sf0.1: 1.23-1.30 s vs 1.42-1.56 s for the two-kernel form,
+    # bit-identical pairs. Array-form signature throughout — no
+    # 128-column unpack in this plan (r13, _minhash_frame).
+    both = _minhash_frame(
+        df, id_col, text_col, ngram, ("_mh", "ts")
+    ).localCheckpoint(eager=False)
+    candidates = _bucket_pairs(
+        _band_rows_arr(both.select(id_col, "_mh"), id_col), id_col
+    )
 
     # verification uses the same shingle unit as candidate generation,
     # as SETS of the 64-bit shingle hashes: |∩|/|∪| over the hash sets
@@ -654,17 +487,10 @@ def minhash_lsh_pairs(
     # collided ids' sets (O(candidates), not O(corpus)). max() over
     # the single non-null array per role re-attaches the sets
     # deterministically; jaccard arithmetic is unchanged.
-    if both is not None:
-        # already text-filtered above — the defensive ts filter only
-        # mirrors the old inner-join's null-drop semantics
-        toks = both.select(id_col, "ts").filter(
-            F.col("ts").isNotNull()
-        )
-    else:
-        toks = _shingle_sets(
-            df.filter(F.col(text_col).isNotNull()),
-            id_col, text_col, ngram, engine,
-        )
+    #
+    # already text-filtered by _minhash_frame — the defensive ts
+    # filter only mirrors the old inner-join's null-drop semantics
+    toks = both.select(id_col, "ts").filter(F.col("ts").isNotNull())
     melted = candidates.select(
         "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("_vid")
     )
@@ -894,28 +720,28 @@ class MinHashIndex:
                     " until maintain() folds its tombstone away."
                     " maintain(max_tomb_frac=0) first."
                 )
-        sig = minhash_signature(batch, id_col, self.text_col, self.ngram)
-        new_bands = _band_rows(sig, id_col)
-        # persisted verification sets are the 64-bit shingle hashes
-        # (v3): integer sets join/intersect cheaper than the n-gram
-        # strings and the Jaccard value is identical (shingle_hashes)
-        new_shingles = _shingle_sets(
-            batch.filter(F.col(self.text_col).isNotNull()),
-            id_col, self.text_col, self.ngram, "arrow",
-        )
-        # cache (NOT localCheckpoint) the batch derivations: three
-        # actions below consume them — the pairs write, then each
-        # table's delta write — and uncached each re-runs the Arrow
-        # signature/shingle kernels over the batch (measured 3x kernel
-        # cost per ingest). cache keeps the lineage INTACT, which is
-        # what makes it safe here: both frames derive from the batch
-        # alone, so an executor-loss recompute is bit-identical
-        # regardless of how far the index has grown (the durability
-        # comment below concerns the PAIRS frame, whose lineage reads
-        # corpus state — that one must hit parquet first, and still
-        # does).
-        new_bands = new_bands.cache()
-        new_shingles = new_shingles.cache()
+        # bands AND verification sets from ONE kernel pass (the
+        # minhash_lsh_pairs sharing). Persisted verification sets are
+        # the 64-bit shingle hashes (v3): integer sets join/intersect
+        # cheaper than the n-gram strings and the Jaccard value is
+        # identical (shingle_hashes).
+        #
+        # cache (NOT localCheckpoint) the kernel output: three actions
+        # below consume it — the pairs write, then each table's delta
+        # write — and uncached each re-runs the Arrow kernel over the
+        # batch (measured 3x kernel cost per ingest). cache keeps the
+        # lineage INTACT, which is what makes it safe here: the frame
+        # derives from the batch alone, so an executor-loss recompute
+        # is bit-identical regardless of how far the index has grown
+        # (the durability comment below concerns the PAIRS frame,
+        # whose lineage reads corpus state — that one must hit parquet
+        # first, and still does).
+        both = _minhash_frame(
+            ensure_parallelism(batch), id_col, self.text_col, self.ngram,
+            ("_mh", "ts"),
+        ).cache()
+        new_bands = _band_rows_arr(both.select(id_col, "_mh"), id_col)
+        new_shingles = both.select(id_col, "ts")
         corpus_bands = self._read_or_none(self._bands_path(), exclude_key=key)
         corpus_shingles = self._read_or_none(
             self._shingles_path(), exclude_key=key
@@ -979,8 +805,7 @@ class MinHashIndex:
         new_shingles.write.mode("overwrite").parquet(
             os.path.join(self._shingles_path(), f"delta-{key}")
         )
-        new_bands.unpersist()
-        new_shingles.unpersist()
+        both.unpersist()
         if not self._has_parquet(pairs_dest):  # zero pairs, zero files
             return self.spark.createDataFrame([], pairs.schema)
         return self.spark.read.parquet(pairs_dest)
@@ -1281,58 +1106,35 @@ def _bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _band_rows(sig: DataFrame, id_col: str) -> DataFrame:
-    """(id, band_id, band_hash) rows from a minhash signature frame.
+def _bands_of(
+    df: DataFrame, id_col: str, text_col: str, ngram: int
+) -> DataFrame:
+    """(id, band_id, band_hash) straight from raw documents — THE
+    banding composition over the array-form signature, with the same
+    ensure_parallelism guard minhash_signature applies."""
+    return _band_rows_arr(
+        _minhash_frame(
+            ensure_parallelism(df), id_col, text_col, ngram, ("_mh",)
+        ),
+        id_col,
+    )
+
+
+def _band_rows_arr(sig_arr: DataFrame, id_col: str) -> DataFrame:
+    """(id, band_id, band_hash) rows from an ARRAY-form signature frame
+    (`_minhash_frame`'s ``_mh``): band hashes fold `_mh[k]` getItems
+    directly, skipping a 128-column unpack projection and its
+    wide-schema analysis on every downstream op (r13). Bit-identical
+    rows to banding the unpacked `minhash_signature` columns (the same
+    xxhash64 over the same longs; asserted in tests/test_approx_ops.py),
+    so persisted MinHashIndex band tables stay byte-compatible.
 
     Built as ONE parsed SQL expression (r13): the per-Column py4j
     round trips for 32 structs x 4-ary xxhash64 were ~1.0 s of every
     build of this plan (cProfile, tools/bench_profile.py), vs
     single-digit ms to parse the equivalent expression string in the
     JVM. `inline` is explode-the-struct-array with the fields as
-    columns — identical Generate operator, identical band_hash VALUES
-    (same xxhash64 over the same mh_k longs), so persisted
-    MinHashIndex band tables stay byte-compatible."""
-    structs = ", ".join(
-        "named_struct('band_id', {b}, 'band_hash', xxhash64({cols}))".format(
-            b=b,
-            cols=", ".join(
-                f"mh_{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(NUM_BANDS)
-    )
-    return sig.selectExpr(f"`{id_col}`", f"inline(array({structs}))")
-
-
-def _bands_of(
-    df: DataFrame, id_col: str, text_col: str, ngram: int, engine: str
-) -> DataFrame:
-    """(id, band_id, band_hash) straight from raw documents — THE
-    banding composition. For the arrow engine it rides the array-form
-    signature (no 128-column unpack in the plan — r13, see
-    _signature_array); the jvm engine keeps the column form. Same
-    ensure_parallelism guard minhash_signature applies, same band
-    values either way."""
-    if engine == "arrow":
-        return _band_rows_arr(
-            _signature_array(
-                ensure_parallelism(df), id_col, text_col, ngram
-            ),
-            id_col,
-        )
-    return _band_rows(
-        minhash_signature(df, id_col, text_col, ngram, engine=engine),
-        id_col,
-    )
-
-
-def _band_rows_arr(sig_arr: DataFrame, id_col: str) -> DataFrame:
-    """`_band_rows` over the ARRAY-form signature (`_signature_array`):
-    band hashes fold `_mh[k]` getItems directly, skipping the 128-
-    column unpack projection and its wide-schema analysis on every
-    downstream op (r13 — see _signature_array). Same xxhash64 over the
-    same longs → bit-identical (id, band_id, band_hash) rows,
-    asserted in tests/test_approx_ops.py."""
+    columns."""
     structs = ", ".join(
         "named_struct('band_id', {b}, 'band_hash', xxhash64({cols}))".format(
             b=b,

@@ -7,20 +7,15 @@ share, duplicate/top bigram share (Rae et al., Gopher, arXiv
 2112.11446 §A1.1) — all reduce to per-document multiset counts over
 tokens and consecutive-token bigrams.
 
-Engine design (same discipline as operators/dedup.py): tokens are
+Design (same discipline as operators/dedup.py): tokens are
 xxhash64'd ONCE per doc JVM-side (the one string→integer boundary —
 `token_hashes`), bigram identities are the v3 rotate-xor combine of
-consecutive token hashes (`_mix_np`/`_mix_expr`), and the counting
-runs in either of two engines producing IDENTICAL integers:
-
-- ``'arrow'`` (default): one vectorized numpy pandas_udf per doc —
-  ZERO shuffles, embarrassingly parallel, the 100-TB shape (np.unique
-  on uint64 arrays; no exploded token table is ever materialized —
-  the exploded form is ~20x the document bytes).
-- ``'jvm'``: the classic distributed formulation — explode token /
-  bigram hashes, count per (doc, hash), re-aggregate per doc — no
-  Python workers in the plan, at the cost of two explode+groupBy
-  rounds keyed on (doc_id, hash) (uniform keys, no skew).
+consecutive token hashes (`_mix_np`), and the counting runs in one
+vectorized numpy pandas_udf per doc — ZERO shuffles, embarrassingly
+parallel, the 100-TB shape (np.unique on uint64 arrays; no exploded
+token table is ever materialized — the exploded form is ~20x the
+document bytes). The explode/groupBy formulation it is tested against
+lives in tests/reference_ops.py.
 
 Counting by 64-bit hash instead of by string makes two distinct
 tokens collide with probability 2^-64 (see dedup.token_hashes) — far
@@ -46,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gus_spark.operators.dedup import _mix_expr, token_hashes
+from gus_spark.operators.dedup import token_hashes
 from gus_spark.operators.util import ensure_parallelism
 
 _COUNT_SCHEMA = (
@@ -59,8 +54,7 @@ def _rep_counts_kernel():
     """Arrow kernel: per-doc token-hash array -> the six repetition
     counts, via np.unique(return_counts=True) on uint64 — one map pass,
     no shuffle. Bigram identities are the same rotate-xor combine the
-    jvm engine and the dedup family use (`_mix_np`), so both engines
-    count the same multisets."""
+    dedup family uses (`_mix_np`)."""
     import numpy as np
     import pandas as pd
 
@@ -100,53 +94,14 @@ def repetition_metrics(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, n_tokens, n_unique_tokens, top_token_count, n_bigrams,
-    n_unique_bigrams, top_bigram_count) per non-null-text document.
-    Both engines return identical integers (asserted by tests)."""
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"unknown engine {engine!r}")
+    n_unique_bigrams, top_bigram_count) per non-null-text document."""
     df = ensure_parallelism(df)
-    live = df.filter(F.col(text_col).isNotNull())
-    th_df = live.select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("th")
-    )
-    if engine == "arrow":
-        k = _rep_counts_kernel()
-        return th_df.select(F.col(id_col), k("th").alias("_r")).select(
-            F.col(id_col), F.col("_r.*")
-        )
-    # jvm: explode + two-level aggregation, per hash family
-    empty = F.array().cast("array<long>")
-    bigrams = F.when(
-        F.size("th") >= 2, _mix_expr(F.col("th"), 2)
-    ).otherwise(empty)
-
-    def level_counts(arr, plural, singular):
-        tok = th_df.select(F.col(id_col), F.explode(arr).alias("h"))
-        per_hash = tok.groupBy(id_col, "h").agg(F.count("*").alias("c"))
-        return per_hash.groupBy(id_col).agg(
-            F.sum("c").alias(f"n_{plural}"),
-            F.count("*").alias(f"n_unique_{plural}"),
-            F.max("c").alias(f"top_{singular}_count"),
-        )
-
-    tstats = level_counts(F.col("th"), "tokens", "token")
-    bstats = level_counts(bigrams, "bigrams", "bigram")
+    k = _rep_counts_kernel()
     return (
-        tstats.join(bstats, id_col, "left")
-        .select(
-            F.col(id_col),
-            "n_tokens",
-            "n_unique_tokens",
-            "top_token_count",
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            F.coalesce("n_unique_bigrams", F.lit(0)).alias(
-                "n_unique_bigrams"
-            ),
-            F.coalesce("top_bigram_count", F.lit(0)).alias(
-                "top_bigram_count"
-            ),
-        )
+        df.filter(F.col(text_col).isNotNull())
+        .select(F.col(id_col), token_hashes(F.col(text_col)).alias("th"))
+        .select(F.col(id_col), k("th").alias("_r"))
+        .select(F.col(id_col), F.col("_r.*"))
     )

@@ -41,10 +41,9 @@ this is part of the SURVEY §2.3 training-data layer.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gus_spark.functions.deterministic import fp_quantize as _fp
 from gus_spark.operators.dedup import tokenize
 
 #: Okapi defaults (Robertson et al., TREC-3).
@@ -106,41 +105,6 @@ def _query_terms(query: list[str]) -> list[str]:
     return terms
 
 
-def _okapi_expr(
-    k1: float,
-    b: float,
-    tf: Column | None = None,
-    dl: Column | None = None,
-    df: Column | None = None,
-    n_docs: Column | None = None,
-    avgdl: Column | None = None,
-) -> Column:
-    """The Okapi idf * tf_norm expression over the joined posting
-    columns (tf, dl, df, n_docs, avgdl) — ONE definition shared by
-    every entry point (ad-hoc, indexed, batch), so the bit-exact
-    cross-path contracts cannot drift apart. The optional column
-    overrides (r14) let the expression-form ad-hoc scorer bind its
-    per-term columns to the SAME tree — same casts, literals and op
-    order, so per-(doc, term) doubles stay bit-identical across
-    forms."""
-    tf_c = (tf if tf is not None else F.col("tf")).cast("double")
-    dl_c = (dl if dl is not None else F.col("dl")).cast("double")
-    df_c = (df if df is not None else F.col("df")).cast("double")
-    nd_c = (n_docs if n_docs is not None else F.col("n_docs")).cast(
-        "double"
-    )
-    av_c = avgdl if avgdl is not None else F.col("avgdl")
-    idf = F.log(
-        F.lit(1.0) + (nd_c - df_c + F.lit(0.5)) / (df_c + F.lit(0.5))
-    )
-    tf_norm = (tf_c * F.lit(k1 + 1.0)) / (
-        tf_c
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * dl_c / av_c)
-    )
-    return idf * tf_norm
-
-
 def _score_postings(
     post: DataFrame,
     dfreq: DataFrame,
@@ -161,7 +125,13 @@ def _score_postings(
     scored = (
         post.join(F.broadcast(dfreq), "w")
         .crossJoin(F.broadcast(stats))
-        .select(id_col, "w", _fp(_okapi_expr(k1, b)).alias("s_fp"))
+        .select(
+            id_col,
+            "w",
+            F.expr(
+                _fp_sql(_okapi_sql(k1, b, "tf", "dl", "df", "n_docs", "avgdl"))
+            ).alias("s_fp"),
+        )
         .groupBy(id_col)
         .agg(
             F.count("*").alias("n_terms_hit"),
@@ -206,19 +176,20 @@ def _sql_str(t: str) -> str:
 
 
 def _fp_sql(expr: str) -> str:
-    """`fp_quantize` as SQL text — same floor(x*1e6 + 0.5) -> BIGINT
-    tree the Column build ships (repr+D literal convention)."""
+    """`fp_quantize` as SQL text — the same floor(x*1e6 + 0.5) -> BIGINT
+    tree it builds (repr+D literal convention)."""
     return f"CAST(FLOOR(({expr}) * 1000000.0D + 0.5D) AS BIGINT)"
 
 
 def _okapi_sql(
     k1: float, b: float, tf: str, dl: str, df: str, nd: str, avgdl: str
 ) -> str:
-    """`_okapi_expr` as SQL text over the given column references —
-    the SAME casts, double literals (repr+D round-trips to the exact
-    IEEE double F.lit ships) and operator order, so the parsed tree
-    computes bit-identical doubles (pinned by the full-result parity
-    test against the posting form, which still builds via Columns)."""
+    """THE Okapi idf * tf_norm expression, as SQL text over the given
+    column references — ONE definition shared by every entry point
+    (ad-hoc expression form, posting form, indexed, batch), so the
+    bit-exact cross-path contracts hold by construction. Double
+    literals use repr+D, which round-trips to the exact IEEE double;
+    the DuckDB `sql_bm25_topk` stays the independent oracle."""
     idf = (
         f"ln(1.0D + ((CAST({nd} AS DOUBLE) - CAST({df} AS DOUBLE))"
         f" + 0.5D) / (CAST({df} AS DOUBLE) + 0.5D))"
@@ -287,10 +258,9 @@ def bm25_topk(
         return _score_and_topk(post, stats, k, id_col, k1, b)
     # built as parsed SQL text throughout (r14, guide §1.2 — the
     # per-Column okapi build alone was ~400 py4j round trips per
-    # build; the same trees parse in a handful of calls). The text is
-    # the structural twin of the Column build the posting form still
-    # uses — identical casts/literals/op order, full-result parity
-    # pinned in tests.
+    # build; the same trees parse in a handful of calls). The posting
+    # form scores with the same `_okapi_sql` text, so full-result
+    # parity (pinned in tests) holds by construction.
     arr = _token_arrays(df, id_col, text_col)
     tf_exprs = [
         f"CAST(size(filter(_tk, x -> x = {_sql_str(term)})) AS BIGINT)"
@@ -538,7 +508,12 @@ def _score_postings_weighted(
         .select(
             "query_id",
             id_col,
-            _fp(F.col("weight") * _okapi_expr(k1, b)).alias("s_fp"),
+            F.expr(
+                _fp_sql(
+                    "weight * "
+                    + _okapi_sql(k1, b, "tf", "dl", "df", "n_docs", "avgdl")
+                )
+            ).alias("s_fp"),
         )
         .groupBy("query_id", id_col)
         .agg(

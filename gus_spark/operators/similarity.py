@@ -3,9 +3,9 @@ multi-probe) and IVF coarse quantization.
 
 The scale path for similarity search over an embedding column. The
 hyperplane matrix is a small deterministic ±1 matrix generated driver-
-side (seeded, no RNG state) and embedded as literal arrays — each row's
-bucket signature is then pure JVM column arithmetic; the only shuffle is
-the bucket-key groupBy/self-join. Brute-force cosine (the correctness
+side (seeded, no RNG state); each row's bucket signature and probe
+buckets come from one numpy kernel pass (`_sig_probe_udf`), and the only
+shuffle is the bucket-key exchange. Brute-force cosine (the correctness
 baseline) lives in gus_spark.queries.similarity.
 
 Scale design (the three knobs that keep the self-join bounded at 100 TB):
@@ -32,7 +32,6 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gus_spark.operators.util import ensure_parallelism
 
 NUM_PLANES = 12          # used when corpus size is not supplied/derivable
 TARGET_BUCKET_ROWS = 16  # adaptive planes aim for this mean bucket size
@@ -99,7 +98,7 @@ def dot_sql(x: str, y: str) -> str:
     """``_dot_cols`` as SQL text — the SAME zip_with-product +
     sequential-fold tree, built in ONE expression-parse py4j call
     instead of one py4j round trip per Column op (r13, guide §1.2
-    driver-side build cost; the minhash `_band_rows` precedent).
+    driver-side build cost; the minhash `_band_rows_arr` precedent).
     Bit parity with `_dot_cols` is pinned in tests (the two parse /
     build to the same resolved ArrayAggregate(ZipWith(..)) plan)."""
     return (
@@ -214,9 +213,9 @@ def _sig_probe_udf(planes: list[list[int]], nprobe: int):
     Sign parity with the JVM expressions: float addition order differs
     (sequential fold vs blocked matmul), so a dot within rounding error
     of zero can land on the other side — bucket ASSIGNMENT may differ
-    for such borderline vectors between engines, which multi-probe is
-    designed to absorb (recall asserted in tests); within one engine
-    the kernel is deterministic."""
+    for such borderline vectors between the kernel and the JVM
+    expressions, which multi-probe is designed to absorb (recall
+    asserted in tests); the kernel itself is deterministic."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -472,8 +471,9 @@ def lsh_bucket_occupancy(
     bounds what scoring actually admits, reported as
     ``capped_candidate_rows`` = Σ c·min(c, cap): recall silently
     collapses in that regime even when cost doesn't). Uses the same
-    plane derivation and the JVM signature definition the operator's
-    engines are bit-parity-tested against."""
+    plane derivation and the JVM signature definition
+    (`bucket_signature`) the operator's kernel is parity-tested
+    against."""
     df = df.filter(F.col(vec_col).isNotNull())
     num_planes = (
         num_planes
@@ -520,7 +520,6 @@ def ann_lsh_topk(
     num_planes: int | None = None,
     nprobe: int = 8,
     bucket_cap: int = 256,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k neighbors for every vector via multi-probe LSH.
     Output: (query_id, neighbor_id, cos_sim, rank).
@@ -533,118 +532,71 @@ def ann_lsh_topk(
     ``bucket_cap`` rows per bucket (deterministic xxhash64 order) to
     bound skew. Within-probe pairs are ranked by exact cosine.
 
-    ``engine='arrow'`` (default) computes signatures/probes in one
-    numpy scalar-udf pass (`_sig_probe_udf` — the vector never
-    crosses back over Arrow; row fan-out is a JVM explode) and caps
-    candidates with a running-count window whose
-    hashpartitioning(bucket) is REUSED by the scoring groupBy — one
-    shuffle of the probe/candidate rows total. ``engine='jvm'`` keeps the all-expression formulation
-    (interpreted HOF dot folds, two shuffles); same statistical
-    behavior, borderline-margin bucket assignments may differ (see
-    kernel docstring).
+    Signatures and probes come from one numpy scalar-udf pass
+    (`_sig_probe_udf` — the vector never crosses back over Arrow; row
+    fan-out is a JVM explode), and the candidate cap rides the scoring
+    stage's one hashpartitioning(bucket) exchange — one shuffle of the
+    probe/candidate rows total. The kernel's bucket assignments can
+    differ from the JVM `bucket_signature` definition on
+    borderline-margin vectors (see `_sig_probe_udf`); multi-probe
+    absorbs that, and recall is asserted against brute-force cosine.
     """
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"unknown engine {engine!r}")
-    # null embeddings can't be bucketed or matched; dropped up front so
-    # both engines agree (unfiltered, the jvm path would feed a None
-    # vector to the scoring kernel's np.stack and fail the job)
+    # null embeddings can't be bucketed or matched; dropped up front
     #
-    # r13: the parallelism guard moved into the JVM branch. The arrow
-    # branch's per-row signature work is ONE 64×planes matvec inside a
-    # batched numpy matmul (~µs/row) and the bucket exchange
-    # redistributes rows immediately after — spreading the scan bought
-    # no compute overlap but paid ~8 ms of Python-task framing × slots
-    # per run (measured: the signature stage at 1 input partition
-    # 0.39 s vs 0.61 s at 32, sf0.1; identical rows). The jvm branch's
-    # interpreted HOF folds ARE per-row expensive, so it keeps the
-    # guard.
+    # r13: no parallelism guard. The per-row signature work is ONE
+    # 64×planes matvec inside a batched numpy matmul (~µs/row) and the
+    # bucket exchange redistributes rows immediately after — spreading
+    # the scan bought no compute overlap but paid ~8 ms of Python-task
+    # framing × slots per run (measured: the signature stage at 1
+    # input partition 0.39 s vs 0.61 s at 32, sf0.1; identical rows).
     df = df.filter(F.col(vec_col).isNotNull())
     if num_planes is None:
         num_planes = planes_for_corpus(df.count())
     planes = _plane_matrix(num_planes, DIM)
 
-    if engine == "arrow":
-        vin = df.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-        )
-        # one scalar-udf pass returns (norm, buckets) per vector; the
-        # candidate/probe row fan-out is a JVM explode over
-        # [(buckets[0], false)] ++ [(b, true) for b in buckets[1:]] —
-        # identical rows to the old mapInPandas replication with ~10x
-        # less Arrow return volume (the vector never crosses back)
-        base = vin.select("id", "v", _sig_probe_udf(planes, nprobe)("v").alias("sp"))
-        union = base.selectExpr(
-            "id",
-            "v",
-            "sp.norm AS norm",
-            "explode(concat("
-            "array(struct(sp.buckets[0] AS bucket, false AS is_probe)), "
-            "transform(slice(sp.buckets, 2, size(sp.buckets) - 1), "
-            "b -> struct(b AS bucket, true AS is_probe)))) AS be",
-        ).selectExpr(
-            "id", "v", "norm",
-            "be.bucket AS bucket", "be.is_probe AS is_probe",
-        )
-        # cap candidates per bucket WITHOUT a dedicated operator (r13):
-        # the kernel keeps the first bucket_cap non-probe rows per
-        # bucket in (is_probe, xxhash64(id), id) order — the same rows
-        # the former running-count window kept — so the cap rides the
-        # scoring stage's one hashpartitioning(bucket) exchange and
-        # its local sort, and the window (its running sum over every
-        # probe/candidate row) disappears from the plan outright
-        pairs = _grouped_topk_matmul(
-            union, ["bucket"], k,
-            cap_candidates=bucket_cap,
-            cap_order=["is_probe", F.xxhash64("id"), "id"],
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), "neighbor_id"
-        )
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "cos_sim",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
-
-    # norms once per VECTOR, not per candidate pair: with multi-probe a
-    # vector appears in ~(nprobe+1) x bucket_cap pairs, so folding
-    # dot(v,v) inside the join would redo the same 64-element reduction
-    # hundreds of times (measured 10.9s -> norm hoisting cuts the pair
-    # cost to one cross-dot + one multiply)
-    df = ensure_parallelism(df)  # interpreted HOF folds: per-row cost is real
-    v = df.select(
+    vin = df.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", F.sqrt(_dot_cols(F.col("v"), F.col("v"))))
-    queries = v.select(
-        F.col("id"),
-        F.col("v"),
-        F.col("norm"),
-        F.explode(probe_buckets(F.col("v"), planes, nprobe)).alias("bucket"),
     )
-    w_cap = Window.partitionBy("bucket").orderBy(F.xxhash64("id"), "id")
-    candidates = (
-        v.withColumn("bucket", bucket_signature(F.col("v"), planes))
-        .withColumn("cap_rn", F.row_number().over(w_cap))
-        .filter(F.col("cap_rn") <= bucket_cap)
-        .drop("cap_rn")
+    # one scalar-udf pass returns (norm, buckets) per vector; the
+    # candidate/probe row fan-out is a JVM explode over
+    # [(buckets[0], false)] ++ [(b, true) for b in buckets[1:]] —
+    # identical rows to the old mapInPandas replication with ~10x
+    # less Arrow return volume (the vector never crosses back)
+    base = vin.select("id", "v", _sig_probe_udf(planes, nprobe)("v").alias("sp"))
+    union = base.selectExpr(
+        "id",
+        "v",
+        "sp.norm AS norm",
+        "explode(concat("
+        "array(struct(sp.buckets[0] AS bucket, false AS is_probe)), "
+        "transform(slice(sp.buckets, 2, size(sp.buckets) - 1), "
+        "b -> struct(b AS bucket, true AS is_probe)))) AS be",
+    ).selectExpr(
+        "id", "v", "norm",
+        "be.bucket AS bucket", "be.is_probe AS is_probe",
     )
-    # score per bucket with the shared BLAS kernel: probes (exploded
-    # multi-probe rows) vs the capped home-bucket index; a pair meeting
-    # in several probed buckets is collapsed inside the helper. Bucket
-    # count is 2^num_planes (thousands), so the default hash
-    # partitioning already spreads groups — no salt needed.
-    union = queries.withColumn("is_probe", F.lit(True)).unionByName(
-        candidates.withColumn("is_probe", F.lit(False))
+    # cap candidates per bucket WITHOUT a dedicated operator (r13):
+    # the kernel keeps the first bucket_cap non-probe rows per bucket
+    # in (is_probe, xxhash64(id), id) order — the same rows the former
+    # running-count window kept — so the cap rides the scoring stage's
+    # one hashpartitioning(bucket) exchange and its local sort, and
+    # the window (its running sum over every probe/candidate row)
+    # disappears from the plan outright
+    pairs = _grouped_topk_matmul(
+        union, ["bucket"], k,
+        cap_candidates=bucket_cap,
+        cap_order=["is_probe", F.xxhash64("id"), "id"],
     )
-    pairs = _grouped_topk_matmul(union, ["bucket"], k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), "neighbor_id"
+    )
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
+        .select(
+            "query_id", "neighbor_id", "cos_sim",
+            F.col("rank").cast("long").alias("rank"),
+        )
     )
 
 

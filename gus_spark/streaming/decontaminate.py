@@ -184,7 +184,6 @@ def fuzzy_decontaminate_stream(
     ngram: int = 1,
     bench_id_col: str = "doc_id",
     bench_text_col: str = "text",
-    engine: str = "arrow",
     processing_time: str | None = None,
 ) -> StreamingQuery:
     """The FUZZY companion stream (operators.decontaminate.
@@ -219,10 +218,10 @@ def fuzzy_decontaminate_stream(
     meta_path = os.path.join(state_dir, "fuzzy_meta.json")
     bench_nn = bench.filter(F.col(bench_text_col).isNotNull())
     cur_bands = _bands_of(
-        bench_nn, bench_id_col, bench_text_col, ngram, engine
+        bench_nn, bench_id_col, bench_text_col, ngram
     ).withColumnRenamed(bench_id_col, "_bid").localCheckpoint()
     cur_sets = (
-        _shingle_sets(bench_nn, bench_id_col, bench_text_col, ngram, engine)
+        _shingle_sets(bench_nn, bench_id_col, bench_text_col, ngram)
         .select(F.col(bench_id_col).alias("_bid"), F.col("ts").alias("_bts"))
         .localCheckpoint()
     )
@@ -267,7 +266,7 @@ def fuzzy_decontaminate_stream(
         bench_sets = spark.read.parquet(sets_path)
         batch_nn = batch_df.filter(F.col("text").isNotNull())
         doc_bands = _bands_of(
-            batch_nn, "doc_id", "text", ngram, engine
+            batch_nn, "doc_id", "text", ngram
         ).withColumnRenamed("doc_id", "_did")
         candidates = (
             doc_bands.join(bench_bands, ["band_id", "band_hash"])
@@ -275,7 +274,7 @@ def fuzzy_decontaminate_stream(
             .distinct()
         )
         doc_sets = _shingle_sets(
-            batch_nn, "doc_id", "text", ngram, engine
+            batch_nn, "doc_id", "text", ngram
         ).select(F.col("doc_id").alias("_did"), F.col("ts").alias("_dts"))
         inter = F.size(F.array_intersect(F.col("_dts"), F.col("_bts")))
         union = F.size(F.col("_dts")) + F.size(F.col("_bts")) - inter

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import reference_ops
 from conftest import SF_DIR_ORACLE
 
 from gus_spark.operators.dedup import (
@@ -49,11 +50,12 @@ def test_minhash_lsh_finds_exact_pairs(spark, documents, exact_pairs):
 
 
 def test_minhash_engines_bit_identical(spark, documents):
-    """The arrow numpy kernel and the jvm expression path must produce
-    bit-identical signatures — persisted MinHashIndex tables built by
-    either engine interoperate ONLY under exact equality (same meta,
-    no version bump), and the oracle's escape-probability math assumes
-    one fixed hash family. Includes null/empty-text edges."""
+    """The Arrow MinHash kernel and the all-JVM expression reference
+    (tests/reference_ops.py) must produce bit-identical signatures —
+    persisted MinHashIndex tables interoperate ONLY under exact
+    equality (same meta, no version bump), and the oracle's
+    escape-probability math assumes one fixed hash family. Includes
+    null/empty-text edges."""
     from gus_spark.operators.dedup import minhash_signature
 
     edge = spark.createDataFrame(
@@ -64,24 +66,24 @@ def test_minhash_engines_bit_identical(spark, documents):
         a = {
             r["doc_id"]: tuple(r)[1:]
             for r in minhash_signature(
-                frame, "doc_id", "text", ngram=3, engine="arrow"
+                frame, "doc_id", "text", ngram=3
             ).collect()
         }
         j = {
             r["doc_id"]: tuple(r)[1:]
-            for r in minhash_signature(
-                frame, "doc_id", "text", ngram=3, engine="jvm"
+            for r in reference_ops.minhash_signature(
+                frame, "doc_id", "text", ngram=3
             ).collect()
         }
         assert a == j
 
 
 def test_minhash_engine_parity_on_randomized_texts(spark):
-    """Cross-engine parity on a seeded adversarial batch: unicode,
-    repeated tokens, exotic whitespace runs, token counts straddling
-    the ngram fallback (0..5 tokens), long docs. One frame, two jobs —
-    any arrow/jvm divergence (masking, rotation, fallback, dedup)
-    shows as a signature or set mismatch on some row."""
+    """Kernel-vs-reference parity on a seeded adversarial batch:
+    unicode, repeated tokens, exotic whitespace runs, token counts
+    straddling the ngram fallback (0..5 tokens), long docs. Any
+    divergence (masking, rotation, fallback, dedup) shows as a
+    signature or set mismatch on some row."""
     import random
 
     from gus_spark.operators.dedup import _shingle_sets, minhash_signature
@@ -100,39 +102,35 @@ def test_minhash_engine_parity_on_randomized_texts(spark):
         a = {
             r["doc_id"]: tuple(r)[1:]
             for r in minhash_signature(
-                frame, "doc_id", "text", ngram=ngram, engine="arrow"
+                frame, "doc_id", "text", ngram=ngram
             ).collect()
         }
         j = {
             r["doc_id"]: tuple(r)[1:]
-            for r in minhash_signature(
-                frame, "doc_id", "text", ngram=ngram, engine="jvm"
+            for r in reference_ops.minhash_signature(
+                frame, "doc_id", "text", ngram=ngram
             ).collect()
         }
         assert a == j, f"signature divergence at ngram={ngram}"
         sa = {
             r["doc_id"]: sorted(r["ts"])
-            for r in _shingle_sets(
-                frame, "doc_id", "text", ngram, "arrow"
-            ).collect()
+            for r in _shingle_sets(frame, "doc_id", "text", ngram).collect()
         }
         sj = {
             r["doc_id"]: sorted(r["ts"])
-            for r in _shingle_sets(
-                frame, "doc_id", "text", ngram, "jvm"
+            for r in reference_ops.shingle_sets(
+                frame, "doc_id", "text", ngram
             ).collect()
         }
         assert sa == sj, f"verify-set divergence at ngram={ngram}"
 
 
 def test_minhash_kernel_chunked_flush_parity(spark):
-    """Force the signature kernel past its 128k-shingle chunk boundary
-    (long docs, several flushes inside one Arrow batch, including a
-    doc group that straddles a flush) and assert bit-parity with the
-    unchunked jvm expression path."""
+    """Force the signature kernel past its chunk boundary (long docs,
+    several flushes inside one Arrow batch, including a doc group that
+    straddles a flush) and assert bit-parity with the unchunked
+    expression reference."""
     import random
-
-    from gus_spark.operators.dedup import minhash_signature
 
     rng = random.Random(7)
     rows = []
@@ -147,22 +145,22 @@ def test_minhash_kernel_chunked_flush_parity(spark):
     # straddling a flush boundary
     from pyspark.sql import functions as F2
 
-    from gus_spark.operators.dedup import _mh_perms_kernel, token_hashes
+    from gus_spark.operators.dedup import _minhash_kernel, token_hashes
 
     th = frame.coalesce(1).select(
         "doc_id", token_hashes(F2.col("text")).alias("th")
     )
-    mh = _mh_perms_kernel(3)
+    mh = _minhash_kernel(3, ("_mh",))
     a = {
         r["doc_id"]: tuple(r["_mh"])
-        for r in th.select("doc_id", mh("th").alias("_mh")).collect()
+        for r in th.select("doc_id", mh("th")["_mh"].alias("_mh")).collect()
     }
-    # jvm side is row-wise independent -> keep it parallel (a
+    # the reference is row-wise independent -> keep it parallel (a
     # single-partition interpreted run would dominate the wall clock)
     j = {
         r["doc_id"]: tuple(r)[1:]
-        for r in minhash_signature(
-            frame.repartition(32), "doc_id", "text", ngram=3, engine="jvm"
+        for r in reference_ops.minhash_signature(
+            frame.repartition(32), "doc_id", "text", ngram=3
         ).collect()
     }
     assert a == j
@@ -172,7 +170,7 @@ def test_minhash_kernel_oversized_doc_chunked_parity(spark, monkeypatch):
     """A single doc whose shingle array exceeds the kernel's flush chunk
     takes the chunked single-doc path (partial permutation mins combined
     by elementwise min); shrink the chunk constant so a ~300-token doc
-    exercises it, and assert bit-parity with the jvm expression path."""
+    exercises it, and assert bit-parity with the expression reference."""
     import gus_spark.operators.dedup as dd
 
     monkeypatch.setattr(dd, "_CHUNK_SHINGLES", 64)
@@ -185,13 +183,13 @@ def test_minhash_kernel_oversized_doc_chunked_parity(spark, monkeypatch):
     a = {
         r["doc_id"]: tuple(r)[1:]
         for r in dd.minhash_signature(
-            frame, "doc_id", "text", ngram=3, engine="arrow"
+            frame, "doc_id", "text", ngram=3
         ).collect()
     }
     j = {
         r["doc_id"]: tuple(r)[1:]
-        for r in dd.minhash_signature(
-            frame, "doc_id", "text", ngram=3, engine="jvm"
+        for r in reference_ops.minhash_signature(
+            frame, "doc_id", "text", ngram=3
         ).collect()
     }
     assert a == j
@@ -199,7 +197,7 @@ def test_minhash_kernel_oversized_doc_chunked_parity(spark, monkeypatch):
 
 def test_minhash_extended_ngram_range(spark):
     """ngram 5..8 are served by the extended rotation table with full
-    arrow/jvm parity; beyond _MIX_MAX_N both engines raise ValueError
+    kernel/reference parity; beyond _MIX_MAX_N both raise ValueError
     driver-side. The first four rotations stay frozen so persisted
     ngram<=4 signatures are unchanged."""
     import pytest as _pytest
@@ -216,19 +214,19 @@ def test_minhash_extended_ngram_range(spark):
         a = {
             r["doc_id"]: tuple(r)[1:]
             for r in minhash_signature(
-                frame, "doc_id", "text", ngram=ngram, engine="arrow"
+                frame, "doc_id", "text", ngram=ngram
             ).collect()
         }
         j = {
             r["doc_id"]: tuple(r)[1:]
-            for r in minhash_signature(
-                frame, "doc_id", "text", ngram=ngram, engine="jvm"
+            for r in reference_ops.minhash_signature(
+                frame, "doc_id", "text", ngram=ngram
             ).collect()
         }
         assert a == j, f"divergence at ngram={ngram}"
-    for engine in ("arrow", "jvm"):
+    for fn in (minhash_signature, reference_ops.minhash_signature):
         with _pytest.raises(ValueError, match="mix support"):
-            minhash_signature(frame, "doc_id", "text", ngram=9, engine=engine)
+            fn(frame, "doc_id", "text", ngram=9)
 
 
 def test_shingle_hashes_public_path_matches_two_step(spark):
@@ -271,18 +269,20 @@ def test_shingle_hashes_public_path_matches_two_step(spark):
 
 def test_shingle_set_engines_same_sets(spark, documents):
     """Verification shingle-hash SETS must agree between the numpy
-    kernel and the expression path (element order may differ —
+    kernel and the expression reference (element order may differ —
     np.unique sorts; set intersection consumers don't care)."""
     from gus_spark.operators.dedup import _shingle_sets
 
     frame = documents.limit(50)
     a = {
         r["doc_id"]: sorted(r["ts"])
-        for r in _shingle_sets(frame, "doc_id", "text", 3, "arrow").collect()
+        for r in _shingle_sets(frame, "doc_id", "text", 3).collect()
     }
     j = {
         r["doc_id"]: sorted(r["ts"])
-        for r in _shingle_sets(frame, "doc_id", "text", 3, "jvm").collect()
+        for r in reference_ops.shingle_sets(
+            frame, "doc_id", "text", 3
+        ).collect()
     }
     assert a == j
 
@@ -1180,73 +1180,69 @@ def test_grouped_topk_kernel_invariant_to_arrow_batch_splits(spark):
 
 
 def test_array_form_band_rows_bit_identical(spark, documents):
-    """r13: the pairs/decontaminate compositions band the ARRAY-form
-    signature (no 128-column unpack in the plan). Band rows must stay
-    bit-identical to the unpacked public form — persisted MinHashIndex
-    band tables and cross-corpus band joins interoperate only under
-    exact equality."""
-    from gus_spark.operators.dedup import (
-        _band_rows,
-        _bands_of,
-        minhash_signature,
-    )
+    """r13: the pairs/decontaminate/index compositions band the
+    ARRAY-form signature (no 128-column unpack in the plan). Band rows
+    must stay bit-identical to banding the unpacked public form —
+    persisted MinHashIndex band tables and cross-corpus band joins
+    interoperate only under exact equality."""
+    from gus_spark.operators.dedup import _bands_of, minhash_signature
 
-    old = _band_rows(
+    old = reference_ops.band_rows(
         minhash_signature(documents, "doc_id", "text", 3), "doc_id"
     )
-    new = _bands_of(documents, "doc_id", "text", 3, "arrow")
+    new = _bands_of(documents, "doc_id", "text", 3)
     assert sorted(map(tuple, new.collect())) == sorted(
         map(tuple, old.collect())
     )
 
 
 def test_combined_kernel_matches_single_kernels(spark, documents):
-    """r14: minhash_lsh_pairs' one-pass kernel (_mh_both_kernel) must
-    reproduce BOTH single-output kernels bit-for-bit — the signature
-    the banding consumes and the distinct shingle-hash set the
-    verifier intersects — on real docs plus empty/one-token edges
-    (null text is pre-filtered before the kernel, the
-    _signature_array contract the operator mirrors)."""
-    from pyspark.sql import functions as F
-
-    from gus_spark.operators.dedup import (
-        _mh_both_kernel,
-        _shingle_sets,
-        _signature_array,
-        token_hashes,
-    )
+    """Each field subset of the one MinHash kernel equals the
+    both-fields call bit for bit — the signature the banding consumes
+    and the distinct shingle-hash set the verifier intersects — on
+    real docs plus empty/one-token edges (null text is dropped before
+    the kernel by `_minhash_frame`)."""
+    from gus_spark.operators.dedup import _minhash_frame
 
     edge = spark.createDataFrame(
         [("e0", "x y z w"), ("e1", None), ("e2", ""), ("e3", "a")],
         ["doc_id", "text"],
     )
-    for frame in (documents.limit(60), edge):
-        frame = frame.filter(F.col("text").isNotNull())
-        kb = _mh_both_kernel(3)
-        both = frame.select(
-            "doc_id", kb(token_hashes(F.col("text"))).alias("_st")
-        ).select(
-            "doc_id",
-            F.col("_st._mh").alias("_mh"),
-            F.col("_st.ts").alias("ts"),
-        ).collect()
-        got_sig = {
-            r["doc_id"]: None if r["_mh"] is None else tuple(r["_mh"])
-            for r in both
-        }
-        want_sig = {
-            r["doc_id"]: None if r["_mh"] is None else tuple(r["_mh"])
-            for r in _signature_array(frame, "doc_id", "text", 3).collect()
-        }
-        assert got_sig == want_sig
-        got_ts = {
-            r["doc_id"]: None if r["ts"] is None else tuple(r["ts"])
-            for r in both
-        }
-        want_ts = {
-            r["doc_id"]: tuple(r["ts"])
-            for r in _shingle_sets(
-                frame, "doc_id", "text", 3, "arrow"
+
+    def rows(frame, fields):
+        return {
+            r["doc_id"]: tuple(
+                None if r[f] is None else tuple(r[f]) for f in fields
+            )
+            for r in _minhash_frame(
+                frame, "doc_id", "text", 3, fields
             ).collect()
         }
-        assert got_ts == want_ts
+
+    for frame in (documents.limit(60), edge):
+        both = rows(frame, ("_mh", "ts"))
+        assert both and all(v[0] is not None for v in both.values())
+        assert rows(frame, ("_mh",)) == {k: v[:1] for k, v in both.items()}
+        assert rows(frame, ("ts",)) == {k: v[1:] for k, v in both.items()}
+
+
+def test_operators_take_no_engine_parameter():
+    """The eight operators that used to take ``engine='arrow'|'jvm'``
+    run one Arrow kernel each; ``engine=`` is a TypeError now."""
+    import inspect
+
+    from gus_spark.operators import decontaminate, dedup, repetition, similarity
+    from gus_spark.streaming import decontaminate as stream_decon
+
+    fns = [
+        dedup.minhash_signature,
+        dedup.minhash_lsh_pairs,
+        decontaminate.fuzzy_contamination,
+        decontaminate.calibrate_fuzzy_ngram,
+        decontaminate.decontaminate_fuzzy,
+        stream_decon.fuzzy_decontaminate_stream,
+        similarity.ann_lsh_topk,
+        repetition.repetition_metrics,
+    ]
+    for fn in fns:
+        assert "engine" not in inspect.signature(fn).parameters, fn.__name__

@@ -5,19 +5,18 @@ operator-level contracts and edge cases)."""
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import reference_ops  # noqa: E402
 
 
-def _collect_metrics(spark, rows, engine):
+def _collect_metrics(spark, rows, metrics=None):
     from gus_spark.operators.repetition import repetition_metrics
 
     frame = spark.createDataFrame(rows, "doc_id long, text string")
     return {
         r["doc_id"]: tuple(r)[1:]
-        for r in repetition_metrics(
-            frame, "doc_id", "text", engine=engine
+        for r in (metrics or repetition_metrics)(
+            frame, "doc_id", "text"
         ).collect()
     }
 
@@ -34,17 +33,18 @@ REP_ROWS = [
 
 
 def test_repetition_engines_identical(spark):
-    """The zero-shuffle Arrow kernel and the explode/groupBy jvm
-    formulation must return identical integers for every doc."""
-    a = _collect_metrics(spark, REP_ROWS, "arrow")
-    j = _collect_metrics(spark, REP_ROWS, "jvm")
+    """The zero-shuffle Arrow kernel and the explode/groupBy expression
+    reference (tests/reference_ops.py) must return identical integers
+    for every doc."""
+    a = _collect_metrics(spark, REP_ROWS)
+    j = _collect_metrics(spark, REP_ROWS, reference_ops.repetition_metrics)
     assert a == j
     assert 5 not in a  # null text dropped by both
 
 
 def test_repetition_counts_exact(spark):
     """Hand-checked counts: the metric definitions, not just parity."""
-    a = _collect_metrics(spark, REP_ROWS, "arrow")
+    a = _collect_metrics(spark, REP_ROWS)
     # doc 0: 9 tokens of 3 kinds; 8 bigrams, 4 kinds ("a b" x3, "b c"
     # x3, "c a" x2 ... wait: grams are (a b)(b c)(c a)(a b)(b c)(c a)
     # (a b)(b c) -> "a b" x3, "b c" x3, "c a" x2 = 3 kinds
@@ -57,14 +57,6 @@ def test_repetition_counts_exact(spark):
     n, u, top, nb, ub, topb = a[6]
     assert (n, u, nb, ub) == (200, 7, 199, 7)
     assert top == 29 and topb == 29  # ceil(200/7)=29; bigram cycle too
-
-
-def test_repetition_rejects_unknown_engine(spark):
-    from gus_spark.operators.repetition import repetition_metrics
-
-    frame = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="unknown engine"):
-        repetition_metrics(frame, engine="numpy")
 
 
 def test_redact_patterns_and_counts(spark):

@@ -189,6 +189,35 @@ def test_invalid_like_escape_errors_on_both_paths(spark, tmp_path):
         assert out["errors"]
 
 
+def test_invalid_like_escape_is_one_error_on_every_page_shape(
+    spark, tmp_path
+):
+    """An invalid LIKE escape is rejected while the filter args are
+    parsed, so the keyset page (Arrow), the offset and ``orderBy``
+    pages and ``<plural>Stats`` (all Spark) return the same GraphQL
+    error entry, never Spark's raw analysis error at collect."""
+    model = _sample_model("Integer")
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    store.create_many(model, [{"id": 1, "name": "ab"}])
+    gapi = _api(model, store)
+    for pattern in ["a\\b", "a\\"]:
+        like = json.dumps(pattern)
+        queries = [
+            "{ samples(limit: 5, after: 0, name_like: %s) { id } }",
+            "{ samples(limit: 5, name_like: %s) { id } }",
+            '{ samples(limit: 5, orderBy: "name", name_like: %s) { id } }',
+            "{ samplesStats(name_like: %s) { count } }",
+        ]
+        errors = []
+        for q in queries:
+            out = gapi.execute(q % like)
+            assert len(out["errors"]) == 1, (q, out)
+            errors.append(out["errors"][0]["message"])
+        assert errors == [errors[0]] * len(queries), errors
+        assert "invalid LIKE pattern" in errors[0]
+        assert "INVALID_FORMAT" not in errors[0]
+
+
 def test_metadata_only_added_attribute_reads_null(spark, tmp_path):
     from gus_spark.storage.migrate import migrate
 

@@ -62,11 +62,10 @@ from pyspark.sql import functions as F
 def profile(spark, sf_dir: str, ngram: int = 3) -> dict:
     from gus_spark.operators.dedup import (
         MinHashIndex,
-        _band_rows,
+        _bands_of,
         _bucket_pairs,
         _shingle_sets,
         minhash_lsh_pairs,
-        minhash_signature,
     )
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -79,16 +78,12 @@ def profile(spark, sf_dir: str, ngram: int = 3) -> dict:
     root = tempfile.mkdtemp(prefix="mhprof_")
     try:
         t0 = time.time()
-        sig = minhash_signature(docs, "doc_id", "text", ngram)
-        new_bands = _band_rows(sig, "doc_id").cache()
+        new_bands = _bands_of(docs, "doc_id", "text", ngram).cache()
         new_bands.count()
         out["sig_bands"] = round(time.time() - t0, 2)
 
         t0 = time.time()
-        new_shingles = _shingle_sets(
-            docs.filter(F.col("text").isNotNull()),
-            "doc_id", "text", ngram, "arrow",
-        ).cache()
+        new_shingles = _shingle_sets(docs, "doc_id", "text", ngram).cache()
         new_shingles.count()
         out["shingles"] = round(time.time() - t0, 2)
 
