@@ -100,7 +100,7 @@ def tokenize(text: Column) -> Column:
 def shingles(text: Column, n: int = 1) -> Column:
     """Distinct word n-gram shingles (n=1 -> token set); short docs fall
     back to tokens. The shingle unit must match the exact-Jaccard tier it
-    is validated against (unigrams for dedup_jaccard_pairs).
+    is validated against (word 3-grams for dedup_minhash_lsh's oracle).
 
     Built with zip_with over shifted slices: each array argument is
     evaluated once per ROW. (The previous sequence+element_at

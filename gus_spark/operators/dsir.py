@@ -387,29 +387,6 @@ def hashed_logratios(
     return _llr_from_counts(ct, cr)
 
 
-def _bucket_counts(
-    df: DataFrame, buckets: int, text_col: str, ns: tuple[int, ...]
-) -> np.ndarray:
-    """B-dim occurrence counts for one corpus: one bucket-keyed agg,
-    <= B rows to the driver as two flat Arrow int64 columns."""
-    pdf = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(
-            F.explode(
-                token_buckets(F.col(text_col), buckets, ns)
-            ).alias("b")
-        )
-        .groupBy("b")
-        .agg(F.count("*").alias("n"))
-        .toPandas()
-    )
-    c = np.zeros(buckets, dtype=np.int64)
-    c[pdf["b"].to_numpy(dtype=np.int64)] = pdf["n"].to_numpy(
-        dtype=np.int64
-    )
-    return c
-
-
 def _llr_from_counts(ct: np.ndarray, cr: np.ndarray) -> np.ndarray:
     """Quantized log ratios from target/raw bucket counts; smoothing
     mass = buckets occupied by EITHER side (see hashed_logratios)."""
@@ -417,37 +394,6 @@ def _llr_from_counts(ct: np.ndarray, cr: np.ndarray) -> np.ndarray:
     v = int(((cr > 0) | (ct > 0)).sum())
     llr = np.log((ct + 1.0) / (nt + v)) - np.log((cr + 1.0) / (nr + v))
     return np.floor(llr * _FP + 0.5).astype(np.int64)
-
-
-def hashed_logratios_two(
-    target_df: DataFrame,
-    raw_df: DataFrame,
-    buckets: int | None = None,
-    target_text_col: str = "text",
-    raw_text_col: str = "text",
-    ns: tuple[int, ...] = (1,),
-) -> np.ndarray:
-    """The paper's actual setting: the TARGET is a separate small
-    corpus (Wikipedia, a curated quality set), not a flagged subset of
-    the crawl. Two bucket-keyed aggregations (each <= B driver rows),
-    same smoothing/quantization as `hashed_logratios` — when
-    target_df is exactly the flagged subset of raw_df, the two forms
-    produce the identical vector (asserted in tests). Tokens unseen in
-    the raw side still get a finite ratio from add-1 smoothing, so
-    scoring a crawl against an out-of-domain target never divides by
-    zero. ``buckets=None`` derives B from the RAW side (the bigger
-    vocabulary — the scored corpus collisions actually land in)."""
-    if buckets is None:
-        buckets = auto_buckets(raw_df, raw_text_col, ns)
-    if not 0 < buckets <= _MAX_BUCKETS:
-        raise ValueError(f"buckets must be in (0, {_MAX_BUCKETS}]")
-    ct = _bucket_counts(target_df, buckets, target_text_col, ns)
-    if ct.sum() == 0:
-        raise ValueError("target corpus is empty (no non-null text)")
-    cr = _bucket_counts(raw_df, buckets, raw_text_col, ns)
-    if cr.sum() == 0:
-        raise ValueError("raw corpus is empty (no non-null text)")
-    return _llr_from_counts(ct, cr)
 
 
 def hashed_scores(

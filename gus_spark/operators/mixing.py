@@ -423,18 +423,24 @@ def cap_per_group(
         .filter(F.col("_rnk") <= max_rows)
         .drop("_rnk", "_b", "_ng", "_thr")
     )
-    # null-literal columns come from the INPUT's schema (already
-    # analyzed at the scan) — capped's columns are exactly df's by
-    # construction, and touching capped.schema would force a fresh
-    # analysis pass over the whole window plan just to read types
+    # Every guard column raises on a violating group, so a consumer's
+    # filter or projection pushed into this branch must evaluate the
+    # raise: with null-literal columns a pushed predicate folds to
+    # false and PruneFilters drops the whole branch, guard included.
+    # Types come from the INPUT's schema (already analyzed at the
+    # scan) — capped's columns are exactly df's by construction, and
+    # touching capped.schema would force a fresh analysis pass over
+    # the whole window plan.
+    violation = (F.col("_ng") > max_rows) & (F.col("_kept") < max_rows)
     guard = tally.filter(
-        F.when(
-            (F.col("_ng") > max_rows) & (F.col("_kept") < max_rows),
-            F.raise_error(msg).cast("boolean"),
-        ).otherwise(F.lit(False))
+        F.when(violation, F.raise_error(msg).cast("boolean")).otherwise(
+            F.lit(False)
+        )
     ).select(
         *[
-            F.lit(None).cast(f.dataType).alias(f.name)
+            F.when(violation, F.raise_error(msg))
+            .cast(f.dataType)
+            .alias(f.name)
             for f in df.schema.fields
         ]
     )
@@ -534,49 +540,6 @@ def apply_cap_thresholds(
         .withColumn("keep", F.col("_b") < F.col("_thr"))
         .drop("_b", "_tg", "_thr")
     )
-
-
-def sql_cap_thresholds(
-    table: str = "documents",
-    group_col: str = "source",
-    max_rows: int = 1000,
-    margin: float | None = None,
-) -> str:
-    """DuckDB twin of `cap_thresholds` — identical integer-threshold
-    arithmetic (FLOOR of the double division, matching Spark's
-    toward-zero long cast on the positive operand), so a persisted
-    artifact is engine-portable bit-for-bit."""
-    margin = _cap_margin(max_rows, margin)
-    space = _CAP_SPACE
-    return f"""
-    SELECT {group_col}, _ng,
-           CASE WHEN _ng > {max_rows}
-             THEN LEAST(CAST({space} AS BIGINT),
-                        CAST(FLOOR({float(space) * max_rows * margin!r}
-                                   / _ng) AS BIGINT) + 1)
-             ELSE CAST({space} AS BIGINT) END AS _thr
-    FROM (SELECT {group_col}, COUNT(*) AS _ng
-          FROM {table} GROUP BY {group_col})
-    """
-
-
-def sql_apply_cap_thresholds(
-    table: str = "documents",
-    thresholds: str = "thresholds",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "cap-v1",
-) -> str:
-    """DuckDB twin of `apply_cap_thresholds`: the same portable
-    md5-prefix bucket compared against the joined threshold; unfitted
-    groups yield NULL keep (LEFT JOIN), null-safe on the group key."""
-    b = _sql_cap_bucket(id_col, seed)
-    return f"""
-    SELECT d.*, {b} < t._thr AS keep
-    FROM {table} d
-    LEFT JOIN {thresholds} t
-      ON d.{group_col} IS NOT DISTINCT FROM t.{group_col}
-    """
 
 
 def sql_cap_per_group(

@@ -57,7 +57,6 @@ import os
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -234,56 +233,6 @@ def decode_image_features(
 
     return df.select("media_id", "content").mapInPandas(
         kernel, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
-def media_embeddings(
-    df: DataFrame, dim: int = 64, fake: bool | None = None
-) -> DataFrame:
-    """Per-media embedding vectors (media_id, embedding array<double>)
-    — the bridge from the multimodal family into similarity search:
-    the output feeds operators.vector_index.VectorIndex / the ANN
-    operators directly.
-
-    A real implementation runs a vision/audio encoder over the decoded
-    media (the batched Arrow shape here is exactly what that needs);
-    the environment stub derives a deterministic unit vector from the
-    content digest — stable across runs and machines, so downstream
-    index tests are exact. Same gating as the other kernels:
-    NotImplementedError unless the fake decoder is allowed.
-    """
-    df = ensure_parallelism(df)
-    allow_fake = _fake_decode_allowed() if fake is None else fake
-
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not allow_fake:
-                raise NotImplementedError(
-                    "media embedding requires an encoder model — not "
-                    "available in this environment; set "
-                    "GUS_MULTIMODAL_FAKE_DECODE=1 for the stub"
-                )
-            ids, vecs = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                raw = bytes(content or b"")
-                # expand the 16-byte digest into dim deterministic
-                # floats via counter-mode re-hashing
-                buf = b"".join(
-                    hashlib.md5(raw + i.to_bytes(4, "big")).digest()
-                    for i in range((dim * 4 + 15) // 16)
-                )
-                v = np.frombuffer(buf[: dim * 4], dtype=">u4").astype("float64")
-                v = v / 2**32 - 0.5
-                v /= np.linalg.norm(v) or 1.0
-                ids.append(mid)
-                vecs.append(v.tolist())
-            yield pd.DataFrame({"media_id": ids, "embedding": vecs})
-
-    return df.select("media_id", "content").mapInPandas(
-        kernel, schema="media_id long, embedding array<double>"
     )
 
 
@@ -684,19 +633,4 @@ def video_metadata(df: DataFrame, fake: bool | None = None) -> DataFrame:
 
     return df.select("media_id", "content").mapInPandas(
         kernel, schema=VIDEO_META_SCHEMA
-    )
-
-
-def media_summary(df: DataFrame) -> DataFrame:
-    """Pure-JVM metadata rollup (no decode): bytes and dimensions per
-    mime type — the triage query a pipeline runs before spending decode
-    cycles."""
-    return (
-        df.groupBy(F.col("meta.mime").alias("mime"))
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(F.length("content")).alias("total_bytes"),
-            F.avg("meta.width").alias("avg_width"),
-            F.avg("meta.height").alias("avg_height"),
-        )
     )

@@ -513,11 +513,12 @@ class PostingIndex:
         surviving corpus (asserted in tests). Requires an index built
         with ``positional=True``.
 
-        Pins autoBucketedScan off for the session — same Spark-4.1
-        mechanics as `retrieval.phrase_topk_indexed`: the phrase
-        plan's id-keyed joins give the rule no w-distributed consumer,
-        and the conversion it then applies discards the bucket PRUNING
-        that makes an indexed phrase query cheap."""
+        Pins autoBucketedScan off for the session (Spark 4.1): Spark's
+        DisableUnnecessaryBucketedScan rule converts a bucketed scan to
+        a regular one when no downstream operator needs the bucket
+        distribution, and the phrase plan's id-keyed joins give it none
+        — the conversion then discards the bucket PRUNING that makes an
+        indexed phrase query cheap."""
         from gus_spark.operators.retrieval import _phrase_occurrences
 
         if k <= 0:

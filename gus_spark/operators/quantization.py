@@ -152,153 +152,28 @@ def pq_fit(
     return cb
 
 
-def opq_fit(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    codes: int = 256,
-    iters: int = 3,
-    dim: int = DIM,
-):
-    """Optimized PQ (OPQ): learn an orthogonal rotation R so that the
-    rotated vectors quantize better, by alternating two exactly-solved
-    subproblems — Lloyd codebook updates on R·x, and the orthogonal
-    Procrustes rotation update R = V·Uᵀ from svd(Σ x·x̂ᵀ). Returns
-    (R (dim × dim), codebooks); pass R as ``rotation=`` to
-    pq_encode / pq_topk / pq_reconstruction_mse.
-
-    Rotations help when variance is unevenly spread across the
-    contiguous subspaces PQ cuts (correlated dims in one block starve
-    the others' code budget); R re-balances them. Orthogonality
-    preserves inner products and norms, so ADC cosine scoring in
-    rotated space is exact.
-
-    Scale shape: per alternation, TWO one-scan passes — the codebook
-    pass emits the standard (subspace, code, count, sum) partials, the
-    rotation pass emits one dim × dim scatter partial per batch
-    (4096 doubles at dim=64, independent of n); SVD of the combined
-    scatter is driver-side on a dim × dim matrix. Both alternating
-    steps only decrease the shared objective, so the fit can never end
-    worse than unrotated PQ trained the same way (R starts at I).
-    """
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    spark = df.sparkSession
-    v = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    rot = np.eye(dim)
-    cb = None
-    for it in range(iters + 1):
-        # --- codebook pass (Lloyd step on rotated vectors) ------------
-        bc = spark.sparkContext.broadcast((rot, cb))
-
-        def _cb_partials(batches, _bc=bc):
-            import numpy as np  # noqa: PLC0415 — executor-side
-            import pandas as pd
-
-            rot_, cb_ = _bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                y = np.stack(pdf["v"].to_numpy()) @ rot_.T
-                out_sub, out_code, out_n, out_s = [], [], [], []
-                for j, sub in enumerate(_subspace_views(y, m)):
-                    if cb_ is None:
-                        code = pdf["id"].to_numpy() % codes
-                    else:
-                        cc_sq = (cb_[j] ** 2).sum(axis=1)
-                        code = (cc_sq[None, :] - 2.0 * (sub @ cb_[j].T)).argmin(
-                            axis=1
-                        )
-                    order = np.argsort(code, kind="stable")
-                    ss, cs = sub[order], code[order]
-                    uc, starts = np.unique(cs, return_index=True)
-                    sums = np.add.reduceat(ss, starts, axis=0)
-                    counts = np.diff(np.append(starts, len(cs)))
-                    out_sub.extend([j] * len(uc))
-                    out_code.extend(int(u) for u in uc)
-                    out_n.extend(counts.tolist())
-                    out_s.extend(row.tolist() for row in sums)
-                yield pd.DataFrame(
-                    {"sub": out_sub, "code": out_code, "n": out_n, "s": out_s}
-                )
-
-        partials = v.mapInPandas(
-            _cb_partials, "sub int, code int, n long, s array<double>"
-        ).collect()
-        counts = np.zeros((m, codes), dtype="int64")
-        sums = np.zeros((m, codes, dsub))
-        for r in partials:
-            counts[r["sub"], r["code"]] += r["n"]
-            sums[r["sub"], r["code"]] += np.asarray(r["s"])
-        new_cb = np.zeros((m, codes, dsub)) if cb is None else cb.copy()
-        occupied = counts > 0
-        new_cb[occupied] = sums[occupied] / counts[occupied][:, None]
-        cb = new_cb
-        if it == iters:
-            break  # final codebook refresh, no further rotation step
-
-        # --- rotation pass (Procrustes step, codebooks fixed) ---------
-        bc2 = spark.sparkContext.broadcast((rot, cb))
-
-        def _scatter(batches, _bc=bc2):
-            import numpy as np  # noqa: PLC0415 — executor-side
-            import pandas as pd
-
-            rot_, cb_ = _bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.stack(pdf["v"].to_numpy())
-                y = x @ rot_.T
-                recon = np.empty_like(y)
-                for j, sub in enumerate(_subspace_views(y, m)):
-                    cc_sq = (cb_[j] ** 2).sum(axis=1)
-                    code = (cc_sq[None, :] - 2.0 * (sub @ cb_[j].T)).argmin(
-                        axis=1
-                    )
-                    recon[:, j * dsub : (j + 1) * dsub] = cb_[j][code]
-                yield pd.DataFrame({"a": [(x.T @ recon).ravel().tolist()]})
-
-        rows = v.mapInPandas(_scatter, "a array<double>").collect()
-        scatter = np.zeros((dim, dim))
-        for r in rows:
-            scatter += np.asarray(r["a"]).reshape(dim, dim)
-        u, _, vt = np.linalg.svd(scatter)
-        # maximize tr(R · scatter): R = V·Uᵀ of svd(scatter) = U S Vᵀ
-        rot = vt.T @ u.T
-    return rot, cb
-
-
 def pq_encode(
     df: DataFrame,
     codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rotation=None,
 ) -> DataFrame:
     """(id, codes array<int> of length m): each vector compressed to
-    its per-subspace nearest-centroid indices — the stored form. Pass
-    the OPQ ``rotation`` when the codebooks were opq_fit-trained."""
+    its per-subspace nearest-centroid indices — the stored form."""
     spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((codebooks, rotation))
+    bc = spark.sparkContext.broadcast(codebooks)
 
     def _encode(batches):
         import numpy as np  # noqa: PLC0415 — executor-side
         import pandas as pd
 
-        c, rot = bc.value
+        c = bc.value
         mm = c.shape[0]
         cc_sq = (c**2).sum(axis=2)
         for pdf in batches:
             if pdf.empty:
                 continue
             x = np.stack(pdf["v"].to_numpy())
-            if rot is not None:
-                x = x @ rot.T
             code_cols = [
                 (cc_sq[j][None, :] - 2.0 * (sub @ c[j].T)).argmin(axis=1)
                 for j, sub in enumerate(_subspace_views(x, mm))
@@ -319,7 +194,6 @@ def pq_topk(
     queries: list[tuple[int, list[float]]],
     codebooks,
     k: int = 10,
-    rotation=None,
 ) -> DataFrame:
     """ADC top-k: rank every encoded vector against each query WITHOUT
     decompressing. Output (query_id, neighbor_id, adc_sim, rank) with
@@ -339,10 +213,6 @@ def pq_topk(
     qids = np.array([q[0] for q in queries], dtype="int64")
     qvecs = np.stack([np.asarray(q[1], dtype="float64") for q in queries])
     qvecs = qvecs / np.linalg.norm(qvecs, axis=1, keepdims=True)
-    if rotation is not None:
-        # scoring happens in rotated space; orthogonality preserves
-        # inner products and norms, so the cosine is unchanged
-        qvecs = qvecs @ np.asarray(rotation).T
     # LUT[q, j, code] = q̂_sub(j) · c(j, code); norm²[j, code] additive
     lut = np.einsum("qjd,jcd->qjc", np.stack(_subspace_views(qvecs, mm), axis=1), cb)
     code_sq = (cb**2).sum(axis=2)  # (m, codes)
@@ -399,7 +269,6 @@ def pq_topk_rerank(
     shortlist: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rotation=None,
 ) -> DataFrame:
     """Two-stage retrieval, the production PQ pattern: ADC over the
     compressed codes produces a ``shortlist`` (default 5k) of
@@ -415,9 +284,9 @@ def pq_topk_rerank(
     shortlist=5k captures ≥0.99 of the true top-5, so the re-ranked
     result is near-exact at ~6% of the scan bytes."""
     shortlist = 5 * k if shortlist is None else shortlist
-    cand = pq_topk(
-        encoded, queries, codebooks, k=shortlist, rotation=rotation
-    ).select("query_id", "neighbor_id")
+    cand = pq_topk(encoded, queries, codebooks, k=shortlist).select(
+        "query_id", "neighbor_id"
+    )
     return _exact_rerank(df, cand, queries, k, id_col, vec_col)
 
 
@@ -719,47 +588,3 @@ def ivf_pq_topk(
         "query_id", "neighbor_id"
     )
     return _exact_rerank(df, cand, queries, k, id_col, vec_col)
-
-
-def pq_reconstruction_mse(
-    df: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rotation=None,
-) -> float:
-    """Mean squared reconstruction error of the codebooks over ``df``
-    (in rotated space when ``rotation`` is given — the shared OPQ/PQ
-    objective, directly comparable) — exposed for tests/monitoring.
-    One scan."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((codebooks, rotation))
-
-    def _err(batches):
-        import numpy as np  # noqa: PLC0415 — executor-side
-        import pandas as pd
-
-        c, rot = bc.value
-        mm = c.shape[0]
-        cc_sq = (c**2).sum(axis=2)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf["v"].to_numpy())
-            if rot is not None:
-                x = x @ rot.T
-            err = 0.0
-            for j, sub in enumerate(_subspace_views(x, mm)):
-                d2 = cc_sq[j][None, :] - 2.0 * (sub @ c[j].T)
-                code = d2.argmin(axis=1)
-                err += ((sub - c[j][code]) ** 2).sum()
-            yield pd.DataFrame({"sse": [err], "n": [x.shape[0] * x.shape[1]]})
-
-    v = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-    row = (
-        v.select("v")
-        .mapInPandas(_err, "sse double, n long")
-        .agg(F.sum("sse").alias("sse"), F.sum("n").alias("n"))
-        .first()
-    )
-    return float(row["sse"] / row["n"])

@@ -592,9 +592,8 @@ def posting_positions(
     (one expression over the same aggregation), so this strictly
     generalizes `posting_lists`: the BM25 scoring tail runs unchanged
     over it, and a parquet materialization column-prunes the positions
-    array away on pure-BM25 reads. Materialize bucketed by `w`
-    (`build_positional_index`, or PostingIndex(positional=True) for
-    the live form) for repeated-phrase serving.
+    array away on pure-BM25 reads. Materialize it bucketed by `w`
+    with PostingIndex(positional=True) for repeated-phrase serving.
 
     Token-array projection is isolated below the Generate boundary for
     the same one-split-per-doc reason as `posting_lists`."""
@@ -806,65 +805,6 @@ def phrase_topk(
         raise ValueError(f"k must be > 0, got {k}")
     return (
         phrase_match(df, phrase, id_col, text_col)
-        .orderBy(F.col("n_occurrences").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def build_positional_index(
-    df: DataFrame,
-    name: str,
-    n_buckets: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Materialize `posting_positions` bucketed + sorted by term into
-    the session catalog — each phrase term's postings then scan only
-    that term's buckets (SelectedBucketsCount pruning, the BM25 index
-    contract), and the per-term filters never reshuffle."""
-    from gus_spark.operators.partitioning import write_bucketed
-
-    write_bucketed(
-        posting_positions(df, id_col, text_col),
-        name, "w", n_buckets=n_buckets, sort_by="w",
-    )
-
-
-def phrase_topk_indexed(
-    spark,
-    name: str,
-    phrase: list[str],
-    k: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Serve a phrase query from a `build_positional_index`
-    materialization: identical result to the ad-hoc `phrase_topk`
-    (same occurrence counting over the same postings — asserted in
-    tests/test_retrieval.py).
-
-    Pins ``spark.sql.sources.bucketing.autoBucketedScan.enabled``
-    to false for the session: Spark's DisableUnnecessaryBucketedScan
-    rule converts a bucketed scan to a regular one whenever no
-    downstream operator needs the bucket DISTRIBUTION — and the
-    conversion also discards bucket PRUNING, which for a phrase query
-    (per-term filters, then id-keyed joins: nothing w-distributed
-    downstream) is the entire point of the index. Measured on this
-    exact shape: pruning present iff the rule is off; the BM25 index
-    path is unaffected either way because its df-count aggregates by
-    w. The trade is that non-pruned full scans of bucketed tables in
-    the same session keep one-task-per-bucket parallelism — every
-    bucketed table in this repo is built with >= core-count buckets,
-    so nothing regresses."""
-    if k <= 0:
-        raise ValueError(f"k must be > 0, got {k}")
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-    )
-    post = spark.table(name).filter(
-        F.col("w").isin(sorted(set(phrase)))
-    )
-    return (
-        _phrase_occurrences(post, phrase, id_col)
         .orderBy(F.col("n_occurrences").desc(), F.col(id_col))
         .limit(k)
     )

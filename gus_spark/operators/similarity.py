@@ -154,37 +154,6 @@ def bucket_signature(vec: Column, planes: list[list[int]] | None = None) -> Colu
     return sig
 
 
-def probe_buckets(
-    vec: Column, planes: list[list[int]], nprobe: int
-) -> Column:
-    """Home bucket + the ``nprobe`` buckets reached by flipping the
-    lowest-|margin| sign bits (multi-probe LSH). All JVM expressions:
-    per-plane dot products feed both the signature and the margin sort;
-    every bit shift is a Python-side literal, so nothing leaves
-    whole-stage codegen."""
-    dots = [_dot_lit(vec, plane) for plane in planes]
-    sig = F.lit(0).cast("long")
-    for i, d in enumerate(dots):
-        bit = F.when(d > 0, 1).otherwise(0).cast("long")
-        sig = sig + F.shiftleft(bit, i)
-    # struct sort key = |margin| first -> flipping the most borderline
-    # hyperplanes first, exactly the buckets a near-miss neighbor is in
-    flips = F.array(
-        *[
-            F.struct(
-                F.abs(d).alias("m"),
-                sig.bitwiseXOR(F.lit(1 << i)).alias("fsig"),
-            )
-            for i, d in enumerate(dots)
-        ]
-    )
-    flipped = F.transform(
-        F.slice(F.array_sort(flips), 1, min(nprobe, len(planes))),
-        lambda s: s["fsig"],
-    )
-    return F.concat(F.array(sig), flipped)
-
-
 def _sig_probe_udf(planes: list[list[int]], nprobe: int):
     """Arrow-vectorized signature + multi-probe kernel as a SCALAR
     pandas_udf over ``v`` returning ``struct<norm, buckets>`` where

@@ -829,59 +829,6 @@ def read_manifest(dest: str, filesystem=None) -> dict:
         return json.loads(fh.read().decode("utf-8"))
 
 
-def read_training_shards(
-    spark,
-    dest: str,
-    split: str = "train",
-    cursor: tuple[int, int] | None = None,
-) -> DataFrame:
-    """The written shard set as a DataFrame, optionally resumed:
-    ``cursor=(shard, pos)`` names the LAST CONSUMED row and the result
-    holds strictly-later rows of the global order. Both filters prune
-    physically — ``split``/``shard`` are partition directories, so a
-    resume deep into the corpus scans only the cursor shard onward.
-    A 3-tuple cursor (the `iter_training_order` form) additionally
-    checks the layout stamp, raising on a resume across an
-    append/compact (r13). When `mask_training_sequences` has recorded
-    doc-span masks, the result carries the same ``masked_spans``
-    column the host loader attaches (null for clean rows) — Spark
-    reader and trainer loader agree on the contract."""
-    import os
-
-    manifest = read_manifest(dest)
-    df = spark.read.parquet(os.path.join(dest, "data")).filter(
-        F.col(manifest["split_col"]) == split
-    )
-    masks_path = os.path.join(dest, "masks.parquet")
-    if os.path.exists(masks_path):
-        m = (
-            spark.read.parquet(masks_path)
-            .withColumnRenamed("id", manifest["id_col"])
-            .withColumnRenamed("spans", "masked_spans")
-        )
-        df = df.join(F.broadcast(m), manifest["id_col"], "left")
-    if cursor is not None:
-        if len(cursor) == 3:
-            shard, pos, c_layout = cursor
-            layout = manifest.get(
-                "layout", manifest.get("generations", 1)
-            )
-            if c_layout != layout:
-                raise ValueError(
-                    f"cursor was yielded at shard-set layout "
-                    f"{c_layout} but the set is now at layout "
-                    f"{layout} — restart the read after an "
-                    "append/compact restructure"
-                )
-        else:
-            shard, pos = cursor
-        df = df.filter(
-            (F.col("shard") > shard)
-            | ((F.col("shard") == shard) & (F.col("pos") > pos))
-        )
-    return df
-
-
 def _split_visit(fs, dest, split_col, split, seed, epoch):
     """Resolve a split's directory and the epoch's SHARD VISIT ORDER
     — the one place this arithmetic lives, shared by the loader and
@@ -2258,8 +2205,8 @@ def migrate_cursors(
 
 
 class LoaderTelemetry:
-    """Rate and stall observability for any loader stream —
-    `mixture_report` formats POSITION; this measures RATE, which is
+    """Rate and stall observability for any loader stream — the
+    cursor records POSITION; this measures RATE, which is
     what a 3am stall hunt actually needs. Wrap a stream and read
     `snapshot()` on any cadence:
 
@@ -2351,119 +2298,6 @@ class LoaderTelemetry:
             "rows_per_s": round(t_rows / total) if total else None,
             "io_wait_frac": round(t_wait / total, 4) if total else None,
         }
-
-
-def mixture_report(cursor: dict, components: dict | None = None) -> dict:
-    """Turn a composite `iter_mixture` cursor into the numbers an
-    operator actually pages through: total steps, spent tokens (when
-    tracked), and per component its epoch counter, in-epoch position,
-    and — under ``schedule="exact"`` (served counts ride the cursor)
-    — the realized draw share next to the target weight when
-    ``components`` (the same spec passed to `iter_mixture`) is given.
-    Pure dict formatting over state the cursor already carries; no
-    filesystem or Spark access, safe on any host that can read the
-    checkpoint."""
-    states = cursor.get("states", {})
-    served = cursor.get("served")
-    total_served = sum(served.values()) if served else None
-    target = None
-    if components is not None:
-        tw = sum(float(w) for _d, w in components.values())
-        target = {n: float(w) / tw for n, (_d, w) in components.items()}
-    out = {
-        "step": cursor.get("step"),
-        "tokens": cursor.get("tokens"),
-        "components": {},
-    }
-    for name, s in states.items():
-        row = {
-            "epoch": s.get("epoch"),
-            "position": (
-                None
-                if s.get("cursor") is None
-                else {
-                    "shard": s["cursor"][0],
-                    "pos": s["cursor"][1],
-                    "layout": s["cursor"][2],
-                }
-            ),
-        }
-        if served is not None:
-            row["draws"] = served.get(name, 0)
-            row["draw_share"] = (
-                round(served.get(name, 0) / total_served, 4)
-                if total_served
-                else None
-            )
-            if target is not None:
-                row["target_share"] = round(target.get(name, 0.0), 4)
-        out["components"][name] = row
-    return out
-
-
-def mixture_token_counts(
-    spark,
-    components: dict,
-    split: str = "train",
-    tokens_col: str = "n_tokens",
-) -> dict:
-    """Per-component token totals over a mixture's shard sets — the
-    input `temperature_weights` (operators/mixing.py, the XLM-R
-    q_d ∝ p_d^alpha smoothing) needs to derive `iter_mixture`
-    weights from the corpora themselves:
-
-        counts  = mixture_token_counts(spark, {"web": web_dir, ...})
-        weights = temperature_weights(counts, alpha=0.5)
-        mix     = {n: (dirs[n], weights[n]) for n in dirs}
-
-    ``components`` maps name -> dest (bare dirs; (dest, weight)
-    tuples are also accepted so an existing mixture spec can be
-    re-counted). One Spark aggregation per set, partition-pruned to
-    the split — a handful of scans run ONCE before a training run,
-    never per step. Totals count exactly what `iter_mixture` will
-    serve: tombstoned rows are excluded (the loader's read-side
-    delete gate, applied here as a broadcast anti-join on the
-    sidecar — contamination-bounded, never corpus-sized), an empty
-    split raises the loader's own error instead of returning a 0
-    that `temperature_weights` would turn into an invalid weight,
-    and null token values raise (same contract as
-    ``max_tokens``)."""
-    import os
-
-    out = {}
-    for name, spec in components.items():
-        dest = spec[0] if isinstance(spec, (tuple, list)) else spec
-        manifest = read_manifest(dest)
-        df = spark.read.parquet(os.path.join(dest, "data")).filter(
-            F.col(manifest["split_col"]) == split
-        )
-        tomb_path = os.path.join(dest, "tombstones.parquet")
-        if os.path.exists(tomb_path):
-            tomb = spark.read.parquet(tomb_path).select(
-                F.col("id").alias(manifest["id_col"])
-            )
-            df = df.join(
-                F.broadcast(tomb), manifest["id_col"], "left_anti"
-            )
-        row = df.agg(
-            F.sum(tokens_col).alias("t"),
-            F.count("*").alias("n"),
-            F.count(tokens_col).alias("nn"),
-        ).first()
-        if not row["n"]:
-            raise ValueError(
-                f"component {name!r} has no rows in split {split!r} "
-                f"({dest}) — an empty component can never be "
-                "scheduled"
-            )
-        if row["nn"] != row["n"]:
-            raise ValueError(
-                f"{tokens_col!r} holds nulls in component {name!r} "
-                f"({dest}) — token totals over rows of unknown "
-                "length are not totals"
-            )
-        out[name] = int(row["t"])
-    return out
 
 
 def tombstone_training_shards(dest: str, ids) -> dict:

@@ -96,27 +96,7 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # (array_stats_embeddings was rotated out for bridge.q16: its array
 #  size/min/max surface stays covered by similarity_topk_for_vec0's
-#  oracle-checked array arithmetic and the profiler's min/max measures
-#  — profile_orders_columns, itself rotated out r7 for
-#  curation.dsir_select_documents but still value-checked inline.)
-
-
-# (approx_distinct_sketch was rotated out of the catalog r8 for
-#  text.phrase_match_docs — it was a rows-only row by nature (HLL++
-#  vs DuckDB's HLL differ, so no value oracle is possible), and the
-#  50-entry driver budget is better spent on an oracle-checked query.
-#  The sketch path stays value-checked inline: error-bounded vs the
-#  exact count AND vs DuckDB's exact count in test_queries.py, and
-#  auto_buckets exercises approx_count_distinct on the scale path.)
-def approx_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++) per order status — the
-    sketch path for 100-TB cardinalities. No oracle: sketch estimates
-    are algorithm-specific; tests bound the relative error instead."""
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.approx_count_distinct("o_custkey", 0.02).alias("approx_customers"),
-        F.countDistinct("o_custkey").alias("exact_customers"),
-    )
+#  oracle-checked array arithmetic.)
 
 
 # (events_daily_from_hourly was rotated out for bridge.q20: its
@@ -357,75 +337,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_quantity") < F.col("qty_thr"))
         .agg((dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
     )
-
-
-#: DuckDB twin of profile_orders_columns — kept (with the function)
-#: after the probe's catalog slot rotated to the strictly deeper
-#: curation.dsir_select_documents (r7): the profiler stays value-
-#: checked inline in test_queries.py and plan-asserted in
-#: test_plans.py; only the driver CORRECTNESS row moved.
-PROFILE_ORDERS_ORACLE = """
-    SELECT 'o_totalprice' AS column_name,
-           COUNT(*) AS n_rows,
-           COUNT(o_totalprice) AS n_non_null,
-           COUNT(DISTINCT o_totalprice) AS n_distinct,
-           CAST(MIN(o_totalprice) AS VARCHAR) AS min_val,
-           CAST(MAX(o_totalprice) AS VARCHAR) AS max_val
-    FROM orders
-    UNION ALL
-    SELECT 'o_orderstatus', COUNT(*), COUNT(o_orderstatus),
-           COUNT(DISTINCT o_orderstatus),
-           MIN(o_orderstatus), MAX(o_orderstatus)
-    FROM orders
-    UNION ALL
-    SELECT 'o_custkey', COUNT(*), COUNT(o_custkey),
-           COUNT(DISTINCT o_custkey),
-           CAST(MIN(o_custkey) AS VARCHAR), CAST(MAX(o_custkey) AS VARCHAR)
-    FROM orders
-    """
-
-
-def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality profiling: per-column row/null/distinct counts and
-    min/max — the triage pass a pipeline runs before training ingest.
-    ONE scan for all profiled columns (asserted in test_plans.py): a
-    single wide aggregation computes every measure — the three exact
-    count-distincts share one Expand pass — and a post-agg explode
-    pivots the 1-row result into one row per column. At 100 TB the
-    difference vs one-agg-per-column is reading the table once vs
-    once per profiled column."""
-    o = table(spark, sf_dir, "orders")
-    cols = [("o_totalprice", True), ("o_orderstatus", False),
-            ("o_custkey", True)]
-
-    def measures(col: str, numeric: bool) -> list:
-        cast = (lambda c: c.cast("string")) if numeric else (lambda c: c)
-        return [
-            F.count(col).alias(f"nn_{col}"),
-            F.countDistinct(col).alias(f"nd_{col}"),
-            cast(F.min(col)).alias(f"mn_{col}"),
-            cast(F.max(col)).alias(f"mx_{col}"),
-        ]
-
-    wide = o.agg(
-        F.count("*").alias("n_rows"),
-        *[m for col, num in cols for m in measures(col, num)],
-    )
-    return wide.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(col).alias("column_name"),
-                    F.col("n_rows").alias("n_rows"),
-                    F.col(f"nn_{col}").alias("n_non_null"),
-                    F.col(f"nd_{col}").alias("n_distinct"),
-                    F.col(f"mn_{col}").alias("min_val"),
-                    F.col(f"mx_{col}").alias("max_val"),
-                )
-                for col, _num in cols
-            ])
-        ).alias("p")
-    ).select("p.*")
 
 
 # (stratified_sample_orders was rotated out for curation.

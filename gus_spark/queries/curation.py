@@ -251,11 +251,7 @@ def dsir_select_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     models in a single pass, a 1-row totals aggregate broadcasts onto
     the vocabulary, scoring is a token join + doc-keyed sum, and the
     selection is a TakeOrderedAndProject (plan-asserted) — no
-    all-pairs stage, no Python, nothing corpus-scaled on the driver.
-    Replaces `profile_orders_columns`, whose single-scan wide-agg
-    profiler claims stay plan-asserted (test_plans.py) and
-    value-checked inline (test_queries.py); its oracle-row slot goes
-    to this strictly deeper selection shape."""
+    all-pairs stage, no Python, nothing corpus-scaled on the driver."""
     from gus_spark.operators.dsir import dsir_select
 
     d = table(spark, sf_dir, "documents")
@@ -312,11 +308,11 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused aggregation — fusion cost never touches the corpus. The live
     twin (`hybrid_rrf_topk_live` over PostingIndex + VectorIndex incl.
     tombstones) serves these exact rows, asserted in tests/test_hybrid.py.
-    Replaces `dedup_jaccard_pairs` in the catalog: its exact-Jaccard
-    shape already IS the minhash probe's oracle tier (the same SQL
-    verifies dedup_minhash_lsh / dedup_clusters), so the rotation
-    keeps that surface oracle-checked while giving the round-8
-    flagship a driver CORRECTNESS row."""
+    Took the exact-Jaccard pairs query's catalog slot: that shape
+    already IS the minhash probe's oracle tier (the same SQL verifies
+    dedup_minhash_lsh / dedup_clusters), so the rotation keeps that
+    surface oracle-checked while giving the round-8 flagship a driver
+    CORRECTNESS row."""
     from gus_spark.operators.hybrid import hybrid_rrf_topk as hybrid_fused
     from gus_spark.operators.util import parquet_point_value
 

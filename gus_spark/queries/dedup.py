@@ -10,11 +10,12 @@ ladder:
    precedent);
 1. exact: hash-groupBy on content digest (md5) — one shuffle on the
    digest, representative row kept by min(doc_id);
-2. rolling-hash fingerprints (MOSS winnowing): localized verbatim-run
-   detection — pure map + one uniform-key equi-join, oracle-checked
-   against a full DuckDB mirror;
+2. rolling-hash fingerprints (MOSS winnowing,
+   gus_spark.operators.dedup): localized verbatim-run detection — pure
+   map + one uniform-key equi-join, oracle-checked against a full
+   DuckDB mirror in tests;
 3. n-gram Jaccard: exact pairwise similarity on token sets — correct but
-   O(n²); serves as the verification oracle for the approximate tiers;
+   O(n²); only the verification oracle SQL of the approximate tiers;
 4. MinHash + LSH (gus_spark.operators.dedup): shingle → k minhashes →
    band-bucket join — candidate generation is a groupBy on band hash, so
    cost is O(n·k) + bucket-local pairs, the 100-TB path (oracle-checked
@@ -63,70 +64,6 @@ def dedup_exact_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_copies"),
         )
     )
-
-
-# Rotated out of the driver catalog round 12 (slot ->
-# dedup_url_docs): the fingerprint equi-join + pair-count shape stays
-# in-catalog via dedup_minhash_lsh/dedup_clusters (same banded-join
-# physics); full value parity against this SQL is still asserted every
-# run in tests/test_queries.py (SPOT_CHECK), and the plan assertion
-# (equi-join, never cartesian) continues in test_plans.py.
-#
-# Full SQL mirror of the MOSS winnowing scheme with the portable
-# 60-bit md5 gram hash (same trick as dedup_simhash): k=25 char
-# grams -> window-16 minima -> distinct fingerprints -> pairs
-# sharing >= 2. All-integer selection, so both engines pick the
-# identical fingerprint positions and the counts match exactly.
-# DuckDB range(a,b) is [a,b) and list slices are 1-based inclusive;
-# both aligned to Spark's sequence/slice below.
-WINNOW_ORACLE = """
-    WITH t AS (
-      SELECT doc_id, TRIM(text) AS s FROM documents
-    ), grams AS (
-      SELECT doc_id,
-             CASE WHEN LENGTH(s) >= 25
-               THEN list_transform(range(1, LENGTH(s) - 25 + 2),
-                 i -> CAST(('0x' || substr(md5(substr(s, i, 25)), 1, 15))
-                          AS BIGINT))
-               ELSE [CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)]
-             END AS hs
-      FROM t
-    ), fps AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               list_transform(range(1, GREATEST(len(hs) - 15, 1) + 1),
-                 j -> list_min(hs[j : j + 15]))
-             )) AS fingerprint
-      FROM grams
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           COUNT(*) AS shared_fingerprints
-    FROM fps a JOIN fps b
-      ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-    HAVING COUNT(*) >= 2
-    """
-
-
-def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprinting (MOSS winnowing,
-    Schleimer/Wilkerson/Aiken SIGMOD'03) and its match step: document
-    pairs sharing >= 2 selected k-gram window minima. The MOSS
-    guarantee is that a shared run of >= k+window-1 = 40 chars shares
-    at least ONE fingerprint; min_shared=2 deliberately trades that
-    single-run floor for precision (a lone 40-char collision can be
-    coincidence; two selected minima almost never are), so pairs whose
-    only overlap selects exactly one fingerprint are dropped by
-    design. Localized rather than set-similar — the tier between
-    exact-md5 dedup and MinHash. Pure map until one uniform-key
-    equi-join; replaces the former dedup_exact_stats probe (redundant
-    with dedup_exact_representatives). Rotated out of the driver
-    catalog round 12 (slot → dedup_url_docs); WINNOW_ORACLE above
-    keeps the parity check alive in tests/test_queries.py."""
-    from gus_spark.operators.dedup import winnow_overlap_pairs
-
-    d = table(spark, sf_dir, "documents")
-    return winnow_overlap_pairs(d, token_hash="md5")
 
 
 #: the synthesized raw-URL column — deterministic integer arithmetic
@@ -270,44 +207,11 @@ def dedup_url_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_by_url(_synth_urls(d))
 
 
-def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact pairwise 3-gram-shingle Jaccard >= 0.8 (near-duplicate
-    pairs). Word n-grams, not unigram sets: on low-vocabulary corpora
-    unigram-set Jaccard saturates (most doc pairs share most words),
-    while order-sensitive shingles cleanly separate true near-dups.
-    O(n²) by construction — the ground truth the MinHash/LSH tier is
-    validated against; at 100 TB only the LSH tier runs.
-
-    No longer a catalog entry (rotated out round 9 for the
-    `hybrid_rrf_topk` probe): this exact-Jaccard shape stays under the
-    driver oracle VERBATIM as the ground-truth SQL that verifies
-    `dedup_minhash_lsh` and `dedup_clusters` below, and this function
-    remains the recall baseline tests/test_approx_ops.py grades the
-    LSH tier against."""
-    from gus_spark.operators.dedup import shingles
-
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", shingles(F.col("text"), 3).alias("ss"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.ss"), F.col("b.ss")))
-    union = F.size(F.col("a.ss")) + F.size(F.col("b.ss")) - inter
-    jac = inter.cast("double") / union
-    return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-
-
 @register(
     "dedup_minhash_lsh",
-    # The oracle is the EXACT O(n²) Jaccard ground truth (same SQL as
-    # dedup_jaccard_pairs). That is a meaningful equality, not a tautology:
+    # The oracle is the EXACT O(n²) Jaccard ground truth (the pairs
+    # tests/reference_ops.py also computes on Spark). That is a
+    # meaningful equality, not a tautology:
     # candidates are exact-Jaccard-verified (so output ⊆ truth always), and
     # the operator uses NUM_PERMS=128 in NUM_BANDS=32 bands of 4 rows
     # (operators/dedup.py:25-51), so a true pair AT the 0.8 threshold

@@ -1013,94 +1013,3 @@ def set_ops_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (monthly_revenue_trend was rotated out: its time-bucketed-agg shape
 # is covered by events_hourly_rollup + q1; the slot went to
 # text.repetition_profile.)
-
-
-# --- TPC-H q14/q15: held INLINE (not catalog-registered) -------------------
-#
-# These two complete the 22/22 TPC-H shape ledger. Their SHAPES are
-# strictly subsumed by in-catalog probes (q14's conditional ratio over
-# a lineitem⋈part join is q8's; q15's equal-to-global-max selection is
-# the q22 broadcast-scalar pattern over q2's group-revenue), so they do
-# not earn one of the driver's 50 CORRECTNESS rows — but they exist as
-# runnable, DuckDB-parity-checked functions (test_queries.py) so a
-# TPC-H user can run the literal queries.
-
-Q14_ORACLE = f"""
-    SELECT CAST(100.0 AS DOUBLE)
-           * {sql_dsum("CASE WHEN p_type = 'PROMO' "
-                       "THEN l_extendedprice * (1 - l_discount) "
-                       "ELSE 0 END")}
-           / {sql_dsum("l_extendedprice * (1 - l_discount)")}
-           AS promo_revenue_pct
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-      AND l_shipdate <  TIMESTAMP '1997-04-01'
-    """
-
-
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: PROMO revenue share for one month. One row-scaled
-    join (lineitem⋈part on partkey — part is un-hinted, AQE decides)
-    feeding a 1-row conditional-ratio aggregate; both sums are decimal
-    (exact, order-free), divided once in double."""
-    l = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .agg(
-            (
-                F.lit(100.0)
-                * dsum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0))
-                / dsum(rev)
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-Q15_ORACLE = f"""
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             {sql_dsum('l_extendedprice * (1 - l_discount)')}
-               AS total_revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        AND l_shipdate <  TIMESTAMP '1997-04-01'
-      GROUP BY l_suppkey)
-    SELECT s_suppkey, s_name, total_revenue
-    FROM supplier JOIN revenue ON s_suppkey = supplier_no
-    WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-    ORDER BY s_suppkey
-    """
-
-
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: the supplier(s) whose quarterly revenue equals the
-    global maximum. The revenue "view" is one supplier-keyed decimal
-    aggregate; the global max is the q22 uncorrelated-scalar pattern
-    (1-row aggregate broadcast back); equality is exact because both
-    sides derive from the same order-free decimal sums."""
-    l = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    rev = (
-        l.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("total_revenue")
-        )
-    )
-    top = rev.agg(F.max("total_revenue").alias("max_revenue"))
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.crossJoin(F.broadcast(top))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(s, F.col("s_suppkey") == F.col("supplier_no"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )

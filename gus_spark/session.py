@@ -24,12 +24,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
 
 def get_spark(
     app_name: str = "gus_spark",
@@ -85,26 +79,3 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load every testdata table from ``sf_dir`` and register temp views.
-
-    Returns ``{name: DataFrame}``. Reads are lazy; Catalyst prunes columns
-    and pushes filters into the parquet scans of downstream queries.
-
-    Routed through ``queries.table()`` so every entry point — including
-    driver-owned sessions that never called ``get_spark`` — shares the
-    one timestamp-normalization contract (UTC session, TIMESTAMP not
-    NTZ, the events.ts nanos fallback).
-    """
-    from gus_spark.queries import table
-
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

@@ -44,10 +44,25 @@ def spark():
     yield spark
 
 
+def load_tables(spark, sf_dir: str) -> dict:
+    """Load every testdata table from ``sf_dir`` and register temp views.
+
+    Returns ``{name: DataFrame}``. Routed through ``queries.table()`` so
+    the views share the query path's timestamp normalization (UTC
+    session, TIMESTAMP not NTZ, the events.ts nanos fallback)."""
+    from gus_spark.queries import table
+    from oracle_harness import TABLES
+
+    dfs = {}
+    for name in TABLES:
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            dfs[name] = table(spark, sf_dir, name)
+            dfs[name].createOrReplaceTempView(name)
+    return dfs
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
-    from gus_spark.session import load_tables
-
     return load_tables(spark, SF_DIR)
 
 

@@ -10,11 +10,17 @@ the short-doc fallback, the permutation math or the counting shows as
 a mismatch in the parity tests. They are deliberately slow (Spark
 evaluates the higher-order functions interpreted) and are not part of
 the library.
+
+The other references here are ground truth or twins that only tests
+read: the multi-probe LSH bucket list as JVM expressions
+(`probe_buckets`, against `similarity._sig_probe_udf`), the exact
+O(n²) Jaccard pairs the MinHash/LSH tier is graded against, and the
+DuckDB twins of the cap-threshold artifact.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gus_spark.operators.dedup import (
@@ -25,9 +31,18 @@ from gus_spark.operators.dedup import (
     NUM_PERMS,
     ROWS_PER_BAND,
     _mix_expr,
+    shingles,
     token_hashes,
 )
+from gus_spark.operators.mixing import (
+    _CAP_SPACE,
+    _cap_margin,
+    _sql_cap_bucket,
+)
+from gus_spark.operators.similarity import _dot_lit
 from gus_spark.operators.util import ensure_parallelism
+from gus_spark.queries import table
+from gus_spark.queries.dedup import JACCARD_THRESHOLD
 
 
 def minhash_signature(
@@ -136,3 +151,103 @@ def repetition_metrics(
         F.coalesce("n_unique_bigrams", F.lit(0)).alias("n_unique_bigrams"),
         F.coalesce("top_bigram_count", F.lit(0)).alias("top_bigram_count"),
     )
+
+
+def probe_buckets(
+    vec: Column, planes: list[list[int]], nprobe: int
+) -> Column:
+    """Home bucket + the ``nprobe`` buckets reached by flipping the
+    lowest-|margin| sign bits (multi-probe LSH). All JVM expressions:
+    per-plane dot products feed both the signature and the margin sort;
+    every bit shift is a Python-side literal, so nothing leaves
+    whole-stage codegen."""
+    dots = [_dot_lit(vec, plane) for plane in planes]
+    sig = F.lit(0).cast("long")
+    for i, d in enumerate(dots):
+        bit = F.when(d > 0, 1).otherwise(0).cast("long")
+        sig = sig + F.shiftleft(bit, i)
+    # struct sort key = |margin| first -> flipping the most borderline
+    # hyperplanes first, exactly the buckets a near-miss neighbor is in
+    flips = F.array(
+        *[
+            F.struct(
+                F.abs(d).alias("m"),
+                sig.bitwiseXOR(F.lit(1 << i)).alias("fsig"),
+            )
+            for i, d in enumerate(dots)
+        ]
+    )
+    flipped = F.transform(
+        F.slice(F.array_sort(flips), 1, min(nprobe, len(planes))),
+        lambda s: s["fsig"],
+    )
+    return F.concat(F.array(sig), flipped)
+
+
+def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact pairwise 3-gram-shingle Jaccard >= 0.8 (near-duplicate
+    pairs). Word n-grams, not unigram sets: on low-vocabulary corpora
+    unigram-set Jaccard saturates (most doc pairs share most words),
+    while order-sensitive shingles cleanly separate true near-dups.
+    O(n²) by construction — the ground truth the MinHash/LSH tier is
+    graded against; the same shape is the DuckDB oracle SQL of
+    `dedup_minhash_lsh` and `dedup_clusters`."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select("doc_id", shingles(F.col("text"), 3).alias("ss"))
+    a = toks.alias("a")
+    b = toks.alias("b")
+    inter = F.size(F.array_intersect(F.col("a.ss"), F.col("b.ss")))
+    union = F.size(F.col("a.ss")) + F.size(F.col("b.ss")) - inter
+    jac = inter.cast("double") / union
+    return (
+        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            jac.alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
+
+
+def sql_cap_thresholds(
+    table: str = "documents",
+    group_col: str = "source",
+    max_rows: int = 1000,
+    margin: float | None = None,
+) -> str:
+    """DuckDB twin of `cap_thresholds` — identical integer-threshold
+    arithmetic (FLOOR of the double division, matching Spark's
+    toward-zero long cast on the positive operand), so a persisted
+    artifact is engine-portable bit-for-bit."""
+    margin = _cap_margin(max_rows, margin)
+    space = _CAP_SPACE
+    return f"""
+    SELECT {group_col}, _ng,
+           CASE WHEN _ng > {max_rows}
+             THEN LEAST(CAST({space} AS BIGINT),
+                        CAST(FLOOR({float(space) * max_rows * margin!r}
+                                   / _ng) AS BIGINT) + 1)
+             ELSE CAST({space} AS BIGINT) END AS _thr
+    FROM (SELECT {group_col}, COUNT(*) AS _ng
+          FROM {table} GROUP BY {group_col})
+    """
+
+
+def sql_apply_cap_thresholds(
+    table: str = "documents",
+    thresholds: str = "thresholds",
+    group_col: str = "source",
+    id_col: str = "doc_id",
+    seed: str = "cap-v1",
+) -> str:
+    """DuckDB twin of `apply_cap_thresholds`: the same portable
+    md5-prefix bucket compared against the joined threshold; unfitted
+    groups yield NULL keep (LEFT JOIN), null-safe on the group key."""
+    b = _sql_cap_bucket(id_col, seed)
+    return f"""
+    SELECT d.*, {b} < t._thr AS keep
+    FROM {table} d
+    LEFT JOIN {thresholds} t
+      ON d.{group_col} IS NOT DISTINCT FROM t.{group_col}
+    """

@@ -28,11 +28,8 @@ def documents(spark):
 
 @pytest.fixture(scope="module")
 def exact_pairs(spark):
-    """Exact 3-gram-shingle Jaccard >= 0.8 pairs — LSH ground truth
-    (rotated out of the catalog round 9; imported directly)."""
-    from gus_spark.queries.dedup import dedup_jaccard_pairs
-
-    df = dedup_jaccard_pairs(spark, SF_DIR_ORACLE)
+    """Exact 3-gram-shingle Jaccard >= 0.8 pairs — LSH ground truth."""
+    df = reference_ops.dedup_jaccard_pairs(spark, SF_DIR_ORACLE)
     return {(r.doc_a, r.doc_b) for r in df.collect()}
 
 
@@ -364,6 +361,52 @@ def test_ann_lsh_bucket_sizes_bounded(spark):
     stats = buckets.agg(F.max("count").alias("mx"), F.avg("count").alias("avg")).first()
     # no pathological all-in-one-bucket collapse
     assert stats["mx"] <= max(64, 20 * stats["avg"]), stats
+
+
+def test_sig_probe_kernel_matches_jvm_probe_list(spark):
+    """The Arrow multi-probe kernel's bucket list is [home, home,
+    flip_1..flip_nprobe]; its probe part equals the JVM formulation
+    (tests/reference_ops.py) bucket for bucket, in margin order. Seeded
+    vectors only where every plane margin, and every gap between two
+    sorted margins, exceeds 1e-9: nearer ties may legitimately order
+    differently under the kernel's blocked matmul (see
+    `_sig_probe_udf`)."""
+    import numpy as np
+
+    from gus_spark.operators.similarity import (
+        DIM,
+        _plane_matrix,
+        _sig_probe_udf,
+    )
+
+    planes = _plane_matrix(12)
+    pm = np.array(planes, dtype=np.float64)
+    vecs = np.random.default_rng(7).standard_normal((400, DIM))
+    margins = np.sort(np.abs(vecs @ pm.T), axis=1)
+    clear = (margins[:, 0] > 1e-9) & (np.diff(margins, axis=1) > 1e-9).all(
+        axis=1
+    )
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs) if clear[i]]
+    assert len(rows) > 300
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    for nprobe in (0, 3, 12):
+        got = {
+            r.id: (list(r.kernel), list(r.jvm))
+            for r in df.select(
+                "id",
+                _sig_probe_udf(planes, nprobe)(F.col("v"))["buckets"].alias(
+                    "kernel"
+                ),
+                reference_ops.probe_buckets(F.col("v"), planes, nprobe).alias(
+                    "jvm"
+                ),
+            ).collect()
+        }
+        assert len(got) == len(rows)
+        for kernel, jvm in got.values():
+            assert len(kernel) == nprobe + 2
+            assert kernel[0] == kernel[1] == jvm[0]  # home bucket twice
+            assert kernel[1:] == jvm, nprobe
 
 
 # (test_stratified_sample_rates moved to tests/test_mixing.py when the

@@ -246,34 +246,6 @@ def test_bigram_features_match_paper_form(spark, docs):
     assert sorted(again["score_fp"]) == sorted(sc["score_fp"])
 
 
-def test_two_corpus_fit_matches_subset_form(spark, docs):
-    """hashed_logratios_two with target = the flagged subset of the
-    raw corpus must produce the identical model vector as the
-    one-corpus form (target ⊆ raw makes the occupied-bucket smoothing
-    masses coincide); and a genuinely external target (tokens absent
-    from the raw side) still yields finite ratios."""
-    from gus_spark.operators.dsir import hashed_logratios_two
-
-    one = hashed_logratios(docs, IS_EN(), buckets=1 << 12)
-    two = hashed_logratios_two(
-        docs.filter(IS_EN()), docs, buckets=1 << 12
-    )
-    assert (one == two).all()
-
-    external = spark.createDataFrame(
-        [(1, "zzz_external_only_token another_unseen")],
-        "doc_id long, text string",
-    )
-    m = hashed_logratios_two(external, docs, buckets=1 << 12)
-    import numpy as np
-
-    assert np.isfinite(m).all()
-    sc = hashed_scores(docs, m).toPandas()
-    assert len(sc) == docs.count()
-    with pytest.raises(ValueError):
-        hashed_logratios_two(external.filter("doc_id < 0"), docs)
-
-
 def test_short_doc_bigram_features_are_paper_count(spark):
     """A 1-token doc under ns=(1, 2) is 1 unigram + 0 bigrams — the
     shingle fallback (raw token hashes for docs shorter than n) is

@@ -430,6 +430,54 @@ class TestCapPerGroup:
             ).count()
 
 
+#: the consumer shapes a cap result meets downstream — a filter on the
+#: group or the id column, a limit, a one-column projection, a count
+_CAP_CONSUMERS = {
+    "count": lambda d: d.count(),
+    "limit_1": lambda d: len(d.limit(1).collect()),
+    "one_column": lambda d: d.select("doc_id").count(),
+    "group_filter": lambda d: d.filter(F.col("source") == "a").count(),
+    "id_filter": lambda d: d.filter(F.col("doc_id") < 100).count(),
+}
+
+
+class TestCapGuardConsumers:
+    """The prefilter tier's under-admission guard raises for every
+    consumer of the result: a pushed-down filter or a column pruning
+    must not be able to drop the guard branch."""
+
+    @pytest.fixture(scope="class")
+    def three_groups(self, spark):
+        groups = F.array(*[F.lit(g) for g in "abc"])
+        return spark.range(9000).select(
+            F.col("id").alias("doc_id"),
+            F.element_at(groups, (F.col("id") % 3 + 1).cast("int")).alias(
+                "source"
+            ),
+        )
+
+    @pytest.mark.parametrize("consumer", sorted(_CAP_CONSUMERS))
+    def test_violation_raises_for_consumer(self, three_groups, consumer):
+        from pyspark.errors import SparkRuntimeException
+
+        from gus_spark.operators.mixing import cap_per_group
+
+        capped = cap_per_group(
+            three_groups, max_rows=2000, tier="prefilter", margin=1e-12
+        )
+        with pytest.raises(SparkRuntimeException, match="margin"):
+            _CAP_CONSUMERS[consumer](capped)
+
+    def test_no_violation_keeps_exactly_the_capped_rows(self, three_groups):
+        from gus_spark.operators.mixing import cap_per_group
+
+        pre = cap_per_group(three_groups, max_rows=2000, tier="prefilter")
+        exact = cap_per_group(three_groups, max_rows=2000)
+        assert sorted(pre.collect()) == sorted(exact.collect())
+        for name, consume in _CAP_CONSUMERS.items():
+            assert consume(pre) == consume(exact), name
+
+
 class TestCapThresholds:
     """cap_thresholds / apply_cap_thresholds (r11 — the CCNet
     frozen-threshold decomposition applied to the cap): the artifact
@@ -595,10 +643,12 @@ class TestCapThresholds:
         from gus_spark.operators.mixing import (
             apply_cap_thresholds,
             cap_thresholds,
+        )
+        from oracle_harness import frame_key
+        from reference_ops import (
             sql_apply_cap_thresholds,
             sql_cap_thresholds,
         )
-        from oracle_harness import frame_key
 
         d = docs.select("doc_id", "lang")
         thr = cap_thresholds(d, group_col="lang", max_rows=self.CAP)

@@ -9,7 +9,6 @@ from pyspark.sql import Row
 from gus_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     decode_image_features,
-    media_summary,
     sample_frames,
 )
 
@@ -58,13 +57,6 @@ def test_frame_sampling_fanout(spark, media):
     assert all(sorted(v) == [0, 1, 2] for v in by_id.values())
 
 
-def test_media_summary_jvm_only(spark, media):
-    rows = {r.mime: r for r in media_summary(media).collect()}
-    assert rows["image/png"].n_items == 5
-    assert rows["video/mp4"].n_items == 5
-    assert rows["image/png"].total_bytes == sum(100 + i for i in (0, 2, 4, 6, 8))
-
-
 def test_decode_raises_without_stub_flag(spark, media, monkeypatch):
     monkeypatch.delenv("GUS_MULTIMODAL_FAKE_DECODE", raising=False)
     with pytest.raises(Exception) as exc:
@@ -72,41 +64,6 @@ def test_decode_raises_without_stub_flag(spark, media, monkeypatch):
     assert "NotImplementedError" in str(exc.value) or isinstance(
         exc.value, NotImplementedError
     )
-
-
-def test_media_embeddings_feed_the_vector_index(spark, media, tmp_path):
-    """The multimodal → similarity bridge: deterministic unit
-    embeddings from the (stub) encoder flow straight into a
-    VectorIndex; search returns each media item's neighbors. Also the
-    loud-failure contract when no encoder is available."""
-    import numpy as np
-
-    from gus_spark.operators.multimodal import media_embeddings
-    from gus_spark.operators.vector_index import VectorIndex
-
-    emb = media_embeddings(media)
-    rows = emb.collect()
-    assert {r.media_id for r in rows} == set(range(10))
-    for r in rows:
-        assert len(r.embedding) == 64
-        assert abs(np.linalg.norm(r.embedding) - 1.0) < 1e-9
-    # bit-stable across runs (downstream index tests depend on it)
-    again = {r.media_id: r.embedding for r in media_embeddings(media).collect()}
-    assert all(again[r.media_id] == r.embedding for r in rows)
-
-    idx = VectorIndex(
-        spark, str(tmp_path / "midx"),
-        id_col="media_id", vec_col="embedding", iters=1,
-    )
-    idx.fit(emb, seed_col=None)
-    idx.add(emb)
-    queries = [(int(rows[0].media_id), list(rows[0].embedding))]
-    res = idx.search(queries, k=3, nprobe=4, rerank_df=emb)
-    assert res.count() == 3
-    assert all(r.neighbor_id != rows[0].media_id for r in res.collect())
-
-    with pytest.raises(Exception, match="encoder"):
-        media_embeddings(media, fake=False).collect()
 
 
 # ---------------------------------------------------------------- real PNG

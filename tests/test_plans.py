@@ -124,22 +124,6 @@ def test_no_forced_broadcast_on_row_scaled_sides(spark, name):
     assert opt.count("strategy=broadcast") == ALLOWED_BROADCAST_HINTS[name], opt
 
 
-def test_profile_is_single_scan(spark):
-    """The column profiler must read the table ONCE for all profiled
-    columns — a per-column agg-union reads it once per column, which
-    at 100 TB is the whole cost of the query. (Rotated out of the
-    catalog in r7 for dsir_select_documents; the function and this
-    plan contract remain.)"""
-    from gus_spark.queries.advanced import profile_orders_columns
-
-    df = profile_orders_columns(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="simple")
-    plan = buf.getvalue()
-    assert plan.count("Scan parquet") == 1, plan
-
-
 def test_q1_has_partial_aggregation(spark):
     plan = plan_of(spark, "q1_pricing_summary")
     assert plan.count("HashAggregate") >= 2  # partial + final
@@ -259,11 +243,13 @@ def test_winnow_match_step_is_equi_join(spark):
     """The MOSS match step must be a hash/merge EQUI-join on the
     fingerprint key — a CartesianProduct or BroadcastNestedLoopJoin
     here would mean the id_a < id_b predicate absorbed the equality
-    and the operator silently went O(n²). (Rotated out of the catalog
-    r12 — asserted on the function directly.)"""
-    from gus_spark.queries.dedup import dedup_winnow_pairs
+    and the operator silently went O(n²). (Asserted on the operator
+    directly; no catalog query runs it.)"""
+    from gus_spark.operators.dedup import winnow_overlap_pairs
+    from gus_spark.queries import table
 
-    plan = plan_of(spark, dedup_winnow_pairs(spark, SF_DIR))
+    docs = table(spark, SF_DIR, "documents")
+    plan = plan_of(spark, winnow_overlap_pairs(docs, token_hash="md5"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (

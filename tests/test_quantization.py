@@ -13,14 +13,28 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from conftest import SF_DIR_ORACLE
 
 from gus_spark.operators.quantization import (
+    _subspace_views,
     pq_encode,
     pq_fit,
-    pq_reconstruction_mse,
     pq_topk,
     pq_topk_rerank,
 )
 from gus_spark.operators.similarity import _as_double
 from gus_spark.queries import table
+
+
+def pq_reconstruction_mse(df, codebooks, vec_col="embedding") -> float:
+    """Mean squared error of reconstructing every vector of ``df``
+    from its nearest centroid per subspace — the objective pq_fit's
+    Lloyd iterations minimize."""
+    x = np.stack(
+        [np.asarray(r[0], dtype="float64") for r in df.select(vec_col).collect()]
+    )
+    sse = 0.0
+    for j, sub in enumerate(_subspace_views(x, codebooks.shape[0])):
+        d2 = ((sub[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
+        sse += d2.min(axis=1).sum()
+    return sse / x.size
 
 
 @pytest.fixture(scope="module")
@@ -285,51 +299,6 @@ def test_vector_index_keyed_add_is_idempotent(spark, embeddings, tmp_path):
     for r in rr:
         ranks.setdefault(r.query_id, []).append(r.rank)
     assert all(sorted(v) == list(range(1, 6)) for v in ranks.values())
-
-
-def test_opq_rotation_improves_quantization(spark, embeddings):
-    """OPQ's alternating Lloyd/Procrustes fit must (a) produce an
-    orthogonal rotation to machine precision and (b) beat unrotated PQ
-    on the shared reconstruction objective (measured ~18-22% lower MSE
-    on this corpus; R=I is feasible, so it can never be worse)."""
-    import numpy as np
-
-    from gus_spark.operators.quantization import (
-        opq_fit,
-        pq_fit,
-        pq_reconstruction_mse,
-    )
-
-    pq_mse = pq_reconstruction_mse(embeddings, pq_fit(embeddings, iters=3))
-    rot, ocb = opq_fit(embeddings, iters=3)
-    opq_mse = pq_reconstruction_mse(embeddings, ocb, rotation=rot)
-    assert np.abs(rot @ rot.T - np.eye(64)).max() < 1e-8
-    assert opq_mse < pq_mse, (opq_mse, pq_mse)
-
-
-def test_opq_end_to_end_retrieval(spark, embeddings, ground_truth):
-    """Rotation threads through encode → ADC → re-rank: the two-stage
-    OPQ path matches plain PQ's near-exact recall gate (orthogonality
-    preserves cosine, so the re-ranked result quality is bounded only
-    by shortlist recall)."""
-    from gus_spark.operators.quantization import (
-        opq_fit,
-        pq_encode,
-        pq_topk_rerank,
-    )
-
-    truth, queries = ground_truth
-    rot, ocb = opq_fit(embeddings, m=16, iters=3)
-    enc = pq_encode(embeddings, ocb, rotation=rot)
-    res = pq_topk_rerank(
-        embeddings, enc, queries, ocb, k=5, shortlist=25, rotation=rot
-    )
-    got: dict[int, set[int]] = {}
-    for r in res.collect():
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(len(truth[q] & got.get(q, set())) for q in truth)
-    total = sum(len(v) for v in truth.values())
-    assert hits / total >= 0.95, hits / total
 
 
 def test_reserved_query_id_rejected_at_encode(spark, embeddings, tmp_path):

@@ -8,13 +8,16 @@ import sys
 
 import duckdb
 import pytest
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from conftest import SF_DIR, SF_DIR_ORACLE
 from oracle_harness import TABLES, frame_key
 
-from gus_spark.queries import catalog
+from gus_spark.functions.deterministic import dsum, sql_dsum
+from gus_spark.queries import catalog, table
 
 # value-checked inline (fast, high signal); chosen to cover each module
 SPOT_CHECK = [
@@ -26,6 +29,128 @@ SPOT_CHECK = [
     "dedup_url_docs",
     "similarity_topk_for_vec0",
 ]
+
+
+# TPC-H q14/q15 complete the 22/22 TPC-H shape ledger. Their shapes are
+# strictly subsumed by in-catalog probes (q14's conditional ratio over a
+# lineitem⋈part join is q8's; q15's equal-to-global-max selection is the
+# q22 broadcast-scalar pattern over q2's group revenue), so they hold no
+# catalog row; the literal queries live here and hash-match DuckDB.
+Q14_ORACLE = f"""
+    SELECT CAST(100.0 AS DOUBLE)
+           * {sql_dsum("CASE WHEN p_type = 'PROMO' "
+                       "THEN l_extendedprice * (1 - l_discount) "
+                       "ELSE 0 END")}
+           / {sql_dsum("l_extendedprice * (1 - l_discount)")}
+           AS promo_revenue_pct
+    FROM lineitem JOIN part ON p_partkey = l_partkey
+    WHERE l_shipdate >= TIMESTAMP '1997-03-01'
+      AND l_shipdate <  TIMESTAMP '1997-04-01'
+    """
+
+
+def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q14: PROMO revenue share for one month. One row-scaled
+    join (lineitem⋈part on partkey — part is un-hinted, AQE decides)
+    feeding a 1-row conditional-ratio aggregate; both sums are decimal
+    (exact, order-free), divided once in double."""
+    l = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
+    )
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        l.join(p, l.l_partkey == p.p_partkey)
+        .agg(
+            (
+                F.lit(100.0)
+                * dsum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0))
+                / dsum(rev)
+            ).alias("promo_revenue_pct")
+        )
+    )
+
+
+Q15_ORACLE = f"""
+    WITH revenue AS (
+      SELECT l_suppkey AS supplier_no,
+             {sql_dsum('l_extendedprice * (1 - l_discount)')}
+               AS total_revenue
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        AND l_shipdate <  TIMESTAMP '1997-04-01'
+      GROUP BY l_suppkey)
+    SELECT s_suppkey, s_name, total_revenue
+    FROM supplier JOIN revenue ON s_suppkey = supplier_no
+    WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
+    ORDER BY s_suppkey
+    """
+
+
+def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q15: the supplier(s) whose quarterly revenue equals the
+    global maximum. The revenue "view" is one supplier-keyed decimal
+    aggregate; the global max is the q22 uncorrelated-scalar pattern
+    (1-row aggregate broadcast back); equality is exact because both
+    sides derive from the same order-free decimal sums."""
+    l = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
+    )
+    rev = (
+        l.groupBy(F.col("l_suppkey").alias("supplier_no"))
+        .agg(
+            dsum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("total_revenue")
+        )
+    )
+    top = rev.agg(F.max("total_revenue").alias("max_revenue"))
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    return (
+        rev.crossJoin(F.broadcast(top))
+        .filter(F.col("total_revenue") == F.col("max_revenue"))
+        .join(s, F.col("s_suppkey") == F.col("supplier_no"))
+        .select("s_suppkey", "s_name", "total_revenue")
+        .orderBy("s_suppkey")
+    )
+
+
+# Full SQL mirror of the MOSS winnowing scheme with the portable
+# 60-bit md5 gram hash (same trick as dedup_simhash): k=25 char
+# grams -> window-16 minima -> distinct fingerprints -> pairs
+# sharing >= 2. All-integer selection, so both engines pick the
+# identical fingerprint positions and the counts match exactly.
+# DuckDB range(a,b) is [a,b) and list slices are 1-based inclusive;
+# both aligned to operators.dedup.winnow_overlap_pairs' sequence/slice.
+WINNOW_ORACLE = """
+    WITH t AS (
+      SELECT doc_id, TRIM(text) AS s FROM documents
+    ), grams AS (
+      SELECT doc_id,
+             CASE WHEN LENGTH(s) >= 25
+               THEN list_transform(range(1, LENGTH(s) - 25 + 2),
+                 i -> CAST(('0x' || substr(md5(substr(s, i, 25)), 1, 15))
+                          AS BIGINT))
+               ELSE [CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)]
+             END AS hs
+      FROM t
+    ), fps AS (
+      SELECT doc_id,
+             unnest(list_distinct(
+               list_transform(range(1, GREATEST(len(hs) - 15, 1) + 1),
+                 j -> list_min(hs[j : j + 15]))
+             )) AS fingerprint
+      FROM grams
+    )
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           COUNT(*) AS shared_fingerprints
+    FROM fps a JOIN fps b
+      ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+    HAVING COUNT(*) >= 2
+    """
 
 
 @pytest.fixture(scope="module")
@@ -155,12 +280,12 @@ def test_dedup_simhash_matches_oracle(spark, duck):
 
 
 def test_dedup_winnow_pairs_matches_oracle(spark, duck):
-    """dedup_winnow_pairs rotated out of the catalog (r12, slot ->
-    dedup_url_docs) but keeps full value coverage here: every MOSS
-    fingerprint-pair count vs the DuckDB all-integer mirror."""
-    from gus_spark.queries.dedup import WINNOW_ORACLE, dedup_winnow_pairs
+    """The MOSS winnowing operator with the portable md5 gram hash:
+    every fingerprint-pair count vs the DuckDB all-integer mirror."""
+    from gus_spark.operators.dedup import winnow_overlap_pairs
 
-    sdf = dedup_winnow_pairs(spark, SF_DIR_ORACLE).toPandas()
+    docs = table(spark, SF_DIR_ORACLE, "documents")
+    sdf = winnow_overlap_pairs(docs, token_hash="md5").toPandas()
     odf = duck.execute(WINNOW_ORACLE).df()
     assert frame_key(sdf) == frame_key(odf)
 
@@ -180,35 +305,10 @@ def test_dedup_exact_representatives_matches_oracle(spark, duck):
     assert frame_key(sdf) == frame_key(odf)
 
 
-def test_profile_orders_columns_matches_oracle(spark, duck):
-    """profile_orders_columns rotated out of the catalog (r7, slot ->
-    dsir_select_documents) but keeps full value coverage here: the
-    single-scan wide-agg profiler vs its DuckDB twin."""
-    from gus_spark.queries.advanced import (
-        PROFILE_ORDERS_ORACLE,
-        profile_orders_columns,
-    )
-
-    sdf = profile_orders_columns(spark, SF_DIR_ORACLE).toPandas()
-    odf = duck.execute(PROFILE_ORDERS_ORACLE).df()
-    assert frame_key(sdf) == frame_key(odf)
-
-
 @pytest.mark.parametrize("name", ["q14", "q15"])
 def test_q14_q15_inline_match_oracle(spark, duck, name):
-    """TPC-H q14/q15 complete the 22/22 shape ledger. Held INLINE (not
-    catalog-registered): their shapes are strictly subsumed by
-    in-catalog probes (q14 = q8's conditional ratio over a join;
-    q15 = q22's broadcast-scalar max over q2's group revenue), so they
-    don't spend driver CORRECTNESS rows — but the literal queries run
-    and hash-match DuckDB here."""
-    from gus_spark.queries.relational import (
-        Q14_ORACLE,
-        Q15_ORACLE,
-        q14_promo_revenue,
-        q15_top_supplier,
-    )
-
+    """TPC-H q14/q15 (defined above, outside the catalog) run and
+    hash-match DuckDB, so the 22/22 TPC-H ledger stays value-checked."""
     fn, oracle = {
         "q14": (q14_promo_revenue, Q14_ORACLE),
         "q15": (q15_top_supplier, Q15_ORACLE),
@@ -217,27 +317,3 @@ def test_q14_q15_inline_match_oracle(spark, duck, name):
     odf = duck.execute(oracle).df()
     assert len(sdf) > 0
     assert frame_key(sdf) == frame_key(odf)
-
-
-def test_approx_distinct_sketch_error_bounded(spark, duck):
-    """Rotated out of the catalog r8 (rows-only by nature — HLL++ vs
-    DuckDB's HLL differ), but the sketch path stays VALUE-checked
-    here: the exact column must equal DuckDB's exact countDistinct
-    per group, and the HLL++ estimate must sit within 3x the
-    requested 2% rsd of it."""
-    from gus_spark.queries.advanced import approx_distinct_sketch
-
-    got = {
-        r["o_orderstatus"]: (r["approx_customers"], r["exact_customers"])
-        for r in approx_distinct_sketch(spark, SF_DIR_ORACLE).collect()
-    }
-    want = dict(
-        duck.execute(
-            "SELECT o_orderstatus, COUNT(DISTINCT o_custkey) "
-            "FROM orders GROUP BY 1"
-        ).fetchall()
-    )
-    assert set(got) == set(want)
-    for status, (approx, exact) in got.items():
-        assert exact == want[status], status
-        assert abs(approx - exact) / exact <= 0.06, (status, approx, exact)

@@ -399,34 +399,6 @@ def test_phrase_repeated_terms_and_overlaps(spark):
     assert frame_key(got) == frame_key(odf)
 
 
-def test_phrase_indexed_matches_adhoc_and_prunes(spark, docs):
-    """build_positional_index + phrase_topk_indexed: identical result
-    to the ad-hoc path, and the base scan reads only the buckets
-    holding phrase terms (the BM25 index pruning contract carries
-    over to the positional table)."""
-    from gus_spark.operators.retrieval import (
-        build_positional_index,
-        phrase_topk,
-        phrase_topk_indexed,
-    )
-
-    build_positional_index(docs, "phrase_post", n_buckets=8)
-    served = phrase_topk_indexed(spark, "phrase_post", PHRASE, 50)
-    got = served.toPandas()
-    ref = phrase_topk(docs, PHRASE, 50).toPandas()
-    assert got["doc_id"].tolist() == ref["doc_id"].tolist()
-    assert (
-        got["n_occurrences"].tolist() == ref["n_occurrences"].tolist()
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        served.explain(mode="formatted")
-    plan = buf.getvalue()
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, plan
-    assert int(m.group(1)) < int(m.group(2)), plan
-
-
 def test_phrase_forensics_catches_what_13gram_misses(spark):
     """The module's own motivating forensics case: a training doc
     quotes an 8-token eval question VERBATIM. The 13-gram

@@ -23,10 +23,11 @@ def test_bench_reps_clamped(monkeypatch):
 
 
 def test_load_tables_shares_timestamp_contract(spark):
-    """load_tables must route through queries.table() so a driver-owned
-    session gets the same events.ts normalization as the query path:
-    a TIMESTAMP column (not bigint nanos, not TIMESTAMP_NTZ)."""
-    from gus_spark.session import load_tables
+    """The test-side load_tables routes through queries.table(), so a
+    driver-owned session gets the same events.ts normalization as the
+    query path: a TIMESTAMP column (not bigint nanos, not
+    TIMESTAMP_NTZ)."""
+    from conftest import load_tables
 
     dfs = load_tables(spark, SF_DIR)
     assert dict(dfs["events"].dtypes)["ts"] == "timestamp"

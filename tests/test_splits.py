@@ -151,8 +151,7 @@ def test_plan_shape(ids):
 
 
 class TestLoaderBoundary:
-    """write_training_shards / read_training_shards /
-    iter_training_order — the materialized (shard, pos) loader
+    """write_training_shards / iter_training_order — the materialized (shard, pos) loader
     contract with a resume cursor."""
 
     WEIGHTS = {"train": 0.8, "validation": 0.1, "test": 0.1}
@@ -246,22 +245,6 @@ class TestLoaderBoundary:
                 for i in b.column("doc_id").to_pylist()
             ]
             assert resumed == full[consumed:], cur
-
-    def test_spark_resume_prunes_partitions(self, spark, dest):
-        from gus_spark.operators.splits import read_training_shards
-
-        dest, manifest = dest
-        df = read_training_shards(spark, dest, "train", cursor=(5, 3))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # split/shard are partition directories: the resume filter
-        # must reach PartitionFilters, not a post-scan Filter alone
-        assert "PartitionFilters: [" in plan
-        assert "shard" in plan.split("PartitionFilters:")[1].split("]")[0]
-        got = {(r.shard, r.pos) for r in df.select("shard", "pos").collect()}
-        n5 = manifest["shard_rows"]["train"]["5"]
-        assert (5, 3) not in got and (5, 4) in got
-        assert all(s > 5 or (s == 5 and p > 3) for s, p in got)
-        assert sum(1 for s, _p in got if s == 5) == n5 - 3
 
     def test_verify_modes_emit_identical_manifests(
         self, ids, dest, tmp_path_factory
@@ -1812,91 +1795,6 @@ class TestLifecycleInterleave:
         assert read_manifest(d)["total_rows"] == len(want)
 
 
-class TestSparkReaderMaskParity:
-    """read_training_shards (r13): the Spark-side reader carries the
-    SAME masked_spans contract as the host loader (null for clean
-    rows, absent column when no sidecar), and its 3-tuple cursor
-    checks the layout stamp."""
-
-    def test_masked_spans_and_layout_cursor(self, spark, tmp_path):
-        from gus_spark.operators.bpe import (
-            bpe_base_symbols,
-            bpe_fit,
-            bpe_vocab,
-        )
-        from gus_spark.operators.chunk import (
-            assemble_token_sequences,
-            chunk_documents,
-            pack_sequences,
-        )
-        from gus_spark.operators.splits import (
-            append_training_shards,
-            iter_training_order,
-            mask_training_sequences,
-            read_training_shards,
-            write_training_shards,
-        )
-
-        docs = table(spark, SF_DIR_ORACLE, "documents").select(
-            "doc_id", "text"
-        ).limit(150)
-        merges = bpe_fit(docs, num_merges=8)
-        vocab = bpe_vocab(merges, bpe_base_symbols(docs))
-        seqs = assemble_token_sequences(
-            pack_sequences(
-                chunk_documents(docs, max_tokens=16, overlap=4),
-                budget=48, shards=4,
-            ),
-            merges, vocab,
-        )
-        dest = str(tmp_path / "shards")
-        write_training_shards(
-            seqs, dest, shards=4, id_col="seq_uid",
-            weights={"train": 1.0}, verify=False,
-        )
-        df0 = read_training_shards(spark, dest, "train")
-        assert "masked_spans" not in df0.columns  # no sidecar yet
-        dirty = docs.filter(F.col("doc_id") % 13 == 2).select("doc_id")
-        mask_training_sequences(spark, dest, dirty)
-        got = {
-            r.seq_uid: (
-                tuple((s.start, s.len) for s in r.masked_spans)
-                if r.masked_spans is not None
-                else None
-            )
-            for r in read_training_shards(spark, dest, "train")
-            .select("seq_uid", "masked_spans")
-            .collect()
-        }
-        want = {}
-        for b, _c in iter_training_order(dest, "train"):
-            for row in b.to_pylist():
-                want[row["seq_uid"]] = (
-                    tuple(
-                        (s["start"], s["len"])
-                        for s in row["masked_spans"]
-                    )
-                    if row["masked_spans"] is not None
-                    else None
-                )
-        assert got == want
-        assert any(v is not None for v in got.values())
-        # layout-stamp cursor: valid now, loud after an append
-        _b, cur = next(iter(iter_training_order(dest, "train")))
-        assert read_training_shards(
-            spark, dest, "train", cursor=cur
-        ).count() >= 0
-        append_training_shards(
-            seqs.limit(5).withColumn(
-                "seq_uid", F.col("seq_uid") + F.lit(1 << 50)
-            ),
-            dest,
-            verify=False,
-        )
-        with pytest.raises(ValueError, match="layout"):
-            read_training_shards(spark, dest, "train", cursor=cur)
-
-
 def test_mask_weights_reference():
     """mask_weights (r13): the 1-based span arithmetic pinned — the
     weight vector zeroes exactly the masked token positions, clean
@@ -2570,9 +2468,10 @@ class TestMixtureExactSchedule:
 
 
 class TestMixtureTokenCounts:
-    """mixture_token_counts → temperature_weights → iter_mixture:
-    the weights-from-the-corpora bridge. Exact totals per component,
-    bare-dir and (dest, weight) specs both accepted, nulls loud."""
+    """Per-component token totals → temperature_weights →
+    iter_mixture: the weights-from-the-corpora bridge. The totals are
+    read through the host loader, so they count exactly what
+    iter_mixture serves."""
 
     def test_counts_and_temperature_bridge(
         self, spark, tmp_path_factory
@@ -2580,7 +2479,7 @@ class TestMixtureTokenCounts:
         from gus_spark.operators.mixing import temperature_weights
         from gus_spark.operators.splits import (
             iter_mixture,
-            mixture_token_counts,
+            iter_training_order,
             write_training_shards,
         )
 
@@ -2595,19 +2494,18 @@ class TestMixtureTokenCounts:
                 d, shards=2, weights={"train": 1.0},
             )
             dirs[name] = d
-        counts = mixture_token_counts(spark, dirs)
+        counts = {
+            n: sum(
+                sum(b.column("n_tokens").to_pylist())
+                for b, _c in iter_training_order(d, "train")
+            )
+            for n, d in dirs.items()
+        }
         want = {
             "big": sum(3 + i % 5 for i in range(0, 300)),
             "small": sum(3 + i % 5 for i in range(900, 1000)),
         }
         assert counts == want
-        # tuple specs re-count identically
-        assert (
-            mixture_token_counts(
-                spark, {n: (d, 1.0) for n, d in dirs.items()}
-            )
-            == want
-        )
         # the documented composition drives the loader end-to-end
         w = temperature_weights(counts, alpha=0.5)
         assert abs(sum(w.values()) - 1.0) < 1e-9
@@ -2626,30 +2524,11 @@ class TestMixtureTokenCounts:
         )
         assert abs(c["big"] / 60 - w["big"]) < 1 / 60 + 1e-9
 
-    def test_null_tokens_raise(self, spark, tmp_path):
-        from gus_spark.operators.splits import (
-            mixture_token_counts,
-            write_training_shards,
-        )
-
-        d = str(tmp_path / "nulls")
-        write_training_shards(
-            spark.range(40).selectExpr(
-                "id as doc_id",
-                "if(id % 7 = 0, NULL, 4L) as n_tokens",
-            ),
-            d, shards=2, weights={"train": 1.0},
-        )
-        with pytest.raises(ValueError, match="null"):
-            mixture_token_counts(spark, {"x": d})
-
-
 class TestMixtureReviewFixes:
     """Regression pins for the r13 mixture review findings: token
     tracking survives a budget-less resumed leg; a rebuilt component
-    invalidates cursors via the sig (content identity, not path);
-    mixture_token_counts excludes tombstoned rows and refuses empty
-    splits; an abandoned prefetched stream shuts its producer down
+    invalidates cursors via the sig (content identity, not path); an
+    abandoned prefetched stream shuts its producer down
     deterministically."""
 
     @pytest.fixture()
@@ -2719,22 +2598,6 @@ class TestMixtureReviewFixes:
                 )
             )
 
-    def test_token_counts_exclude_tombstones_and_refuse_empty(
-        self, spark, one_set
-    ):
-        from gus_spark.operators.splits import (
-            mixture_token_counts,
-            tombstone_training_shards,
-        )
-
-        before = mixture_token_counts(spark, {"x": one_set})["x"]
-        assert before == 200 * 5
-        tombstone_training_shards(one_set, range(0, 50))
-        after = mixture_token_counts(spark, {"x": one_set})["x"]
-        assert after == 150 * 5  # what iter_mixture will serve
-        with pytest.raises(ValueError, match="no rows in split"):
-            mixture_token_counts(spark, {"x": one_set}, split="val")
-
     def test_abandoned_prefetch_shuts_down_producer(self, one_set):
         import threading
         import time
@@ -2788,7 +2651,8 @@ class TestMixtureReviewFixes:
 
 
 class TestMixtureReport:
-    """mixture_report: cursor → operator-facing numbers, no IO."""
+    """The composite iter_mixture cursor carries the operator-facing
+    numbers: steps, spent tokens, per-component draws and positions."""
 
     def test_report_over_exact_budgeted_cursor(
         self, spark, tmp_path
@@ -2797,7 +2661,6 @@ class TestMixtureReport:
 
         from gus_spark.operators.splits import (
             iter_mixture,
-            mixture_report,
             write_training_shards,
         )
 
@@ -2818,22 +2681,18 @@ class TestMixtureReport:
             schedule="exact", max_tokens=900,
         ):
             pass
-        rep = mixture_report(
-            json.loads(json.dumps(last)), mix
-        )  # checkpoint-shaped input
+        rep = json.loads(json.dumps(last))  # checkpoint-shaped
         assert rep["tokens"] == last["tokens"] >= 900
-        a, b = rep["components"]["a"], rep["components"]["b"]
-        assert a["draws"] + b["draws"] == rep["step"] + 1
-        assert a["target_share"] == 0.75
-        assert abs(a["draw_share"] - 0.75) < 0.1
-        assert a["position"]["layout"] == 1
-        # stochastic cursors (no served counts) still report
+        served = rep["served"]
+        assert served["a"] + served["b"] == rep["step"] + 1
+        assert abs(served["a"] / (rep["step"] + 1) - 0.75) < 0.1
+        assert rep["states"]["a"]["cursor"][2] == 1  # layout stamp
+        # stochastic cursors carry no served counts and no token tally
         it = iter_mixture(mix, "train", batch_rows=16)
         _n, _b, cur = next(it)
         it.close()
-        rep2 = mixture_report(cur)
-        assert "draws" not in rep2["components"]["a"]
-        assert rep2["tokens"] is None
+        assert cur.get("served") is None
+        assert cur.get("tokens") is None
 
 
 class TestWorldSizeMigration:

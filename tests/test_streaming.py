@@ -2570,7 +2570,7 @@ def test_multi_domain_publish_to_mixture(spark, tmp_path):
     CurationPipelineStream PER DOMAIN, each draining its own source
     and publishing its own token-id shard set; the trainer derives
     loader weights from the published sets' measured token mass
-    (mixture_token_counts → temperature_weights) and reads one
+    (host-side token totals → temperature_weights) and reads one
     exact-schedule mixture over both. Domains never merge on disk —
     re-weighting between runs is a config change. Receipts: both
     components flow, realized draw shares track the derived weights
@@ -2586,8 +2586,7 @@ def test_multi_domain_publish_to_mixture(spark, tmp_path):
     from gus_spark.operators.mixing import temperature_weights
     from gus_spark.operators.splits import (
         iter_mixture,
-        mixture_report,
-        mixture_token_counts,
+        iter_training_order,
     )
     from gus_spark.streaming import CurationPipelineStream
 
@@ -2625,7 +2624,13 @@ def test_multi_domain_publish_to_mixture(spark, tmp_path):
         assert m is not None and m["generations"] == 1
         shard_dirs[name] = d
 
-    counts = mixture_token_counts(spark, shard_dirs)
+    counts = {
+        n: sum(
+            sum(b.column("n_tokens").to_pylist())
+            for b, _c in iter_training_order(d, "train")
+        )
+        for n, d in shard_dirs.items()
+    }
     assert all(v > 0 for v in counts.values()), counts
     w = temperature_weights(counts, alpha=0.5)
     mix = {n: (shard_dirs[n], w[n]) for n in shard_dirs}
@@ -2642,9 +2647,6 @@ def test_multi_domain_publish_to_mixture(spark, tmp_path):
         assert abs(draws[n] - w[n] * 60) < 1.0, (n, draws, w)
     # the components stayed separate sets: no uid needs to be
     # globally unique across domains, but each domain's stream is
-    # exactly-once per epoch — and the report reads per-domain state
-    rep = mixture_report(last, mix)
-    assert set(rep["components"]) == set(mix)
-    assert all(
-        r["draws"] == draws[n] for n, r in rep["components"].items()
-    )
+    # exactly-once per epoch — and the cursor carries per-domain state
+    assert set(last["states"]) == set(mix)
+    assert last["served"] == draws

@@ -1,8 +1,9 @@
-"""Every ``gus_spark`` import in ``tools/*.py`` resolves.
+"""Every ``gus_spark`` import in ``tools/*.py``, ``perfbench/*.py``,
+``bench.py`` and ``__spark_entry__.py`` resolves.
 
-The tools import library helpers lazily, inside their functions, so
-importing a tool module would not notice a helper the library deleted
-or renamed. This walks each tool's AST instead and resolves every
+These scripts import library helpers lazily, inside their functions, so
+importing a script would not notice a helper the library deleted or
+renamed. This walks each script's AST instead and resolves every
 ``from gus_spark... import name`` (and ``import gus_spark...``) it
 finds. No Spark session is started.
 """
@@ -13,8 +14,11 @@ import pathlib
 
 import pytest
 
-TOOLS = sorted(
-    (pathlib.Path(__file__).resolve().parents[1] / "tools").glob("*.py")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+TOOLS = sorted((ROOT / "tools").glob("*.py"))
+#: the benchmark harness and the Spark entry points
+ENTRY_POINTS = [ROOT / "bench.py", ROOT / "__spark_entry__.py"] + sorted(
+    (ROOT / "perfbench").glob("*.py")
 )
 
 
@@ -47,15 +51,27 @@ def _resolves(module: str, name: str | None) -> bool:
     return True
 
 
+def _missing(path: pathlib.Path) -> list[str]:
+    return [
+        f"{module}:{name}"
+        for module, name in _gus_imports(path)
+        if not _resolves(module, name)
+    ]
+
+
 def test_tools_exist():
     assert TOOLS, "no tools/*.py found"
 
 
 @pytest.mark.parametrize("path", TOOLS, ids=lambda p: p.name)
 def test_tool_imports_resolve(path):
-    missing = [
-        f"{module}:{name}"
-        for module, name in _gus_imports(path)
-        if not _resolves(module, name)
-    ]
+    missing = _missing(path)
+    assert not missing, f"{path.name} imports missing names: {missing}"
+
+
+@pytest.mark.parametrize(
+    "path", ENTRY_POINTS, ids=lambda p: p.relative_to(ROOT).as_posix()
+)
+def test_entry_point_imports_resolve(path):
+    missing = _missing(path)
     assert not missing, f"{path.name} imports missing names: {missing}"

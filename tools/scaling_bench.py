@@ -45,7 +45,6 @@ QUERIES = [
     "events_hourly_rollup",
     "events_sessionization",
     "dedup_exact_representatives",
-    "dedup_winnow_pairs",
     "dedup_minhash_lsh",
     "dedup_clusters",
     "decontaminate_docs",
