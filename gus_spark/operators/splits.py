@@ -544,7 +544,7 @@ def append_training_shards(
         # or compact) — the cursor-binding token (generation count
         # alone regrows to the same value at a bounded-compaction
         # steady state and would validate a stale cursor)
-        "layout": manifest.get("layout", gen) + 1,
+        "layout": _layout_stamp(manifest) + 1,
         "shard_rows": shard_rows,
         "total_rows": sum(
             n for per in shard_rows.values() for n in per.values()
@@ -682,9 +682,7 @@ def compact_generations(
         new_manifest = {
             **manifest,
             "generations": lo + 1,
-            "layout": manifest.get(
-                "layout", manifest.get("generations", 1)
-            ) + 1,
+            "layout": _layout_stamp(manifest) + 1,
             "shard_rows": shard_rows,
             "total_rows": sum(
                 n for per in shard_rows.values() for n in per.values()
@@ -745,7 +743,7 @@ def compact_generations(
             from pyspark.sql.types import StructField, StructType
 
             dead = spark.createDataFrame(
-                [(t,) for t in sorted(tombs)],
+                [(t,) for t in sorted(tombs.to_pylist())],
                 StructType(
                     [
                         StructField(
@@ -1002,12 +1000,11 @@ def iter_training_order(
     ``pyarrow.fs.S3FileSystem()``/``GcsFileSystem()`` to stream
     shards straight off object storage with no mount — the trainer
     host needs only this reader, never Spark (see SCALING.md
-    §loader)."""
-    import posixpath
-    from urllib.parse import unquote
-
-    import pyarrow as pa
-    import pyarrow.dataset as pa_ds
+    §loader). Every epoch reads each shard's ONE parquet file
+    through the same per-shard reader (`_iter_shard_permuted`), so
+    a fragmented shard directory raises and every file handle is
+    closed per shard, at epoch 0 as at any other."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     if prefetch_batches < 0:
@@ -1042,20 +1039,14 @@ def iter_training_order(
         )
     fs = _loader_fs(filesystem)
     manifest = read_manifest(dest, filesystem)
-    split_col = manifest["split_col"]
     seed = manifest["seed"]
-    generations = manifest.get("generations", 1)
-    # cursors bind to the LAYOUT STAMP: bumped on every append AND
-    # compact (pre-stamp manifests fall back to the generation count,
-    # which was a faithful stamp while appends were the only
-    # structural change)
-    layout = manifest.get("layout", generations)
+    layout = _layout_stamp(manifest)
     # retroactive removals (tombstone_training_shards): a read-side
     # gate over every yielded batch. The CURSOR tracks the position
     # CONSUMED (computed before the gate), so tombstones never move
     # or strand a resume point — a batch emptied by the gate is
     # simply not yielded and its region rides the next cursor.
-    tombstones = _load_tombstones(fs, dest)
+    tomb_keys = _load_tombstones(fs, dest)
     # doc-span masks (r13): when dest/masks.parquet exists, EVERY
     # yielded batch carries a masked_spans column (null for clean
     # rows — a stable schema per run, never per-batch); the trainer
@@ -1065,48 +1056,38 @@ def iter_training_order(
     id_col = manifest["id_col"]
     mask_keys = None
     if span_masks is not None:
-        import pyarrow as _pa
+        import pyarrow as pa
 
-        mask_keys = _pa.array(sorted(span_masks))
+        mask_keys = pa.array(sorted(span_masks))
 
     def gate(batch):
-        if tombstones is not None:
-            import pyarrow as _pa
-
-            keep = [
-                v not in tombstones
-                for v in batch.column(id_col).to_pylist()
-            ]
-            if not all(keep):
-                batch = batch.filter(_pa.array(keep))
-        if span_masks is not None and batch.num_rows:
-            batch = _attach_masks(
-                batch, span_masks, id_col, key_set=mask_keys
-            )
+        # both sidecars test membership the same way: pc.is_in over a
+        # key array loaded once, cast once to the id column's type
+        nonlocal tomb_keys, mask_keys
+        ids = batch.column(id_col)
+        if tomb_keys is not None:
+            if tomb_keys.type != ids.type:
+                tomb_keys = tomb_keys.cast(ids.type)
+            dead = pc.is_in(ids, value_set=tomb_keys)
+            if dead.true_count:
+                batch = batch.filter(pc.invert(dead))
+                ids = batch.column(id_col)
+        if mask_keys is not None and batch.num_rows:
+            if mask_keys.type != ids.type:
+                mask_keys = mask_keys.cast(ids.type)
+            batch = _attach_masks(batch, span_masks, id_col, mask_keys)
         return batch
-    split_dir, visit = _split_visit(fs, dest, split_col, split, seed, epoch)
+
+    split_dir, visit = _split_visit(
+        fs, dest, manifest["split_col"], split, seed, epoch
+    )
     # this rank's round-robin slice of the visit order — disjoint
     # across ranks, union = the split, balanced because shards are
     # hash-range uniform
     mine = visit[rank::world_size]
-    if cursor is None:
-        start_idx, start_pos = 0, None
-    else:
-        if len(cursor) == 3:
-            c_shard, c_pos, c_layout = cursor
-            if c_layout != layout:
-                raise ValueError(
-                    f"cursor was yielded at shard-set layout "
-                    f"{c_layout} but the set is now at layout "
-                    f"{layout} — an append or compaction between "
-                    "checkpoint and resume changes the epoch's "
-                    "shard-visit permutation and rank slices, so "
-                    "resuming would silently skip or re-deliver "
-                    "rows; restart the epoch (a read) or finish it "
-                    "before restructuring"
-                )
-        else:  # legacy (shard, pos) 2-tuple: resume unchecked
-            c_shard, c_pos = cursor
+    start_idx, start_pos = 0, None
+    if cursor is not None:
+        _e, c_shard, start_pos, _l = _parse_cursor(cursor, layout)
         if c_shard not in mine:
             raise ValueError(
                 f"cursor shard {c_shard} is not assigned to rank "
@@ -1114,27 +1095,8 @@ def iter_training_order(
                 "only valid under the (split, epoch, rank, world_size)"
                 " they were yielded from"
             )
-        start_idx, start_pos = mine.index(c_shard), c_pos
-
-    done_shards, partial = frozenset(), {}
-    if consumed is not None:
-        if (
-            int(consumed.get("epoch", -1)) != epoch
-            or int(consumed.get("layout", -1)) != layout
-        ):
-            raise ValueError(
-                f"consumed map was derived at epoch "
-                f"{consumed.get('epoch')} / layout "
-                f"{consumed.get('layout')} but this read is epoch "
-                f"{epoch} / layout {layout} — migration maps are "
-                "only valid for the exact epoch and shard-set "
-                "layout they were computed from"
-            )
-        done_shards = frozenset(int(s) for s in consumed.get("done", ()))
-        partial = {
-            int(s): int(p)
-            for s, p in consumed.get("partial", {}).items()
-        }
+        start_idx = mine.index(c_shard)
+    done_shards, partial = _consumed_frontier(consumed, epoch, layout)
 
     for idx in range(start_idx, len(mine)):
         shard = mine[idx]
@@ -1146,36 +1108,6 @@ def iter_training_order(
             if shard in done_shards:
                 continue  # fully delivered under the old layout
             after_pos = partial.get(shard)
-        if epoch == 0:
-            ds = pa_ds.dataset(
-                posixpath.join(split_dir, f"shard={shard}"),
-                format="parquet",
-                filesystem=fs,
-            )
-            # rows are pos-ordered on disk; a mid-shard resume
-            # filters (idempotent if partially read). Single-threaded
-            # scan: threads may interleave row groups, and the order
-            # IS the contract here.
-            flt = (
-                (pa_ds.field("pos") > after_pos)
-                if after_pos is not None
-                else None
-            )
-            for batch in ds.scanner(
-                filter=flt, batch_size=batch_rows, use_threads=False
-            ).to_batches():
-                if batch.num_rows == 0:
-                    continue
-                last = batch.column("pos")[batch.num_rows - 1].as_py()
-                batch = gate(batch)
-                if batch.num_rows == 0:
-                    continue
-                yield batch, (shard, last, layout)
-            continue
-        # epoch > 0: permuted row-group visit + in-row-group shuffle.
-        # pos is dense 1..n in file order, so row group g covers the
-        # half-open pos range (cum[g], cum[g+1]] — the cursor's row
-        # group is recomputable from footer metadata alone.
         # Close BOTH the ParquetFile and the input stream it wraps
         # per shard (ADVICE r12 #4): a long multi-epoch run
         # (iter_epochs epochs=None) over S3/GCS would otherwise leak
@@ -1185,7 +1117,7 @@ def iter_training_order(
         try:
             yield from _iter_shard_permuted(
                 pf, shard, after_pos, seed, epoch, batch_rows, gate,
-                pa, layout,
+                layout,
             )
         finally:
             pf.close()
@@ -1194,13 +1126,19 @@ def iter_training_order(
 
 
 def _iter_shard_permuted(
-    pf, shard, after_pos, seed, epoch, batch_rows, gate, pa,
-    layout,
+    pf, shard, after_pos, seed, epoch, batch_rows, gate, layout,
 ):
-    """One shard's epoch>0 stream: permuted row-group visit +
-    in-row-group shuffle, resuming strictly after ``after_pos`` when
-    given (see iter_training_order — split out so the caller can
-    close the file handle deterministically per shard)."""
+    """One shard's stream in every epoch: the epoch's row-group visit
+    order and in-row-group order, resuming strictly after
+    ``after_pos`` when given (see iter_training_order — split out so
+    the caller can close the file handle deterministically per
+    shard). At epoch 0 both orders are the identity — the file's own
+    pos order, no permutation drawn and no ``take``. pos is dense
+    1..n in file order, so row group g covers the half-open pos
+    range (cum[g], cum[g+1]] — the cursor's row group is recomputable
+    from footer metadata alone."""
+    import pyarrow as pa
+
     counts = [
         pf.metadata.row_group(g).num_rows
         for g in range(pf.num_row_groups)
@@ -1208,25 +1146,34 @@ def _iter_shard_permuted(
     cum = [0]
     for n in counts:
         cum.append(cum[-1] + n)
-    rg_visit = _epoch_perm(
-        range(pf.num_row_groups),
-        f"{seed}|epoch={epoch}|shard={shard}|rgs",
-    )
+    rg_visit = range(pf.num_row_groups)
+    if epoch:
+        rg_visit = _epoch_perm(
+            rg_visit, f"{seed}|epoch={epoch}|shard={shard}|rgs"
+        )
     start_rg_idx = 0
     if after_pos is not None:
         # locate the cursor row's group in THIS epoch's rg order
         g = next(
-            g for g in range(len(counts)) if cum[g + 1] >= after_pos
+            (g for g in range(len(counts)) if cum[g + 1] >= after_pos),
+            None,
         )
+        if g is None:
+            raise ValueError(
+                f"cursor pos {after_pos} is past the end of shard "
+                f"{shard} ({cum[-1]} rows) — the cursor does not "
+                "belong to this shard set"
+            )
         start_rg_idx = rg_visit.index(g)
     for rg_i in range(start_rg_idx, len(rg_visit)):
         g = rg_visit[rg_i]
         tbl = pf.read_row_group(g)
-        perm = _epoch_perm(
-            range(tbl.num_rows),
-            f"{seed}|epoch={epoch}|shard={shard}|rg={g}",
-        )
-        tbl = tbl.take(pa.array(perm, type=pa.int64()))
+        if epoch:
+            perm = _epoch_perm(
+                range(tbl.num_rows),
+                f"{seed}|epoch={epoch}|shard={shard}|rg={g}",
+            )
+            tbl = tbl.take(pa.array(perm, type=pa.int64()))
         if rg_i == start_rg_idx and after_pos is not None:
             # skip rows up to AND INCLUDING the cursor row, in the
             # recomputed within-group order (exactly-once resume)
@@ -1252,6 +1199,128 @@ def _iter_shard_permuted(
             if batch.num_rows == 0:
                 continue
             yield batch, (shard, last, layout)
+
+
+def _layout_stamp(manifest: dict) -> int:
+    """THE read of a manifest's LAYOUT STAMP, the token every cursor
+    and migration map binds to: bumped on every append AND compact.
+    Pre-stamp manifests fall back to the generation count, which was
+    a faithful stamp while appends were the only structural
+    change."""
+    return manifest.get("layout", manifest.get("generations", 1))
+
+
+def _parse_cursor(cursor, layout=None, epoch_first=False, who="cursor"):
+    """THE tuple-cursor parser: ``(shard, pos[, layout])``, or with
+    ``epoch_first`` ``(epoch, shard, pos[, layout])`` (``None``:
+    either, a 4-tuple leading with its epoch) — into ``(epoch |
+    None, shard, pos, layout | None)``. A cursor without the layout
+    stamp is a legacy cursor and resumes unchecked; a stamped one
+    must match ``layout`` when given: an append or compaction
+    changes the epoch's shard-visit permutation and the rank slices
+    (both enumerate shard dirs), so a stale resume would silently
+    skip or re-deliver rows."""
+    c = tuple(cursor)
+    if epoch_first is None:
+        epoch_first = len(c) == 4
+    epoch, rest = (c[0], c[1:]) if epoch_first else (None, c)
+    if len(rest) not in (2, 3):
+        raise ValueError(
+            f"{who} has {len(c)} fields — expected (shard, pos[, "
+            "layout])" + (" with a leading epoch" if epoch_first else "")
+        )
+    shard, pos, c_layout = (*rest, None)[:3]
+    if layout is not None and c_layout is not None and c_layout != layout:
+        raise ValueError(
+            f"{who} was yielded at shard-set layout {c_layout} but the "
+            f"set is now at layout {layout} — an append or compaction "
+            "between checkpoint and resume changes the epoch's "
+            "shard-visit permutation and rank slices, so resuming "
+            "would silently skip or re-deliver rows; restart the "
+            "epoch (a read) or finish it before restructuring"
+        )
+    return epoch, shard, pos, c_layout
+
+
+def _map_in_epoch(consumed: dict | None, epoch: int) -> dict | None:
+    """A `migrate_cursors` map iff it applies to ``epoch`` — a map
+    is derived at one epoch and drops once the stream rolls past."""
+    if consumed is not None and int(consumed.get("epoch", -1)) == epoch:
+        return consumed
+    return None
+
+
+def _consumed_frontier(consumed: dict | None, epoch: int, layout: int):
+    """THE consumed-map reader: ``(done shard ids, {shard: last
+    delivered pos})`` of a `migrate_cursors` map, which is valid only
+    for the exact (epoch, layout) it was derived at — a mismatch
+    raises. No map reads as nothing delivered."""
+    if consumed is None:
+        return set(), {}
+    if (
+        int(consumed.get("epoch", -1)) != epoch
+        or int(consumed.get("layout", -1)) != layout
+    ):
+        raise ValueError(
+            f"consumed map was derived at epoch "
+            f"{consumed.get('epoch')} / layout "
+            f"{consumed.get('layout')} but this read is epoch "
+            f"{epoch} / layout {layout} — migration maps are "
+            "only valid for the exact epoch and shard-set "
+            "layout they were computed from"
+        )
+    done = {int(s) for s in consumed.get("done", ())}
+    partial = {
+        int(s): int(p) for s, p in consumed.get("partial", {}).items()
+    }
+    return done, partial
+
+
+def _roll_epochs(
+    dest, split, epoch, inner, consumed, *, epochs, what,
+    batch_rows, rank, world_size, filesystem, prefetch_batches,
+):
+    """THE multi-epoch loop behind `iter_epochs` and every
+    `iter_mixture` component: yield ``(batch, (epoch, shard, pos,
+    layout))`` from ``(epoch, inner cursor)`` on, rolling to epoch
+    e+1 (inner cursor reset) once e's slice is exhausted, until
+    ``epochs`` (None = forever). ``consumed`` applies only in the
+    epoch it was derived at. A FRESH epoch (no inner cursor, no map)
+    that yields nothing raises — an empty rank slice or fully
+    tombstoned shards would otherwise spin forever; a resumed or
+    mapped epoch may legitimately be empty (its remainder was
+    already delivered)."""
+    while epochs is None or epoch < epochs:
+        m = _map_in_epoch(consumed, epoch)
+        fresh = inner is None and m is None
+        batch = None
+        it = iter_training_order(
+            dest,
+            split,
+            cursor=inner,
+            batch_rows=batch_rows,
+            epoch=epoch,
+            rank=rank,
+            world_size=world_size,
+            consumed=m,
+            filesystem=filesystem,
+            prefetch_batches=prefetch_batches,
+        )
+        try:
+            for batch, (shard, pos, layout) in it:
+                yield batch, (epoch, shard, pos, layout)
+        finally:
+            it.close()
+        if batch is None and fresh:
+            raise ValueError(
+                f"{what} yields no rows for split={split!r} under "
+                f"rank {rank}/{world_size} epoch {epoch} — an empty "
+                "rank slice (world_size > shard directories) or "
+                "fully tombstoned shards can never feed a training "
+                "loop"
+            )
+        inner = None
+        epoch += 1
 
 
 def iter_epochs(
@@ -1283,7 +1352,8 @@ def iter_epochs(
     epoch's permutation), so a rank sees different shards — and a
     slightly different row count, within shard-size variance — each
     epoch: deliberate, it decorrelates what each worker reads across
-    epochs; only the per-epoch UNION is invariant.
+    epochs; only the per-epoch UNION is invariant. A fresh epoch
+    whose rank slice yields no rows raises instead of spinning.
 
     Cursors are ``(epoch, shard, pos, layout)`` (r13) — the
     single-epoch layout-stamp binding composed through: a resume
@@ -1303,46 +1373,27 @@ def iter_epochs(
     cursor to re-enter with)."""
     if epochs is not None and epochs < 1:
         raise ValueError(f"epochs must be >= 1 or None, got {epochs}")
-    if cursor is None:
-        epoch, inner = 0, None
-    elif len(cursor) == 4:
-        e, shard, pos, layout = cursor
-        epoch, inner = e, (shard, pos, layout)
-    else:  # legacy (epoch, shard, pos): resume unchecked
-        e, shard, pos = cursor
-        epoch, inner = e, (shard, pos)
-    while epochs is None or epoch < epochs:
-        gate = (
-            consumed
-            if consumed is not None
-            and int(consumed.get("epoch", -1)) == epoch
-            else None
-        )
-        for batch, (shard, pos, layout) in iter_training_order(
-            dest,
-            split,
-            cursor=inner,
-            batch_rows=batch_rows,
-            epoch=epoch,
-            rank=rank,
-            world_size=world_size,
-            consumed=gate,
-            filesystem=filesystem,
-            prefetch_batches=prefetch_batches,
-        ):
-            yield batch, (epoch, shard, pos, layout)
-        inner = None
-        epoch += 1
+    epoch, inner = 0, None
+    if cursor is not None:
+        epoch, *_rest = _parse_cursor(cursor, epoch_first=True)
+        inner = tuple(cursor)[1:]
+    yield from _roll_epochs(
+        dest, split, epoch, inner, consumed, epochs=epochs,
+        what=f"shard set {dest!r}", batch_rows=batch_rows, rank=rank,
+        world_size=world_size, filesystem=filesystem,
+        prefetch_batches=prefetch_batches,
+    )
 
 
 _MIXTURE_CURSOR_V = 1
 
 
-def _check_cursor_v(cursor: dict) -> None:
-    """Mixture-cursor schema gate: absent ``v`` reads as version 1
-    (every cursor this code ever wrote); a version from the future
-    refuses loudly instead of silently misreading keys it does not
-    know."""
+def _check_mixture_cursor(cursor: dict, sig: str, why: str) -> None:
+    """THE mixture-cursor check: the schema gate (absent ``v`` reads
+    as version 1, every cursor this code ever wrote; a version from
+    the future refuses loudly instead of silently misreading keys it
+    does not know), then the fingerprint — a cursor whose ``sig`` is
+    not the expected mixture's raises ``why``."""
     v = int(cursor.get("v", 1))
     if v > _MIXTURE_CURSOR_V:
         raise ValueError(
@@ -1351,6 +1402,37 @@ def _check_cursor_v(cursor: dict) -> None:
             "newer release; resuming could silently drop state it "
             "carries (upgrade, or restart the stream)"
         )
+    if cursor.get("sig") != sig:
+        raise ValueError(why)
+
+
+def _mixture_cursor(
+    step, sig, states, tokens=None, served=None, consumed_sig=None
+) -> dict:
+    """THE mixture-cursor constructor (schema v1): ``{"v", "step", "sig",
+    "states": {name: {"epoch", "cursor": [shard, pos, layout] |
+    None}}}`` plus ``tokens`` / ``served`` / ``consumed_sig`` when
+    the stream tracks them — JSON-serializable, one checkpoint for
+    the whole mixture."""
+    out = {
+        "v": _MIXTURE_CURSOR_V,
+        "step": step,
+        "sig": sig,
+        "states": {
+            n: {
+                "epoch": st["epoch"],
+                "cursor": list(st["cursor"]) if st["cursor"] else None,
+            }
+            for n, st in states.items()
+        },
+    }
+    if tokens is not None:
+        out["tokens"] = tokens
+    if served is not None:
+        out["served"] = dict(served)
+    if consumed_sig is not None:
+        out["consumed_sig"] = consumed_sig
+    return out
 
 
 def _mixture_spec(components: dict, schedule: str):
@@ -1580,20 +1662,20 @@ def iter_mixture(
         step, tok = 0, 0
         states = {n: {"epoch": 0, "cursor": None} for n in names}
     else:
-        _check_cursor_v(cursor)
-        if cursor.get("sig") != sig:
-            raise ValueError(
-                "mixture cursor was yielded under a different "
-                "mixture — (seed, split, components, weights, rank, "
-                "world_size, schedule) or a component's shard-set "
-                "identity (rebuilt / restructured / swapped dest) "
-                "changed; resuming would silently alter the "
-                "schedule, the rank slices, or what the per-"
-                "component cursors point into. Cursors are only "
-                "valid under the exact mixture they were yielded "
-                "from — after a component restructure, restart the "
-                "epoch (a read, never a rewrite)."
-            )
+        _check_mixture_cursor(
+            cursor,
+            sig,
+            "mixture cursor was yielded under a different "
+            "mixture — (seed, split, components, weights, rank, "
+            "world_size, schedule) or a component's shard-set "
+            "identity (rebuilt / restructured / swapped dest) "
+            "changed; resuming would silently alter the "
+            "schedule, the rank slices, or what the per-"
+            "component cursors point into. Cursors are only "
+            "valid under the exact mixture they were yielded "
+            "from — after a component restructure, restart the "
+            "epoch (a read, never a rewrite).",
+        )
         if "consumed_sig" in cursor and (
             consumed is None
             or _consumed_sig(consumed) != cursor["consumed_sig"]
@@ -1638,40 +1720,15 @@ def iter_mixture(
     if max_tokens is not None and tok >= max_tokens:
         return
 
-    def _map_for(name):
-        """The rescale map for this component, iff it still applies
-        (same epoch it was derived at)."""
-        if consumed is None:
-            return None
-        m = consumed.get(name)
-        if m is not None and int(m.get("epoch", -1)) == int(
-            states[name]["epoch"]
-        ):
-            return m
-        return None
-
-    def fresh_iter(name):
-        st = states[name]
-        return iter_training_order(
-            dests[name],
-            split,
-            cursor=st["cursor"],
-            batch_rows=batch_rows,
-            epoch=st["epoch"],
-            rank=rank,
-            world_size=world_size,
-            consumed=_map_for(name),
-            filesystem=filesystem,
-            prefetch_batches=prefetch_batches,
+    consumed = consumed or {}
+    bundle_sig = _consumed_sig(consumed) if consumed else None
+    its = {
+        n: _roll_epochs(
+            dests[n], split, states[n]["epoch"], states[n]["cursor"],
+            consumed.get(n), epochs=None, what=f"component {n!r}",
+            batch_rows=batch_rows, rank=rank, world_size=world_size,
+            filesystem=filesystem, prefetch_batches=prefetch_batches,
         )
-
-    its = {n: fresh_iter(n) for n in names}
-    # a mid-epoch resume proves the epoch yields; a fresh epoch must
-    # prove itself before it may roll over (no silent infinite spin).
-    # A rescale map counts as mid-epoch: its epoch may be fully
-    # delivered already, and rolling past it is legitimate.
-    fed = {
-        n: states[n]["cursor"] is not None or _map_for(n) is not None
         for n in names
     }
 
@@ -1694,28 +1751,7 @@ def iter_mixture(
     try:
         while max_steps is None or step < max_steps:
             name = pick(step)
-            while True:
-                try:
-                    batch, inner = next(its[name])
-                    fed[name] = True
-                    break
-                except StopIteration:
-                    if not fed[name]:
-                        raise ValueError(
-                            f"component {name!r} yields no rows for "
-                            f"split={split!r} under rank {rank}/"
-                            f"{world_size} epoch "
-                            f"{states[name]['epoch']} — every "
-                            "scheduled component must produce data "
-                            "(empty rank slice or fully tombstoned "
-                            "shards?)"
-                        ) from None
-                    states[name] = {
-                        "epoch": states[name]["epoch"] + 1,
-                        "cursor": None,
-                    }
-                    fed[name] = False
-                    its[name] = fresh_iter(name)
+            batch, (epoch, shard, pos, layout) = next(its[name])
             done = False
             if track_tokens:
                 if tokens_col not in batch.schema.names:
@@ -1751,45 +1787,32 @@ def iter_mixture(
                     )
                     if k < batch.num_rows:
                         batch = batch.slice(0, k)
-                        inner = (
-                            inner[0],
-                            batch.column("pos")[k - 1].as_py(),
-                            inner[2],
-                        )
+                        pos = batch.column("pos")[k - 1].as_py()
                     done = True
                     tok += int(csum[k - 1])
                 else:
                     tok += int(csum[-1])
             served[name] += 1
             states[name] = {
-                "epoch": states[name]["epoch"],
-                "cursor": inner,
+                "epoch": epoch,
+                "cursor": (shard, pos, layout),
             }
-            snap = {
-                "v": _MIXTURE_CURSOR_V,
-                "step": step,
-                "sig": sig,
-                "states": {
-                    n: {
-                        "epoch": s["epoch"],
-                        "cursor": (
-                            list(s["cursor"]) if s["cursor"] else None
-                        ),
-                    }
-                    for n, s in states.items()
-                },
-            }
-            if track_tokens:
-                snap["tokens"] = tok
-            if schedule == "exact":
-                snap["served"] = dict(served)
-            if consumed is not None and any(
-                _map_for(n) is not None for n in names
-            ):
-                # some component still needs the bundle to resume —
-                # bind it to the checkpoint; once every component
-                # rolls past its mapped epoch, cursors stand alone
-                snap["consumed_sig"] = _consumed_sig(consumed)
+            # a component still inside its mapped epoch needs the
+            # rescale bundle to resume — bind it to the checkpoint;
+            # once every component rolls past, cursors stand alone
+            mapped = any(
+                _map_in_epoch(consumed.get(n), states[n]["epoch"])
+                is not None
+                for n in names
+            )
+            snap = _mixture_cursor(
+                step,
+                sig,
+                states,
+                tokens=tok if track_tokens else None,
+                served=served if schedule == "exact" else None,
+                consumed_sig=bundle_sig if mapped else None,
+            )
             yield name, batch, snap
             if done:
                 return
@@ -1841,14 +1864,14 @@ def rebase_mixture_cursor(
         names, weights, total_w, split, seed, rank,
         world_size, schedule, idents,
     )
-    _check_cursor_v(cursor)
-    if cursor.get("sig") != old_sig:
-        raise ValueError(
-            "cursor does not belong to the mixture described by "
-            "old_components (+ seed/split/rank/world_size/schedule) "
-            "— rebase must start from the exact mixture the cursor "
-            "was yielded under"
-        )
+    _check_mixture_cursor(
+        cursor,
+        old_sig,
+        "cursor does not belong to the mixture described by "
+        "old_components (+ seed/split/rank/world_size/schedule) "
+        "— rebase must start from the exact mixture the cursor "
+        "was yielded under",
+    )
     n_names, n_dests, n_weights, n_total = _mixture_spec(
         new_components, schedule
     )
@@ -1865,27 +1888,16 @@ def rebase_mixture_cursor(
         n_names, n_weights, n_total, split, seed, rank,
         world_size, schedule, idents,  # same sets: idents reuse
     )
-    out = {
-        "v": _MIXTURE_CURSOR_V,
-        "step": -1,  # resume adds 1: the new schedule starts at 0
-        "sig": new_sig,
-        "states": {
-            n: {
-                "epoch": s["epoch"],
-                "cursor": list(s["cursor"]) if s["cursor"] else None,
-            }
-            for n, s in cursor["states"].items()
-        },
-    }
-    if "tokens" in cursor:
-        out["tokens"] = int(cursor["tokens"])
-    if "consumed_sig" in cursor:
+    return _mixture_cursor(
+        -1,  # resume adds 1: the new schedule starts at 0
+        new_sig,
+        cursor["states"],
+        tokens=int(cursor["tokens"]) if "tokens" in cursor else None,
+        served={n: 0 for n in names} if schedule == "exact" else None,
         # positions still depend on the rescale bundle — the retuned
         # stream needs it just as much
-        out["consumed_sig"] = cursor["consumed_sig"]
-    if schedule == "exact":
-        out["served"] = {n: 0 for n in names}
-    return out
+        consumed_sig=cursor.get("consumed_sig"),
+    )
 
 
 def _consumed_sig(bundle: dict) -> str:
@@ -1971,19 +1983,18 @@ def migrate_mixture_cursors(
             "migrate; start the new fleet fresh"
         )
     for r, cur in live:
-        _check_cursor_v(cur)
-        want = _mixture_sig(
-            names, weights, total_w, split, seed, r,
-            world_size_old, schedule, idents,
+        _check_mixture_cursor(
+            cur,
+            _mixture_sig(
+                names, weights, total_w, split, seed, r,
+                world_size_old, schedule, idents,
+            ),
+            f"rank {r} cursor does not belong to this mixture "
+            f"at rank {r}/{world_size_old} — cursors must be "
+            "passed in rank order under the exact (components, "
+            "weights, seed, split, schedule) they were yielded "
+            "from",
         )
-        if cur.get("sig") != want:
-            raise ValueError(
-                f"rank {r} cursor does not belong to this mixture "
-                f"at rank {r}/{world_size_old} — cursors must be "
-                "passed in rank order under the exact (components, "
-                "weights, seed, split, schedule) they were yielded "
-                "from"
-            )
     needs_prior = {
         cur["consumed_sig"] for _r, cur in live if "consumed_sig" in cur
     }
@@ -2019,11 +2030,8 @@ def migrate_mixture_cursors(
         for r, cur in live:
             c = cur["states"][n]["cursor"]
             inners[r] = tuple(c) if c else None
-        prior = None
-        if consumed is not None:
-            prior = consumed.get(n)
-            if prior is not None and int(prior.get("epoch", -1)) != epochs[n]:
-                prior = None  # the component rolled past it
+        # a component that rolled past its prior map drops it
+        prior = _map_in_epoch((consumed or {}).get(n), epochs[n])
         bundle[n] = migrate_cursors(
             dests[n],
             inners,
@@ -2034,28 +2042,22 @@ def migrate_mixture_cursors(
             filesystem=filesystem,
         )
     bundle_sig = _consumed_sig(bundle)
-    new_cursors = []
-    for r in range(world_size_new):
-        sig_r = _mixture_sig(
-            names, weights, total_w, split, seed, r,
-            world_size_new, schedule, idents,
+    # the bundle is part of these cursors' meaning: a resume without
+    # it (or with a different one) raises instead of silently
+    # re-reading the old fleet's delivered prefixes
+    new_cursors = [
+        _mixture_cursor(
+            -1,  # resume adds 1: the schedule restarts
+            _mixture_sig(
+                names, weights, total_w, split, seed, r,
+                world_size_new, schedule, idents,
+            ),
+            {n: {"epoch": epochs[n], "cursor": None} for n in names},
+            served={n: 0 for n in names} if schedule == "exact" else None,
+            consumed_sig=bundle_sig,
         )
-        snap = {
-            "v": _MIXTURE_CURSOR_V,
-            "step": -1,  # resume adds 1: the schedule restarts
-            "sig": sig_r,
-            # the bundle is part of these cursors' meaning: a resume
-            # without it (or with a different one) raises instead of
-            # silently re-reading the old fleet's delivered prefixes
-            "consumed_sig": bundle_sig,
-            "states": {
-                n: {"epoch": epochs[n], "cursor": None}
-                for n in names
-            },
-        }
-        if schedule == "exact":
-            snap["served"] = {n: 0 for n in names}
-        new_cursors.append(snap)
+        for r in range(world_size_new)
+    ]
     return new_cursors, bundle
 
 
@@ -2112,15 +2114,21 @@ def migrate_cursors(
             "consumed nothing)"
         )
     manifest = read_manifest(dest, filesystem)
-    layout = manifest.get("layout", manifest.get("generations", 1))
+    layout = _layout_stamp(manifest)
     norm = []
     for r, cur in enumerate(cursors):
         if cur is None:
             norm.append(None)
             continue
-        cur = tuple(cur)
-        if len(cur) == 4:
-            e, shard, pos, c_layout = cur
+        e, shard, pos, c_layout = _parse_cursor(
+            cur, layout, epoch_first=None, who=f"rank {r} cursor"
+        )
+        if c_layout is None:
+            raise ValueError(
+                f"rank {r} cursor carries no layout stamp — expected "
+                "(shard, pos, layout) or (epoch, shard, pos, layout)"
+            )
+        if e is not None:
             if epoch is None:
                 epoch = int(e)
             elif int(e) != epoch:
@@ -2130,20 +2138,6 @@ def migrate_cursors(
                     "straddles an epoch boundary; finish it or "
                     "restart the epoch read"
                 )
-        elif len(cur) == 3:
-            shard, pos, c_layout = cur
-        else:
-            raise ValueError(
-                f"rank {r} cursor has {len(cur)} fields — expected "
-                "(shard, pos, layout) or (epoch, shard, pos, layout)"
-            )
-        if c_layout != layout:
-            raise ValueError(
-                f"rank {r} cursor was yielded at shard-set layout "
-                f"{c_layout} but the set is now at layout {layout} "
-                "— migrate before restructuring, or restart the "
-                "epoch"
-            )
         norm.append((int(shard), int(pos)))
     if epoch is None:
         raise ValueError(
@@ -2155,25 +2149,10 @@ def migrate_cursors(
     _split_dir, visit = _split_visit(
         fs, dest, manifest["split_col"], split, manifest["seed"], epoch
     )
-    done, partial = set(), {}
-    if consumed is not None:
-        # chained rescale: start from the prior frontier — the old
-        # fleet ran ON TOP of it, so its progress supersedes the
-        # prior map only where it reached
-        if (
-            int(consumed.get("epoch", -1)) != epoch
-            or int(consumed.get("layout", -1)) != layout
-        ):
-            raise ValueError(
-                f"prior consumed map is for epoch "
-                f"{consumed.get('epoch')} / layout "
-                f"{consumed.get('layout')} but this migration is "
-                f"epoch {epoch} / layout {layout}"
-            )
-        done.update(int(s) for s in consumed.get("done", ()))
-        partial.update(
-            {int(s): int(p) for s, p in consumed.get("partial", {}).items()}
-        )
+    # chained rescale: start from the prior frontier — the old fleet
+    # ran ON TOP of it, so its progress supersedes the prior map only
+    # where it reached
+    done, partial = _consumed_frontier(consumed, epoch, layout)
     for r, cur in enumerate(norm):
         if cur is None:
             continue
@@ -2345,8 +2324,9 @@ def tombstone_training_shards(dest: str, ids) -> dict:
 
 
 def _load_tombstones(fs, dest: str):
-    """The tombstone id set (None when none exist) — read through the
-    loader's filesystem abstraction like everything else host-side."""
+    """The tombstone id array (None when none exist) — read through
+    the loader's filesystem abstraction like everything else
+    host-side."""
     import posixpath
 
     import pyarrow.fs as pa_fs
@@ -2356,7 +2336,7 @@ def _load_tombstones(fs, dest: str):
     if fs.get_file_info(path).type == pa_fs.FileType.NotFound:
         return None
     with fs.open_input_file(path) as fh:
-        return set(pq.ParquetFile(fh).read().column("id").to_pylist())
+        return pq.ParquetFile(fh).read().column("id").combine_chunks()
 
 
 class TrainingShardSet:
@@ -2798,7 +2778,7 @@ def _span_type():
     return _SPAN_TYPE
 
 
-def _attach_masks(batch, masks: dict, id_col: str, key_set=None):
+def _attach_masks(batch, masks: dict, id_col: str, key_set):
     """Append the ``masked_spans`` column (list<struct<start,len>>,
     null for unmasked rows) to a loader batch — pure pyarrow, no
     Spark on the trainer host. Vectorized membership first (masks
@@ -2806,36 +2786,26 @@ def _attach_masks(batch, masks: dict, id_col: str, key_set=None):
     clean), per-row construction only for the rows that hit — the
     attach stays sub-microsecond per row either way, noise against
     production token-tensor row widths."""
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     span_t = _span_type()
     ids = batch.column(id_col)
-    if key_set is None:  # small-batch path (no precomputed key set)
-        col = pa.array(
-            [masks.get(i) for i in ids.to_pylist()], type=span_t
-        )
+    # scatter construction: vectorized membership finds the few hit
+    # rows (masks are contamination-bounded); only THEY pay python
+    # conversion, the column assembles via take
+    hit = pc.is_in(ids, value_set=key_set).to_numpy(zero_copy_only=False)
+    k = int(hit.sum())
+    if k == 0:
+        col = pa.nulls(batch.num_rows, type=span_t)
     else:
-        # scatter construction: vectorized membership finds the few
-        # hit rows (masks are contamination-bounded); only THEY pay
-        # python conversion, the column assembles via take
-        import numpy as np
-        import pyarrow.compute as pc
-
-        hit = pc.is_in(ids, value_set=key_set).to_numpy(
-            zero_copy_only=False
-        )
-        k = int(hit.sum())
-        if k == 0:
-            col = pa.nulls(batch.num_rows, type=span_t)
-        else:
-            pos = np.flatnonzero(hit)
-            hit_ids = ids.take(pa.array(pos)).to_pylist()
-            values = pa.array(
-                [masks[i] for i in hit_ids], type=span_t
-            )
-            take_idx = np.zeros(len(hit), dtype="int64")
-            take_idx[pos] = np.arange(k)
-            col = values.take(pa.array(take_idx, mask=~hit))
+        pos = np.flatnonzero(hit)
+        hit_ids = ids.take(pa.array(pos)).to_pylist()
+        values = pa.array([masks[i] for i in hit_ids], type=span_t)
+        take_idx = np.zeros(len(hit), dtype="int64")
+        take_idx[pos] = np.arange(k)
+        col = values.take(pa.array(take_idx, mask=~hit))
     return pa.RecordBatch.from_arrays(
         [*batch.columns, col],
         names=[*batch.schema.names, "masked_spans"],

@@ -867,8 +867,21 @@ class CurationPipelineStream:
         Hidden dirs (``_temporary`` staging, ``_spark_metadata``) are
         pruned: Spark's readers ignore ``_``/``.``-prefixed paths, so
         counting an in-flight task file here would start a downstream
-        stage whose schema read then finds zero visible files."""
+        stage whose schema read then finds zero visible files. A
+        streaming file sink's readers list only what its
+        ``_spark_metadata`` log has committed, and a part file lands
+        before its batch's log entry, so there an "add" entry in the
+        log is the test."""
         if not os.path.isdir(path):
+            return False
+        log = os.path.join(path, "_spark_metadata")
+        if os.path.isdir(log):
+            for name in os.listdir(log):
+                if name.startswith((".", "_")):
+                    continue
+                with open(os.path.join(log, name), encoding="utf-8") as fh:
+                    if '"action":"add"' in fh.read():
+                        return True
             return False
         for _root, dirs, files in os.walk(path):
             dirs[:] = [

@@ -131,3 +131,26 @@ def test_loud_misconfigurations(dest, monkeypatch):
     # epochs= is meaningless for a mixture
     with pytest.raises(ValueError, match="max_steps"):
         next(iter(ShardIterableDataset({"x": (dest, 1.0)}, epochs=1)))
+
+
+def test_empty_rank_slice_raises_instead_of_spinning(dest):
+    """A fleet wider than the shard-dir count (8 here) leaves one
+    stream with no shards; with the default epochs=None it must
+    raise, not loop over empty epochs forever (the alarm turns a
+    spin into a failure instead of a hung suite)."""
+    import signal
+
+    def _spin(_signum, _frame):
+        raise TimeoutError("ShardIterableDataset spun on an empty slice")
+
+    was = signal.signal(signal.SIGALRM, _spin)
+    signal.alarm(20)
+    try:
+        ds = ShardIterableDataset(
+            dest, batch_rows=32, ddp_rank=8, ddp_world_size=9
+        )
+        with pytest.raises(ValueError, match="yields no rows"):
+            next(iter(ds))
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, was)

@@ -539,9 +539,10 @@ class TestEpochRankLoader:
         """filesystem= (r12): every path the host-side reader touches
         goes through the pyarrow FileSystem — proven with a
         SubTreeFileSystem whose paths are NOT valid POSIX paths from
-        the process cwd (any stray os.listdir/open would fail), on
-        both the epoch-0 scanner path and the epoch>0 row-group path,
-        with a cursor resume through the abstraction too."""
+        the process cwd (any stray os.listdir/open would fail), at
+        epoch 0 (identity row-group order) and epoch 2 (permuted)
+        through the one per-shard reader, with a cursor resume
+        through the abstraction too."""
         import pyarrow.fs as pa_fs
 
         from gus_spark.operators.splits import iter_training_order
@@ -573,6 +574,53 @@ class TestEpochRankLoader:
             for p in b.column("pos").to_pylist()
         ]
         assert consumed + resumed == self._order(dest, epoch=2)
+
+    @pytest.mark.parametrize("epoch", [0, 1])
+    def test_fragmented_shard_dir_raises_in_every_epoch(
+        self, spark, tmp_path, epoch
+    ):
+        """A shard directory that gained a second parquet file after
+        the write is not a training order: every epoch refuses it
+        rather than delivering the copied rows twice."""
+        import glob
+        import shutil
+
+        from gus_spark.operators.splits import (
+            iter_training_order,
+            write_training_shards,
+        )
+
+        d = str(tmp_path / "frag")
+        write_training_shards(
+            spark.range(100).select(F.col("id").alias("doc_id")),
+            d, shards=2, weights={"train": 1.0}, verify=False,
+        )
+        (src,) = glob.glob(f"{d}/data/split=train/shard=0/*.parquet")
+        shutil.copy(src, src.replace("part-", "part-copy-"))
+        with pytest.raises(ValueError, match="holds 2 parquet files"):
+            list(iter_training_order(d, "train", epoch=epoch))
+
+    def test_empty_rank_slice_raises_instead_of_spinning(self, dest):
+        """world_size larger than the shard-dir count leaves a rank
+        with no shards: the unbounded multi-epoch loop (epochs=None,
+        the deployment default) raises on the first fresh epoch that
+        yields nothing. The alarm turns a spin into a failure instead
+        of a hung suite."""
+        import signal
+
+        from gus_spark.operators.splits import iter_epochs
+
+        def _spin(_signum, _frame):
+            raise TimeoutError("iter_epochs spun on an empty slice")
+
+        was = signal.signal(signal.SIGALRM, _spin)
+        signal.alarm(20)
+        try:
+            with pytest.raises(ValueError, match="yields no rows"):
+                next(iter_epochs(dest, "train", rank=4, world_size=5))
+        finally:
+            signal.alarm(0)
+            signal.signal(signal.SIGALRM, was)
 
     def test_iter_epochs_composite_cursor(self, dest):
         """iter_epochs (r12): one checkpointable (epoch, shard, pos)
@@ -1188,12 +1236,14 @@ class TestCursorGenerationBinding:
 
 
 class TestLoaderHandleClose:
-    """r13 (ADVICE r12 #4): the epoch>0 read path closes BOTH the
-    ParquetFile and the filesystem input stream it wraps, per shard —
+    """r13 (ADVICE r12 #4): the read path closes BOTH the ParquetFile
+    and the filesystem input stream it wraps, per shard —
     deterministically (not by GC), including when the consumer
     abandons the stream mid-shard. Over S3/GCS a multi-epoch run
     (iter_epochs epochs=None) would otherwise accumulate one open
-    object-store stream per shard per epoch."""
+    object-store stream per shard per epoch. Epoch 0 goes through
+    the same reader, so it takes a wrapped (non-pyarrow) filesystem
+    object and closes its handles too."""
 
     class _RecordingFS:
         def __init__(self, inner):
@@ -1224,32 +1274,36 @@ class TestLoaderHandleClose:
 
         from gus_spark.operators.splits import iter_training_order
 
-        fs = self._RecordingFS(pa_fs.LocalFileSystem())
-        n = sum(
-            b.num_rows
-            for b, _c in iter_training_order(
-                dest, "train", epoch=1, filesystem=fs, batch_rows=64
+        for epoch in (1, 0):
+            fs = self._RecordingFS(pa_fs.LocalFileSystem())
+            n = sum(
+                b.num_rows
+                for b, _c in iter_training_order(
+                    dest, "train", epoch=epoch, filesystem=fs,
+                    batch_rows=64,
+                )
             )
-        )
-        assert n == 500
-        shard_handles = [
-            h for p, h in fs.handles if "shard=" in p
-        ]
-        assert len(shard_handles) == 4  # one per shard, not more
-        assert all(h.closed for _p, h in fs.handles)
+            assert n == 500
+            shard_handles = [
+                h for p, h in fs.handles if "shard=" in p
+            ]
+            assert len(shard_handles) == 4  # one per shard, not more
+            assert all(h.closed for _p, h in fs.handles)
 
     def test_abandoned_stream_closes_handle(self, dest):
         import pyarrow.fs as pa_fs
 
         from gus_spark.operators.splits import iter_training_order
 
-        fs = self._RecordingFS(pa_fs.LocalFileSystem())
-        it = iter_training_order(
-            dest, "train", epoch=1, filesystem=fs, batch_rows=16
-        )
-        next(it)  # mid-shard
-        it.close()  # GeneratorExit → finally must run
-        assert all(h.closed for _p, h in fs.handles)
+        for epoch in (1, 0):
+            fs = self._RecordingFS(pa_fs.LocalFileSystem())
+            it = iter_training_order(
+                dest, "train", epoch=epoch, filesystem=fs,
+                batch_rows=16,
+            )
+            next(it)  # mid-shard
+            it.close()  # GeneratorExit → finally must run
+            assert all(h.closed for _p, h in fs.handles)
 
 
 class TestCompactGenerations:
