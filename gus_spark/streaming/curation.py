@@ -7,9 +7,11 @@ batch and stream cannot drift — and they are stateless, so they fuse
 into each micro-batch's scan exactly as in the batch plan. The one
 stateful stage is exact dedup, which in a stream means "have I ever
 seen this content fingerprint": that state is a persisted fp table (the
-MinHashIndex pattern), maintained in ``foreachBatch`` — each batch
-dedups within itself (min doc_id per fp), anti-joins the fp table, and
-appends the survivors + their fps.
+MinHashIndex pattern), maintained in ``foreachBatch`` by the
+first-arrival key gate shared with url_dedup_stream
+(`markers.keep_first_arrivals`) — each batch dedups within itself
+(min doc_id per fp), anti-joins the fp table, and appends the
+survivors + their fps.
 
 Semantics: first-arrival-wins across batches (within a batch: lowest
 doc_id). When documents arrive in doc_id order this equals the batch
@@ -40,7 +42,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -108,68 +110,23 @@ def curate_stream(
     os.makedirs(state_dir, exist_ok=True)
     fp_path = os.path.join(state_dir, "fps")
     _check_state_layout(state_dir, fp_path)
-    out_cols = _OUT_COLS + (["text"] if include_text else [])
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, "doc_id")
-        if markers.check_marker(
-            state_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        spark = batch_df.sparkSession
-        gated = profile_and_gate(batch_df)
-        w = Window.partitionBy("content_fp").orderBy("doc_id")
-        batch_kept = (
-            gated.withColumn("copy_rank", F.row_number().over(w))
-            .filter(F.col("copy_rank") == 1)
-            .select(
-                "doc_id", "lang", "source", "n_tokens", "chars_per_word",
-                "en_marker_hits", "content_fp",
+        rows = (
+            profile_and_gate(batch_df)
+            .withColumn(
+                "split",
                 F.when(F.col("doc_id") % 20 == VAL_RESIDUE, "val")
-                .otherwise("train")
-                .alias("split"),
-                *(["text"] if include_text else []),
+                .otherwise("train"),
             )
+            .select(*_OUT_COLS, *(["text"] if include_text else []))
         )
-        if os.path.isdir(fp_path):
-            # exclude THIS batch's own partition: a replay that crashed
-            # after the fp write would otherwise anti-join the batch
-            # against its own fingerprints and overwrite the rows away
-            # (the MinHashIndex `exclude_key` rule)
-            seen = (
-                spark.read.parquet(fp_path)
-                .filter(F.col("batch") != batch_id)
-                .select("content_fp")
-            )
-            batch_kept = batch_kept.join(seen, "content_fp", "left_anti")
-        # two actions consume this frame (rows + fps); materialize once.
-        # Both land in batch-keyed partition dirs with OVERWRITE
-        # semantics: a crash anywhere between the first write and the
-        # marker replays idempotently (a plain append would duplicate
-        # rows AND fps — the keyed-overwrite-delta pattern from
-        # streaming.vectors). Readers see a `batch` partition column.
-        # File budget: the dedup window re-partitioned the batch to
-        # the shuffle constant — bound the publish (and the fp delta)
-        # back to the batch's own input width (markers.batch_width).
-        batch_kept = batch_kept.coalesce(markers.batch_width(batch_df)).cache()
-        # publish-if-changed: a replay must not emit fresh part files
-        # for identical content — downstream file sources would
-        # re-consume them as new data (see markers.publish_batch)
-        markers.publish_batch(
-            batch_kept.select(*out_cols),
-            os.path.join(out_path, f"batch={batch_id}"),
+        markers.keep_first_arrivals(
+            batch_df, rows, "content_fp", "doc_id", fp_path, out_path,
+            batch_id,
         )
-        batch_kept.select("content_fp").write.mode("overwrite").parquet(
-            os.path.join(fp_path, f"batch={batch_id}")
-        )
-        batch_kept.unpersist()
-        markers.write_marker(state_dir, batch_id, fp)
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    return markers.start_marked(
+        docs_stream, state_dir, "doc_id", checkpoint_path, _process,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -73,6 +73,34 @@ def _fingerprint(grams: DataFrame) -> dict:
     }
 
 
+def _bench_state_gate(
+    state_dir: str, meta_file: str, meta: dict, write_state, what: str,
+    knob: str,
+) -> None:
+    """The static-bench state gate both decontamination streams run at
+    (re)start: a ``meta_file`` already in ``state_dir`` must equal the
+    fingerprint of the CURRENT benchmark (else raise — a silent
+    mismatch would pass contaminated documents as clean); a fresh dir
+    gets ``write_state()`` first and the meta after, so a crash in
+    between rebuilds instead of trusting half-written state."""
+    meta_path = os.path.join(state_dir, meta_file)
+    if os.path.exists(meta_path):
+        with open(meta_path, encoding="utf-8") as fh:
+            stored = json.load(fh)
+        if stored != meta:
+            raise ValueError(
+                f"state_dir {state_dir!r} holds {what} for "
+                f"{stored}, but the current stream was configured with "
+                f"{meta} — a silent mismatch would pass contaminated "
+                "documents as clean. Use a fresh state_dir (or the "
+                f"original {knob}/benchmark)."
+            )
+        return
+    write_state()
+    with open(meta_path, "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+
+
 def decontaminate_stream(
     docs_stream: DataFrame,
     bench: DataFrame,
@@ -105,38 +133,18 @@ def decontaminate_stream(
         raise ValueError(f"min_hits must be >= 1, got {min_hits}")
     os.makedirs(state_dir, exist_ok=True)
     grams_path = os.path.join(state_dir, "bench_grams")
-    meta_path = os.path.join(state_dir, "meta.json")
     # localCheckpoint: the fingerprint agg AND the (first-start)
     # parquet write both consume this frame — one explode, not two
     current = _bench_grams(
         bench, bench_id_col, bench_text_col, n
     ).localCheckpoint()
-    meta = {"n": n, **_fingerprint(current)}
-    if os.path.exists(meta_path):
-        with open(meta_path, encoding="utf-8") as fh:
-            stored = json.load(fh)
-        if stored != meta:
-            raise ValueError(
-                f"state_dir {state_dir!r} holds bench grams for "
-                f"{stored}, but the current stream was configured with "
-                f"{meta} — a silent mismatch would pass contaminated "
-                "documents as clean. Use a fresh state_dir (or the "
-                "original n/benchmark)."
-            )
-    else:
-        current.write.mode("overwrite").parquet(grams_path)
-        with open(meta_path, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
+    _bench_state_gate(
+        state_dir, "meta.json", {"n": n, **_fingerprint(current)},
+        lambda: current.write.mode("overwrite").parquet(grams_path),
+        "bench grams", "n",
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # fingerprinted marker (streaming.markers): skip only a replay
-        # of THIS content; a stale-lineage marker raises instead of
-        # silently dropping data delivered after a checkpoint loss
-        fp = markers.batch_fingerprint(batch_df, "doc_id")
-        if markers.check_marker(
-            state_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
         if pre is not None:
             batch_df = pre(batch_df, batch_id)
         spark = batch_df.sparkSession
@@ -162,16 +170,12 @@ def decontaminate_stream(
             clean.coalesce(markers.batch_width(batch_df)),
             os.path.join(out_path, f"batch={batch_id}"),
         )
-        markers.write_marker(state_dir, batch_id, fp)
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    # the replay fingerprint is taken on the RAW batch, before ``pre``
+    return markers.start_marked(
+        docs_stream, state_dir, "doc_id", checkpoint_path, _process,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def fuzzy_decontaminate_stream(
@@ -215,7 +219,6 @@ def fuzzy_decontaminate_stream(
     os.makedirs(state_dir, exist_ok=True)
     bands_path = os.path.join(state_dir, "bench_bands")
     sets_path = os.path.join(state_dir, "bench_sets")
-    meta_path = os.path.join(state_dir, "fuzzy_meta.json")
     bench_nn = bench.filter(F.col(bench_text_col).isNotNull())
     cur_bands = _bands_of(
         bench_nn, bench_id_col, bench_text_col, ngram
@@ -238,29 +241,17 @@ def fuzzy_decontaminate_stream(
         "fp_bands": int(fp_row["fp"] or 0),
         "fp_sets": int(sets_row["fp"] or 0),
     }
-    if os.path.exists(meta_path):
-        with open(meta_path, encoding="utf-8") as fh:
-            stored = json.load(fh)
-        if stored != meta:
-            raise ValueError(
-                f"state_dir {state_dir!r} holds fuzzy bench state for "
-                f"{stored}, but the current stream was configured with "
-                f"{meta} — a silent mismatch would pass contaminated "
-                "documents as clean. Use a fresh state_dir (or the "
-                "original ngram/benchmark)."
-            )
-    else:
+
+    def _write_state() -> None:
         cur_bands.write.mode("overwrite").parquet(bands_path)
         cur_sets.write.mode("overwrite").parquet(sets_path)
-        with open(meta_path, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
+
+    _bench_state_gate(
+        state_dir, "fuzzy_meta.json", meta, _write_state,
+        "fuzzy bench state", "ngram",
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, "doc_id")
-        if markers.check_marker(
-            state_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
         spark = batch_df.sparkSession
         bench_bands = spark.read.parquet(bands_path)
         bench_sets = spark.read.parquet(sets_path)
@@ -292,13 +283,8 @@ def fuzzy_decontaminate_stream(
             clean.coalesce(markers.batch_width(batch_df)),
             os.path.join(out_path, f"batch={batch_id}"),
         )
-        markers.write_marker(state_dir, batch_id, fp)
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    return markers.start_marked(
+        docs_stream, state_dir, "doc_id", checkpoint_path, _process,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

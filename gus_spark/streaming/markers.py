@@ -17,17 +17,19 @@ matches it:
   completed batch (same lineage, or a fresh checkpoint over an
   unchanged source with identical batching): skip, exactly as before;
 - marker exists, fingerprint differs → the marker belongs to a
-  DIFFERENT lineage (checkpoint wiped/moved while the source grew).
-  Every stage in this repo runs ``strict=True`` and raises with
-  recovery guidance: batch-keyed outputs (curation/decontamination
-  partitions, MinHash/vector index deltas keyed by batch id) cannot
-  safely interleave two batchings — the same rows would land under
-  different keys than the stale state holds, duplicating across keys.
-  ``strict=False`` (reprocess on mismatch) exists for a future stage
-  whose write path is genuinely content-keyed rather than
-  batch-keyed;
+  DIFFERENT lineage (checkpoint wiped/moved while the source grew):
+  raise with recovery guidance. Batch-keyed outputs
+  (curation/decontamination partitions, MinHash/vector index deltas
+  keyed by batch id) cannot safely interleave two batchings — the same
+  rows would land under different keys than the stale state holds,
+  duplicating across keys;
 - legacy pre-fingerprint markers (body ``"done"``) are treated as a
   mismatch.
+
+Every marker-gated stream starts through `start_marked`, which owns
+that protocol (fingerprint the RAW batch → check → body → marker) and,
+through `start_query` (the pipeline's packer starts there too), the
+trigger choice; the stream bodies hold only their own work.
 """
 
 from __future__ import annotations
@@ -35,11 +37,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-SKIP = "skip"
-PROCESS = "process"
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def batch_fingerprint(batch_df: DataFrame, id_col: str) -> dict:
@@ -69,32 +69,130 @@ def batch_width(batch_df: DataFrame) -> int:
     return max(1, batch_df.rdd.getNumPartitions())
 
 
-def check_marker(
-    state_dir: str, batch_id: int, fp: dict, *, strict: bool
-) -> str:
-    """Return SKIP when this exact batch already completed, PROCESS
-    when it must (re)run. Raises ValueError on a strict lineage
-    divergence (marker present for different content)."""
+def check_marker(state_dir: str, batch_id: int, fp: dict) -> bool:
+    """True when this exact batch already completed, False when it
+    must (re)run. Raises ValueError on a lineage divergence (marker
+    present for different content)."""
     marker = _path(state_dir, batch_id)
     if not os.path.exists(marker):
-        return PROCESS
+        return False
     try:
         with open(marker, encoding="utf-8") as fh:
             stored = json.load(fh)
     except (json.JSONDecodeError, UnicodeDecodeError):
         stored = None  # legacy "done" body (pre-fingerprint layout)
     if stored == fp:
-        return SKIP
-    if strict:
-        raise ValueError(
-            f"done-marker for batch {batch_id} in {state_dir!r} was "
-            f"written for different input ({stored} != {fp}): the "
-            "stream's checkpoint and this state dir belong to "
-            "different lineages (was the checkpoint wiped while the "
-            "source grew?). Restore the original checkpoint, or "
-            "rebuild state dir + output + checkpoint together."
+        return True
+    raise ValueError(
+        f"done-marker for batch {batch_id} in {state_dir!r} was "
+        f"written for different input ({stored} != {fp}): the "
+        "stream's checkpoint and this state dir belong to "
+        "different lineages (was the checkpoint wiped while the "
+        "source grew?). Restore the original checkpoint, or "
+        "rebuild state dir + output + checkpoint together."
+    )
+
+
+def start_query(
+    writer: DataStreamWriter,
+    checkpoint_path: str,
+    processing_time: str | None,
+) -> StreamingQuery:
+    """Checkpoint + trigger + start for every pipeline stage and
+    marker-gated stream: ``processing_time=None`` drains what is
+    available (availableNow), anything else runs a live
+    processing-time cadence until stopped."""
+    writer = writer.option("checkpointLocation", checkpoint_path)
+    if processing_time is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def start_marked(
+    stream: DataFrame,
+    marker_dir: str,
+    id_col: str,
+    checkpoint_path: str,
+    body,
+    processing_time: str | None = None,
+    skip_empty: bool = False,
+) -> StreamingQuery:
+    """Start ``stream`` through ``foreachBatch`` under the replay
+    protocol: fingerprint the raw batch on ``id_col``, return on a
+    completed same-content replay (raise on a stale-lineage marker),
+    run ``body(batch_df, batch_id)``, then write the marker under
+    ``marker_dir``. ``skip_empty`` skips the body for a zero-row batch
+    — the fingerprint's own count decides, so the check costs no
+    extra action — and still writes its marker."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        fp = batch_fingerprint(batch_df, id_col)
+        if check_marker(marker_dir, batch_id, fp):
+            return
+        if not (skip_empty and fp["n"] == 0):
+            body(batch_df, batch_id)
+        write_marker(marker_dir, batch_id, fp)
+
+    return start_query(
+        stream.writeStream.foreachBatch(_process),
+        checkpoint_path,
+        processing_time,
+    )
+
+
+def keep_first_arrivals(
+    batch_df: DataFrame,
+    rows: DataFrame,
+    key: str,
+    order_col: str,
+    seen_path: str,
+    out_path: str,
+    batch_id: int,
+) -> None:
+    """The first-arrival key gate (curate_stream's content fp,
+    url_dedup_stream's canonical URL) over ``rows``, the batch already
+    projected to the published columns: keep the lowest ``order_col``
+    row per ``key`` within the batch, anti-join the keys every OTHER
+    batch kept (``seen_path``), publish the survivors to
+    ``out_path/batch=<id>`` and overwrite this batch's key delta
+    ``seen_path/batch=<id>``.
+
+    The anti-join excludes this batch's own partition: a replay that
+    crashed after the key write would otherwise anti-join the batch
+    against its own keys and overwrite the rows away (the MinHashIndex
+    ``exclude_key`` rule). Both writes land in batch-keyed partition
+    dirs with overwrite semantics, so a crash anywhere before the
+    marker replays idempotently. The two actions consume one cached
+    frame, coalesced back to the batch's input width (`batch_width`:
+    the dedup window re-partitioned it to the shuffle constant)."""
+    w = Window.partitionBy(key).orderBy(order_col)
+    kept = (
+        rows.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .drop("_rk")
+    )
+    if os.path.isdir(seen_path):
+        seen = (
+            batch_df.sparkSession.read.parquet(seen_path)
+            .filter(F.col("batch") != batch_id)
+            .select(key)
         )
-    return PROCESS
+        kept = kept.join(seen, key, "left_anti")
+    kept = kept.coalesce(batch_width(batch_df)).cache()
+    # publish-if-changed: a replay must not emit fresh part files for
+    # identical content — downstream file sources would re-consume
+    # them as new data. The select restores ``rows``' column order
+    # (a USING anti-join moves the key first).
+    publish_batch(
+        kept.select(*rows.columns),
+        os.path.join(out_path, f"batch={batch_id}"),
+    )
+    kept.select(key).write.mode("overwrite").parquet(
+        os.path.join(seen_path, f"batch={batch_id}")
+    )
+    kept.unpersist()
 
 
 def publish_batch(df: DataFrame, out_part: str) -> None:

@@ -21,11 +21,11 @@ duplicates; no marker/append atomicity window exists. The
 batches — CONTENT-FINGERPRINTED (streaming.markers, round 7): a skip
 applies only to a replay of the same batch content, and a
 stale-lineage marker (checkpoint lost while the source grew) raises
-instead of silently skipping unprocessed data. Strict mode is
-required here even though add_and_find is replay-idempotent per
-batch_key: under a divergent lineage the same documents would land
-under DIFFERENT batch keys than the stale index deltas hold, so
-"just reprocess" would duplicate index rows across keys.
+instead of silently skipping unprocessed data. Raising is required
+here even though add_and_find is replay-idempotent per batch_key:
+under a divergent lineage the same documents would land under
+DIFFERENT batch keys than the stale index deltas hold, so "just
+reprocess" would duplicate index rows across keys.
 """
 
 from __future__ import annotations
@@ -51,27 +51,16 @@ def neardup_stream(
     callers ``processAllAvailable()``/``awaitTermination()`` it."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, index.id_col)
-        if markers.check_marker(
-            index.path, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        if fp["n"] == 0:
-            markers.write_marker(index.path, batch_id, fp)
-            return
         pairs = index.add_and_find(batch_df, batch_key=f"batch-{batch_id}")
         # batch=<id> partition dir + overwrite = idempotent on replay;
         # a vanilla spark.read.parquet(pairs_path) still discovers it
         pairs.write.mode("overwrite").parquet(
             os.path.join(pairs_path, f"batch={batch_id}")
         )
-        markers.write_marker(index.path, batch_id, fp)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return markers.start_marked(
+        docs_stream, index.path, index.id_col, checkpoint_path, _process,
+        skip_empty=True,
     )
 
 
@@ -96,24 +85,8 @@ def minhash_tombstone_stream(
     index."""
     marker_dir = os.path.join(index.path, "_tomb_markers")
     os.makedirs(marker_dir, exist_ok=True)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, index.id_col)
-        if markers.check_marker(
-            marker_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        if fp["n"] == 0:
-            markers.write_marker(marker_dir, batch_id, fp)
-            return
-        index.delete(batch_df, batch_key=f"tombbatch-{batch_id}")
-        markers.write_marker(marker_dir, batch_id, fp)
-
-    writer = ids_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    return markers.start_marked(
+        ids_stream, marker_dir, index.id_col, checkpoint_path,
+        lambda df, i: index.delete(df, batch_key=f"tombbatch-{i}"),
+        processing_time, skip_empty=True,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

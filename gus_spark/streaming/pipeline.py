@@ -47,15 +47,20 @@ new data as "done". Asserted end-to-end in tests/test_streaming.py
 to the batch composition; checkpoint-loss raises; re-aligned
 batching recovers).
 
-Stages run to completion IN ORDER per `run()` call (availableNow
-triggers): a file-source stage only sees files committed before it
-starts, so sequential execution makes each run's output deterministic
-for a quiesced source. On a live source, either call `run()`
-repeatedly (each pass drains what the previous stages committed), or
-use `run_live()`: all three stages run CONCURRENTLY on processing-
-time triggers — stage 2 consumes curated batches while stage 1 is
-still producing — with per-stage progress metrics (batches, input
-rows, trigger latency) sampled from the streaming queries each poll.
+Every stage is defined ONCE, as a row of one stage table
+(`CurationPipelineStream._stages`: urldedup, curate, decon, fuzzy,
+pack, index — each with its enable flag, the upstream tier it waits
+on, one ``start(processing_time)`` and an optional after-drain hook),
+and both modes read that table. Stages run to completion IN ORDER per
+`run()` call (availableNow triggers): a file-source stage only sees
+files committed before it starts, so sequential execution makes each
+run's output deterministic for a quiesced source. On a live source,
+either call `run()` repeatedly (each pass drains what the previous
+stages committed), or use `run_live()`: every enabled stage (up to
+six) runs CONCURRENTLY on processing-time triggers — decontamination
+consumes curated batches while curation is still producing — with
+per-stage progress metrics (batches, input rows, trigger latency)
+sampled from the streaming queries each poll.
 `run_live` stops itself after the whole graph has been idle for
 `idle_polls` consecutive polls (graceful, upstream-first), so a test
 or an operator script gets a drained, deterministic stop; a real
@@ -91,13 +96,16 @@ from __future__ import annotations
 import os
 import sys
 import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from gus_spark.operators.chunk import chunk_documents
-from gus_spark.streaming.curation import _OUT_COLS, curate_stream
+from gus_spark.streaming import markers
+from gus_spark.streaming.curation import curate_stream
 from gus_spark.streaming.decontaminate import (
     decontaminate_stream,
     fuzzy_decontaminate_stream,
@@ -105,8 +113,23 @@ from gus_spark.streaming.decontaminate import (
 from gus_spark.streaming.packing import pack_stream
 
 
+class _Stage(NamedTuple):
+    """One row of `CurationPipelineStream._stages`."""
+
+    name: str
+    enabled: bool
+    #: the tier that must hold committed data before the stage can
+    #: start (None: the declared source, always ready)
+    upstream: str | None
+    #: ``start(processing_time)`` → the started query; None drains
+    start: Callable[[str | None], StreamingQuery]
+    #: run once the stage's query has stopped (index maintenance)
+    after: Callable[[], None] | None = None
+
+
 class CurationPipelineStream:
-    """Wire the three streaming stages over a shared ``work_dir``.
+    """Wire the streaming stages (up to six, see `_stages`) over a
+    shared ``work_dir``.
 
     Layout (all under work_dir):
       url_clean/ optional stage-0 output (URL-tier dedup survivors,
@@ -389,84 +412,6 @@ class CurationPipelineStream:
             )
         return summary
 
-    def run_urldedup(self) -> None:
-        """Stage 0 (optional): URL-tier first-arrival-wins dedup over
-        the raw source — survivors land in url_clean for curation to
-        consume. No-op when url_col is unset."""
-        if self.url_col is None:
-            return
-        from gus_spark.streaming.urldedup import url_dedup_stream
-
-        stream = self._reader(self.src_path, self.src_schema)
-        url_dedup_stream(
-            stream,
-            os.path.join(self.work, "state0"),
-            self.url_clean,
-            os.path.join(self.work, "ckpt0"),
-            url_col=self.url_col,
-            drop_query=self.url_drop_query,
-        ).awaitTermination()
-
-    def _curate_source(self):
-        """Stage 1's source stream: the raw source, or (with the URL
-        tier on) the url_clean hand-off minus its plumbing columns.
-        None when the upstream tier hasn't committed anything yet (a
-        parquet file source needs files before its schema exists)."""
-        if self.url_col is None:
-            return self._reader(self.src_path, self.src_schema)
-        if not os.path.isdir(self.url_clean):
-            return None
-        schema = self.spark.read.parquet(self.url_clean).schema
-        return self._reader(self.url_clean, schema).drop(
-            "batch", "canonical_url"
-        )
-
-    def run_curate(self) -> None:
-        """Stage 1: gates + exact dedup, text carried for downstream.
-        No-op until stage 0 committed anything (URL tier on only)."""
-        stream = self._curate_source()
-        if stream is None:
-            return
-        curate_stream(
-            stream,
-            os.path.join(self.work, "state1"),
-            self.curated,
-            os.path.join(self.work, "ckpt1"),
-            include_text=True,
-        ).awaitTermination()
-
-    def _curated_schema(self) -> StructType:
-        # the stage-1 contract columns + text + the batch partition key
-        df = self.spark.read.parquet(self.curated)
-        return df.select(*_OUT_COLS, "text", "batch").schema
-
-    def run_decontaminate(self) -> None:
-        """Stage 2: 13-gram eval-overlap anti-join over the curated
-        stream. No-op (vacuously complete) until stage 1 committed
-        anything. With the cap gate enabled, each trigger's observed
-        (rows, unfitted, dropped) land in ``self.cap_stats`` — the
-        drain-mode refit signal (``cap_summary()`` for the fold)."""
-        if not os.path.isdir(self.curated):
-            return
-        stream = self._reader(self.curated, self._curated_schema())
-        # the cap gate rides the PER-TRIGGER pre hook (r13): each
-        # micro-batch applies the current artifact and records exact
-        # (rows, unfitted, dropped) into cap_stats directly — no
-        # observe-metrics harvesting, so neither foreachBatch action
-        # multiplicity nor Spark's ~100-update recentProgress
-        # retention (ADVICE r12 #5) can skew the refit signal, at any
-        # drain length
-        decontaminate_stream(
-            stream.drop("batch"),
-            self.bench,
-            os.path.join(self.work, "state2"),
-            self.clean,
-            os.path.join(self.work, "ckpt2"),
-            n=self.ngram,
-            min_hits=self.min_hits,
-            pre=self._cap_gate_batch,
-        ).awaitTermination()
-
     def cap_summary(self) -> dict:
         """Cumulative cap-gate stats over everything this pipeline
         object has drained so far — run() and run_live() both feed
@@ -479,88 +424,147 @@ class CurationPipelineStream:
         ``cap_refit_warn_frac`` is set and exceeded."""
         return self._cap_summary(self.cap_stats)
 
-    def run_fuzzy(self) -> None:
-        """Stage 2b (optional): MinHash near-dup gate against the
-        benchmark, over the exact-decontaminated stream. No-op until
-        stage 2 committed anything, or when fuzzy_ngram is None."""
-        if self.fuzzy_ngram is None or not os.path.isdir(self.clean):
-            return
-        schema = self.spark.read.parquet(self.clean).schema
-        stream = self._reader(self.clean, schema).drop("batch")
-        fuzzy_decontaminate_stream(
-            stream,
-            self.bench,
-            os.path.join(self.work, "state2b"),
-            self.fuzzy_clean,
-            os.path.join(self.work, "ckpt2b"),
-            threshold=self.fuzzy_threshold,
-            ngram=self.fuzzy_ngram,
-        ).awaitTermination()
+    # ---- the stage table ---------------------------------------------
 
-    def run_pack(self) -> None:
-        """Stage 3: sliding-window chunking (stateless, fuses into the
-        micro-batch scan) → stateful next-fit packing → exactly-once
-        parquet sink."""
-        if not os.path.isdir(self.pack_src):
-            return
-        # include the batch partition key in the declared schema and
-        # drop it ON THE STREAM (the run_decontaminate form): omitting
-        # a partition column from a user schema doesn't exclude it —
-        # Spark re-appends it to the reader output
-        schema = self.spark.read.parquet(self.pack_src).schema
-        stream = self._reader(self.pack_src, schema).drop("batch")
-        chunks = chunk_documents(
-            stream,
-            max_tokens=self.chunk_tokens,
-            overlap=self.chunk_overlap,
-        )
-        packed = pack_stream(
-            chunks, budget=self.seq_budget, shards=self.pack_shards
-        )
-        (
-            packed.writeStream.format("parquet")
-            .option("path", self.packed)
-            .option(
-                "checkpointLocation", os.path.join(self.work, "ckpt3")
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    def _tier(self, path: str) -> DataFrame:
+        """Streaming read of a committed upstream tier. The schema is
+        read from the tier and includes its ``batch`` partition key,
+        which is dropped ON THE STREAM: omitting a partition column
+        from a user schema doesn't exclude it — Spark re-appends it to
+        the reader output."""
+        schema = self.spark.read.parquet(path).schema
+        return self._reader(path, schema).drop("batch")
 
-    def run_index(self) -> None:
-        """Stage 4b (optional): drain the final decontaminated tier
-        into the live BM25 posting index (O(batch) per micro-batch via
-        delta appends), then fold deltas past the threshold. Runs as a
-        SIBLING of packing over the same pack_src tier. No-op when
-        index_root is unset or upstream committed nothing."""
-        if self.index_root is None or not os.path.isdir(self.pack_src):
-            return
+    def _stages(self) -> list[_Stage]:
+        """Every stage once, in pipeline (= graceful-stop) order. Both
+        modes read this table: `run()` starts each enabled, ready stage
+        with ``processing_time=None`` and awaits it; `run_live()` starts
+        them lazily with its cadence. A stage is ready once its
+        upstream tier holds committed data (`_has_parquet`; None = the
+        declared source) — a parquet file source needs files before its
+        schema exists."""
         from gus_spark.streaming.postings import posting_index_stream
+        from gus_spark.streaming.urldedup import url_dedup_stream
 
-        idx = self._ensure_index()
-        schema = self.spark.read.parquet(self.pack_src).schema
-        stream = (
-            self._reader(self.pack_src, schema)
-            .drop("batch")
-            .select("doc_id", "text")
-        )
-        posting_index_stream(
-            stream, idx, os.path.join(self.work, "ckpt4")
-        ).awaitTermination()
-        # single-writer: compaction only between drains, never mid-add
-        idx.maintain(self.index_max_deltas)
+        def under(name: str) -> str:
+            return os.path.join(self.work, name)
 
-    def run(self) -> None:
-        """Drain the whole pipeline once: each stage runs to completion
-        (availableNow) before the next reads its committed files."""
-        self.run_urldedup()
-        self.run_curate()
-        self.run_decontaminate()
-        self.run_fuzzy()
-        self.run_pack()
-        self.run_index()
+        def urldedup(pt):
+            return url_dedup_stream(
+                self._reader(self.src_path, self.src_schema),
+                under("state0"),
+                self.url_clean,
+                under("ckpt0"),
+                url_col=self.url_col,
+                processing_time=pt,
+                drop_query=self.url_drop_query,
+            )
+
+        def curate(pt):
+            if self.url_col is None:
+                stream = self._reader(self.src_path, self.src_schema)
+            else:
+                stream = self._tier(self.url_clean).drop("canonical_url")
+            return curate_stream(
+                stream,
+                under("state1"),
+                self.curated,
+                under("ckpt1"),
+                include_text=True,
+                processing_time=pt,
+            )
+
+        def decon(pt):
+            # the cap gate rides the PER-TRIGGER pre hook (r13): each
+            # micro-batch applies the current artifact and records
+            # exact (rows, unfitted, dropped) into cap_stats directly
+            return decontaminate_stream(
+                self._tier(self.curated),
+                self.bench,
+                under("state2"),
+                self.clean,
+                under("ckpt2"),
+                n=self.ngram,
+                min_hits=self.min_hits,
+                processing_time=pt,
+                pre=self._cap_gate_batch,
+            )
+
+        def fuzzy(pt):
+            return fuzzy_decontaminate_stream(
+                self._tier(self.clean),
+                self.bench,
+                under("state2b"),
+                self.fuzzy_clean,
+                under("ckpt2b"),
+                threshold=self.fuzzy_threshold,
+                ngram=self.fuzzy_ngram,
+                processing_time=pt,
+            )
+
+        def pack(pt):
+            chunks = chunk_documents(
+                self._tier(self.pack_src),
+                max_tokens=self.chunk_tokens,
+                overlap=self.chunk_overlap,
+            )
+            packed = pack_stream(
+                chunks, budget=self.seq_budget, shards=self.pack_shards
+            )
+            writer = (
+                packed.writeStream.format("parquet")
+                .option("path", self.packed)
+                .outputMode("append")
+            )
+            return markers.start_query(writer, under("ckpt3"), pt)
+
+        def index(pt):
+            return posting_index_stream(
+                self._tier(self.pack_src).select("doc_id", "text"),
+                self._ensure_index(),
+                under("ckpt4"),
+                processing_time=pt,
+            )
+
+        def maintain():
+            # single-writer: fold index deltas only after the add
+            # stream has stopped, never mid-add
+            self._ensure_index().maintain(self.index_max_deltas)
+
+        url_tier = self.url_clean if self.url_col is not None else None
+        return [
+            _Stage("urldedup", self.url_col is not None, None, urldedup),
+            _Stage("curate", True, url_tier, curate),
+            _Stage("decon", True, self.curated, decon),
+            _Stage("fuzzy", self.fuzzy_ngram is not None, self.clean, fuzzy),
+            # pack and index read the LAST decontamination tier in both
+            # modes (pack_src: fuzzy_clean when fuzzy is on)
+            _Stage("pack", True, self.pack_src, pack),
+            _Stage(
+                "index", self.index_root is not None, self.pack_src, index,
+                maintain,
+            ),
+        ]
+
+    def _ready(self, stage: _Stage) -> bool:
+        return stage.upstream is None or self._has_parquet(stage.upstream)
+
+    def run(self) -> dict[str, float]:
+        """Drain the whole pipeline once: each enabled stage runs to
+        completion (availableNow) before the next reads its committed
+        files; a stage whose upstream tier holds nothing yet is
+        skipped. Returns ``{stage: wall seconds}`` for the stages that
+        ran (the after-drain index maintenance included)."""
+        secs = {}
+        for stage in self._stages():
+            if not (stage.enabled and self._ready(stage)):
+                continue
+            t0 = time.monotonic()
+            stage.start(None).awaitTermination()
+            if stage.after is not None:
+                stage.after()
+            secs[stage.name] = time.monotonic() - t0
+        return secs
 
     # ---- ingest → trainer loop ---------------------------------------
 
@@ -915,103 +919,6 @@ class CurationPipelineStream:
         }.get(m.group(2).lower().rstrip("s"))
         return None if scale is None else float(m.group(1)) * scale
 
-    def _start_urldedup_live(self, processing_time: str):
-        from gus_spark.streaming.urldedup import url_dedup_stream
-
-        stream = self._reader(self.src_path, self.src_schema)
-        return url_dedup_stream(
-            stream,
-            os.path.join(self.work, "state0"),
-            self.url_clean,
-            os.path.join(self.work, "ckpt0"),
-            url_col=self.url_col,
-            processing_time=processing_time,
-            drop_query=self.url_drop_query,
-        )
-
-    def _start_curate_live(self, processing_time: str):
-        return curate_stream(
-            self._curate_source(),  # callers gate on the tier having
-            # committed files, exactly like every lazy downstream start
-            os.path.join(self.work, "state1"),
-            self.curated,
-            os.path.join(self.work, "ckpt1"),
-            include_text=True,
-            processing_time=processing_time,
-        )
-
-    def _start_decontaminate_live(self, processing_time: str):
-        stream = self._reader(self.curated, self._curated_schema())
-        return decontaminate_stream(
-            stream.drop("batch"),
-            self.bench,
-            os.path.join(self.work, "state2"),
-            self.clean,
-            os.path.join(self.work, "ckpt2"),
-            n=self.ngram,
-            min_hits=self.min_hits,
-            processing_time=processing_time,
-            pre=self._cap_gate_batch,
-        )
-
-    def _start_fuzzy_live(self, processing_time: str):
-        schema = self.spark.read.parquet(self.clean).schema
-        stream = self._reader(self.clean, schema).drop("batch")
-        return fuzzy_decontaminate_stream(
-            stream,
-            self.bench,
-            os.path.join(self.work, "state2b"),
-            self.fuzzy_clean,
-            os.path.join(self.work, "ckpt2b"),
-            threshold=self.fuzzy_threshold,
-            ngram=self.fuzzy_ngram,
-            processing_time=processing_time,
-        )
-
-    def _start_pack_live(self, processing_time: str):
-        # pack_src, NOT clean: with fuzzy enabled the packer must read
-        # the fuzzy-clean tier in BOTH modes — reading clean here would
-        # (a) pack documents that never passed the fuzzy gate and
-        # (b) point the shared ckpt3 file-source checkpoint at a
-        # different directory than run_pack uses (round-8 review fix)
-        schema = self.spark.read.parquet(self.pack_src).schema
-        stream = self._reader(self.pack_src, schema).drop("batch")
-        chunks = chunk_documents(
-            stream,
-            max_tokens=self.chunk_tokens,
-            overlap=self.chunk_overlap,
-        )
-        packed = pack_stream(
-            chunks, budget=self.seq_budget, shards=self.pack_shards
-        )
-        return (
-            packed.writeStream.format("parquet")
-            .option("path", self.packed)
-            .option(
-                "checkpointLocation", os.path.join(self.work, "ckpt3")
-            )
-            .outputMode("append")
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
-    def _start_index_live(self, processing_time: str):
-        from gus_spark.streaming.postings import posting_index_stream
-
-        idx = self._ensure_index()
-        schema = self.spark.read.parquet(self.pack_src).schema
-        stream = (
-            self._reader(self.pack_src, schema)
-            .drop("batch")
-            .select("doc_id", "text")
-        )
-        return posting_index_stream(
-            stream,
-            idx,
-            os.path.join(self.work, "ckpt4"),
-            processing_time=processing_time,
-        )
-
     def run_live(
         self,
         processing_time: str = "500 milliseconds",
@@ -1022,8 +929,9 @@ class CurationPipelineStream:
         publish: dict | None = None,
         cap_refit: dict | None = None,
     ) -> dict:
-        """Run every stage (curate → decon [→ fuzzy] → pack)
-        CONCURRENTLY on processing-time triggers until the graph
+        """Run every enabled stage ([urldedup →] curate → decon
+        [→ fuzzy] → pack [+ index]) CONCURRENTLY on processing-time
+        triggers until the graph
         quiesces (every started stage reports
         no available data and no running trigger for ``idle_polls``
         consecutive polls, and every stage whose upstream committed
@@ -1033,15 +941,17 @@ class CurationPipelineStream:
         refreshes once per trigger, so a shorter window would quiesce
         between two triggers with data still waiting.
 
-        Downstream stages start LAZILY — a parquet file source needs
-        committed files before its schema exists, so (with the URL
-        tier on) curation starts at the first url_clean commit,
-        stage 2 at the first curated commit, the optional fuzzy stage
-        at the first clean commit, and the packer at the first commit of its
-        actual source tier (fuzzy_clean when fuzzy is enabled, else
-        clean — the same pack_src contract as run()) — a pipeline
-        whose gates drop everything simply never starts them, and
-        quiesces as all-idle.
+        Downstream stages start LAZILY from the same stage table
+        `run()` drains — a parquet file source needs committed files
+        before its schema exists, so (with the URL tier on) curation
+        starts at the first url_clean commit, decontamination at the
+        first curated commit, the optional fuzzy stage at the first
+        clean commit, and the packer and the optional index at the
+        first commit of their source tier (fuzzy_clean when fuzzy is
+        enabled, else clean) — a pipeline whose gates drop everything
+        simply never starts them, and quiesces as all-idle. The index
+        stage's after-drain hook (``maintain``) runs once every query
+        has stopped, as in `run()`.
 
         Returns per-stage metrics accumulated across the whole run:
         ``{"stages": {name: {"batches", "rows_in", "last_trigger_ms"}},
@@ -1081,21 +991,20 @@ class CurationPipelineStream:
         gate semantics are unchanged — frozen thresholds between
         refits, exactly CCNet discipline, just on an observable
         cadence instead of an offline one."""
-        # insertion order IS the graceful-stop order: the optional URL
-        # tier is the most-upstream stage; fuzzy sits between decon
-        # (its upstream) and pack; the index stage is a SIBLING of
-        # pack over the same tier, stopped last
-        names = []
-        if self.url_col is not None:
-            names.append("urldedup")
-        names += ["curate", "decon"]
-        if self.fuzzy_ngram is not None:
-            names.append("fuzzy")
-        names.append("pack")
-        if self.index_root is not None:
-            names.append("index")
-        queries: dict[str, object] = {n: None for n in names}
+        # table order IS the graceful-stop order: the optional URL
+        # tier is the most-upstream stage; the index stage is a
+        # SIBLING of pack over the same tier, stopped last
+        stages = [st for st in self._stages() if st.enabled]
+        queries: dict[str, object] = {st.name: None for st in stages}
         seen: dict[str, dict[int, dict]] = {k: {} for k in queries}
+
+        def startable() -> list[_Stage]:
+            # one predicate decides both a start and "pending start"
+            return [
+                st for st in stages
+                if queries[st.name] is None and self._ready(st)
+            ]
+
         # a stage's idle status only refreshes once per trigger, so an
         # idle window shorter than the trigger interval would quiesce
         # between two triggers with data still waiting on disk: widen
@@ -1104,17 +1013,6 @@ class CurationPipelineStream:
         if trigger_s is not None:
             idle_polls = max(
                 idle_polls, -int(-(2 * trigger_s) // poll)
-            )
-        # eager start = the most-upstream stage (its source schema is
-        # declared, not discovered); everything downstream starts
-        # lazily on its tier's first commit
-        if self.url_col is not None:
-            queries["urldedup"] = self._start_urldedup_live(
-                processing_time
-            )
-        else:
-            queries["curate"] = self._start_curate_live(
-                processing_time
             )
         # live auto-publish (r12): with ``publish`` set ({"shards_dir",
         # "tokenizer_dir", optional "shards"/"verify"/"every_polls"}),
@@ -1256,43 +1154,11 @@ class CurationPipelineStream:
         try:
             while True:
                 polls += 1
-                # lazy downstream starts, upstream-first
-                if (
-                    self.url_col is not None
-                    and queries["curate"] is None
-                    and self._has_parquet(self.url_clean)
-                ):
-                    queries["curate"] = self._start_curate_live(
-                        processing_time
-                    )
-                if queries["decon"] is None and self._has_parquet(
-                    self.curated
-                ):
-                    queries["decon"] = self._start_decontaminate_live(
-                        processing_time
-                    )
-                if (
-                    "fuzzy" in queries
-                    and queries["fuzzy"] is None
-                    and self._has_parquet(self.clean)
-                ):
-                    queries["fuzzy"] = self._start_fuzzy_live(
-                        processing_time
-                    )
-                if queries["pack"] is None and self._has_parquet(
-                    self.pack_src
-                ):
-                    queries["pack"] = self._start_pack_live(
-                        processing_time
-                    )
-                if (
-                    "index" in queries
-                    and queries["index"] is None
-                    and self._has_parquet(self.pack_src)
-                ):
-                    queries["index"] = self._start_index_live(
-                        processing_time
-                    )
+                # lazy starts, upstream-first: the most-upstream stage
+                # (declared source schema) starts on the first poll,
+                # every other stage on its tier's first commit
+                for st in startable():
+                    queries[st.name] = st.start(processing_time)
                 snapshot = harvest()
                 if on_progress is not None:
                     on_progress(snapshot)
@@ -1300,21 +1166,7 @@ class CurationPipelineStream:
                 maybe_publish()
                 # quiesced = every started query idle AND no committed
                 # data is waiting on an unstarted downstream stage
-                pending_start = (
-                    (self.url_col is not None
-                     and queries["curate"] is None
-                     and self._has_parquet(self.url_clean))
-                    or (queries["decon"] is None
-                     and self._has_parquet(self.curated))
-                    or ("fuzzy" in queries
-                        and queries["fuzzy"] is None
-                        and self._has_parquet(self.clean))
-                    or (queries["pack"] is None
-                        and self._has_parquet(self.pack_src))
-                    or ("index" in queries
-                        and queries["index"] is None
-                        and self._has_parquet(self.pack_src))
-                )
+                pending_start = bool(startable())
                 if not pending_start and all(
                     stage_idle(q) for q in queries.values()
                 ):
@@ -1337,8 +1189,7 @@ class CurationPipelineStream:
             # (never leaked into the shared session), then re-raised
             # unless a body exception is already propagating.
             first_err: BaseException | None = None
-            for name in queries:  # insertion order = upstream-first
-                q = queries[name]
+            for q in queries.values():  # table order = upstream-first
                 if q is None:
                     continue
                 try:
@@ -1357,14 +1208,11 @@ class CurationPipelineStream:
                 # drained-tail publish: everything the stopped graph
                 # committed that the cadence hadn't picked up yet
                 maybe_publish(force=True)
-            if (
-                first_err is None
-                and sys.exc_info()[0] is None
-                and queries.get("index") is not None
-            ):
-                # single-writer: fold index deltas only after the add
-                # stream has fully stopped, mirroring run_index()
-                self._ensure_index().maintain(self.index_max_deltas)
+                # after-drain hooks (index maintain) run only once
+                # their stage has fully stopped, as in run()
+                for st in stages:
+                    if st.after and queries[st.name] is not None:
+                        st.after()
             if first_err is not None and sys.exc_info()[0] is None:
                 raise first_err
         return harvest()

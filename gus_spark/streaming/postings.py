@@ -48,29 +48,12 @@ def posting_index_stream(
     empty frame is valid and every document then arrives as deltas).
     ``processing_time`` switches from the drain trigger (availableNow)
     to a live processing-time trigger — the pipeline's live mode."""
-    index._read_meta()  # fail fast before any batch arrives
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        meta = index._read_meta()
-        fp = markers.batch_fingerprint(batch_df, meta["id_col"])
-        if markers.check_marker(
-            index.root, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        if fp["n"] == 0:
-            markers.write_marker(index.root, batch_id, fp)
-            return
-        index.add(batch_df, batch_key=f"batch-{batch_id}")
-        markers.write_marker(index.root, batch_id, fp)
-
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    id_col = index.id_col  # reads meta: fail fast before any batch
+    return markers.start_marked(
+        docs_stream, index.root, id_col, checkpoint_path,
+        lambda df, i: index.add(df, batch_key=f"batch-{i}"),
+        processing_time, skip_empty=True,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def posting_tombstone_stream(
@@ -98,27 +81,11 @@ def posting_tombstone_stream(
     stream, another delete stream, or a compaction over the same
     index — drains are sequential, like ``CurationPipelineStream``
     stages."""
-    meta = index._read_meta()  # fail fast before any batch arrives
+    id_col = index.id_col  # reads meta: fail fast before any batch
     marker_dir = os.path.join(index.root, "_tomb_markers")
     os.makedirs(marker_dir, exist_ok=True)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, meta["id_col"])
-        if markers.check_marker(
-            marker_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        if fp["n"] == 0:
-            markers.write_marker(marker_dir, batch_id, fp)
-            return
-        index.delete(batch_df, batch_key=f"tombbatch-{batch_id}")
-        markers.write_marker(marker_dir, batch_id, fp)
-
-    writer = ids_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    return markers.start_marked(
+        ids_stream, marker_dir, id_col, checkpoint_path,
+        lambda df, i: index.delete(df, batch_key=f"tombbatch-{i}"),
+        processing_time, skip_empty=True,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

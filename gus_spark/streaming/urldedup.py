@@ -6,7 +6,8 @@ spelling variants (scheme, www., tracking params…) across HOURS of
 stream time; keying the gate on the canonical URL drops those before
 any content hash is paid.
 
-Exactly the curate_stream state recipe, with the canonical URL as the
+The curate_stream state recipe — the same first-arrival key gate,
+`markers.keep_first_arrivals` — with the canonical URL as the
 identity instead of the content fingerprint:
 
 - normalization is the SAME pure-JVM expression as the batch operator
@@ -24,8 +25,8 @@ identity instead of the content fingerprint:
   (the dedup_by_url key set) — asserted in tests.
 
 Crash-replay: content-fingerprinted done-markers + batch-keyed
-OVERWRITE publishes (streaming.markers — the curate_stream pattern
-verbatim): a replayed batch overwrites its own earlier output, its own
+OVERWRITE publishes (streaming.markers, shared with curate_stream):
+a replayed batch overwrites its own earlier output, its own
 state partition is excluded from the anti-join (the ``exclude_key``
 rule), and a stale-lineage marker raises instead of silently skipping
 new data.
@@ -36,7 +37,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -114,53 +115,18 @@ def url_dedup_stream(
     os.makedirs(state_dir, exist_ok=True)
     _check_state_layout(state_dir, drop_query)
     seen_path = os.path.join(state_dir, "canonicals")
-    out_cols = docs_stream.columns + ["canonical_url"]
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, id_col)
-        if markers.check_marker(
-            state_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        spark = batch_df.sparkSession
         canon = batch_df.withColumn(
             "canonical_url",
             normalize_url(F.col(url_col), drop_query=drop_query),
         )
-        w = Window.partitionBy("canonical_url").orderBy(id_col)
-        kept = (
-            canon.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .drop("_rk")
+        markers.keep_first_arrivals(
+            batch_df, canon, "canonical_url", id_col, seen_path,
+            out_path, batch_id,
         )
-        if os.path.isdir(seen_path):
-            # exclude THIS batch's own partition (the exclude_key
-            # rule): a replay that crashed after the state write must
-            # not anti-join itself away
-            seen = (
-                spark.read.parquet(seen_path)
-                .filter(F.col("batch") != batch_id)
-                .select("canonical_url")
-            )
-            kept = kept.join(seen, "canonical_url", "left_anti")
-        # two actions (publish + state delta): materialize once, and
-        # bound the file budget back to the batch's input width
-        kept = kept.coalesce(markers.batch_width(batch_df)).cache()
-        markers.publish_batch(
-            kept.select(*out_cols),
-            os.path.join(out_path, f"batch={batch_id}"),
-        )
-        kept.select("canonical_url").write.mode("overwrite").parquet(
-            os.path.join(seen_path, f"batch={batch_id}")
-        )
-        kept.unpersist()
-        markers.write_marker(state_dir, batch_id, fp)
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    return markers.start_marked(
+        docs_stream, state_dir, id_col, checkpoint_path, _process,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

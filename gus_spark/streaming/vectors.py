@@ -49,27 +49,10 @@ def vector_index_stream(
     into ``index``. The index must already be fitted — fitting needs a
     corpus sample, which a stream by definition doesn't have yet."""
     index._load_model()  # fail fast before any batch arrives
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # content-fingerprinted marker (streaming.markers): skip only
-        # a same-content replay; a stale-lineage marker raises (same
-        # cross-batch-key aliasing argument as neardup_stream)
-        fp = markers.batch_fingerprint(batch_df, index.id_col)
-        if markers.check_marker(
-            index.path, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        if fp["n"] == 0:
-            markers.write_marker(index.path, batch_id, fp)
-            return
-        index.add(batch_df, batch_key=f"batch-{batch_id}")
-        markers.write_marker(index.path, batch_id, fp)
-
-    return (
-        vec_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return markers.start_marked(
+        vec_stream, index.path, index.id_col, checkpoint_path,
+        lambda df, i: index.add(df, batch_key=f"batch-{i}"),
+        skip_empty=True,
     )
 
 
@@ -97,24 +80,8 @@ def vector_tombstone_stream(
     index._load_model()  # fail fast before any batch arrives
     marker_dir = os.path.join(index.path, "_tomb_markers")
     os.makedirs(marker_dir, exist_ok=True)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fp = markers.batch_fingerprint(batch_df, index.id_col)
-        if markers.check_marker(
-            marker_dir, batch_id, fp, strict=True
-        ) == markers.SKIP:
-            return
-        if fp["n"] == 0:
-            markers.write_marker(marker_dir, batch_id, fp)
-            return
-        index.delete(batch_df, batch_key=f"tombbatch-{batch_id}")
-        markers.write_marker(marker_dir, batch_id, fp)
-
-    writer = ids_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
+    return markers.start_marked(
+        ids_stream, marker_dir, index.id_col, checkpoint_path,
+        lambda df, i: index.delete(df, batch_key=f"tombbatch-{i}"),
+        processing_time, skip_empty=True,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -2650,3 +2650,116 @@ def test_multi_domain_publish_to_mixture(spark, tmp_path):
     # exactly-once per epoch — and the cursor carries per-domain state
     assert set(last["states"]) == set(mix)
     assert last["served"] == draws
+
+
+def test_run_and_run_live_hand_stages_the_same_wiring(
+    spark, tmp_path, monkeypatch
+):
+    """Both modes start every stage from the one stage table: with
+    every optional stage on (url_col, fuzzy_ngram, index_root), the
+    source tier, state dir, output dir and checkpoint dir each stage
+    builder receives are the same under run() and run_live() — the
+    wiring the two mode-specific copies once drifted on (the live
+    packer read `clean` while the drain read `pack_src`). The
+    builders are stubbed, so no trigger runs."""
+    from gus_spark.streaming import pipeline as P
+    from gus_spark.streaming import postings, urldedup
+
+    class FakeQuery:
+        status = {"isDataAvailable": False, "isTriggerActive": False}
+        recentProgress = []
+
+        def awaitTermination(self):
+            pass
+
+        def stop(self):
+            pass
+
+    class FakeStream:
+        """A streaming source stand-in that remembers its path and
+        records the sink options a stage sets on its writer."""
+
+        def __init__(self, path):
+            self.path, self.opts = path, {}
+
+        def drop(self, *cols):
+            return self
+
+        def select(self, *cols):
+            return self
+
+        @property
+        def writeStream(self):
+            return self
+
+        def format(self, fmt):
+            return self
+
+        def outputMode(self, mode):
+            return self
+
+        def option(self, key, value):
+            self.opts[key] = value
+            return self
+
+        def trigger(self, **kw):
+            return self
+
+        def start(self):
+            calls["pack"] = (
+                self.path, None, self.opts["path"],
+                self.opts["checkpointLocation"],
+            )
+            return FakeQuery()
+
+    calls: dict[str, tuple] = {}
+
+    def builder(name):
+        def stub(stream, *args, **kw):
+            # (source, [bench,] state dir, output dir, checkpoint dir)
+            paths = [a for a in args if isinstance(a, str)]
+            calls[name] = (stream.path, *paths)
+            return FakeQuery()
+
+        return stub
+
+    def index_stub(stream, index, checkpoint_path, **kw):
+        calls["index"] = (stream.path, None, None, checkpoint_path)
+        return FakeQuery()
+
+    monkeypatch.setattr(urldedup, "url_dedup_stream", builder("urldedup"))
+    monkeypatch.setattr(P, "curate_stream", builder("curate"))
+    monkeypatch.setattr(P, "decontaminate_stream", builder("decon"))
+    monkeypatch.setattr(P, "fuzzy_decontaminate_stream", builder("fuzzy"))
+    monkeypatch.setattr(P, "chunk_documents", lambda s, **kw: s)
+    monkeypatch.setattr(P, "pack_stream", lambda s, **kw: s)
+    monkeypatch.setattr(postings, "posting_index_stream", index_stub)
+
+    src = str(tmp_path / "src")
+    p = P.CurationPipelineStream(
+        spark, src, None, None, str(tmp_path / "work"),
+        url_col="url", fuzzy_ngram=1, index_root=str(tmp_path / "idx"),
+    )
+    monkeypatch.setattr(p, "_reader", lambda path, schema: FakeStream(path))
+    monkeypatch.setattr(p, "_ensure_index", lambda: type(
+        "Idx", (), {"maintain": lambda self, n: None})())
+    # every upstream tier holds committed data, so every stage starts
+    one = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    for tier in (p.url_clean, p.curated, p.clean, p.fuzzy_clean):
+        one.write.parquet(os.path.join(tier, "batch=0"))
+
+    secs = p.run()
+    drained = dict(calls)
+    calls.clear()
+    metrics = p.run_live(
+        processing_time="10 milliseconds", poll=0.01, idle_polls=1,
+        timeout=30.0,
+    )
+    assert not metrics["timed_out"], metrics
+    stages = ["urldedup", "curate", "decon", "fuzzy", "pack", "index"]
+    assert list(secs) == stages
+    assert list(metrics["stages"]) == stages
+    assert calls == drained
+    assert drained["curate"][0] == p.url_clean
+    assert drained["pack"][0] == drained["index"][0] == p.fuzzy_clean
+    assert len(set(v[-1] for v in drained.values())) == len(stages)
