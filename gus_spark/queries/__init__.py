@@ -5,8 +5,15 @@ The reference declares but never implements the scan path (readMany is
 is that completion: every analytical operator the engine supports is a
 named query with
 
-- a Spark implementation ``(spark, sf_dir) -> DataFrame`` (declarative
-  DataFrame plans — Catalyst does pushdown/pruning/join-selection), and
+- a Spark implementation ``(spark, sf_dir) -> DataFrame``. A relational
+  query is one SQL text (``register_sql``): Spark parses it with its
+  inputs bound as ``spark.sql`` DataFrame arguments, and DuckDB runs the
+  same text over the bare table names as the oracle. Join order and
+  ``/*+ BROADCAST */`` hints live in that text (DuckDB reads the hints
+  as comments). A text tuned for Spark's plan keeps its textbook
+  oracle beside it. A query the text cannot carry (an operator call, a
+  ``.pivot()`` probe, a dialect-only function) stays a DataFrame
+  builder (``register``).
 - where SQL-expressible, an ANSI-SQL oracle string for DuckDB, used by
   the driver's correctness harness.
 
@@ -19,6 +26,7 @@ Determinism contract (the oracle comparison hashes values):
 
 from __future__ import annotations
 
+import string
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -30,7 +38,8 @@ class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]
-    doc: str
+    #: the Spark SQL text over the bare table names; None for a builder
+    text: Optional[str] = None
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -38,10 +47,33 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 def register(name: str, oracle: str | None = None):
     def deco(fn):
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, fn.__doc__ or "")
+        _REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
 
     return deco
+
+
+def register_sql(name: str, text: str, oracle: str | None = None, **inputs):
+    """Register ``text`` as the Spark definition of query ``name``.
+
+    Each ``{t}`` in the text binds ``table(spark, sf_dir, t)``, or
+    ``inputs[t](spark, sf_dir)`` where given, as a ``spark.sql``
+    DataFrame argument; pyspark drops its temp view once the text is
+    analyzed, so a build leaves no view in the session. The oracle is
+    the same text over the bare table names, unless a textbook
+    ``oracle`` stands beside a text tuned for Spark's plan."""
+    names = sorted({f for _, f, _, _ in string.Formatter().parse(text) if f})
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(text, **{
+            t: inputs[t](spark, sf_dir) if t in inputs
+            else table(spark, sf_dir, t)
+            for t in names
+        })
+
+    build.__name__ = build.__qualname__ = name
+    bare = text.format_map({t: t for t in names})
+    _REGISTRY[name] = QuerySpec(name, build, oracle or bare, bare)
 
 
 def catalog() -> dict[str, QuerySpec]:

@@ -12,44 +12,28 @@ table too large to window.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gus_spark.functions.deterministic import sql_davg, sql_dsum
-from gus_spark.queries import register, table
+from gus_spark.queries import register, register_sql, table
 
 
-@register(
+# As-of (point-in-time) join of each event against the latest purchase
+# event at-or-before it, per user — a running conditional MAX, not an
+# O(n²) inequality self-join.
+register_sql(
     "asof_last_purchase",
-    oracle="""
+    """
     SELECT event_id, user_id, ts, event_type,
            MAX(CASE WHEN event_type = 'purchase' THEN ts END)
              OVER (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              AS last_purchase_ts
-    FROM events
+    FROM {events}
     WHERE user_id <= 40
     """,
 )
-def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of (point-in-time) join of each event against the latest
-    purchase event at-or-before it, per user — a running conditional
-    MAX, not an O(n²) inequality self-join."""
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    e = table(spark, sf_dir, "events").filter(F.col("user_id") <= 40)
-    return e.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        F.max(F.when(F.col("event_type") == "purchase", F.col("ts")))
-        .over(w)
-        .alias("last_purchase_ts"),
-    )
 
 
 @register(
@@ -155,8 +139,30 @@ def null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 #  region/nation dimension joins the probe lacked.)
 
 
-@register(
+# TPC-H Q18: HAVING-filtered IN-subquery feeding a 3-way join, written
+# as the semi join it plans to. Only the subquery's aggregate keeps a
+# broadcast hint — it is a provably bounded keyset (orders with >150
+# total quantity, a highly selective HAVING). orders and customer are
+# row-scaled and carry no hint; the post-semi-join lineitem is small, so
+# AQE broadcasts IT into the orders join at runtime instead. The oracle
+# keeps the textbook IN subquery.
+register_sql(
     "q18_large_volume_customers",
+    f"""
+    SELECT /*+ BROADCAST(big) */ c.c_custkey, c.c_name, o.o_orderkey,
+           o.o_totalprice, {sql_dsum('l.l_quantity')} AS total_qty
+    FROM {{lineitem}} l
+    SEMI JOIN (SELECT l_orderkey
+               FROM (SELECT l_orderkey, SUM(l_quantity) AS q
+                     FROM {{lineitem}} GROUP BY l_orderkey)
+               WHERE q > 150) big
+      ON l.l_orderkey = big.l_orderkey
+    JOIN {{orders}} o ON l.l_orderkey = o.o_orderkey
+    JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+    GROUP BY c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice
+    ORDER BY o.o_totalprice DESC, o.o_orderkey
+    LIMIT 20
+    """,
     oracle=f"""
     SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice,
            CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
@@ -172,33 +178,6 @@ def null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18: HAVING-filtered IN-subquery feeding a 3-way join.
-    Only the subquery's aggregate keeps a broadcast hint — it is a
-    provably bounded keyset (orders with >150 total quantity, a highly
-    selective HAVING). orders and customer are row-scaled and carry no
-    hint; the post-semi-join lineitem is small, so AQE broadcasts IT
-    into the orders join at runtime instead."""
-    from gus_spark.functions.deterministic import dsum
-
-    li = table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select("l_orderkey")
-    )
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    return (
-        li.join(F.broadcast(big), "l_orderkey", "left_semi")
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name", "o_orderkey", "o_totalprice")
-        .agg(dsum("l_quantity").alias("total_qty"))
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(20)
-    )
 
 
 @register(
@@ -291,8 +270,33 @@ def scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q17 (small-quantity-order revenue): a correlated scalar
+# subquery — ``l_quantity < 0.2 * (SELECT AVG(l_quantity) WHERE
+# l2.l_partkey = p.p_partkey)`` — in its decorrelated form, exactly the
+# rewrite Catalyst's RewriteCorrelatedScalarSubquery performs:
+# semi-join lineitem to the brand's parts FIRST (so the per-part
+# average aggregates only the ~1/25 brand slice, not all of lineitem),
+# aggregate the per-part threshold, join it back, filter, and reduce.
+# The brand keyset is row-scaled (part = 200k×SF) so no side is hinted.
+# Threshold determinism: the average is an exact decimal sum divided by
+# count in double, so 0.2×avg has identical bits on both engines and
+# the strict `<` admits identical rows. The divide-by-7 annualization
+# is TPC-H's constant (the corpus spans ~7 order years). The oracle
+# keeps the textbook IN subquery.
+register_sql(
     "q17_small_quantity_revenue",
+    f"""
+    WITH brand AS (
+      SELECT * FROM {{lineitem}}
+      SEMI JOIN (SELECT p_partkey FROM {{part}} WHERE p_brand = 'Brand#11') p
+        ON l_partkey = p.p_partkey
+    )
+    SELECT {sql_dsum('l_extendedprice')} / 7.0 AS avg_yearly
+    FROM brand
+    JOIN (SELECT l_partkey, 0.2 * ({sql_davg('l_quantity')}) AS qty_thr
+          FROM brand GROUP BY l_partkey) t USING (l_partkey)
+    WHERE l_quantity < qty_thr
+    """,
     oracle=f"""
     SELECT {sql_dsum('l.l_extendedprice')} / 7.0 AS avg_yearly
     FROM lineitem l
@@ -306,37 +310,6 @@ def scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_quantity < t.qty_thr
     """,
 )
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (small-quantity-order revenue): a correlated scalar
-    subquery — ``l_quantity < 0.2 * (SELECT AVG(l_quantity) WHERE
-    l2.l_partkey = p.p_partkey)`` — expressed in its decorrelated form,
-    exactly the rewrite Catalyst's RewriteCorrelatedScalarSubquery
-    performs: semi-join lineitem to the brand's parts FIRST (so the
-    per-part average aggregates only the ~1/25 brand slice, not all of
-    lineitem), aggregate the per-part threshold, join it back, filter,
-    and reduce. The brand keyset is row-scaled (part = 200k×SF) so no
-    side is hinted. Threshold determinism: davg is an exact decimal sum
-    divided by count in double, so 0.2×avg has identical bits on both
-    engines and the strict `<` admits identical rows. The divide-by-7
-    annualization is TPC-H's constant (the corpus spans ~7 order
-    years)."""
-    from gus_spark.functions.deterministic import davg, dsum
-
-    p_keys = (
-        table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#11")
-        .select("p_partkey")
-    )
-    li = table(spark, sf_dir, "lineitem")
-    li_brand = li.join(p_keys, li.l_partkey == F.col("p_partkey"), "left_semi")
-    thr = li_brand.groupBy("l_partkey").agg(
-        (F.lit(0.2) * davg("l_quantity")).alias("qty_thr")
-    )
-    return (
-        li_brand.join(thr, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_thr"))
-        .agg((dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
-    )
 
 
 # (stratified_sample_orders was rotated out for curation.

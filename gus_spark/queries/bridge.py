@@ -1,17 +1,26 @@
 """Bridge-table join shapes over a SYNTHESIZED partsupp (TPC-H q2 /
-q16 / q20 — the last classic shapes the catalog lacked, blocked for
-two rounds on the testdata having no partsupp table).
+q9 / q11 / q16 / q20 — the classic shapes the catalog lacked, blocked
+for two rounds on the testdata having no partsupp table).
 
 partsupp is derived deterministically from `part` x 4 seeded
 suppliers with pure integer arithmetic — no files, no RNG, no hash
 functions — so the EXACT same rows are constructible in any engine:
-the Spark build and the DuckDB oracle CTE compute identical values at
-any scale factor (integer +,*,%,integer-division only, plus one
-final cents/100.0 division whose IEEE result is bit-identical).
-Supplier assignment follows the TPC-H partsupp generator's shape
-(4 distinct suppliers per part, spread by quarter-of-S offsets:
-``(p_partkey + i * (S DIV 4)) % S`` is injective over i in 0..3
-because 3*(S DIV 4) < S).
+``PARTSUPP_SQL`` is one CTE text that Spark and DuckDB both parse (the
+oracles run it), and the Spark texts' explode twin computes identical
+values at any scale factor (integer +,*,%, an exact integer division,
+plus one final cents/100 double division whose IEEE result is
+bit-identical). Supplier assignment follows the TPC-H partsupp
+generator's shape (4 distinct suppliers per part, spread by
+quarter-of-S offsets: ``(p_partkey + i * floor(S / 4)) % S`` is
+injective over i in 0..3 because 3*floor(S / 4) < S).
+
+Scale shape (the Spark texts): one narrow `part` scan exploded x4
+map-side and crossed with the 1-row supplier COUNT (an explicit
+broadcast — the allowed 1-row-scalar hint class), so the synthesis
+adds ZERO row-scaled shuffles — partsupp rows are born co-partitioned
+with whatever partitioning `part` arrived in. Every Spark text here
+is tuned (decorrelated, or the q9 semi prune) and keeps its textbook
+oracle beside it.
 
 The reference (a CRUD webserver; readMany is `todo!()` at
 src/cli/server/model/graphql.rs:382) has no analytical surface; these
@@ -20,67 +29,81 @@ queries are part of the engine's completion of that stub.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from gus_spark.functions.deterministic import sql_dsum
+from gus_spark.queries import register_sql
 
-from gus_spark.queries import register, table
-
-#: the DuckDB twin of `partsupp` below — prepended to every oracle.
-#: (VALUES (0),(1),(2),(3)) is the 4-supplier replica index; s_n the
-#: 1-row supplier count, exactly the broadcast scalar the Spark side
-#: cross-joins.
+#: the synthesized bridge table (ps_partkey, ps_suppkey, ps_availqty,
+#: ps_supplycost), 4 distinct suppliers per part, as one CTE text both
+#: engines parse. (VALUES (0),(1),(2),(3)) is the 4-supplier replica
+#: index; s_n the 1-row supplier count.
 PARTSUPP_SQL = """
-    WITH s_n AS (SELECT COUNT(*) AS n FROM supplier),
+    WITH s_n AS (SELECT COUNT(*) AS n FROM {supplier}),
     partsupp AS (
-      SELECT p_partkey AS ps_partkey,
-             (p_partkey + i * (n // 4)) % n AS ps_suppkey,
+      SELECT /*+ BROADCAST(s_n) */ p_partkey AS ps_partkey,
+             (p_partkey + i * CAST(FLOOR(n / 4) AS BIGINT)) % n AS ps_suppkey,
              ((p_partkey * 31 + i * 17) % 100) + 1 AS ps_availqty,
-             (((p_partkey * 131 + i * 37) % 99900) + 100) / 100.0
+             (((p_partkey * 131 + i * 37) % 99900) + 100) / CAST(100 AS DOUBLE)
                AS ps_supplycost
-      FROM part, s_n, (VALUES (0),(1),(2),(3)) AS t(i)
+      FROM {part} CROSS JOIN s_n CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(i)
     )
 """
 
+_PARTSUPP_ORACLE = PARTSUPP_SQL.format(supplier="supplier", part="part")
 
-def partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The synthesized bridge table: (ps_partkey, ps_suppkey,
-    ps_availqty, ps_supplycost), 4 distinct suppliers per part.
-
-    Scale shape: one narrow `part` scan (p_partkey only — pruned at
-    the reader) exploded x4 map-side; the supplier COUNT is a 1-row
-    aggregate cross-joined with an explicit broadcast (the allowed
-    1-row-scalar hint class) so the build adds ZERO row-scaled
-    shuffles — partsupp rows are born co-partitioned with whatever
-    partitioning `part` arrived in."""
-    pk = F.col("p_partkey")
-    i = F.col("i")
-    s_n = table(spark, sf_dir, "supplier").agg(F.count("*").alias("s_n"))
-    return (
-        table(spark, sf_dir, "part")
-        .select("p_partkey")
-        .crossJoin(F.broadcast(s_n))
-        .select(
-            "p_partkey",
-            "s_n",
-            F.explode(F.array(*[F.lit(k) for k in range(4)])).alias("i"),
-        )
-        .select(
-            pk.alias("ps_partkey"),
-            ((pk + i * F.expr("s_n DIV 4")) % F.col("s_n")).alias(
-                "ps_suppkey"
-            ),
-            (((pk * 31 + i * 17) % 100) + 1).alias("ps_availqty"),
-            ((((pk * 131 + i * 37) % 99900) + 100) / F.lit(100.0)).alias(
-                "ps_supplycost"
-            ),
-        )
+#: Spark's twin of PARTSUPP_SQL for the bridge texts: the replica index
+#: is a map-side explode instead of a second (4-row) nested-loop join,
+#: which keeps q2's single nested-loop join (test_plans.py) and every
+#: bridge plan as it was. Same rows: each oracle runs PARTSUPP_SQL.
+_PARTSUPP_EXPLODE = """
+    WITH partsupp AS (
+      SELECT p_partkey AS ps_partkey,
+             (p_partkey + i * (s_n DIV 4)) % s_n AS ps_suppkey,
+             ((p_partkey * 31 + i * 17) % 100) + 1 AS ps_availqty,
+             (((p_partkey * 131 + i * 37) % 99900) + 100) / CAST(100 AS DOUBLE)
+               AS ps_supplycost
+      FROM (SELECT /*+ BROADCAST(n) */ p_partkey, s_n
+            FROM {part} CROSS JOIN (SELECT COUNT(*) AS s_n FROM {supplier}) n)
+      LATERAL VIEW explode(array(0, 1, 2, 3)) t AS i
     )
+"""
 
-
-@register(
+# TPC-H Q2: for every LARGE-type part, the EUROPE supplier(s) offering
+# the minimum supply cost — the min-cost-per-group correlated subquery
+# over a two-key bridge table, the most common real-warehouse bridge
+# shape. (Absorbs the rotated-out `cheapest_line_per_part`.) The Spark
+# text decorrelates the MIN into one window aggregate over a single
+# ps_partkey exchange — no per-row re-scan, and ties (all suppliers at
+# the min) survive, per the TPC-H definition, which a row_number would
+# drop; the oracle keeps the textbook correlated subquery. region (5
+# rows) and nation (25 rows) carry broadcast hints (the provably
+# bounded class); supplier and part are row-scaled — no hints, AQE
+# broadcasts the post-filter small side at runtime. The final ORDER BY
+# carries the unique (p_partkey, ps_suppkey) tiebreak so LIMIT 100 is
+# deterministic.
+register_sql(
     "q2_min_cost_supplier",
-    oracle=PARTSUPP_SQL
+    _PARTSUPP_EXPLODE
+    + """
+    , eligible AS (
+      SELECT /*+ BROADCAST(n), BROADCAST(r) */
+             ps_partkey, ps_suppkey, ps_supplycost, s_name, s_acctbal, n_name
+      FROM partsupp
+      JOIN {supplier} ON ps_suppkey = s_suppkey
+      JOIN {nation} n ON s_nationkey = n.n_nationkey
+      JOIN {region} r ON n.n_regionkey = r.r_regionkey
+      WHERE r.r_name = 'EUROPE'
+    ), cheapest AS (
+      SELECT *, MIN(ps_supplycost) OVER (PARTITION BY ps_partkey) AS min_cost_w
+      FROM eligible
+    )
+    SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
+           ps_supplycost AS min_cost
+    FROM (SELECT * FROM cheapest JOIN {part} ON ps_partkey = p_partkey
+          WHERE ps_supplycost = min_cost_w AND p_type = 'LARGE'
+          ORDER BY s_acctbal DESC, n_name, s_name, p_partkey, ps_suppkey)
+    LIMIT 100
+    """,
+    oracle=_PARTSUPP_ORACLE
     + """
     , eligible AS (
       SELECT ps.*, s.s_name, s.s_acctbal, n.n_name
@@ -104,63 +127,35 @@ def partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 100
     """,
 )
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2: for every LARGE-type part, the EUROPE supplier(s)
-    offering the minimum supply cost — the min-cost-per-group
-    correlated subquery over a two-key bridge table, the most common
-    real-warehouse bridge shape. (Absorbs the rotated-out
-    `cheapest_line_per_part`, which probed exactly this group-min
-    shape on a single table.)
 
-    Spark plan: the correlated MIN decorrelates into one window
-    aggregate over a single ps_partkey exchange — no per-row re-scan,
-    and ties (all suppliers at the min) survive, per the TPC-H
-    definition, which a row_number would drop. region (5 rows) and
-    nation (25 rows) carry broadcast hints (the provably bounded
-    class); supplier and part are row-scaled — no hints, AQE
-    broadcasts the post-filter small side at runtime. The final
-    ORDER BY carries the unique (p_partkey, ps_suppkey) tiebreak so
-    LIMIT 100 is deterministic."""
-    ps = partsupp(spark, sf_dir)
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    # string-name join keys (r13, guide §1.2): `df.attr` column access
-    # resolves the frame's schema, which analyzes the whole subtree per
-    # build — `cheapest.ps_partkey` below re-analyzed the join+window
-    # tree on every bench rep. Every key name here is unique across
-    # both sides, so F.col resolves identically (parity-checked).
-    eligible = (
-        ps.join(s, F.col("ps_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(
-            "ps_partkey", "ps_suppkey", "ps_supplycost",
-            "s_name", "s_acctbal", "n_name",
-        )
-    )
-    w = Window.partitionBy("ps_partkey")
-    cheapest = eligible.withColumn(
-        "min_cost_w", F.min("ps_supplycost").over(w)
-    ).filter(F.col("ps_supplycost") == F.col("min_cost_w"))
-    p = table(spark, sf_dir, "part").filter(F.col("p_type") == "LARGE")
-    return (
-        cheapest.join(p, F.col("ps_partkey") == F.col("p_partkey"))
-        .orderBy(
-            F.desc("s_acctbal"), "n_name", "s_name", "p_partkey",
-            "ps_suppkey",
-        )
-        .select(
-            "s_acctbal", "s_name", "n_name", "p_partkey", "p_brand",
-            F.col("ps_supplycost").alias("min_cost"),
-        )
-        .limit(100)
-    )
-
-
-@register(
+# TPC-H Q16: how many suppliers can supply each surviving (brand, type,
+# size) bucket — distinct-aggregate over an anti-join (suppliers in bad
+# standing excluded; the testdata has no comment column, so negative
+# account balance stands in for the spec's Customer-Complaints
+# predicate). (Array-probe slot rotation: `array_stats_embeddings`'s
+# array size/min/max surface stays covered by similarity_topk_for_vec0
+# and the scalar suite.) The exclusion is written as the LEFT ANTI join
+# NOT IN decorrelates to (s_suppkey is never null, so NOT-IN's
+# three-valued-logic trap is vacuous); ONE count-distinct avoids the
+# Expand multi-distinct plan; the part filters (brand/type/size-set)
+# push to the scan before the bridge join. The oracle keeps the
+# textbook NOT IN.
+register_sql(
     "q16_parts_supplier_relationship",
-    oracle=PARTSUPP_SQL
+    _PARTSUPP_EXPLODE
+    + """
+    SELECT p.p_brand, p.p_type, p.p_size,
+           COUNT(DISTINCT ps.ps_suppkey) AS supplier_cnt
+    FROM partsupp ps
+    JOIN {part} p ON ps.ps_partkey = p.p_partkey
+    ANTI JOIN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0) bad
+      ON ps.ps_suppkey = bad.s_suppkey
+    WHERE p.p_brand <> 'Brand#13' AND p.p_type <> 'PROMO'
+      AND p.p_size IN (1, 4, 9, 14, 19, 24, 29, 36)
+    GROUP BY p.p_brand, p.p_type, p.p_size
+    ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
+    """,
+    oracle=_PARTSUPP_ORACLE
     + """
     SELECT p.p_brand, p.p_type, p.p_size,
            COUNT(DISTINCT ps.ps_suppkey) AS supplier_cnt
@@ -175,55 +170,54 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
     """,
 )
-def q16_parts_supplier_relationship(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q16: how many suppliers can supply each surviving
-    (brand, type, size) bucket — distinct-aggregate over an anti-join
-    (suppliers in bad standing excluded; the testdata has no comment
-    column, so negative account balance stands in for the spec's
-    Customer-Complaints predicate — same NOT-IN-subquery shape).
-    (Array-probe slot rotation: `array_stats_embeddings`'s array
-    size/min/max surface stays covered by similarity_topk_for_vec0's
-    oracle-checked array arithmetic and the scalar suite.)
 
-    Spark plan: the NOT IN decorrelates to a LEFT ANTI join
-    (s_suppkey is never null, so NOT-IN's three-valued-logic trap is
-    vacuous — both engines agree); ONE countDistinct avoids the
-    Expand multi-distinct plan; the part filters (brand/type/size-set)
-    push to the scan before the bridge join."""
-    ps = partsupp(spark, sf_dir)
-    p = table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#13")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 36)
-    )
-    bad = (
-        table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select("s_suppkey")
-    )
-    return (
-        ps.join(p, ps.ps_partkey == p.p_partkey)
-        .join(bad, ps.ps_suppkey == bad.s_suppkey, "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
+# TPC-H Q9: profit by supplier nation and order year for one product
+# family — the 6-relation star whose fact joins the bridge table on
+# BOTH keys (lineitem ⋈ partsupp on (partkey, suppkey)), the
+# cost-of-goods join every real margin query runs. (Rotated in for
+# `topk_expensive_lineitems`.) Profit goes through the decimal-sum
+# contract; full result ordered by (nation, year desc), no limit. Plan:
+# the selective '%gear%' part filter joins partsupp FIRST (with CBO
+# off, Catalyst keeps the written join order, so filtering the bridge
+# before the fact join shrinks every downstream shuffle ~25×); only
+# THEN does the two-key equi-join shuffle lineitem once on (partkey,
+# suppkey); nation broadcasts (bounded); supplier/orders/part are
+# row-scaled — no hints, AQE decides.
+#
+# Semi-join prune (r13): the '%gear%' filter keeps ~5% of parts, so 95%
+# of lineitem rows can never match the bridge — drop them against the
+# filtered part key list BEFORE lineitem enters the join tree,
+# shrinking the relation built over lineitem ~20x (A/B: 0.71-0.76 s vs
+# 1.07-1.16 s warm min-of-5). UNHINTED deliberately: the filtered part
+# list is row-scaled, so the planner broadcasts it while it fits and
+# falls back to a shuffled semi whose extra shuffle carries only
+# lineitem's join keys. The oracle keeps the plain star.
 _Q9_AMOUNT = (
     "l.l_extendedprice * (1 - l.l_discount) "
     "- ps.ps_supplycost * l.l_quantity"
 )
 
-
-def _q9_oracle() -> str:
-    from gus_spark.functions.deterministic import sql_dsum
-
-    return (
-        PARTSUPP_SQL
-        + f"""
+register_sql(
+    "q9_product_type_profit",
+    _PARTSUPP_EXPLODE
+    + f"""
+    , gear AS (SELECT p_partkey FROM {{part}} WHERE p_name LIKE '%gear%')
+    SELECT /*+ BROADCAST(n) */ n.n_name AS nation,
+           CAST(YEAR(o.o_orderdate) AS BIGINT) AS o_year,
+           {sql_dsum(_Q9_AMOUNT)} AS sum_profit
+    FROM partsupp ps
+    JOIN gear p ON ps.ps_partkey = p.p_partkey
+    JOIN (SELECT * FROM {{lineitem}}
+          SEMI JOIN gear ON l_partkey = gear.p_partkey) l
+      ON l.l_partkey = ps.ps_partkey AND l.l_suppkey = ps.ps_suppkey
+    JOIN {{supplier}} s ON ps.ps_suppkey = s.s_suppkey
+    JOIN {{orders}} o ON l.l_orderkey = o.o_orderkey
+    JOIN {{nation}} n ON s.s_nationkey = n.n_nationkey
+    GROUP BY nation, o_year
+    ORDER BY nation, o_year DESC
+    """,
+    oracle=_PARTSUPP_ORACLE
+    + f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
            {sql_dsum(_Q9_AMOUNT)} AS sum_profit
@@ -237,82 +231,45 @@ def _q9_oracle() -> str:
     WHERE p.p_name LIKE '%gear%'
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC
-    """
-    )
+    """,
+)
 
-
-@register("q9_product_type_profit", oracle=_q9_oracle())
-def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9: profit by supplier nation and order year for one
-    product family — the 6-relation star whose fact joins the bridge
-    table on BOTH keys (lineitem ⋈ partsupp on (partkey, suppkey)),
-    the cost-of-goods join every real margin query runs. (Rotated in
-    for `topk_expensive_lineitems`, whose scan-pushdown and
-    TakeOrderedAndProject claims stay pinned on q6/point_lookup and
-    q2/q18 respectively in test_plans.py.)
-
-    Determinism: profit = extended*(1-disc) − supplycost*qty goes
-    through the repo's decimal-sum contract (dsum — exact,
-    order-independent, identical to the oracle's sql_dsum); full
-    result ordered by (nation, year desc), no limit. Plan: the
-    selective '%gear%' part filter joins partsupp FIRST (the q20
-    pattern — with CBO off, Catalyst preserves the written join
-    order, so filtering the bridge before the fact join shrinks
-    every downstream shuffle ~25×); only THEN does the two-key
-    equi-join shuffle lineitem once on (partkey, suppkey); nation
-    broadcasts (bounded); supplier/orders/part are row-scaled — no
-    hints, AQE decides."""
-    from gus_spark.functions.deterministic import dsum
-
-    ps = partsupp(spark, sf_dir)
-    li = table(spark, sf_dir, "lineitem")
-    p = table(spark, sf_dir, "part").filter(
-        F.col("p_name").like("%gear%")
-    ).select("p_partkey")
-    # semi-join prune (r13, guide §3.2): the '%gear%' part filter
-    # keeps ~5% of parts, so 95% of lineitem rows can never match the
-    # bridge — drop them against the already-filtered part key list
-    # BEFORE lineitem enters the join tree, shrinking the relation
-    # built over lineitem ~20x. Identical rows (the inner joins
-    # dropped those rows anyway; A/B: 0.71-0.76 s vs 1.07-1.16 s warm
-    # min-of-5). UNHINTED deliberately: the filtered part list is
-    # row-scaled (no forced broadcast on row-scaled sides — the plan
-    # guard in test_plans.py), so the planner broadcasts it while it
-    # fits and falls back to a shuffled semi whose extra shuffle
-    # carries only lineitem's join keys — worst case ~keys-width of
-    # one lineitem pass for a 20x cut in the rows every downstream
-    # join touches.
-    li = li.join(
-        p, F.col("l_partkey") == F.col("p_partkey"), "leftsemi"
-    )
-    s = table(spark, sf_dir, "supplier")
-    o = table(spark, sf_dir, "orders")
-    n = table(spark, sf_dir, "nation")
-    amount = F.col("l_extendedprice") * (
-        F.lit(1) - F.col("l_discount")
-    ) - F.col("ps_supplycost") * F.col("l_quantity")
-    return (
-        ps.join(p, ps.ps_partkey == p.p_partkey)
-        .join(
-            li,
-            (li.l_partkey == ps.ps_partkey)
-            & (li.l_suppkey == ps.ps_suppkey),
-        )
-        .join(s, ps.ps_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-        )
-        .agg(dsum(amount).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
-
-
-@register(
+# TPC-H Q11: parts whose stock value at one nation's suppliers exceeds a
+# fraction of the nation's total stock value — group aggregate compared
+# against an uncorrelated GLOBAL scalar aggregate of the same derived
+# table (the value-share shape). Stock value is computed in integer
+# CENTS (round(supplycost*100) recovers the synthesis' exact cents;
+# cents × availqty sums as BIGINT — order-free), the filter is a pure
+# integer cross-multiply (value·1000 > total·3, i.e. share > 0.3%), and
+# only the final output divides by 100.0 (exact: the sums stay far below
+# 2^53). The q22 uncorrelated-scalar pattern: the 1-row global total
+# broadcasts into a filter, never a per-group correlated pass. The
+# valued subplan is re-derived on both sides (Catalyst doesn't CSE
+# across the self-aggregate), which is fine HERE because it is
+# dimension-sized (parts × 4, filtered to one nation's suppliers). The
+# oracle keeps the textbook HAVING against a scalar subquery.
+register_sql(
     "q11_important_stock",
-    oracle=PARTSUPP_SQL
+    _PARTSUPP_EXPLODE
+    + """
+    , valued AS (
+      SELECT /*+ BROADCAST(n) */ ps.ps_partkey,
+             CAST(ROUND(ps.ps_supplycost * 100) AS BIGINT)
+               * ps.ps_availqty AS value_cents
+      FROM partsupp ps
+      JOIN {supplier} s ON ps.ps_suppkey = s.s_suppkey
+      JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+      WHERE n.n_name = 'NATION_15'
+    )
+    SELECT /*+ BROADCAST(total) */ ps_partkey,
+           CAST(vc AS DOUBLE) / 100.0 AS part_value
+    FROM (SELECT ps_partkey, SUM(value_cents) AS vc
+          FROM valued GROUP BY ps_partkey) per_part
+    CROSS JOIN (SELECT SUM(value_cents) AS total_cents FROM valued) total
+    WHERE vc * 1000 > total_cents * 3
+    ORDER BY part_value DESC, ps_partkey
+    """,
+    oracle=_PARTSUPP_ORACLE
     + """
     , valued AS (
       SELECT ps.ps_partkey,
@@ -333,59 +290,44 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY part_value DESC, ps_partkey
     """,
 )
-def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11: parts whose stock value at one nation's suppliers
-    exceeds a fraction of the nation's total stock value — group
-    aggregate HAVING-compared against an uncorrelated GLOBAL scalar
-    aggregate of the same derived table (the value-share shape;
-    unblocked by the synthesized partsupp like q2/q16/q20).
 
-    Determinism: stock value is computed in integer CENTS
-    (round(supplycost*100) recovers the synthesis' exact cents; cents
-    × availqty sums as BIGINT — order-free), the HAVING is a pure
-    integer cross-multiply (value·1000 > total·3, i.e. share >
-    0.3%), and only the final output divides by 100.0 (exact: the
-    sums stay far below 2^53). Spark plan: the q22
-    uncorrelated-scalar pattern — the 1-row global total broadcasts
-    into a filter, never a per-group correlated pass. The valued
-    subplan is re-derived on both sides (Catalyst doesn't CSE across
-    the self-aggregate), which is fine HERE because it is
-    dimension-sized (parts × 4, filtered to one nation's suppliers);
-    were it fact-sized, the cure is one persisted/checkpointed
-    intermediate."""
-    ps = partsupp(spark, sf_dir)
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation").filter(
-        F.col("n_name") == "NATION_15"
-    )
-    valued = (
-        ps.join(s, ps.ps_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select(
-            "ps_partkey",
-            (
-                F.round(F.col("ps_supplycost") * 100).cast("long")
-                * F.col("ps_availqty")
-            ).alias("value_cents"),
-        )
-    )
-    total = valued.agg(F.sum("value_cents").alias("total_cents"))
-    return (
-        valued.groupBy("ps_partkey")
-        .agg(F.sum("value_cents").alias("vc"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("vc") * 1000 > F.col("total_cents") * 3)
-        .select(
-            "ps_partkey",
-            (F.col("vc").cast("double") / 100.0).alias("part_value"),
-        )
-        .orderBy(F.desc("part_value"), "ps_partkey")
-    )
-
-
-@register(
+# TPC-H Q20: suppliers holding more than half a year's shipped quantity
+# of some 'bolt' part — the correlated half-sum semi-join (the
+# subquery's aggregate is correlated on BOTH bridge keys), written in
+# its decorrelated form: one (partkey, suppkey) group-by over the
+# DATE-PRUNED lineitem scan, a two-key bridge join, and the outer IN as
+# a LEFT SEMI into supplier. (Agg-on-agg slot rotation:
+# `events_daily_from_hourly`'s shape stays covered by
+# events_hourly_rollup + q13's count-of-counts.) The sum runs as
+# DECIMAL, so half_qty is bit-identical on both engines regardless of
+# partition order; 0.5 * x is an exact binary scale. The oracle keeps
+# the textbook IN subquery.
+register_sql(
     "q20_excess_stock_suppliers",
-    oracle=PARTSUPP_SQL
+    _PARTSUPP_EXPLODE
+    + f"""
+    , qty AS (
+      SELECT l_partkey, l_suppkey,
+             0.5 * {sql_dsum('l_quantity')} AS half_qty
+      FROM {{lineitem}}
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        AND l_shipdate < TIMESTAMP '1997-01-01'
+      GROUP BY l_partkey, l_suppkey
+    )
+    SELECT /*+ BROADCAST(n) */ s.s_suppkey, s.s_name, n.n_name
+    FROM {{supplier}} s
+    SEMI JOIN (
+      SELECT ps.ps_suppkey
+      FROM partsupp ps
+      JOIN {{part}} p ON ps.ps_partkey = p.p_partkey
+      JOIN qty q ON ps.ps_partkey = q.l_partkey
+                AND ps.ps_suppkey = q.l_suppkey
+      WHERE p.p_name LIKE '%bolt%' AND ps.ps_availqty > q.half_qty
+    ) excess ON s.s_suppkey = excess.ps_suppkey
+    JOIN {{nation}} n ON s.s_nationkey = n.n_nationkey
+    ORDER BY s.s_name
+    """,
+    oracle=_PARTSUPP_ORACLE
     + """
     , qty AS (
       SELECT l_partkey, l_suppkey,
@@ -411,55 +353,3 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s.s_name
     """,
 )
-def q20_excess_stock_suppliers(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q20: suppliers holding more than half a year's shipped
-    quantity of some 'bolt' part — the correlated half-sum semi-join
-    (the subquery's aggregate is correlated on BOTH bridge keys).
-    (Agg-on-agg slot rotation: `events_daily_from_hourly`'s
-    re-aggregate-the-pre-aggregate shape stays covered by
-    events_hourly_rollup's time-bucket agg + q13's count-of-counts
-    second-level aggregation.)
-
-    Spark plan: the correlated sum decorrelates into one (partkey,
-    suppkey) groupBy over the DATE-PRUNED lineitem scan (the ship-year
-    filter is pushed to parquet); the bridge x qty join is a two-key
-    equi-join; the outer IN becomes LEFT SEMI into supplier. The sum
-    runs as DECIMAL (dsum) so half_qty is bit-identical to the oracle
-    regardless of partition order; 0.5 * x is an exact binary scale."""
-    from gus_spark.functions.deterministic import dsum
-
-    ps = partsupp(spark, sf_dir)
-    li = table(spark, sf_dir, "lineitem")
-    qty = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .groupBy("l_partkey", "l_suppkey")
-        .agg((F.lit(0.5) * dsum("l_quantity")).alias("half_qty"))
-    )
-    bolts = (
-        table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%bolt%"))
-        .select("p_partkey")
-    )
-    excess = (
-        ps.join(bolts, ps.ps_partkey == bolts.p_partkey)
-        .join(
-            qty,
-            (ps.ps_partkey == qty.l_partkey)
-            & (ps.ps_suppkey == qty.l_suppkey),
-        )
-        .filter(F.col("ps_availqty") > F.col("half_qty"))
-        .select("ps_suppkey")
-    )
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-    return (
-        s.join(excess, s.s_suppkey == excess.ps_suppkey, "left_semi")
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("s_suppkey", "s_name", "n_name")
-        .orderBy("s_name")
-    )

@@ -10,61 +10,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gus_spark.functions.deterministic import dsum, sql_dsum
-from gus_spark.queries import register, table
+from gus_spark.functions.deterministic import sql_dsum
+from gus_spark.queries import register, register_sql, table
 
 SESSION_GAP_MIN = 30
 
-_NANOS_PER_HOUR = 3_600_000_000_000
-_MICROS_PER_HOUR = 3_600_000_000
-
-
-def _events_with_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events with an ``hour_start`` bucket, skipping the per-row
-    nanos→micros timestamp conversion when the raw column is bigint
-    nanos: ``timestamp_micros((ts DIV ns_per_hour) * us_per_hour)`` ==
-    ``date_trunc('hour', micros_ts)`` for post-epoch timestamps (the
-    events domain), and benches ~40% faster at sf0.1 because the scan
-    feeds the aggregate a long instead of converting every row to a
-    timestamp first (measured 0.47s vs 0.78s)."""
-    from gus_spark.queries import _read
-
-    df = _read(spark, f"{sf_dir}/events.parquet")
-    if dict(df.dtypes).get("ts") == "bigint":
-        hour = F.timestamp_micros(
-            (F.expr(f"ts DIV {_NANOS_PER_HOUR}") * F.lit(_MICROS_PER_HOUR))
-            .cast("long")
-        )
-        return df.withColumn("hour_start", hour)
-    return df.withColumn(
-        "hour_start", F.date_trunc("hour", F.col("ts"))
-    )
-
-
-@register(
+# Tumbling-window rollup (batch twin of the streaming windowed agg).
+register_sql(
     "events_hourly_rollup",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS hour_start, event_type,
+    f"""
+    SELECT hour_start, event_type,
            COUNT(*) AS n_events,
            {sql_dsum('value')} AS total_value,
            COUNT(DISTINCT user_id) AS n_users
-    FROM events
-    GROUP BY 1, 2
+    FROM (SELECT *, date_trunc('hour', ts) AS hour_start FROM {{events}})
+    GROUP BY hour_start, event_type
     """,
 )
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window rollup (batch twin of the streaming windowed
-    agg). Buckets straight from the raw nanos column — see
-    ``_events_with_hour`` for the measured win."""
-    return (
-        _events_with_hour(spark, sf_dir)
-        .groupBy("hour_start", "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            dsum("value").alias("total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
 
 
 @register(
@@ -105,9 +67,12 @@ def events_lag_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Gap-based sessionization: lag -> new-session flag -> running sum as
+# session id -> per-session aggregates. One shuffle on user_id; the
+# windows and the aggregation reuse the same partitioning.
+register_sql(
     "events_sessionization",
-    oracle=f"""
+    f"""
     WITH marked AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
@@ -116,7 +81,7 @@ def events_lag_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                   OR LAG(ts) OVER (PARTITION BY user_id
                                    ORDER BY ts, event_id) IS NULL
                   THEN 1 ELSE 0 END AS is_new
-      FROM events
+      FROM {{events}}
     ), sessions AS (
       SELECT user_id, ts, event_id, value,
              CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -133,37 +98,6 @@ def events_lag_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, session_seq
     """,
 )
-def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization: lag -> new-session flag -> running sum
-    as session id -> per-session aggregates. One shuffle on user_id; the
-    window and the aggregation reuse the same partitioning."""
-    order = [F.col("ts"), F.col("event_id")]
-    w_lag = Window.partitionBy("user_id").orderBy(*order)
-    w_run = w_lag.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e = table(spark, sf_dir, "events")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w_lag)
-    marked = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.when(gap_us.isNull() | (gap_us > SESSION_GAP_MIN * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    sessions = marked.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.sum("is_new").over(w_run).cast("long").alias("session_seq"),
-    )
-    return sessions.groupBy("user_id", "session_seq").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        dsum("value").alias("session_value"),
-    )
 
 
 # (events_user_funnel was rotated out: its FILTER-count conditional-agg

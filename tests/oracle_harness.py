@@ -2,6 +2,11 @@
 queries() entry on Spark and its oracle_sql() twin on DuckDB at sf0.01,
 compare row count + column names + order-insensitive values.
 
+Each row is tagged with what its match checks: ``same-text`` (Spark and
+DuckDB run one SQL text, so a match checks the two engines agree on
+it), ``independent`` (the Spark definition differs from the oracle
+text) or ``rows`` (no oracle: the query only has to run).
+
 Usage: python tests/oracle_harness.py [query_name ...]
 Exit code 0 iff every compared query matches exactly.
 """
@@ -70,6 +75,7 @@ def main(argv: list[str]) -> int:
     import duckdb
 
     import __spark_entry__ as e
+    from gus_spark.queries import catalog
     from gus_spark.session import get_spark
 
     spark = get_spark(app_name="oracle-harness", master="local[8]",
@@ -80,50 +86,59 @@ def main(argv: list[str]) -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    qs, oracles = e.queries(), e.oracle_sql()
+    qs, oracles, specs = e.queries(), e.oracle_sql(), catalog()
     selected = argv or sorted(qs)
     failures, rows_only = [], []
+    tags = {
+        name: "rows" if name not in oracles
+        else "same-text" if specs[name].text == oracles[name]
+        else "independent"
+        for name in selected
+    }
     for name in selected:
         t0 = time.time()
         try:
             sdf = qs[name](spark, SF_DIR).toPandas()
         except Exception as ex:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL  {name}: spark raised {type(ex).__name__}: {ex}")
+            print(f"FAIL  {name}: spark raised {type(ex).__name__}: {ex}  [{tags[name]}]")
             continue
         if name not in oracles:
             rows_only.append(name)
-            print(f"rows  {name}: {len(sdf)} rows (no oracle)")
+            print(f"rows  {name}: {len(sdf)} rows (no oracle)  [rows]")
             continue
         try:
             odf = con.execute(oracles[name]).df()
         except Exception as ex:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL  {name}: duckdb raised {type(ex).__name__}: {ex}")
+            print(f"FAIL  {name}: duckdb raised {type(ex).__name__}: {ex}  [{tags[name]}]")
             continue
         scols, srows = frame_key(sdf)
         ocols, orows = frame_key(odf)
         dt = time.time() - t0
         if scols != ocols:
             failures.append(name)
-            print(f"FAIL  {name}: columns {scols} != {ocols}")
+            print(f"FAIL  {name}: columns {scols} != {ocols}  [{tags[name]}]")
         elif len(srows) != len(orows):
             failures.append(name)
-            print(f"FAIL  {name}: row count {len(srows)} != {len(orows)}")
+            print(f"FAIL  {name}: row count {len(srows)} != {len(orows)}  [{tags[name]}]")
         elif srows != orows:
             failures.append(name)
             diffs = [
                 (a, b) for a, b in zip(srows, orows) if a != b
             ][:3]
-            print(f"FAIL  {name}: values differ; first diffs (spark vs duck):")
+            print(f"FAIL  {name}: values differ; first diffs (spark vs duck):  [{tags[name]}]")
             for a, b in diffs:
                 print(f"      {a}\n   != {b}")
         else:
-            print(f"ok    {name}: {len(srows)} rows  [{dt:.1f}s]")
+            print(f"ok    {name}: {len(srows)} rows  [{dt:.1f}s]  [{tags[name]}]")
     print(
         f"\n{len(selected) - len(failures)}/{len(selected)} matched"
         f" ({len(rows_only)} rows-only)"
     )
+    counts = [list(tags.values()).count(t)
+              for t in ("same-text", "independent", "rows")]
+    print("checks: {} same-text, {} independent, {} rows".format(*counts))
     return 1 if failures else 0
 
 

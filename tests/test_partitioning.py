@@ -48,9 +48,13 @@ def test_bucketed_partsupp_bridge_join_no_exchange(spark):
     sourcing query materializes BOTH bucketed by the part key once,
     and every subsequent join is a SortMergeJoin with ZERO exchanges —
     the synthesis cost is paid once, the shuffle never again."""
-    from gus_spark.queries.bridge import partsupp
+    from gus_spark.queries.bridge import PARTSUPP_SQL
 
-    ps = partsupp(spark, SF_DIR)
+    ps = spark.sql(
+        PARTSUPP_SQL + "SELECT * FROM partsupp",
+        part=table(spark, SF_DIR, "part"),
+        supplier=table(spark, SF_DIR, "supplier"),
+    )
     part = table(spark, SF_DIR, "part").withColumnRenamed(
         "p_partkey", "ps_partkey"
     )

@@ -180,22 +180,25 @@ def test_query_matches_oracle(spark, duck, name):
     assert frame_key(sdf) == frame_key(odf)
 
 
-def test_q1_leaves_no_temp_view(spark):
-    """q1 binds its input as a spark.sql DataFrame argument: no view
-    stays in the session catalog after the build or the collect."""
+@pytest.mark.parametrize(
+    "name", sorted(n for n, s in catalog().items() if s.text is not None)
+)
+def test_sql_query_leaves_no_temp_view(spark, name):
+    """A query defined as one SQL text binds its inputs as spark.sql
+    DataFrame arguments: no view stays in the session catalog after
+    the build or the collect."""
 
     def views():
-        return [
-            t.name for t in spark.catalog.listTables()
-            if t.isTemporary and "lineitem" in t.name
-            or t.name.startswith("_pyspark_")
-        ]
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    def leaked():
+        return [v for v in views() if v.startswith("_pyspark_") or v not in before]
 
     before = views()
-    df = catalog()["q1_pricing_summary"].fn(spark, SF_DIR)
-    assert views() == before
-    assert df.collect()
-    assert views() == before
+    df = catalog()[name].fn(spark, SF_DIR)
+    assert not leaked()
+    df.collect()
+    assert not leaked()
 
 
 def test_every_oracle_is_valid_duckdb(duck):
