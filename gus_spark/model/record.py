@@ -132,12 +132,9 @@ def add_null_values(record: dict, model: ModelDefinition) -> dict:
     return {name: record.get(name) for name in model.field_order}
 
 
-def records_to_df(
-    spark: "SparkSession", records: Iterable[dict], model: ModelDefinition
-) -> "DataFrame":
-    """Records (attr -> value dicts) as a DataFrame of the model's schema,
-    built from one Arrow table: a ``LocalTableScan`` that needs no
-    Python worker. ``Table.from_pylist`` accepts a None in a
+def records_to_table(records: Iterable[dict], model: ModelDefinition):
+    """Records (attr -> value dicts) as one ``pyarrow.Table`` of the
+    model's schema. ``Table.from_pylist`` accepts a None in a
     non-nullable field silently, so the nullability check that
     ``createDataFrame``'s row path made is done here: a null in a
     non-nullable column or array element raises ValueError."""
@@ -145,8 +142,8 @@ def records_to_df(
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = model.to_struct_type()
-    table = pa.Table.from_pylist(list(records), schema=to_arrow_schema(schema))
+    schema = to_arrow_schema(model.to_struct_type())
+    table = pa.Table.from_pylist(list(records), schema=schema)
     for field, column in zip(table.schema, table.columns):
         nulls = 0 if field.nullable else column.null_count
         if pa.types.is_list(field.type) and not field.type.value_field.nullable:
@@ -155,7 +152,18 @@ def records_to_df(
             raise ValueError(
                 f"{model.model_name}.{field.name}: null in a non-nullable field"
             )
-    return spark.createDataFrame(table, schema)
+    return table
+
+
+def records_to_df(
+    spark: "SparkSession", records: Iterable[dict], model: ModelDefinition
+) -> "DataFrame":
+    """Records as a DataFrame of the model's schema, built from one
+    Arrow table (``records_to_table``): a ``LocalTableScan`` that needs
+    no Python worker."""
+    return spark.createDataFrame(
+        records_to_table(records, model), model.to_struct_type()
+    )
 
 
 def parse_uri_id(id_str: str, model: ModelDefinition) -> Any:

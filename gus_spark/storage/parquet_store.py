@@ -18,24 +18,21 @@ like a miniature table format:
 - ``create_one``/``create_many`` are O(new rows): they write ONE new
   parquet delta file and a new manifest referencing old files + the new
   one — not a table rewrite (the reference is O(database) per insert);
-- ``update_one``/``delete_one`` rewrite only data files whose parquet
-  row-group stats may contain the key (pruned via per-file min/max of the
-  pk captured in the manifest), so point mutations touch O(one file);
-- each file's manifest entry (row count, pk min/max) is read from the
-  parquet footer the write just produced, not by a Spark aggregate (a
-  ``Float`` pk keeps the aggregate: parquet stats skip NaN);
+- ``update_one``/``delete_one`` read the files whose manifest pk
+  [lo, hi] may hold the key one at a time and rewrite only the one
+  that does, so point mutations touch O(one file);
 - the serving path reads through one Arrow reader on the driver
   (``_scan``: a ``pyarrow.dataset`` over the listed manifest files with
   the model's declared schema). A point read (``read_one``), a keyset
   page (``scan_page``) and a create's duplicate check scan only the
   files whose [lo, hi] may hold the keys, with the predicate pushed
   into the scan, and cost no Spark job;
-- so a point mutation pays one Spark job, its data-file write (a
-  ``Float`` pk adds its per-file aggregate). A delete that empties its
-  file writes nothing and costs none. Records become a DataFrame
-  through one Arrow table, a local scan with no Python worker. Work
-  that needs a whole snapshot — ``read_df``, compaction, migration —
-  stays on Spark;
+- record-level writes (create, update, delete, ``upsert_many``/
+  ``apply_changes``) go through one Arrow writer on the driver
+  (``_write_table``): no Spark job, one file per batch, manifest stats
+  (row count, pk min/max) from the in-memory table. DataFrame-level
+  writes (``append_df``, compaction, migration) stay on Spark
+  (``_write_data_file``), with stats from the parquet footers;
 - ``compact()`` folds accumulated delta files back into evenly-sized
   files — the maintenance job a real deployment schedules.
 
@@ -66,7 +63,6 @@ except ImportError:  # pragma: no cover
     fcntl = None  # type: ignore[assignment]
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gus_spark.errors import (
     DuplicateKeyError,
@@ -79,6 +75,7 @@ from gus_spark.model.record import (
     parse_record,
     parse_uri_id,
     records_to_df,
+    records_to_table,
 )
 from gus_spark.model.types import ModelDefinition
 
@@ -156,10 +153,33 @@ class ParquetStore:
         os.replace(tmp, os.path.join(table, "CURRENT"))
 
     # ------------------------------------------------------------------ io
+    def _write_table(self, table: pa.Table, model: ModelDefinition) -> list[dict]:
+        """Write ``table`` as one parquet file with no Spark job; return
+        its manifest entry ([] for zero rows: nothing is written). Only
+        scalar non-float columns get min/max: parquet's float stats skip
+        NaN, and Spark's pushdown would trust them and drop the NaN rows
+        it ranks above every number. Readers pass the model's schema, so
+        no ARROW:schema."""
+        if not len(table):
+            return []
+        out = os.path.join(self._table_dir(model), f"data-{uuid.uuid4().hex}")
+        os.makedirs(out)
+        path = os.path.join(out, "part-00000.parquet")
+        with_stats = [
+            f.name for f in table.schema
+            if not (pa.types.is_floating(f.type) or pa.types.is_list(f.type))
+        ]
+        pq.write_table(
+            table, path, store_schema=False, write_statistics=with_stats
+        )
+        n, lo, hi = _pk_stats(table[model.primary_key])
+        return [{"path": path, "lo": lo, "hi": hi, "rows": n}]
+
     def _write_data_file(self, df: DataFrame, model: ModelDefinition) -> list[dict]:
         """Write df as parquet under the table dir (one Spark job); return
         file entries with per-file row count and pk min/max for
-        manifest-level pruning, read from each file's parquet footer."""
+        manifest-level pruning, read from each file's parquet footer
+        (a ``Float`` pk reads its column instead)."""
         table = self._table_dir(model)
         os.makedirs(table, exist_ok=True)
         out = os.path.join(table, f"data-{uuid.uuid4().hex}")
@@ -171,26 +191,13 @@ class ParquetStore:
             if not fname.endswith(".parquet"):
                 continue
             path = os.path.join(out, fname)
-            # parquet stats skip NaN while Spark's max ranks it highest,
-            # so a Float pk keeps Spark's aggregate
+            # parquet stats skip NaN, so a Float pk reads its column
             stats = None if float_pk else _footer_stats(path, pk)
-            if stats is None:
-                row = (
-                    self.spark.read.parquet(path)
-                    .agg(F.count(F.lit(1)), F.min(pk), F.max(pk))
-                    .first()
-                )
-                stats = tuple(row)
-            n, lo, hi = stats
-            if n == 0:
+            n, lo, hi = stats or _pk_stats(pq.read_table(path, columns=[pk])[pk])
+            if n:
                 # a zero-row file has no stats, so pruning would treat
                 # it as must-scan forever; never manifest it
-                continue
-            if lo != lo or hi != hi:
-                # a NaN bound compares false with every key; leave the
-                # file unbounded (always scanned) instead
-                lo = hi = None
-            entries.append({"path": path, "lo": lo, "hi": hi, "rows": n})
+                entries.append({"path": path, "lo": lo, "hi": hi, "rows": n})
         return entries
 
     def read_df(
@@ -260,7 +267,7 @@ class ParquetStore:
             return []
         pk = model.primary_key
         keys = [r[pk] for r in records]
-        if len(set(keys)) != len(keys):
+        if _repeats(keys):
             raise DuplicateKeyError("duplicate primary keys within batch")
         with self._write_lock(model):
             manifest = self._current_manifest(model)
@@ -281,8 +288,8 @@ class ParquetStore:
                         f"record with primary key already exists, use PUT"
                         f" to update (key={clash[0].as_py()!r})"
                     )
-            new_files = self._write_data_file(
-                records_to_df(self.spark, records, model), model
+            new_files = self._write_table(
+                records_to_table(records, model), model
             )
             manifest["files"] = manifest["files"] + new_files
             self._commit(model, manifest, op="insert")
@@ -387,7 +394,7 @@ class ParquetStore:
             for attr in patch_attrs:
                 merged[attr] = supplied[attr]
             merged[model.primary_key] = key  # URI wins (model.rs:85-86)
-            self._rewrite_key(model, key, replacement=merged)
+            self._apply_locked(model, [merged], [])
         return add_null_values(merged, model)
 
     def delete_one(self, model: ModelDefinition, id_str: str) -> dict:
@@ -395,38 +402,8 @@ class ParquetStore:
         key = parse_uri_id(id_str, model)
         with self._write_lock(model):
             stored = self.read_one(model, id_str)
-            self._rewrite_key(model, key, replacement=None)
+            self._apply_locked(model, [], [key])
         return stored
-
-    def _rewrite_key(
-        self, model: ModelDefinition, key: Any, replacement: dict | None
-    ) -> None:
-        """Rewrite only the data files whose pk range may contain ``key``;
-        untouched files carry over into the new manifest by reference."""
-        manifest = self._current_manifest(model)
-        touched = _files_holding_any(manifest["files"], [key])
-        new_files = [f for f in manifest["files"] if f not in touched]
-        if touched:
-            df = self.spark.read.schema(model.to_struct_type()).parquet(
-                *[f["path"] for f in touched]
-            )
-            remain = df.filter(F.col(model.primary_key) != F.lit(key))
-            if replacement is not None:
-                remain = remain.unionByName(
-                    records_to_df(self.spark, [replacement], model)
-                )
-            # rows left, exact: the caller's read_one just proved ``key``
-            # present in these files and the pk is unique
-            rows = sum(f["rows"] for f in touched) - 1
-            if rows or replacement is not None:
-                new_files += self._write_data_file(remain, model)
-        elif replacement is not None:
-            new_files += self._write_data_file(
-                records_to_df(self.spark, [replacement], model), model
-            )
-        manifest["files"] = new_files
-        self._commit(model, manifest)
-        self._gc(model)
 
     def upsert_many(
         self, model: ModelDefinition, bodies: Iterable[str | dict]
@@ -445,11 +422,11 @@ class ParquetStore:
         """CDC apply: upserts + deletes in ONE commit (the Delta
         ``MERGE WHEN MATCHED/NOT MATCHED`` shape).
 
-        Only data files whose pk [min,max] range overlaps an affected
-        key are rewritten; all others carry into the new manifest by
-        reference — at scale a batch touching one key range rewrites
-        one file out of millions. ``upserts`` must be pre-validated
-        records (``parse_record`` output).
+        Only data files that hold an affected key are rewritten; all
+        others carry into the new manifest by reference — at scale a
+        batch touching one key range rewrites one file out of millions.
+        ``upserts`` must be pre-validated records (``parse_record``
+        output).
         """
         upserts = list(upserts or [])
         deletes = list(deletes or [])
@@ -457,28 +434,45 @@ class ParquetStore:
             return []
         pk = model.primary_key
         keys = [r[pk] for r in upserts] + deletes
-        if len(set(keys)) != len(keys):
+        if _repeats(keys):
             raise DuplicateKeyError("conflicting keys within change batch")
         with self._write_lock(model):
-            manifest = self._current_manifest(model)
-            touched = _files_holding_any(manifest["files"], keys)
-            new_files = [f for f in manifest["files"] if f not in touched]
-            survivors = None
-            if touched:
-                df = self.spark.read.schema(model.to_struct_type()).parquet(
-                    *[f["path"] for f in touched]
-                )
-                survivors = df.filter(~F.col(pk).isin(keys))
-            if upserts:
-                fresh = records_to_df(self.spark, upserts, model)
-                survivors = (
-                    fresh if survivors is None else survivors.unionByName(fresh)
-                )
-            if survivors is not None:
-                new_files += self._write_data_file(survivors, model)
-            manifest["files"] = new_files
-            self._commit(model, manifest)
+            self._apply_locked(model, upserts, deletes)
         return upserts
+
+    def _apply_locked(
+        self, model: ModelDefinition, upserts: list[dict], deletes: list
+    ) -> None:
+        """Commit ``upserts`` and ``deletes`` as one snapshot with no
+        Spark job; the caller holds the write lock. Each range candidate
+        is read alone and kept by reference unless it holds an affected
+        key; then it is rewritten without those rows plus the upserts
+        of its keys. The other upserts go to one new file."""
+        pk = model.primary_key
+        keys = [r[pk] for r in upserts] + deletes
+        unplaced = records_to_table(upserts, model)
+        key_set = pa.array(keys, type=unplaced.schema.field(pk).type)
+        manifest = self._current_manifest(model)
+        candidates = {id(f) for f in _files_holding_any(manifest["files"], keys)}
+        files = []
+        for f in manifest["files"]:
+            if id(f) in candidates:
+                table = self._scan(model, [f], None)
+                # is_in matches NaN to NaN, as Spark's IN does
+                hit = pc.is_in(table[pk], value_set=key_set)
+                if pc.any(hit).as_py():
+                    mine = pc.is_in(unplaced[pk], value_set=table[pk])
+                    files += self._write_table(
+                        pa.concat_tables(
+                            [table.filter(pc.invert(hit)), unplaced.filter(mine)]
+                        ),
+                        model,
+                    )
+                    unplaced = unplaced.filter(pc.invert(mine))
+                    continue
+            files.append(f)
+        manifest["files"] = files + self._write_table(unplaced, model)
+        self._commit(model, manifest)
 
     def append_df(
         self,
@@ -629,6 +623,16 @@ class ParquetStore:
         return self.read_df(model).count()
 
 
+def _pk_stats(keys) -> tuple[int, Any, Any]:
+    """(rows, min, max) of a pk column. A column holding NaN gets no
+    bounds (Arrow's min/max skip NaN, which Spark ranks highest), so
+    its file is always scanned."""
+    if pa.types.is_floating(keys.type) and pc.any(pc.is_nan(keys)).as_py():
+        return len(keys), None, None
+    bounds = pc.min_max(keys)
+    return len(keys), bounds["min"].as_py(), bounds["max"].as_py()
+
+
 def _footer_stats(path: str, pk: str) -> tuple[int, Any, Any] | None:
     """(rows, min pk, max pk) of one parquet file from its footer, with
     no Spark job; None when a non-empty row group lacks pk min/max."""
@@ -717,6 +721,12 @@ def _like_pattern(pattern: str) -> str:
                 f" may not {where}"
             )
     return pattern
+
+
+def _repeats(keys: list) -> bool:
+    """Whether a key repeats. Every NaN is one key (NaN equals NaN as a
+    pk, as in Spark's IN), which a Python set alone would not see."""
+    return len({k if k == k else None for k in keys}) != len(keys)
 
 
 def _files_holding_any(files: list[dict], keys: list) -> list[dict]:

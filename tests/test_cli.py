@@ -206,10 +206,11 @@ def test_maintain_command_reports_and_compacts(spark, tmp_path, capsys):
     wh = str(tmp_path / "wh")
     registry = ModelRegistry(str(models))
     store = ParquetStore(spark, wh)
-    store.create_many(
-        registry.get("movie"),
-        [{"id": i, "name": f"m{i}"} for i in range(1, 21)],
-    )
+    for first in range(1, 6):  # interleaved batches: one file each
+        store.create_many(
+            registry.get("movie"),
+            [{"id": i, "name": f"m{i}"} for i in range(first, 21, 5)],
+        )
     store.update_one(registry.get("movie"), "10", {"name": "x"})
 
     # churn left >4 delta files; a max-files threshold of 4 must

@@ -324,11 +324,13 @@ def test_maintain_compacts_only_when_degraded(store, movie_model):
     delta ranges), maintain() detects it from metadata alone and
     compacts + trims history; a second maintain() on the now-healthy
     table is a no-op (manifest seq unchanged by compaction)."""
-    store.create_many(
-        movie_model,
-        [dict(RECORD, id=i, name=f"m{i}") for i in range(1, 31)],
-    )
-    # churn: each update rewrites a wide-range file -> overlapping spans
+    # interleaved batches: one file each, with overlapping pk spans
+    for first in (1, 2, 3):
+        store.create_many(
+            movie_model,
+            [dict(RECORD, id=i, name=f"m{i}") for i in range(first, 31, 3)],
+        )
+    # churn: each update rewrites a wide-range file
     for key in ("5", "15", "25"):
         store.update_one(movie_model, key, {"name": "patched"})
     before = store.table_health(movie_model)
@@ -411,20 +413,38 @@ def test_footer_stats_span_row_groups(spark, tmp_path):
     assert _footer_stats(path, "id") == tuple(row)
 
 
-def test_float_pk_takes_the_aggregate_path(spark, store):
-    """parquet stats skip NaN while Spark ranks it above every number:
-    a Float pk keeps Spark's aggregate (one more job per file), and a
-    file holding NaN gets no bounds, so it is always scanned."""
+def test_float_pk_bounds_skip_nan(spark, store):
+    """A Float pk's bounds come from the written table with no Spark
+    job, and a file holding NaN (which Spark ranks above every number)
+    gets no bounds, so it is always scanned."""
     model = _pk_model("Float")
     _, n = spark_jobs(spark, lambda: store.create_many(model, [{"id": 1.5}]))
-    assert n > 1
+    assert n == 0
     [entry] = store._current_manifest(model)["files"]
     assert (entry["lo"], entry["hi"], entry["rows"]) == (1.5, 1.5, 1)
-    store.create_many(model, [{"id": 1.0}, {"id": 5.0}, {"id": float("nan")}])
+    _, n = spark_jobs(spark, lambda: store.create_many(
+        model, [{"id": 1.0}, {"id": 5.0}, {"id": float("nan")}]
+    ))
+    assert n == 0
+    assert store._current_manifest(model)["files"][-1]["lo"] is None
     assert store.read_one(model, "5.0")["id"] == 5.0
     assert math.isnan(store.read_one(model, "NaN")["id"])
     with pytest.raises(DuplicateKeyError):
         store.create_one(model, {"id": float("nan")})
+
+
+def test_nan_keys_repeat_within_a_batch(store):
+    """NaN equals NaN as a pk, so two NaN keys in one batch conflict
+    (two distinct float objects would pass a Python set)."""
+    model = _pk_model("Float")
+    with pytest.raises(DuplicateKeyError):
+        store.create_many(model, [{"id": float("nan")}, {"id": float("nan")}])
+    with pytest.raises(DuplicateKeyError):
+        store.apply_changes(
+            model, upserts=[{"id": float("nan"), "note": None}],
+            deletes=[float("nan")],
+        )
+    assert store._current_manifest(model)["files"] == []
 
 
 def test_zero_row_file_never_manifested(spark, store, movie_model):
@@ -451,11 +471,11 @@ def test_dup_check_prunes_by_file_ranges(spark, store, movie_model,
 
     monkeypatch.setattr(ParquetStore, "_scan", spy)
     # a key inside the file's [lo, hi] but absent: scanned on the Arrow
-    # reader, then created; the write is the only job
+    # reader, then created, all with no Spark job
     _, n = spark_jobs(
         spark, lambda: store.create_one(movie_model, dict(RECORD, id=15))
     )
-    assert (n, scanned) == (1, [1])
+    assert (n, scanned) == (0, [1])
     with pytest.raises(DuplicateKeyError):
         store.create_one(movie_model, dict(RECORD, id=20))
     with pytest.raises(DuplicateKeyError):
@@ -465,13 +485,13 @@ def test_dup_check_prunes_by_file_ranges(spark, store, movie_model,
     _, n = spark_jobs(
         spark, lambda: store.create_one(movie_model, dict(RECORD, id=31))
     )
-    assert (n, scanned) == (1, [])
+    assert (n, scanned) == (0, [])
     assert sorted(r.id for r in store.read_df(movie_model).collect()) == [
         10, 15, 20, 30, 31,
     ]
 
 
-def test_point_mutations_cost_one_write_job(spark, store, movie_model):
+def test_point_mutations_launch_no_spark_job(spark, store, movie_model):
     store.create_many(
         movie_model, [dict(RECORD, id=i, name=f"m{i}") for i in range(1, 41)]
     )
@@ -479,19 +499,57 @@ def test_point_mutations_cost_one_write_job(spark, store, movie_model):
     _, n = spark_jobs(
         spark, lambda: store.create_one(movie_model, dict(RECORD, id=41))
     )
-    assert n == 1
+    assert n == 0
     _, n = spark_jobs(
         spark, lambda: store.update_one(movie_model, "7", {"name": "patched"})
     )
-    assert n == 1  # the write; the pruned read_one runs on Arrow
+    assert n == 0
     _, n = spark_jobs(spark, lambda: store.delete_one(movie_model, "13"))
-    assert n <= 1
-    # a delete that empties its file writes nothing: no job at all
+    assert n == 0
+    # a delete that empties its file writes nothing
+    files = len(store._current_manifest(movie_model)["files"])
     _, n = spark_jobs(spark, lambda: store.delete_one(movie_model, "41"))
     assert n == 0
+    assert len(store._current_manifest(movie_model)["files"]) == files - 1
+    _, n = spark_jobs(spark, lambda: store.upsert_many(
+        movie_model, [dict(RECORD, id=8, name="up"), dict(RECORD, id=50)]
+    ))
+    assert n == 0
+    _, n = spark_jobs(spark, lambda: store.apply_changes(
+        movie_model, upserts=[dict(RECORD, id=9, name="cdc")], deletes=[1, 50]
+    ))
+    assert n == 0
     assert store.read_one(movie_model, "7")["name"] == "patched"
+    assert store.read_one(movie_model, "8")["name"] == "up"
+    assert store.read_one(movie_model, "9")["name"] == "cdc"
     health = store.table_health(movie_model)
-    assert health["n_rows"] == store.count(movie_model) == 39
+    assert health["n_rows"] == store.count(movie_model) == 38
+
+
+def test_rewrite_touches_only_the_file_holding_the_key(store, movie_model):
+    """Range candidates that do not hold the key stay by reference; a
+    replaced record stays in the file that held it, and fresh upserts
+    land together in one new file."""
+    for first in (1, 2):  # two files with overlapping spans
+        store.create_many(
+            movie_model, [dict(RECORD, id=i) for i in range(first, 21, 2)]
+        )
+    odd, even = store._current_manifest(movie_model)["files"]
+    store.update_one(movie_model, "7", {"name": "patched"})
+    files = store._current_manifest(movie_model)["files"]
+    assert even in files and odd not in files
+    [rewritten] = [f for f in files if f != even]
+    assert (rewritten["lo"], rewritten["hi"], rewritten["rows"]) == (1, 19, 10)
+    store.upsert_many(
+        movie_model, [dict(RECORD, id=k) for k in (30, 4, 31, 33)]
+    )
+    files = store._current_manifest(movie_model)["files"]
+    assert len(files) == 3 and rewritten in files and even not in files
+    assert [(f["lo"], f["hi"], f["rows"]) for f in files[1:]] == [
+        (2, 20, 10), (30, 33, 3),
+    ]
+    assert store.read_one(movie_model, "7")["name"] == "patched"
+    assert store.count(movie_model) == 23
 
 
 def test_records_to_df_rejects_nulls_in_non_nullable_fields(spark, movie_model):
