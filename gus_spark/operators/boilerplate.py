@@ -16,7 +16,7 @@ Two flagging tiers, one removal operator:
    aggregation — one exchange on the line value (uniform: lines hash
    like content digests), map-side partial agg, a single DISTINCT
    aggregate (no Expand plan: only one distinct agg in the mix).
-   DuckDB twin `sql_boilerplate_lines` for bit-parity.
+   DuckDB twin in tests/reference_ops.py for bit-parity.
 2. **Certified sketch tier** (`certified_boilerplate_lines`):
    `heavy_hitters` over per-doc DISTINCT lines — counts become exact
    document frequencies, the Misra-Gries floor certifies them, and
@@ -269,35 +269,6 @@ def remove_boilerplate(
 # ------------------------------------------------------------------ SQL twins
 
 
-def sql_boilerplate_lines(
-    min_docs: int = MIN_DOCS,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    extra_cte: str | None = None,
-) -> str:
-    """DuckDB twin of the exact tier — same trim/non-empty line
-    normalization, same doc-frequency threshold, same canonical
-    keeper. All-integer/string comparisons: bit-parity needs no
-    quantization. ``extra_cte`` ("name AS (...)") is prepended to the
-    WITH chain so a probe can seed a derived ``table`` inline (the
-    redact_pii in-query seeding precedent)."""
-    lead = f"{extra_cte},\n    " if extra_cte else ""
-    return f"""
-    WITH {lead}nz AS (
-      SELECT * FROM (
-        SELECT {id_col} AS id,
-               TRIM(UNNEST(string_split({text_col}, chr(10)))) AS line
-        FROM {table} WHERE {text_col} IS NOT NULL)
-      WHERE line <> '')
-    SELECT line,
-           CAST(COUNT(DISTINCT id) AS BIGINT) AS n_docs,
-           MIN(id) AS keep_doc_id
-    FROM nz GROUP BY line
-    HAVING COUNT(DISTINCT id) >= {min_docs}
-    """
-
-
 def sql_remove_boilerplate(
     min_docs: int = MIN_DOCS,
     keep_first: bool = True,
@@ -309,8 +280,8 @@ def sql_remove_boilerplate(
     """DuckDB twin of `remove_boilerplate` over the exact tier:
     line_no from generate_subscripts (0-based, posexplode's
     numbering), string_agg ORDER BY line_no = the sort_array rebuild.
-    ``extra_cte`` prepends a seeding CTE exactly as in
-    sql_boilerplate_lines."""
+    ``extra_cte`` ("name AS (...)") is prepended to the WITH chain so
+    a probe can seed a derived ``table`` inline."""
     keep_pred = "f.line IS NULL"
     if keep_first:
         keep_pred += " OR n.id = f.keep_doc_id"

@@ -44,8 +44,8 @@ clear the floor by orders of magnitude; a result row at or under the
 floor means the corpus is near-uniform at rank k and capacity should
 rise.
 
-DuckDB twin: `sql_heavy_hitters` (full GROUP BY — the oracle pays
-the shuffle the operator avoids); bit-parity asserted in
+DuckDB twin in tests/reference_ops.py (full GROUP BY — the oracle
+pays the shuffle the operator avoids); bit-parity asserted in
 tests/test_heavyhitters.py, n-grams against a pure-Python counter.
 
 Reference surface: none — extends the SURVEY §2.3 training-data
@@ -282,30 +282,3 @@ def heavy_hitters(
         .orderBy(F.col("cnt").desc(), F.col("w"))
         .limit(k)
     )
-
-
-def sql_heavy_hitters(
-    k: int = 50,
-    table: str = "documents",
-    text_col: str = "text",
-    capacity: int | None = None,
-) -> str:
-    """DuckDB twin of unigram `heavy_hitters` — the full GROUP BY the
-    operator's two-pass plan avoids, same tokenization contract
-    (string_split_regex TRIM twin, tests/test_tokenize_contract.py),
-    same (cnt desc, w) order and floor arithmetic."""
-    m = max(64 * k, _MIN_CAPACITY) if capacity is None else capacity
-    return f"""
-    WITH toks AS (
-      SELECT UNNEST(string_split_regex(TRIM({text_col}), '\\s+')) AS w
-      FROM {table} WHERE {text_col} IS NOT NULL),
-    totals AS (SELECT COUNT(*) AS n_total FROM toks)
-    SELECT w, COUNT(*) AS cnt,
-           CAST(FLOOR(CAST(n_total AS DOUBLE)
-                      / CAST({float(m + 1)!r} AS DOUBLE)) AS BIGINT)
-             AS floor_cnt
-    FROM toks CROSS JOIN totals
-    GROUP BY w, n_total
-    ORDER BY cnt DESC, w
-    LIMIT {k}
-    """

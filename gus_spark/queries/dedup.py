@@ -356,57 +356,3 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cluster_size"),
         (F.col("doc_id") == F.col("cluster_rep")).alias("keep"),
     )
-
-
-# Full SQL mirror of the simhash computation with the portable md5
-# token hash: 3-gram shingles -> 60-bit hash per shingle (first 15
-# md5 hex chars; DuckDB parses '0x…' casts) -> per-bit ±1 vote sums
-# -> signature = bits with a strictly positive vote. All-integer
-# arithmetic, so the two engines agree exactly. No longer a catalog
-# oracle (rotated out round 10 for `remove_boilerplate_docs`:
-# digest-keyed agg shape stays covered by dedup_exact_representatives
-# and the winnow probe's identical md5-hash trick); full bit-parity
-# against this SQL is still asserted every run in
-# tests/test_queries.py::test_dedup_simhash_matches_oracle.
-SIMHASH_ORACLE = """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(TRIM(text), '\\s+') AS ws
-      FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(CASE WHEN len(ws) >= 3
-               THEN list_transform(range(1, len(ws)-1),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-               ELSE ws END)) AS tok
-      FROM toks
-    ), h AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
-      FROM sh
-    ), votes AS (
-      SELECT doc_id, bits.bit,
-             SUM(CASE WHEN (h >> bits.bit) & 1 = 1 THEN 1 ELSE -1 END) AS votes
-      FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS bit) bits
-      GROUP BY doc_id, bits.bit
-    )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN votes > 0 THEN (CAST(1 AS BIGINT) << bit)
-                    ELSE 0 END) AS BIGINT) AS simhash
-    FROM votes GROUP BY doc_id
-    """
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash signatures per document, using the portable md5
-    token hash so the DuckDB oracle reproduces every signature exactly
-    (the xxhash64 default stays the max-throughput path for operator
-    use); tests assert near-dup pairs land within small hamming
-    distance. Rotated out of the driver catalog round 10 (slot →
-    remove_boilerplate_docs); SIMHASH_ORACLE above keeps the parity
-    check alive in tests/test_queries.py."""
-    from gus_spark.operators.dedup import simhash_signatures
-
-    d = table(spark, sf_dir, "documents")
-    return simhash_signatures(
-        d, id_col="doc_id", text_col="text", token_hash="md5"
-    )

@@ -137,10 +137,3 @@ class JsonFileStore:
         """Bridge the JSON store into the analytics surface."""
         data = self.read_db(model)[model.model_name]
         return records_to_df(self.spark, data.values(), model)
-
-
-def load_storage_config(path: str) -> dict:
-    """storages.json: storage type -> {storage_file}
-    (storage_handler.rs:44-47, 73-100)."""
-    with open(path, encoding="utf-8") as fh:
-        return json.load(fh)

@@ -15,7 +15,8 @@ The other references here are ground truth or twins that only tests
 read: the multi-probe LSH bucket list as JVM expressions
 (`probe_buckets`, against `similarity._sig_probe_udf`), the exact
 O(n²) Jaccard pairs the MinHash/LSH tier is graded against, and the
-DuckDB twins of the cap-threshold artifact.
+DuckDB twins of the cap-threshold artifact, the boilerplate exact tier
+and unigram heavy hitters.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gus_spark.operators.boilerplate import MIN_DOCS
 from gus_spark.operators.dedup import (
     _MERSENNE_P,
     _PERM_A,
@@ -34,6 +36,7 @@ from gus_spark.operators.dedup import (
     shingles,
     token_hashes,
 )
+from gus_spark.operators.heavyhitters import _MIN_CAPACITY
 from gus_spark.operators.mixing import (
     _CAP_SPACE,
     _cap_margin,
@@ -250,4 +253,60 @@ def sql_apply_cap_thresholds(
     FROM {table} d
     LEFT JOIN {thresholds} t
       ON d.{group_col} IS NOT DISTINCT FROM t.{group_col}
+    """
+
+
+def sql_boilerplate_lines(
+    min_docs: int = MIN_DOCS,
+    table: str = "documents",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    extra_cte: str | None = None,
+) -> str:
+    """DuckDB twin of the exact tier — same trim/non-empty line
+    normalization, same doc-frequency threshold, same canonical
+    keeper. All-integer/string comparisons: bit-parity needs no
+    quantization. ``extra_cte`` ("name AS (...)") is prepended to the
+    WITH chain so a probe can seed a derived ``table`` inline (the
+    redact_pii in-query seeding precedent)."""
+    lead = f"{extra_cte},\n    " if extra_cte else ""
+    return f"""
+    WITH {lead}nz AS (
+      SELECT * FROM (
+        SELECT {id_col} AS id,
+               TRIM(UNNEST(string_split({text_col}, chr(10)))) AS line
+        FROM {table} WHERE {text_col} IS NOT NULL)
+      WHERE line <> '')
+    SELECT line,
+           CAST(COUNT(DISTINCT id) AS BIGINT) AS n_docs,
+           MIN(id) AS keep_doc_id
+    FROM nz GROUP BY line
+    HAVING COUNT(DISTINCT id) >= {min_docs}
+    """
+
+
+def sql_heavy_hitters(
+    k: int = 50,
+    table: str = "documents",
+    text_col: str = "text",
+    capacity: int | None = None,
+) -> str:
+    """DuckDB twin of unigram `heavy_hitters` — the full GROUP BY the
+    operator's two-pass plan avoids, same tokenization contract
+    (string_split_regex TRIM twin, tests/test_tokenize_contract.py),
+    same (cnt desc, w) order and floor arithmetic."""
+    m = max(64 * k, _MIN_CAPACITY) if capacity is None else capacity
+    return f"""
+    WITH toks AS (
+      SELECT UNNEST(string_split_regex(TRIM({text_col}), '\\s+')) AS w
+      FROM {table} WHERE {text_col} IS NOT NULL),
+    totals AS (SELECT COUNT(*) AS n_total FROM toks)
+    SELECT w, COUNT(*) AS cnt,
+           CAST(FLOOR(CAST(n_total AS DOUBLE)
+                      / CAST({float(m + 1)!r} AS DOUBLE)) AS BIGINT)
+             AS floor_cnt
+    FROM toks CROSS JOIN totals
+    GROUP BY w, n_total
+    ORDER BY cnt DESC, w
+    LIMIT {k}
     """

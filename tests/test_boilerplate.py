@@ -27,13 +27,13 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from conftest import SF_DIR_ORACLE
 from oracle_harness import frame_key
+from reference_ops import sql_boilerplate_lines
 
 from gus_spark.operators.boilerplate import (
     MIN_DOCS,
     boilerplate_lines,
     certified_boilerplate_lines,
     remove_boilerplate,
-    sql_boilerplate_lines,
     sql_remove_boilerplate,
 )
 from gus_spark.queries import table

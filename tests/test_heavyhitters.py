@@ -30,13 +30,10 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from conftest import SF_DIR_ORACLE
 from oracle_harness import frame_key
+from reference_ops import sql_heavy_hitters
 
 from gus_spark.functions.tokenize import tokenize
-from gus_spark.operators.heavyhitters import (
-    gram_col,
-    heavy_hitters,
-    sql_heavy_hitters,
-)
+from gus_spark.operators.heavyhitters import gram_col, heavy_hitters
 from gus_spark.queries import table
 
 K = 25

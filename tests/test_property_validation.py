@@ -2,7 +2,7 @@
 layer — extending the reference's example-based matrix (SURVEY §5: the
 reference has no property/randomized testing) with generated inputs.
 
-The validation/codec properties need no SparkSession and run in
+The validation properties need no SparkSession and run in
 milliseconds; the cross-engine TOKENIZATION properties at the bottom
 drive both Spark and DuckDB (they take the session `spark` fixture
 and cost ~40 s of per-example round-trips — the price of pinning the
@@ -143,207 +143,6 @@ def test_constraint_min_max_boundary(year, lo, hi):
     else:
         with pytest.raises(RecordValidationError):
             parse_record(record, model)
-
-
-# ---------------------------------------------------------------- PNG codec
-# Property round-trip for the in-tree pure-stdlib PNG codec: encode →
-# decode must be the identity for any 8-bit gray/RGB image — the
-# invariant every consumer (decode_image_features, resize_images)
-# depends on. No SparkSession needed.
-
-
-@given(
-    w=st.integers(min_value=1, max_value=24),
-    h=st.integers(min_value=1, max_value=24),
-    channels=st.sampled_from([1, 3]),
-    data=st.data(),
-)
-@settings(max_examples=60, deadline=None)
-def test_png_roundtrip_property(w, h, channels, data):
-    from gus_spark.operators import png
-
-    pixels = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, 255),
-                min_size=w * h * channels,
-                max_size=w * h * channels,
-            )
-        )
-    )
-    encoded = png.encode_png(w, h, pixels, channels=channels)
-    assert png.is_png(encoded)
-    assert png.decode_png(encoded) == (w, h, channels, pixels)
-    # luma stays inside the pixel range
-    luma = png.mean_luma(w, h, channels, pixels)
-    assert 0.0 <= luma <= 255.0
-
-
-@given(junk=st.binary(min_size=0, max_size=64))
-@settings(max_examples=40, deadline=None)
-def test_png_decode_rejects_junk(junk):
-    """Arbitrary non-PNG bytes never crash with anything but the
-    documented ValueError."""
-    from gus_spark.operators import png
-
-    if junk[:8] == b"\x89PNG\r\n\x1a\n":
-        return  # astronomically unlikely, but then it's a PNG prefix
-    with pytest.raises(ValueError):
-        png.decode_png(junk)
-
-
-@given(junk=st.binary(min_size=0, max_size=64))
-@settings(max_examples=40, deadline=None)
-def test_png_decode_rejects_signature_prefixed_junk(junk):
-    """The ValueError-only contract must hold INSIDE the parser too:
-    a valid signature followed by arbitrary bytes (truncated chunks,
-    bad lengths, non-zlib IDAT) must normalize struct/zlib errors to
-    ValueError, never leak them."""
-    from gus_spark.operators import png
-
-    with pytest.raises(ValueError):
-        png.decode_png(b"\x89PNG\r\n\x1a\n" + junk)
-
-
-@given(
-    w=st.integers(1, 12),
-    h=st.integers(1, 12),
-    channels=st.sampled_from([1, 3]),
-    quality=st.integers(60, 100),
-    data=st.data(),
-)
-@settings(max_examples=15, deadline=None)
-def test_jpeg_roundtrip_property(w, h, channels, quality, data):
-    """Lossy round-trip invariants that hold for ARBITRARY pixel
-    content (not just smooth gradients): exact dimensions/channels,
-    output stays in byte range, and encoding is deterministic."""
-    from gus_spark.operators import jpeg
-
-    pixels = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, 255),
-                min_size=w * h * channels,
-                max_size=w * h * channels,
-            )
-        )
-    )
-    encoded = jpeg.encode_jpeg(w, h, pixels, channels=channels,
-                               quality=quality)
-    assert jpeg.is_jpeg(encoded)
-    w2, h2, c2, out = jpeg.decode_jpeg(encoded)
-    assert (w2, h2, c2) == (w, h, channels)
-    assert len(out) == w * h * channels
-    assert encoded == jpeg.encode_jpeg(w, h, pixels, channels=channels,
-                                       quality=quality)
-
-
-@given(junk=st.binary(min_size=0, max_size=64))
-@settings(max_examples=40, deadline=None)
-def test_jpeg_decode_rejects_junk(junk):
-    """Arbitrary bytes (and SOI-prefixed arbitrary bytes) never crash
-    with anything but the documented ValueError — the same single-
-    exception contract as the PNG codec."""
-    from gus_spark.operators import jpeg
-
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg(junk)
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg(b"\xff\xd8\xff" + junk)
-
-
-@given(
-    w=st.integers(min_value=1, max_value=16),
-    h=st.integers(min_value=1, max_value=16),
-    n_colors=st.integers(min_value=1, max_value=8),
-    n_frames=st.integers(min_value=1, max_value=4),
-    data=st.data(),
-)
-@settings(max_examples=50, deadline=None)
-def test_gif_roundtrip_property(w, h, n_colors, n_frames, data):
-    """Any palette/frame/delay combination round-trips: decoded RGB
-    equals the palette rendering of the encoded indices, delays survive
-    in ms, and re-encoding is bit-deterministic."""
-    from gus_spark.operators import gif
-
-    palette = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, 255),
-                min_size=n_colors * 3,
-                max_size=n_colors * 3,
-            )
-        )
-    )
-    frames = [
-        bytes(
-            data.draw(
-                st.lists(
-                    st.integers(0, n_colors - 1),
-                    min_size=w * h,
-                    max_size=w * h,
-                )
-            )
-        )
-        for _ in range(n_frames)
-    ]
-    delays = data.draw(
-        st.lists(
-            st.integers(0, 500), min_size=n_frames, max_size=n_frames
-        )
-    )
-    encoded = gif.encode_gif(w, h, palette, frames, delays)
-    assert gif.is_gif(encoded)
-    assert encoded == gif.encode_gif(w, h, palette, frames, delays)
-    rw, rh, rgb, rdelays = gif.decode_gif(encoded)
-    assert (rw, rh) == (w, h)
-    assert rdelays == [d * 10 for d in delays]
-    for frame, out in zip(frames, rgb):
-        assert out == b"".join(
-            palette[i * 3 : i * 3 + 3] for i in frame
-        )
-
-
-@given(
-    min_size=st.integers(min_value=2, max_value=8),
-    data=st.data(),
-)
-@settings(max_examples=60, deadline=None)
-def test_gif_lzw_roundtrip_property(min_size, data):
-    """The variable-width LZW layer round-trips any index stream in
-    range, including streams long enough to force width growth and the
-    12-bit table reset."""
-    from gus_spark.operators.gif import _lzw_decode, _lzw_encode
-
-    indices = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, (1 << min_size) - 1),
-                min_size=0,
-                max_size=3000,
-            )
-        )
-    )
-    assert _lzw_decode(min_size, _lzw_encode(min_size, indices)) == indices
-
-
-@given(junk=st.binary(min_size=0, max_size=64))
-@settings(max_examples=40, deadline=None)
-def test_gif_decode_rejects_junk(junk):
-    """Arbitrary bytes (and GIF-signature-prefixed arbitrary bytes)
-    never raise anything but the documented ValueError — the codec's
-    single-exception contract, which the sample_frames kernel's
-    fall-through depends on."""
-    from gus_spark.operators import gif
-
-    with pytest.raises(ValueError):
-        gif.decode_gif(junk)
-    try:
-        gif.decode_gif(b"GIF89a" + junk)
-    except ValueError:
-        pass  # malformed/truncated: the one allowed exception
-    else:
-        pass  # junk that happens to parse as an empty GIF is fine
 
 
 # ---------------------------------------------------------------------------

@@ -153,6 +153,41 @@ WINNOW_ORACLE = """
     """
 
 
+# Full SQL mirror of simhash_signatures with the portable md5 token
+# hash: 3-gram shingles -> 60-bit hash per shingle (first 15 md5 hex
+# chars; DuckDB parses '0x…' casts) -> per-bit ±1 vote sums ->
+# signature = bits with a strictly positive vote. All-integer
+# arithmetic, so the two engines agree exactly. Its catalog query,
+# dedup_simhash, was rotated out in round 10 (slot ->
+# remove_boilerplate_docs); the bit-parity check stays here.
+SIMHASH_ORACLE = """
+    WITH toks AS (
+      SELECT doc_id, string_split_regex(TRIM(text), '\\s+') AS ws
+      FROM documents
+    ), sh AS (
+      SELECT doc_id,
+             unnest(list_distinct(CASE WHEN len(ws) >= 3
+               THEN list_transform(range(1, len(ws)-1),
+                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
+               ELSE ws END)) AS tok
+      FROM toks
+    ), h AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
+      FROM sh
+    ), votes AS (
+      SELECT doc_id, bits.bit,
+             SUM(CASE WHEN (h >> bits.bit) & 1 = 1 THEN 1 ELSE -1 END) AS votes
+      FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS bit) bits
+      GROUP BY doc_id, bits.bit
+    )
+    SELECT doc_id,
+           CAST(SUM(CASE WHEN votes > 0 THEN (CAST(1 AS BIGINT) << bit)
+                    ELSE 0 END) AS BIGINT) AS simhash
+    FROM votes GROUP BY doc_id
+    """
+
+
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
@@ -271,13 +306,14 @@ def test_fused_profile_token_columns_agree(spark):
 
 
 def test_dedup_simhash_matches_oracle(spark, duck):
-    """dedup_simhash rotated out of the catalog (r10, slot ->
-    remove_boilerplate_docs) but keeps full bit-parity coverage here:
-    every md5-portable simhash signature vs the DuckDB per-bit-vote
+    """Every md5-portable simhash signature vs the DuckDB per-bit-vote
     mirror."""
-    from gus_spark.queries.dedup import SIMHASH_ORACLE, dedup_simhash
+    from gus_spark.operators.dedup import simhash_signatures
 
-    sdf = dedup_simhash(spark, SF_DIR_ORACLE).toPandas()
+    docs = table(spark, SF_DIR_ORACLE, "documents")
+    sdf = simhash_signatures(
+        docs, id_col="doc_id", text_col="text", token_hash="md5"
+    ).toPandas()
     odf = duck.execute(SIMHASH_ORACLE).df()
     assert frame_key(sdf) == frame_key(odf)
 

@@ -9,17 +9,17 @@ computes the defs reachable from the library's consumers:
 - ``bench.py``, ``__spark_entry__.py``, ``tools/*.py`` and
   ``perfbench/*.py``;
 - the console scripts of ``pyproject.toml`` (``gus_spark.cli:main``);
-- module-level code of library modules (what runs at import) and the
-  identifiers in each module docstring (the module's documented
-  entries);
+- module-level code of library modules (what runs at import);
 - the identifiers ``README.md`` puts in backticks;
 - ``ALLOWLIST``: public entries README describes only in prose.
 
 Reach is transitive through the bodies of reached library defs and
 matches plain names and attribute names, so ``ps._scan`` after
 ``import gus_spark.storage.parquet_store as ps`` reaches ``_scan``.
-References from ``tests/`` do not count. A def nothing reaches is
-either a test helper (move it to ``tests/``) or dead (delete it).
+References from ``tests/`` do not count, and neither do docstrings:
+a module docstring that names a def documents it, it does not use
+it. A def nothing reaches is either a test helper (move it to
+``tests/``) or dead (delete it).
 """
 
 from __future__ import annotations
@@ -88,15 +88,12 @@ def _readme_names(root: pathlib.Path) -> set[str]:
 
 def library_defs(root: pathlib.Path):
     """{(relpath, name): (lineno, node)} for every top-level def/class,
-    the module-level statements that run at import, and the identifiers
-    of the module docstrings."""
+    and the module-level statements that run at import."""
     defs: dict[tuple[str, str], tuple[int, ast.AST]] = {}
     module_code: list[ast.AST] = []
-    documented: set[str] = set()
     for path in sorted((root / "gus_spark").rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         tree = ast.parse(path.read_text(encoding="utf-8"))
-        documented.update(_IDENT.findall(ast.get_docstring(tree) or ""))
         for node in tree.body:
             if isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -113,18 +110,18 @@ def library_defs(root: pathlib.Path):
                     )
             else:
                 module_code.append(node)
-    return defs, module_code, documented
+    return defs, module_code
 
 
 def unreached(root: pathlib.Path = ROOT, allow=None) -> list[str]:
     """``file:line name`` for each top-level library def no root reaches."""
     allow = ALLOWLIST if allow is None else allow
-    defs, module_code, documented = library_defs(root)
+    defs, module_code = library_defs(root)
     by_name: dict[str, list[tuple[str, str]]] = {}
     for key in defs:
         by_name.setdefault(key[1], []).append(key)
 
-    seen = set(allow) | _readme_names(root) | documented | _names(module_code)
+    seen = set(allow) | _readme_names(root) | _names(module_code)
     scripts = tomllib.loads((root / "pyproject.toml").read_text())
     seen.update(
         entry.split(":")[1] for entry in scripts["project"]["scripts"].values()
@@ -158,7 +155,7 @@ def unreached(root: pathlib.Path = ROOT, allow=None) -> list[str]:
 def test_allowlist_is_short_and_explained():
     assert len(ALLOWLIST) <= 10
     assert all(reason.strip() for reason in ALLOWLIST.values())
-    defs, _, _ = library_defs(ROOT)
+    defs, _ = library_defs(ROOT)
     names = {name for _, name in defs}
     assert set(ALLOWLIST) <= names, set(ALLOWLIST) - names
 
@@ -170,3 +167,25 @@ def test_every_library_def_is_reached():
         "bench, tool or documented entry (move them to tests/ or delete "
         "them):\n" + "\n".join(missing)
     )
+
+
+def test_module_docstring_is_not_a_root(tmp_path):
+    """A def that only its module's docstring names is unreached; the
+    same name in README backticks reaches its twin."""
+    (tmp_path / "gus_spark").mkdir()
+    (tmp_path / "gus_spark" / "mod.py").write_text(
+        '"""Entries: `only_in_docstring` and `in_readme`."""\n\n\n'
+        "def only_in_docstring():\n    return 1\n\n\n"
+        "def in_readme():\n    return 2\n"
+    )
+    (tmp_path / "README.md").write_text("Call `in_readme`.\n")
+    (tmp_path / "pyproject.toml").write_text(
+        '[project.scripts]\ngus = "gus_spark.cli:main"\n'
+    )
+    (tmp_path / "tools").mkdir()
+    (tmp_path / "perfbench").mkdir()
+    (tmp_path / "bench.py").write_text("")
+    (tmp_path / "__spark_entry__.py").write_text("")
+    assert unreached(tmp_path, allow={}) == [
+        "gus_spark/mod.py:4 only_in_docstring"
+    ]

@@ -160,35 +160,8 @@ def test_time_travel_and_expiry(store, movie_model):
         store.read_df(movie_model, at=1)
 
 
-def test_get_handler_dispatch(spark, tmp_path):
-    from gus_spark.errors import StorageError
-    from gus_spark.storage.handler import get_handler
-    from gus_spark.storage.json_store import JsonFileStore
-
-    pq_model = ModelDefinition.from_json(
-        {
-            "model_name": "movie",
-            "attributes": {"id": "Integer"},
-            "primary_key": "id",
-            "required": ["id"],
-        }
-    )
-    js_model = ModelDefinition.from_json(
-        {
-            "model_name": "book",
-            "storage_type": "json",
-            "attributes": {"id": "Integer"},
-            "primary_key": "id",
-            "required": ["id"],
-        }
-    )
-    config = {"json": {"storage_file": str(tmp_path / "x.json.gus")}}
-    assert isinstance(get_handler(spark, pq_model), ParquetStore)
-    handler = get_handler(spark, js_model, config)
-    assert isinstance(handler, JsonFileStore)
-    assert handler.storage_file == config["json"]["storage_file"]
-    # unknown storage types are rejected at model load
-    # (fixture invalid_storage.json, storage_handler.rs:40-42)
+def test_unknown_storage_type_rejected_at_model_load():
+    # fixture invalid_storage.json, storage_handler.rs:40-42
     from gus_spark.errors import ModelValidationError
 
     with pytest.raises(ModelValidationError):
@@ -201,16 +174,6 @@ def test_get_handler_dispatch(spark, tmp_path):
                 "required": ["id"],
             }
         )
-    # and defensively at dispatch for hand-built definitions
-    bad = ModelDefinition(
-        model_name="card",
-        attributes=pq_model.attributes,
-        primary_key="id",
-        required=["id"],
-        storage_type="mongodb",
-    )
-    with pytest.raises(StorageError):
-        get_handler(spark, bad)
 
 
 def test_upsert_many_insert_and_replace(store, movie_model):
