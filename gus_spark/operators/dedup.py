@@ -30,7 +30,14 @@ import random as _random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gus_spark.functions.tokenize import tokenize
 from gus_spark.operators.util import ensure_parallelism
+from gus_spark.storage.deltas import (
+    DeleteTier,
+    compact_deltas,
+    count_parquet_files,
+    tombstone_fold_due,
+)
 
 # MinHash banding: 128 permutations in 32 bands of 4 rows. Collision
 # probability 1-(1-j^4)^32 — ~0.5 at j≈0.38, >0.99 at j≥0.61, and a true
@@ -86,15 +93,6 @@ _MIX_MAX_N = len(_MIX_ROT)
 #: Module-level so tests can shrink it to exercise the oversized-doc
 #: chunked path cheaply.
 _CHUNK_SHINGLES = 8 * 1024
-
-
-def tokenize(text: Column) -> Column:
-    """The hash family's frozen 'raw' tokenizer — now a declared
-    variant of the single entry point (functions/tokenize.py); kept
-    here as the historical import site half the repo uses."""
-    from gus_spark.functions.tokenize import tokenize as _tok
-
-    return _tok(text, "raw")
 
 
 def shingles(text: Column, n: int = 1) -> Column:
@@ -515,7 +513,7 @@ def minhash_lsh_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-class MinHashIndex:
+class MinHashIndex(DeleteTier):
     """Incremental near-duplicate detection: persist banded MinHash
     signatures (and shingle sets for exact verification) as parquet
     tables; each new batch joins ONLY against the persisted index plus
@@ -554,17 +552,13 @@ class MinHashIndex:
         threshold: float = 0.8,
         ngram: int = 1,
     ):
-        import os
-
-        self.spark = spark
+        super().__init__(spark, path)
         self.path = path
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
         self.ngram = ngram
-        os.makedirs(path, exist_ok=True)
-        meta_path = os.path.join(path, "meta.json")
-        meta = {
+        self._open_meta({
             "num_perms": NUM_PERMS,
             "num_bands": NUM_BANDS,
             "ngram": ngram,
@@ -574,66 +568,13 @@ class MinHashIndex:
             # store hash sets, not strings), so an index built under an
             # older family must reject loudly on the equality check
             "hash": "tokxor-affine-mersenne61-v3",
-        }
-        if os.path.exists(meta_path):
-            existing = {
-                k: v for k, v in self._read_meta().items() if k in meta
-            }
-            if existing != meta:
-                raise ValueError(
-                    f"index at {path} was built with {existing}, got {meta}"
-                )
-        else:
-            self._write_meta(dict(meta, tombs={}, folded_tombs=[]))
-
-    # ------------------------------------------------------------ meta io
-    @property
-    def _meta_path(self) -> str:
-        import os
-
-        return os.path.join(self.path, "meta.json")
-
-    def _read_meta(self) -> dict:
-        import json
-
-        with open(self._meta_path, encoding="utf-8") as fh:
-            meta = json.load(fh)
-        # pre-round-8 meta carries config only — default the tombstone
-        # state in rather than rejecting the index
-        meta.setdefault("tombs", {})
-        meta.setdefault("folded_tombs", [])
-        return meta
-
-    def _write_meta(self, meta: dict) -> None:
-        import json
-        import os
-
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path)  # the atomic snapshot swap
+        })
 
     def _bands_path(self) -> str:
         return f"{self.path}/bands"
 
     def _shingles_path(self) -> str:
         return f"{self.path}/shingles"
-
-    def _tomb_path(self, key: str) -> str:
-        import os
-
-        return os.path.join(self.path, "tombs", f"tomb-{key}")
-
-    def _live_tombstones(self, meta: dict | None = None):
-        """Union of live tombstone ids (one ``id_col`` column), or
-        None. Small by the maintain fraction contract — callers
-        broadcast it into anti-joins."""
-        meta = self._read_meta() if meta is None else meta
-        if not meta["tombs"]:
-            return None
-        return self.spark.read.parquet(
-            *[self._tomb_path(k) for k in meta["tombs"]]
-        ).distinct()
 
     @staticmethod
     def _has_parquet(path: str) -> bool:
@@ -833,50 +774,17 @@ class MinHashIndex:
         Same replay contract as the sibling indexes (PostingIndex,
         VectorIndex): keyed deletes are idempotent, a key already
         folded by a compaction raises."""
-        import os
-        import uuid
 
-        from gus_spark.streaming import markers
+        def live_ids(_meta):
+            corpus = self._read_or_none(self._shingles_path())
+            if corpus is None:
+                raise ValueError(
+                    f"index at {self.path} holds no fingerprints — "
+                    "nothing to delete"
+                )
+            return corpus.select(self.id_col).distinct()
 
-        id_col = self.id_col
-        meta = self._read_meta()
-        key = batch_key if batch_key is not None else uuid.uuid4().hex
-        if key in meta["folded_tombs"]:
-            raise ValueError(
-                f"delete batch key {key!r} was already folded away by "
-                f"a maintain() of {self.path!r}: its rows are "
-                "physically gone. Use a fresh key."
-            )
-        if key in meta["tombs"]:
-            return meta["tombs"][key]
-        corpus = self._read_or_none(self._shingles_path())
-        if corpus is None:
-            raise ValueError(
-                f"index at {self.path} holds no fingerprints — "
-                "nothing to delete"
-            )
-        live_ids = corpus.select(id_col).distinct()
-        if not isinstance(ids, DataFrame):
-            field = live_ids.schema[id_col]
-            ids = self.spark.createDataFrame(
-                [(i,) for i in ids],
-                schema=f"{id_col} {field.dataType.simpleString()}",
-            )
-        # lineage cut: the caller's id plan may be an expensive
-        # curation join consumed by two actions (count + publish)
-        ids = ids.select(id_col).distinct().localCheckpoint()
-        matched = live_ids.join(ids, id_col, "left_semi")
-        prior = self._live_tombstones(meta)
-        if prior is not None:
-            matched = matched.join(
-                F.broadcast(prior), id_col, "left_anti"
-            )
-        matched = matched.localCheckpoint()
-        n = matched.count()
-        markers.publish_batch(matched, self._tomb_path(key))
-        meta["tombs"][key] = n
-        self._write_meta(meta)
-        return n
+        return self._keyed_delete(ids, batch_key, self.id_col, live_ids)
 
     # ------------------------------------------------------------ maintenance
     def health(self, occupancy: bool = False) -> dict:
@@ -900,8 +808,6 @@ class MinHashIndex:
         add's candidate step pays), so it is an on-demand probe, not
         part of every call."""
         import os
-
-        from gus_spark.storage.deltas import count_parquet_files
 
         out = {}
         for name, base in (
@@ -1006,11 +912,6 @@ class MinHashIndex:
         import os
         import shutil
 
-        from gus_spark.storage.deltas import (
-            compact_deltas,
-            tombstone_fold_due,
-        )
-
         health = self.health()
         meta = self._read_meta()
         tomb_docs = sum(meta["tombs"].values())
@@ -1044,17 +945,7 @@ class MinHashIndex:
                     range_cols=[self.id_col],
                     filter_fn=drop,
                 )
-            folded_now = list(meta["tombs"])
-            if folded_now:
-                self._write_meta(dict(
-                    meta,
-                    tombs={},
-                    folded_tombs=meta["folded_tombs"] + folded_now,
-                ))
-                for tk in folded_now:
-                    shutil.rmtree(
-                        self._tomb_path(tk), ignore_errors=True
-                    )
+            self._fold_tombstones(meta)
         pairs_dir = os.path.join(self.path, "pairs_log")
         pruned = 0
         if os.path.isdir(pairs_dir):

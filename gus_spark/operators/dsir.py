@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 
 from gus_spark.functions.deterministic import FP_LOG as _FP
 from gus_spark.functions.deterministic import fp_quantize as _fp
-from gus_spark.operators.dedup import tokenize
+from gus_spark.functions.tokenize import tokenize
 
 #: resolution of the Gumbel uniform: first 16 bits of md5(id).
 _CUT_BITS = 65536.0

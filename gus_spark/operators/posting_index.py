@@ -2,10 +2,10 @@
 manifest snapshot — incremental maintenance for the inverted index
 (ROADMAP r7 #4: "make the index a live table like VectorIndex").
 
-`build_posting_index` (operators/retrieval.py) is the static-corpus
-form: one atomic rebuild, full cost every time the corpus grows. This
-module is the append-only form a streaming ingest needs. Layout, all
-under one ``root`` directory:
+This is the one served BM25 index: repeated-query serving and
+streaming ingest both go through it, and only the ad-hoc
+``retrieval.bm25_topk`` scan stays outside it. Layout, all under one
+``root`` directory:
 
 - ``base-g<gen>/``   — the bucketed-by-term posting table (external
   table ``<name>_g<gen>`` in the session catalog, so query-term bucket
@@ -33,15 +33,16 @@ under one ``root`` directory:
   compaction. Swapped with ``os.replace`` — readers resolve the
   manifest first, so every read sees one consistent (base, deltas,
   tombstones) snapshot and a crash anywhere leaves only invisible
-  orphans, never a half-state.
+  orphans, never a half-state. The manifest and tombstone protocol is
+  the one MinHashIndex and VectorIndex share (storage/deltas.DeleteTier).
 
-Why a manifest instead of the denormalized-stats trick the static
-index uses: corpus stats (N, avgdl) change on EVERY append, so stats
-carried on posting rows go stale the moment a delta lands — the
-manifest holds exact integer totals per tier (base + each delta), and
-serving derives avgdl from their sums in the same IEEE double division
-the ad-hoc scan performs, keeping rankings bit-identical to
-``bm25_topk`` over the equivalent full corpus (asserted in tests).
+Corpus stats live in the manifest, not on the posting rows: N and avgdl
+change on EVERY append, so stats carried per row would go stale the
+moment a delta lands. The manifest holds exact integer totals per tier
+(base + each delta), and serving derives avgdl from their sums in the
+same IEEE double division the ad-hoc scan performs, keeping rankings
+bit-identical to ``bm25_topk`` over the equivalent full corpus
+(asserted in tests).
 
 Serving cost at 100 TB: the base scan stays bucket-pruned to the query
 terms' buckets and its per-term df-count completes WITHOUT an exchange
@@ -78,7 +79,6 @@ this extends the SURVEY §2.3 training-data layer.
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 
@@ -94,7 +94,8 @@ from gus_spark.operators.retrieval import (
     _score_postings_weighted,
     posting_lists,
 )
-from gus_spark.operators.dedup import tokenize
+from gus_spark.functions.tokenize import tokenize
+from gus_spark.storage.deltas import DeleteTier
 from gus_spark.streaming import markers
 
 #: manifest layout generation — bump on any incompatible change so a
@@ -129,7 +130,30 @@ def _doclens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-class PostingIndex:
+def _removed_totals(matched: DataFrame) -> dict:
+    """The delete record: exact (n_docs, tok_sum) of the matched
+    doclen rows, the totals serving subtracts from N/avgdl."""
+    row = matched.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("s"),
+    ).first()
+    return {"n_docs": int(row["n"]), "tok_sum": int(row["s"])}
+
+
+def _totals(meta: dict) -> tuple[int, int, int]:
+    """(n_docs, tok_sum, tomb_docs) of a manifest snapshot: base plus
+    live deltas minus live tombstones, and the tombstoned doc count."""
+    tomb_docs = sum(t["n_docs"] for t in meta["tombs"].values())
+    n_docs = meta["n_docs"] + sum(
+        d["n_docs"] for d in meta["deltas"].values()
+    ) - tomb_docs
+    tok_sum = meta["tok_sum"] + sum(
+        d["tok_sum"] for d in meta["deltas"].values()
+    ) - sum(t["tok_sum"] for t in meta["tombs"].values())
+    return n_docs, tok_sum, tomb_docs
+
+
+class PostingIndex(DeleteTier):
     """Persisted, incrementally-maintained BM25 index under ``root``.
 
     Lifecycle: ``build`` once on the starting corpus, ``add`` new-doc
@@ -138,36 +162,12 @@ class PostingIndex:
     Single-writer, many-reader — the same assumption every incremental
     index in this repo makes."""
 
+    _tomb_dir = ""
+    _layout = LAYOUT
+
     def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
+        super().__init__(spark, root)
         self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    # ------------------------------------------------------- manifest
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "meta.json")
-
-    def _read_meta(self) -> dict:
-        if not os.path.exists(self._meta_path):
-            raise ValueError(
-                f"no posting index at {self.root!r} — call build() first"
-            )
-        with open(self._meta_path, encoding="utf-8") as fh:
-            meta = json.load(fh)
-        if meta.get("layout") != LAYOUT:
-            raise ValueError(
-                f"posting index at {self.root!r} uses layout "
-                f"{meta.get('layout')}, this build reads {LAYOUT} — "
-                "rebuild the index"
-            )
-        return meta
-
-    def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path)  # the atomic snapshot swap
 
     @property
     def fitted(self) -> bool:
@@ -204,17 +204,16 @@ class PostingIndex:
         ``phrase_topk`` becomes available — exact-phrase forensics
         over the LIVE corpus without a rescan."""
         if self.fitted:
-            # raw read, no layout gate: build() IS the rebuild an old
-            # layout demands, so it must be able to clean one up
-            with open(self._meta_path, encoding="utf-8") as fh:
-                old = json.load(fh)
+            # no layout gate: build() IS the rebuild an old layout
+            # demands, so it must be able to clean one up
+            old = self._read_meta(check_layout=False)
             self._drop_generation(old)
             for key in old["deltas"]:
                 shutil.rmtree(self._delta_path(key), ignore_errors=True)
                 shutil.rmtree(
                     self._doclen_delta_path(key), ignore_errors=True
                 )
-            for key in old.get("tombs", {}):
+            for key in old["tombs"]:
                 shutil.rmtree(self._tomb_path(key), ignore_errors=True)
         # a fresh lineage invalidates every streaming done-marker: the
         # marker's "output still holds this batch" promise refers to
@@ -281,23 +280,11 @@ class PostingIndex:
     def _doclen_delta_path(self, key: str) -> str:
         return os.path.join(self.root, f"doclen-{key}")
 
-    def _tomb_path(self, key: str) -> str:
-        return os.path.join(self.root, f"tomb-{key}")
-
     def _live_doclens(self, meta: dict) -> DataFrame:
         paths = [self._doclen_base_path(meta["gen"])] + [
             self._doclen_delta_path(k) for k in meta["deltas"]
         ]
         return self.spark.read.parquet(*paths)
-
-    def _live_tombstones(self, meta: dict) -> DataFrame | None:
-        """Union of live tombstone ids, or None when there are none —
-        small by the compaction contract, so callers broadcast it."""
-        if not meta.get("tombs"):
-            return None
-        return self.spark.read.parquet(
-            *[self._tomb_path(k) for k in meta["tombs"]]
-        ).distinct()
 
     def _write_base(
         self, post: DataFrame, table: str, gen: int, n_buckets: int
@@ -404,55 +391,10 @@ class PostingIndex:
         is idempotent (publish-if-changed tombstone dir + manifest
         set-add; a committed key short-circuits), and a key already
         folded by a compaction raises."""
-        import uuid
-
-        meta = self._read_meta()
-        key = batch_key if batch_key is not None else uuid.uuid4().hex
-        if key in meta["folded_tombs"]:
-            raise ValueError(
-                f"delete batch key {key!r} was already folded into "
-                f"base generation {meta['gen']} of {self.root!r}: "
-                "replaying it would re-subtract totals the base "
-                "already excludes. Use a fresh key."
-            )
-        if key in meta["tombs"]:
-            return meta["tombs"][key]["n_docs"]
-        id_col = meta["id_col"]
-        doclens = self._live_doclens(meta)
-        if not isinstance(ids, DataFrame):
-            id_field = doclens.schema[id_col]
-            ids = self.spark.createDataFrame(
-                [(i,) for i in ids],
-                schema=f"{id_col} {id_field.dataType.simpleString()}",
-            )
-        # localCheckpoint: the caller's id plan may be an expensive
-        # contamination join (decontaminate_index) and is consumed by
-        # TWO actions below (totals agg + tombstone publish) — cut the
-        # lineage once so it runs once. NO broadcast hint on the
-        # semi-join: a heavy curation pass can flag a large corpus
-        # fraction, and a forced broadcast would bypass AQE's size
-        # check at exactly the scale this module targets; AQE still
-        # broadcasts genuinely small id sets on its own.
-        ids = ids.select(id_col).distinct().localCheckpoint()
-        matched = doclens.join(ids, id_col, "left_semi")
-        prior = self._live_tombstones(meta)
-        if prior is not None:
-            matched = matched.join(
-                F.broadcast(prior),
-                matched[id_col] == prior[id_col],
-                "left_anti",
-            )
-        row = matched.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("s"),
-        ).first()
-        n_docs, tok_sum = int(row["n"]), int(row["s"])
-        markers.publish_batch(
-            matched.select(id_col), self._tomb_path(key)
-        )
-        meta["tombs"][key] = {"n_docs": n_docs, "tok_sum": tok_sum}
-        self._write_meta(meta)
-        return n_docs
+        return self._keyed_delete(
+            ids, batch_key, self.id_col, self._live_doclens,
+            measure=_removed_totals,
+        )["n_docs"]
 
     # ---------------------------------------------------------- serve
     def topk(
@@ -513,12 +455,11 @@ class PostingIndex:
         surviving corpus (asserted in tests). Requires an index built
         with ``positional=True``.
 
-        Pins autoBucketedScan off for the session (Spark 4.1): Spark's
-        DisableUnnecessaryBucketedScan rule converts a bucketed scan to
-        a regular one when no downstream operator needs the bucket
-        distribution, and the phrase plan's id-keyed joins give it none
-        — the conversion then discards the bucket PRUNING that makes an
-        indexed phrase query cheap."""
+        The base scan stays pruned to the phrase terms' buckets: Spark's
+        DisableUnnecessaryBucketedScan turns the bucketed scan into a
+        plain one (the id-keyed joins need no bucket distribution), and
+        a plain scan of a bucketed table still skips the files of
+        unselected buckets."""
         from gus_spark.operators.retrieval import _phrase_occurrences
 
         if k <= 0:
@@ -530,10 +471,6 @@ class PostingIndex:
                 "positional=True — rebuild positional to serve phrase "
                 "queries"
             )
-        self.spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-            "false",
-        )
         terms = sorted(set(phrase))
         if not terms:
             raise ValueError("phrase must contain at least one token")
@@ -552,7 +489,7 @@ class PostingIndex:
         (query_id, phrase array<string>); returns (query_id, id,
         n_occurrences, rank). Requires positional=True. Same
         bounded driver collect of distinct terms as `batch_topk`, same
-        autoBucketedScan pin as `phrase_topk`."""
+        bucket-pruned base scan as `phrase_topk`."""
         from gus_spark.operators.retrieval import _phrase_batch_tail
 
         if k <= 0:
@@ -564,10 +501,6 @@ class PostingIndex:
                 "positional=True — rebuild positional to serve phrase "
                 "queries"
             )
-        self.spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-            "false",
-        )
         q = phrases.select(
             "query_id", F.posexplode("phrase").alias("j", "w")
         )
@@ -591,14 +524,9 @@ class PostingIndex:
         (base, deltas, tombstones) snapshot — the tier assembly both
         serving paths share."""
         self._ensure_table(meta)
-        n_docs = meta["n_docs"] + sum(
-            d["n_docs"] for d in meta["deltas"].values()
-        ) - sum(t["n_docs"] for t in meta["tombs"].values())
+        n_docs, tok_sum, _ = _totals(meta)
         if n_docs == 0:
             raise ValueError(f"posting index at {self.root!r} is empty")
-        tok_sum = meta["tok_sum"] + sum(
-            d["tok_sum"] for d in meta["deltas"].values()
-        ) - sum(t["tok_sum"] for t in meta["tombs"].values())
         # the same IEEE double division corpus_stats performs — Python
         # floats ARE binary64, so the quotient is bit-identical
         avgdl = float(tok_sum) / float(n_docs)
@@ -690,31 +618,22 @@ class PostingIndex:
             self._doclen_base_path(gen)
         )
         folded_now = list(meta["deltas"])
-        folded_tombs_now = list(meta["tombs"])
-        new_meta = dict(
+        n_docs, tok_sum, _ = _totals(meta)
+        self._fold_tombstones(
             meta,
             gen=gen,
             table=table,
-            n_docs=meta["n_docs"]
-            + sum(d["n_docs"] for d in meta["deltas"].values())
-            - sum(t["n_docs"] for t in meta["tombs"].values()),
-            tok_sum=meta["tok_sum"]
-            + sum(d["tok_sum"] for d in meta["deltas"].values())
-            - sum(t["tok_sum"] for t in meta["tombs"].values()),
+            n_docs=n_docs,
+            tok_sum=tok_sum,
             deltas={},
             folded=meta["folded"] + folded_now,
-            tombs={},
-            folded_tombs=meta["folded_tombs"] + folded_tombs_now,
         )
-        self._write_meta(new_meta)
         self._drop_generation(meta)
         for key in folded_now:
             shutil.rmtree(self._delta_path(key), ignore_errors=True)
             shutil.rmtree(
                 self._doclen_delta_path(key), ignore_errors=True
             )
-        for key in folded_tombs_now:
-            shutil.rmtree(self._tomb_path(key), ignore_errors=True)
         return self.stats()
 
     def maintain(
@@ -735,10 +654,8 @@ class PostingIndex:
         if len(meta["deltas"]) + len(meta["tombs"]) > max_deltas:
             report = self.compact()
         else:
-            live = meta["n_docs"] + sum(
-                d["n_docs"] for d in meta["deltas"].values()
-            )
-            dead = sum(t["n_docs"] for t in meta["tombs"].values())
+            n_docs, _, dead = _totals(meta)
+            live = n_docs + dead
             if live > 0 and dead / live > max_tomb_frac:
                 report = self.compact()
             else:
@@ -817,12 +734,7 @@ class PostingIndex:
 
     def stats(self) -> dict:
         meta = self._read_meta()
-        n_docs = meta["n_docs"] + sum(
-            d["n_docs"] for d in meta["deltas"].values()
-        ) - sum(t["n_docs"] for t in meta["tombs"].values())
-        tok_sum = meta["tok_sum"] + sum(
-            d["tok_sum"] for d in meta["deltas"].values()
-        ) - sum(t["tok_sum"] for t in meta["tombs"].values())
+        n_docs, tok_sum, tomb_docs = _totals(meta)
         return {
             "gen": meta["gen"],
             "n_docs": n_docs,
@@ -830,7 +742,5 @@ class PostingIndex:
             "n_deltas": len(meta["deltas"]),
             "n_folded": len(meta["folded"]),
             "n_tombs": len(meta["tombs"]),
-            "tomb_docs": sum(
-                t["n_docs"] for t in meta["tombs"].values()
-            ),
+            "tomb_docs": tomb_docs,
         }

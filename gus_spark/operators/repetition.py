@@ -24,7 +24,7 @@ strings themselves, so every hash-collision event would surface as a
 mismatch there.
 
 TOKENIZER NOTE (deliberate divergence, ADVICE r6): tokenization here
-is dedup.tokenize's raw ``split(trim(text), '\\s+')`` WITHOUT an
+is the 'raw' functions.tokenize ``split(trim(text), '\\s+')`` WITHOUT an
 empty-string filter, to stay bit-compatible with the dedup hash
 family and its DuckDB oracles — so text padded with non-ASCII-space
 whitespace (newlines, tabs at the boundaries) contributes phantom ''

@@ -29,9 +29,9 @@ query terms, never the corpus:
 - the top-k is a TakeOrderedAndProject with doc-id tiebreak.
 
 At 100 TB the posting-list build is the one-off indexing cost; a
-warehouse serving repeated queries materializes `posting_lists`
-bucketed by term (operators/partitioning.write_bucketed) so each
-query's IN-list filter prunes buckets and the (term, doc) aggregation
+warehouse serving repeated queries builds the live `PostingIndex`
+(operators/posting_index.py), whose base tier is bucketed by term so
+each query's IN-list filter prunes buckets and the per-term df count
 never reshuffles. Ad-hoc single queries run straight off the scan, as
 here.
 
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gus_spark.operators.dedup import tokenize
+from gus_spark.functions.tokenize import tokenize
 
 #: Okapi defaults (Robertson et al., TREC-3).
 K1 = 1.2
@@ -153,8 +153,9 @@ def _score_and_topk(
 ) -> DataFrame:
     """The shared Okapi scoring tail: matched postings (w, id, tf, dl)
     + 1-row stats -> per-(doc,term) quantized scores -> doc sums ->
-    top-k. Used by both the ad-hoc (scan) and indexed (bucketed table)
-    entry points so the two serve bit-identical rankings."""
+    top-k. The wide-term posting route of `bm25_topk`; it shares
+    `_score_postings` with `PostingIndex.topk`, so the two serve
+    bit-identical rankings."""
     dfreq = post.groupBy("w").agg(F.count("*").alias("df"))
     return _score_postings(post, dfreq, stats, k, id_col, k1, b)
 
@@ -226,9 +227,9 @@ def bm25_topk(
     ordered by (score_fp desc, id). Duplicate query terms are collapsed
     (BM25 treats the query as a term set; repeat-weighted queries
     belong in a term-weight column, not here). Ad-hoc form; a
-    repeated-query deployment materializes a posting index once with
-    `build_posting_index` and serves with `bm25_topk_indexed`
-    (bit-identical ranking, asserted in tests).
+    repeated-query deployment builds a `PostingIndex` once and serves
+    with `PostingIndex.topk` (bit-identical ranking, asserted in
+    tests/test_posting_index.py).
 
     r14 shape (guide §2.3/§2.4 — aggregate before you shuffle, then
     remove the shuffle entirely): for ad-hoc term counts the scorer is
@@ -302,59 +303,6 @@ def bm25_topk(
         .filter(F.col("n_terms_hit") > 0)
         .orderBy(F.col("score_fp").desc(), F.col(id_col))
         .limit(k)
-    )
-
-
-def build_posting_index(
-    df: DataFrame,
-    name: str,
-    n_buckets: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Materialize the inverted index for repeated-query serving:
-    posting lists bucketed AND sorted by term into the session catalog
-    (`name`). The 1-row corpus stats (n_docs, avgdl) are DENORMALIZED
-    onto every posting row (broadcast crossJoin at build; 12 bytes per
-    row) so the index is ONE table and one atomic overwrite — a
-    separate stats table would let a rebuild die between the two
-    writes and leave new postings silently scored with the old
-    corpus's idf/avgdl. The one-off build pays posting_lists' explode
-    + (w, id) aggregation once; every subsequent query gets (a) bucket
-    pruning — the term IN-list scans only the buckets holding query
-    terms, `SelectedBucketsCount` in the plan — and (b) a
-    zero-exchange df-count, because groupBy(w) over a w-bucketed table
-    needs no shuffle (both plan-asserted in tests/test_retrieval.py)."""
-    from gus_spark.operators.partitioning import write_bucketed
-
-    post = posting_lists(df, id_col, text_col).crossJoin(
-        F.broadcast(corpus_stats(df, id_col, text_col))
-    )
-    write_bucketed(post, name, "w", n_buckets=n_buckets, sort_by="w")
-
-
-def bm25_topk_indexed(
-    spark,
-    name: str,
-    query: list[str],
-    k: int,
-    id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Serve a BM25 query from a `build_posting_index` materialization:
-    no tokenization, no explode — the scan reads only the buckets the
-    query terms hash to, and the per-term df aggregation rides the
-    bucket layout with no exchange. The corpus stats ride the matched
-    rows themselves (denormalized at build), so a query that matches
-    nothing returns empty rather than stale-scored rows. Ranking is
-    bit-identical to the ad-hoc `bm25_topk` on the same corpus (same
-    scoring tail)."""
-    terms = _query_terms(query)
-    post = spark.table(name).filter(F.col("w").isin(terms))
-    stats = post.select("n_docs", "avgdl").limit(1)
-    return _score_and_topk(
-        post.drop("n_docs", "avgdl"), stats, k, id_col, k1, b
     )
 
 
@@ -451,9 +399,9 @@ def bm25_batch(
     corpus (the postings subtree feeds both the df-count and scoring
     branches, Spark does not dedupe shared subtrees, plus the 1-row
     stats aggregate; plan-asserted), where the ad-hoc path pays the
-    same three PER QUERY. Repeated batches over a static corpus
-    should serve from `build_posting_index` instead and pay the
-    postings build once ever. The per-query k is a window rank over
+    same three PER QUERY. Repeated batches should serve from
+    `PostingIndex.batch_topk` instead and pay the postings build once
+    ever. The per-query k is a window rank over
     the (query_id)-keyed exchange, not TakeOrderedAndProject (which
     is global-k only)."""
     if k <= 0:
@@ -492,11 +440,11 @@ def _score_postings_weighted(
     b: float,
 ) -> DataFrame:
     """The weighted-batch Okapi scoring tail shared by the scan
-    (`bm25_batch`) and indexed (`bm25_batch_indexed`,
-    `PostingIndex.batch_topk`) entry points — one definition, so the
-    cross-path bit-parity contracts cannot drift. Weight multiplies
-    INSIDE the quantization so weight=1.0 is the exact single-query
-    value: fp(1.0 * x) == fp(x) bit-for-bit."""
+    (`bm25_batch`) and indexed (`PostingIndex.batch_topk`) entry
+    points — one definition, so the cross-path bit-parity contracts
+    cannot drift. Weight multiplies INSIDE the quantization so
+    weight=1.0 is the exact single-query value: fp(1.0 * x) == fp(x)
+    bit-for-bit."""
     from pyspark.sql import Window
 
     if k <= 0:
@@ -527,49 +475,6 @@ def _score_postings_weighted(
         )
     )
     return scored.withColumn("rank", rank).filter(F.col("rank") <= k)
-
-
-def bm25_batch_indexed(
-    spark,
-    name: str,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """`bm25_batch` served from a `build_posting_index`
-    materialization: zero tokenization, zero corpus scans — the one
-    postings read is bucket-pruned to the batch's distinct terms, the
-    df-count rides the bucket layout with no w-keyed exchange, and
-    the corpus stats come off the matched rows (denormalized at
-    build). Scores are bit-identical to the scan-path `bm25_batch`
-    and, at weight 1.0, to the single-query paths (shared scoring
-    tail; asserted in tests/test_retrieval.py).
-
-    The term IN-list is collected from the (query-batch-sized) table
-    — a bounded driver collect of distinct terms, the price of bucket
-    pruning (pruning needs literal values at planning time)."""
-    qterms = _query_term_table(queries)
-    terms = [
-        r["w"] for r in qterms.select("w").distinct().collect()
-    ]
-    if not terms:
-        return _score_postings_weighted(
-            spark.table(name).filter(F.lit(False)).drop(
-                "n_docs", "avgdl"
-            ),
-            spark.createDataFrame([], "w string, df long"),
-            spark.createDataFrame([], "n_docs long, avgdl double"),
-            qterms, k, id_col, k1, b,
-        )
-    post = spark.table(name).filter(F.col("w").isin(sorted(terms)))
-    stats = post.select("n_docs", "avgdl").limit(1)
-    post = post.drop("n_docs", "avgdl")
-    dfreq = post.groupBy("w").agg(F.count("*").alias("df"))
-    return _score_postings_weighted(
-        post, dfreq, stats, qterms, k, id_col, k1, b
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -694,7 +599,7 @@ def _phrase_occurrences(
     (same rows out, asserted at m=13 in tests/test_retrieval.py) —
     that form's exchange carries position VOTES (rows) instead of m
     per-doc arrays (columns), the better trade once m is large;
-    every caller — ad-hoc, indexed, live PostingIndex — inherits the
+    every caller — ad-hoc and the live PostingIndex — inherits the
     routing through this one function."""
     if not phrase:
         raise ValueError("phrase must contain at least one token")

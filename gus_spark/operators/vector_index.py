@@ -20,7 +20,8 @@ so an operator can decide when to re-fit and re-encode.
 
 Deletes (round 8): a curation pipeline REMOVES documents (dedup,
 decontamination), and their embeddings must stop serving as neighbors
-— the PostingIndex tombstone pattern applied to the dense tier.
+— the shared delete tier (storage/deltas.DeleteTier) applied to the
+dense tier.
 ``delete(ids)`` tombstones them (batch-key idempotent, the ``add``
 replay contract); every search anti-joins the (small, broadcast)
 tombstone union against the codes BEFORE the shortlist, so a deleted
@@ -40,9 +41,7 @@ only after the fold completes) already yields a consistent snapshot.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -55,13 +54,16 @@ from gus_spark.operators.quantization import (
     ivf_pq_shortlist,
     ivf_pq_topk,
 )
+from gus_spark.storage.deltas import (
+    DeleteTier,
+    compact_deltas,
+    count_parquet_files,
+    parquet_rows,
+    tombstone_fold_due,
+)
 
 
-# canonical home: storage/deltas.py (shared with MinHashIndex)
-from gus_spark.storage.deltas import parquet_rows as _parquet_rows  # noqa: E402,F401
-
-
-class VectorIndex:
+class VectorIndex(DeleteTier):
     def __init__(
         self,
         spark: SparkSession,
@@ -72,42 +74,12 @@ class VectorIndex:
         codes: int = 256,
         iters: int = 3,
     ):
-        self.spark = spark
+        super().__init__(spark, path)
         self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
-        os.makedirs(path, exist_ok=True)
-        config = {"m": m, "codes": codes, "iters": iters}
-        if os.path.exists(self._meta_path):
-            existing = self._read_meta()
-            got = {k: existing.get(k) for k in config}
-            if got != config:
-                raise ValueError(
-                    f"index at {path} was built with {got}, got {config}"
-                )
-        else:
-            self._write_meta(dict(config, tombs={}, folded_tombs=[]))
+        self._open_meta({"m": m, "codes": codes, "iters": iters})
         self.m, self.codes, self.iters = m, codes, iters
-
-    # ------------------------------------------------------------ meta io
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "meta.json")
-
-    def _read_meta(self) -> dict:
-        with open(self._meta_path, encoding="utf-8") as fh:
-            meta = json.load(fh)
-        # pre-round-8 meta files carry config only — default the
-        # tombstone state in rather than rejecting the index
-        meta.setdefault("tombs", {})
-        meta.setdefault("folded_tombs", [])
-        return meta
-
-    def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path)  # the atomic snapshot swap
 
     # ------------------------------------------------------------ model io
     def _model_paths(self) -> tuple[str, str]:
@@ -164,21 +136,6 @@ class VectorIndex:
             self.spark.read.option("recursiveFileLookup", "true")
             .parquet(self._codes_path())
         )
-
-    def _tomb_path(self, key: str) -> str:
-        return os.path.join(self.path, "tombs", f"tomb-{key}")
-
-    def _live_tombstones(self, meta: dict | None = None) -> DataFrame | None:
-        """Union of live tombstone ids — one ``id`` column, the codes
-        table's id name (ivf_pq_encode emits (id, cell, codes, rnorm)
-        regardless of ``id_col``) — or None when there are none. Small
-        by the compaction contract, so callers broadcast it."""
-        meta = self._read_meta() if meta is None else meta
-        if not meta["tombs"]:
-            return None
-        return self.spark.read.parquet(
-            *[self._tomb_path(k) for k in meta["tombs"]]
-        ).distinct()
 
     def _live_codes(self) -> DataFrame:
         """The serving snapshot: every code row minus the tombstoned
@@ -247,7 +204,7 @@ class VectorIndex:
         # row count from the written files' parquet footers — the Arrow
         # encode kernel runs exactly once (the write); a .count() on enc
         # would re-execute the whole encode a second time
-        return _parquet_rows(dest)
+        return parquet_rows(dest)
 
     def delete(self, ids, batch_key: str | None = None) -> int:
         """Tombstone one batch of vector ids (a list, or a DataFrame
@@ -263,60 +220,21 @@ class VectorIndex:
         set-add; a committed key short-circuits), and a key already
         folded by a compaction raises — its physical rows are gone, so
         a replayed subtract would count ghosts."""
-        import uuid
 
-        from pyspark.sql import functions as F
+        def live_ids(_meta):
+            if not os.path.isdir(self._codes_path()):
+                raise StorageError(
+                    f"index at {self.path} holds no codes — nothing to "
+                    "delete"
+                )
+            # the codes table names its id column literally `id`
+            # (ivf_pq_encode output), whatever ``id_col`` the raw
+            # vectors use — tombstones are stored in the codes' name
+            return self._read_codes().select("id").distinct()
 
-        from gus_spark.streaming import markers
-
-        meta = self._read_meta()
-        key = batch_key if batch_key is not None else uuid.uuid4().hex
-        if key in meta["folded_tombs"]:
-            raise ValueError(
-                f"delete batch key {key!r} was already folded away by "
-                f"a compaction of {self.path!r}: its rows are "
-                "physically gone. Use a fresh key."
-            )
-        if key in meta["tombs"]:
-            return meta["tombs"][key]
-        if not os.path.isdir(self._codes_path()):
-            raise StorageError(
-                f"index at {self.path} holds no codes — nothing to "
-                "delete"
-            )
-        # the codes table names its id column literally `id`
-        # (ivf_pq_encode output), whatever ``id_col`` the raw vectors
-        # use — tombstones are stored in the codes' name
-        live_ids = self._read_codes().select("id").distinct()
-        if not isinstance(ids, DataFrame):
-            id_field = live_ids.schema["id"]
-            ids = self.spark.createDataFrame(
-                [(i,) for i in ids],
-                schema=f"id {id_field.dataType.simpleString()}",
-            )
-        elif self.id_col in ids.columns:
-            ids = ids.select(F.col(self.id_col).alias("id"))
-        # localCheckpoint: the caller's id plan may be an expensive
-        # curation join and is consumed by TWO actions (count +
-        # tombstone publish) — cut the lineage so it runs once. NO
-        # broadcast hint on the semi-join: a heavy curation pass can
-        # flag a large corpus fraction; AQE broadcasts genuinely
-        # small id sets on its own.
-        ids = ids.select("id").distinct().localCheckpoint()
-        matched = live_ids.join(ids, "id", "left_semi")
-        prior = self._live_tombstones(meta)
-        if prior is not None:
-            matched = matched.join(
-                F.broadcast(prior),
-                matched["id"] == prior["id"],
-                "left_anti",
-            )
-        matched = matched.localCheckpoint()
-        n = matched.count()
-        markers.publish_batch(matched, self._tomb_path(key))
-        meta["tombs"][key] = n
-        self._write_meta(meta)
-        return n
+        return self._keyed_delete(
+            ids, batch_key, "id", live_ids, input_col=self.id_col
+        )
 
     def search(
         self,
@@ -361,8 +279,6 @@ class VectorIndex:
     def health(self) -> dict:
         """Codes-table layout health from filesystem metadata only (no
         Spark job) — the VectorIndex twin of ParquetStore.table_health."""
-        from gus_spark.storage.deltas import count_parquet_files
-
         base = self._codes_path()
         if not os.path.isdir(base):
             return {"n_files": 0, "n_deltas": 0}
@@ -389,45 +305,23 @@ class VectorIndex:
         any dead rows the unfinished fold left behind (and duplicate
         live rows are collapsed pre-rank, the deltas.py contract);
         after (4), the dead rows are already physically gone."""
-        import uuid
-
         from pyspark.sql import functions as F
 
         base = self._codes_path()
         if not os.path.isdir(base):
             return self.health()
         meta = self._read_meta()
-        old = [
-            d for d in os.listdir(base)
-            if d.startswith("delta-")
-            and os.path.isdir(os.path.join(base, d))
-        ]
-        live = self._read_codes()
         tombs = self._live_tombstones(meta)
-        if tombs is not None:
-            dead = tombs.withColumnRenamed("id", "_dead_id")
-            live = live.join(
-                F.broadcast(dead),
-                live["id"] == dead["_dead_id"],
-                "left_anti",
-            )
-        live = live.repartitionByRange(target_files, "cell")
-        live = live.sortWithinPartitions("cell")
-        token = uuid.uuid4().hex
-        tmp = os.path.join(base, f".compacting-{token}")
-        live.write.parquet(tmp)
-        os.rename(tmp, os.path.join(base, f"delta-compact-{token}"))
-        for d in old:
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        folded_now = list(meta["tombs"])
-        if folded_now:
-            self._write_meta(dict(
-                meta,
-                tombs={},
-                folded_tombs=meta["folded_tombs"] + folded_now,
-            ))
-            for key in folded_now:
-                shutil.rmtree(self._tomb_path(key), ignore_errors=True)
+        drop = (
+            None
+            if tombs is None
+            else (lambda df: df.join(F.broadcast(tombs), "id", "left_anti"))
+        )
+        compact_deltas(
+            self.spark, base, target_files, range_cols=["cell"],
+            filter_fn=drop,
+        )
+        self._fold_tombstones(meta)
         return self.health()
 
     def maintain(
@@ -454,8 +348,6 @@ class VectorIndex:
         health = self.health()
         meta = self._read_meta()
         tomb_docs = sum(meta["tombs"].values())
-        from gus_spark.storage.deltas import tombstone_fold_due
-
         trigger = health["n_files"] > max_files or tombstone_fold_due(
             self._codes_path(), tomb_docs, max_tomb_frac
         )

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gus_spark.operators.similarity import _as_double
 from gus_spark.queries import register, table
 
 #: Production near-dup thresholds sit at 0.9+; this synthetic corpus
@@ -26,10 +27,6 @@ from gus_spark.queries import register, table
 #: sf0.01, so the oracle exercises real pair VALUES (the bit-identical
 #: fold-order cosine), not an empty set.
 COSINE_THRESHOLD = 0.45
-
-
-def _as_double(col) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
 
 
 def dot(a, b) -> Column:

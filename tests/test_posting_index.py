@@ -18,7 +18,9 @@ Contracts pinned here:
   the content-fingerprinted markers, and a replay AFTER compaction
   drains cleanly (markers fire before the folded-key guard);
 - maintain() compacts only past the delta threshold; degenerate
-  inputs fail loudly.
+  inputs fail loudly;
+- no public call changes the session conf, and the phrase paths'
+  base scan stays bucket-pruned without a conf pin.
 """
 
 import contextlib
@@ -332,6 +334,14 @@ def test_batch_topk_matches_scan_batch_and_topk(spark, docs, tmp_path):
                 "rank"):
         assert got[col].tolist() == ref[col].tolist(), col
 
+    # the base scan is bucket-pruned to the batch's terms
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        idx.batch_topk(queries, K).explain(mode="formatted")
+    plan = buf.getvalue()
+    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+    assert m and int(m.group(1)) < int(m.group(2)), plan
+
     qa = got[got["query_id"] == "qa"]
     single = idx.topk(QUERY, K).toPandas()
     assert qa["doc_id"].tolist() == single["doc_id"].tolist()
@@ -629,3 +639,109 @@ def test_pipeline_index_config_mismatch_raises(spark, docs, tmp_path):
         mk(index_buckets=64)._ensure_index()
     # matching config: fine
     mk(index_positional=False)._ensure_index()
+
+
+AUTO_BUCKETED_SCAN = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+
+
+def _walk_plan(node):
+    """Every node of an executed plan, through AQE query stages."""
+    yield node
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for kid in kids:
+        yield from _walk_plan(kid)
+
+
+def _base_scan_rows(df, table_name):
+    """Run ``df`` and return the numOutputRows of each scan of the
+    base-tier table ``table_name``."""
+    df.collect()
+    return [
+        n.metrics().apply("numOutputRows").value()
+        for n in _walk_plan(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and n.nodeName().endswith(f".{table_name}")
+    ]
+
+
+def test_public_calls_leave_session_conf_unchanged(spark, docs, tmp_path):
+    """No PostingIndex call changes the caller's session conf: the
+    conf snapshot is identical before and after each public call,
+    phrase serving included."""
+    orig = spark.conf.get(AUTO_BUCKETED_SCAN, None)
+    spark.conf.unset(AUTO_BUCKETED_SCAN)
+    idx = PostingIndex(spark, str(tmp_path / "idx"))
+    phrase = ["row", "column", "sort"]
+    queries = spark.createDataFrame(
+        [("qa", w, 1.0) for w in QUERY],
+        "query_id string, w string, weight double",
+    )
+    phrases = spark.createDataFrame(
+        [("p1", phrase)], "query_id string, phrase array<string>"
+    )
+    calls = [
+        ("build", lambda: idx.build(
+            docs.filter(F.col("doc_id") % 2 == 0), "pidx_conf",
+            n_buckets=8, positional=True,
+        )),
+        ("add", lambda: idx.add(
+            docs.filter(F.col("doc_id") % 2 == 1), batch_key="b1"
+        )),
+        ("delete", lambda: idx.delete([3, 5, 8], batch_key="d1")),
+        ("topk", lambda: idx.topk(QUERY, K).collect()),
+        ("batch_topk", lambda: idx.batch_topk(queries, K).collect()),
+        ("phrase_topk", lambda: idx.phrase_topk(phrase, 5).collect()),
+        ("phrase_batch", lambda: idx.phrase_batch(phrases, 5).collect()),
+        ("health", lambda: idx.health(occupancy=True)),
+        ("stats", idx.stats),
+        ("fitted", lambda: idx.fitted),
+        ("id_col", lambda: idx.id_col),
+        ("maintain", lambda: idx.maintain(max_deltas=0)),
+        ("compact", idx.compact),
+    ]
+    try:
+        for name, call in calls:
+            before = spark.conf.getAll
+            call()
+            assert spark.conf.getAll == before, name
+    finally:
+        if orig is not None:
+            spark.conf.set(AUTO_BUCKETED_SCAN, orig)
+
+
+def test_phrase_scan_prunes_buckets_without_conf_pin(spark, docs, tmp_path):
+    """The phrase paths' base scan reads as few rows under the default
+    conf as under autoBucketedScan=false: Spark drops the bucketed scan
+    (no bucket distribution is needed downstream) but keeps skipping
+    the files of unselected buckets, so no pin is needed."""
+    idx = PostingIndex(spark, str(tmp_path / "idx"))
+    idx.build(docs, "pidx_prune", n_buckets=8, positional=True)
+    phrase = ["row", "column", "sort"]
+    phrases = spark.createDataFrame(
+        [("p1", phrase)], "query_id string, phrase array<string>"
+    )
+    serve = [
+        lambda: idx.phrase_topk(phrase, 5),
+        lambda: idx.phrase_batch(phrases, 5),
+    ]
+    orig = spark.conf.get(AUTO_BUCKETED_SCAN, None)
+    try:
+        spark.conf.unset(AUTO_BUCKETED_SCAN)
+        default = [_base_scan_rows(f(), "pidx_prune_g0") for f in serve]
+        spark.conf.set(AUTO_BUCKETED_SCAN, "false")
+        pinned = [_base_scan_rows(f(), "pidx_prune_g0") for f in serve]
+    finally:
+        if orig is None:
+            spark.conf.unset(AUTO_BUCKETED_SCAN)
+        else:
+            spark.conf.set(AUTO_BUCKETED_SCAN, orig)
+    assert default == pinned and all(default), (default, pinned)
+    total = spark.read.parquet(str(tmp_path / "idx" / "base-g0")).count()
+    assert max(max(rows) for rows in default) < total, (default, total)

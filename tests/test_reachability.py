@@ -44,10 +44,6 @@ ALLOWLIST: dict[str, str] = {
     "write_zordered": "README lists z-order clustered writes",
     "check_references": "README storage row lists FK integrity sweeps "
     "(references)",
-    "bm25_topk_indexed": "README: BM25 served from the bucketed static "
-    "index built by build_posting_index",
-    "bm25_batch_indexed": "README: weighted BM25 batches over the "
-    "bucketed static index",
     "sequences_containing": "README: retroactive compliance deletes; "
     "maps documents to the packed sequences TrainingShardSet.delete "
     "removes",

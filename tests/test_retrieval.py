@@ -198,36 +198,6 @@ def test_tokenize_binds_once_on_the_data_path(docs):
     assert plan.count("split(") == 3, plan
 
 
-def test_indexed_serving_matches_adhoc_and_prunes(spark, docs):
-    """build_posting_index + bm25_topk_indexed: (a) bit-identical
-    ranking to the ad-hoc path, (b) the scan reads ONLY the buckets
-    holding query terms (SelectedBucketsCount < total), and (c) the
-    per-term df aggregation rides the bucket layout with no exchange
-    below it — the repeated-query serving contract."""
-    from gus_spark.operators.retrieval import (
-        bm25_topk_indexed,
-        build_posting_index,
-    )
-
-    build_posting_index(docs, "bm25_post", n_buckets=8)
-    served = bm25_topk_indexed(spark, "bm25_post", QUERY, K)
-    adhoc = bm25_topk(docs, QUERY, K).toPandas()
-    got = served.toPandas()
-    assert got["doc_id"].tolist() == adhoc["doc_id"].tolist()
-    assert got["score_fp"].tolist() == adhoc["score_fp"].tolist()
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        served.explain(mode="formatted")
-    plan = buf.getvalue()
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, plan
-    assert int(m.group(1)) < int(m.group(2)), plan
-    # the df groupBy(w) must not introduce a w-keyed exchange: the
-    # only hashpartitioning allowed is the final doc-keyed aggregation
-    assert "hashpartitioning(w" not in plan, plan
-
-
 def test_batch_matches_single_queries_bit_exact(spark, docs, topk):
     """bm25_batch with weight 1.0 must reproduce each single-query
     ranking and every fixed-point score bit-for-bit (the weight
@@ -438,51 +408,6 @@ def test_phrase_degenerate_inputs(docs):
         phrase_topk(docs, [], 5)
     with pytest.raises(ValueError, match="k"):
         phrase_topk(docs, PHRASE, 0)
-
-
-def test_batch_indexed_matches_scan_batch_bit_exact(spark, docs):
-    """bm25_batch_indexed serves a whole weighted batch from the
-    bucketed index with scores bit-identical to the scan-path
-    bm25_batch (shared weighted scoring tail), and the scan is
-    bucket-pruned to the batch's terms."""
-    from gus_spark.operators.retrieval import (
-        bm25_batch,
-        bm25_batch_indexed,
-        build_posting_index,
-    )
-
-    build_posting_index(docs, "bm25_post_b", n_buckets=8)
-    queries = spark.createDataFrame(
-        [("qa", w, 1.0) for w in QUERY]
-        + [("qb", "batch", 2.5), ("qb", "scan", 1.0), ("qb", "dup", 0.0)],
-        "query_id string, w string, weight double",
-    )
-    served = bm25_batch_indexed(spark, "bm25_post_b", queries, K)
-    got = served.toPandas().sort_values(["query_id", "rank"])
-    ref = (
-        bm25_batch(docs, queries, K)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-    )
-    for col in ("query_id", "doc_id", "n_terms_hit", "score_fp",
-                "rank"):
-        assert got[col].tolist() == ref[col].tolist(), col
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        served.explain(mode="formatted")
-    plan = buf.getvalue()
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m and int(m.group(1)) < int(m.group(2)), plan
-
-    # empty batch (all weights zero) -> empty result, not an error
-    zeroes = spark.createDataFrame(
-        [("qz", "spark", 0.0)],
-        "query_id string, w string, weight double",
-    )
-    assert bm25_batch_indexed(
-        spark, "bm25_post_b", zeroes, K
-    ).count() == 0
 
 
 def test_phrase_batch_matches_single_phrases(spark, docs):

@@ -15,7 +15,7 @@ Kneser-Ney, fixed discount D=0.75 — Chen & Goodman 1999 eq. 18 with
 continuation counts; unseen contexts back off entirely; the unigram
 level interpolates with a uniform 1/(V+1) floor so OOV tokens score
 finite). Tokenization is identical to the Spark tier's (whitespace
-split — operators/dedup.tokenize).
+split — functions/tokenize.tokenize, variant 'raw').
 
 Reported per sf: spearman_rho over held-out docs, head_overlap /
 tail_overlap (|top-decile ∩ top-decile| / decile size — the CCNet
